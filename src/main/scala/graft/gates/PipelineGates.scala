@@ -932,7 +932,8 @@ object PipelineGates {
 
   // ---- modified Kneser-Ney trigram scoring ------------------------------
 
-  /** [[graft.llm.LmScore.knTrigramScore]] at minTri = 2: the Chen &
+  /** [[graft.llm.LmScore.knNgramScore]] at order 3, minTop = 2, its
+    * columns renamed to `(n_trigrams, kn3_score)`: the Chen &
     * Goodman modified-KN estimator — three count-of-count discounts per
     * level, continuation counts at the bigram level, unigram
     * continuation at the bottom. The oracle restates the WHOLE chain:
@@ -943,8 +944,11 @@ object PipelineGates {
     * quantization of `tf × score`.
     */
   def lmKn3(s: SparkSession, dir: String): DataFrame =
-    graft.llm.LmScore.knTrigramScore(
-        Tables(s, dir, "documents"), "doc_id", "text", minTri = 2L)
+    graft.llm.LmScore.knNgramScore(
+        Tables(s, dir, "documents"), "doc_id", "text", order = 3,
+        minTop = 2L)
+      .withColumnRenamed("n_grams", "n_trigrams")
+      .withColumnRenamed("kn_score", "kn3_score")
       .orderBy("doc_id")
 
   val lmKn3Sql: String = {

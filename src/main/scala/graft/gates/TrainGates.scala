@@ -397,13 +397,13 @@ object TrainGates {
        |  FROM bsy)""".stripMargin
   }
 
-  /** [[Bpe.encodeBytes]] under [[PinnedByteMerges]] over the union
-    * corpus — byte-level tokens and counts, hash-matched on multi-byte
-    * Vietnamese and astral input.
+  /** [[Bpe.encodeWithMergesFast]] (`Regime.Bytes`) under
+    * [[PinnedByteMerges]] over the union corpus — byte-level tokens and
+    * counts, hash-matched on multi-byte Vietnamese and astral input.
     */
   def bpeEncodeBytes(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeBytes(byteDocsDf(s, dir), "doc_id", "text",
-        PinnedByteMerges)
+    Bpe.encodeWithMergesFast(byteDocsDf(s, dir), "doc_id", "text",
+        PinnedByteMerges, regime = Bpe.Regime.Bytes)
       .select(col("doc_id"), col("n_tokens"),
         array_join(col("tokens"), " ").as("tok_str"))
       .orderBy("doc_id")
@@ -421,8 +421,8 @@ object TrainGates {
     */
   def bpeBytesRoundtrip(s: SparkSession, dir: String): DataFrame =
     Bpe.decodeBytes(
-        Bpe.encodeBytes(byteDocsDf(s, dir), "doc_id", "text",
-          PinnedByteMerges),
+        Bpe.encodeWithMergesFast(byteDocsDf(s, dir), "doc_id", "text",
+          PinnedByteMerges, regime = Bpe.Regime.Bytes),
         "doc_id")
       .orderBy("doc_id")
 
@@ -463,13 +463,14 @@ object TrainGates {
        |ORDER BY token_id""".stripMargin
   }
 
-  /** [[Bpe.encodeIdsBytes]] under [[PinnedByteMerges]] against
+  /** [[Bpe.encodeIds]] (`Regime.Bytes`) under [[PinnedByteMerges]] against
     * [[Bpe.vocabBytes]] — the byte-tier trainer-contract id streams
     * (−1 impossible by construction: the byte alphabet is closed).
     */
   def bpeEncodeIdsBytes(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeIdsBytes(byteDocsDf(s, dir), "doc_id", "text",
-        PinnedByteMerges, Bpe.vocabBytes(s, PinnedByteMerges))
+    Bpe.encodeIds(byteDocsDf(s, dir), "doc_id", "text",
+        PinnedByteMerges, Bpe.vocabBytes(s, PinnedByteMerges),
+          regime = Bpe.Regime.Bytes)
       .select(col("doc_id"), col("n_tokens"),
         array_join(transform(col("token_ids"), i => i.cast("string")), " ")
           .as("ids_str"))
@@ -497,7 +498,7 @@ object TrainGates {
        |FROM (SELECT doc_id FROM bd) d LEFT JOIN agg a USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
 
-  /** [[Bpe.fertilityBytes]] under [[PinnedByteMerges]] grouped by
+  /** [[Bpe.fertility]] (`Regime.Bytes`) under [[PinnedByteMerges]] grouped by
     * language (planted rows grouped as 'planted') — byte-level tokens
     * per word, the multi-byte-script coverage audit.
     */
@@ -510,7 +511,8 @@ object TrainGates {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"))
       .unionByName(planted)
-    Bpe.fertilityBytes(docs, "doc_id", "text", "lang", PinnedByteMerges)
+    Bpe.fertility(docs, "doc_id", "text", "lang", PinnedByteMerges,
+      regime = Bpe.Regime.Bytes)
       .orderBy("lang")
   }
 
@@ -542,13 +544,13 @@ object TrainGates {
        |FROM wds w JOIN enc e ON w.doc_id = e.doc_id
        |GROUP BY w.lang ORDER BY w.lang""".stripMargin
 
-  /** [[Bpe.trainBytes]] over the union corpus — merges learned in byte
-    * symbol space over exactly the word forms [[Bpe.encodeBytes]]
-    * consumes (`Ġ`-prefixed non-first words), completing the byte tier:
-    * train → vocab → encode → decode all byte-level.
+  /** [[Bpe.train]] (`Regime.Bytes`) over the union corpus — merges
+    * learned in byte symbol space over exactly the word forms the Bytes
+    * encode consumes (`Ġ`-prefixed non-first words), completing the byte
+    * regime: train → vocab → encode → decode all byte-level.
     */
   def bpeTrainBytes(s: SparkSession, dir: String): DataFrame =
-    Bpe.trainBytes(byteDocsDf(s, dir), "text", BpeRounds)
+    Bpe.train(byteDocsDf(s, dir), "text", BpeRounds, regime = Bpe.Regime.Bytes)
       .orderBy("rank")
 
   /** Oracle: the SAME unrolled merge-learning rounds as [[bpeTrainSql]],
@@ -725,12 +727,13 @@ object TrainGates {
        |  FROM rsy)""".stripMargin
   }
 
-  /** [[Bpe.encodeBytesRaw]] under [[PinnedRawMerges]] over the raw
-    * union corpus — case- and whitespace-preserving byte tokens.
+  /** [[Bpe.encodeWithMergesFast]] (`Regime.Raw()`) under
+    * [[PinnedRawMerges]] over the raw union corpus — case- and
+    * whitespace-preserving byte tokens.
     */
   def bpeEncodeBytesRaw(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-        PinnedRawMerges)
+    Bpe.encodeWithMergesFast(rawDocsDf(s, dir), "doc_id", "text",
+        PinnedRawMerges, regime = Bpe.Regime.Raw())
       .select(col("doc_id"), col("n_tokens"),
         array_join(col("tokens"), " ").as("tok_str"))
       .orderBy("doc_id")
@@ -743,14 +746,14 @@ object TrainGates {
 
   /** RAW exact round-trip: encode then decode every doc; the oracle is
     * the RAW INPUT COLUMN itself — no normalization proviso. The
-    * headline raw-tier property: `decodeBytes ∘ encodeBytesRaw` is the
-    * identity on arbitrary UTF-8 (mixed case, space runs, tab/newline,
-    * Vietnamese, astral — all planted).
+    * headline raw-regime property: `decodeBytes ∘ encode` under
+    * `Regime.Raw()` is the identity on arbitrary UTF-8 (mixed case,
+    * space runs, tab/newline, Vietnamese, astral — all planted).
     */
   def bpeBytesRoundtripRaw(s: SparkSession, dir: String): DataFrame =
     Bpe.decodeBytes(
-        Bpe.encodeBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-          PinnedRawMerges),
+        Bpe.encodeWithMergesFast(rawDocsDf(s, dir), "doc_id", "text",
+          PinnedRawMerges, regime = Bpe.Regime.Raw()),
         "doc_id")
       .orderBy("doc_id")
 
@@ -759,12 +762,12 @@ object TrainGates {
        |SELECT doc_id, coalesce(text, '') AS text_rt
        |FROM rd ORDER BY doc_id""".stripMargin
 
-  /** [[Bpe.trainBytesRaw]] over the raw union corpus — merges learned
-    * over exactly the pre-tokenized piece forms [[Bpe.encodeBytesRaw]]
+  /** [[Bpe.train]] (`Regime.Raw()`) over the raw union corpus — merges
+    * learned over exactly the pre-tokenized piece forms the Raw encode
     * consumes, routed through [[Bpe.preTokenize]] end to end.
     */
   def bpeTrainBytesRaw(s: SparkSession, dir: String): DataFrame =
-    Bpe.trainBytesRaw(rawDocsDf(s, dir), "text", BpeRounds)
+    Bpe.train(rawDocsDf(s, dir), "text", BpeRounds, regime = Bpe.Regime.Raw())
       .orderBy("rank")
 
   /** Oracle: the SAME unrolled merge-learning rounds as
@@ -778,7 +781,7 @@ object TrainGates {
     """s0 AS (SELECT word, cnt, [word[j] for j in range(1, len(word)+1)] AS s FROM rwc)"""),
     BpeRounds)
 
-  /** [[Bpe.fertilityBytesRaw]] grouped by language (planted rows as
+  /** [[Bpe.fertility]] (`Regime.Raw()`) grouped by language (planted rows as
     * 'planted'): tokens per NON-WHITESPACE piece under the raw table —
     * the cased-script coverage audit the round-12 verdict asked the
     * fertility metric to re-run in raw coordinates.
@@ -792,7 +795,8 @@ object TrainGates {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"),
         col("lang"))
       .unionByName(planted)
-    Bpe.fertilityBytesRaw(docs, "doc_id", "text", "lang", PinnedRawMerges)
+    Bpe.fertility(docs, "doc_id", "text", "lang", PinnedRawMerges,
+      regime = Bpe.Regime.Raw())
       .orderBy("lang")
   }
 
@@ -915,14 +919,15 @@ object TrainGates {
 
   val bpeVocabSpecialsSql: String = vocabSpecialsSqlFor(PinnedByteMerges)
 
-  /** [[Bpe.encodeIdsBytesRaw]] under [[PinnedRawMerges]] against the
+  /** [[Bpe.encodeIds]] (`Regime.Raw()`) under [[PinnedRawMerges]] against the
     * SPECIALS-prefixed vocabulary — the raw-tier trainer-contract id
     * streams, proving the shifted ids thread through the string-keyed
     * lookup untouched (content ids ≥ 3, −1 impossible).
     */
   def bpeEncodeIdsBytesRaw(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeIdsBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-        PinnedRawMerges, Bpe.vocabBytes(s, PinnedRawMerges, Specials))
+    Bpe.encodeIds(rawDocsDf(s, dir), "doc_id", "text",
+        PinnedRawMerges, Bpe.vocabBytes(s, PinnedRawMerges, Specials),
+          regime = Bpe.Regime.Raw())
       .select(col("doc_id"), col("n_tokens"),
         array_join(transform(col("token_ids"), i => i.cast("string")), " ")
           .as("ids_str"))
@@ -953,7 +958,7 @@ object TrainGates {
     * specials-prefixed byte vocabulary are RENDERED to the standard
     * `merges.txt` / `vocab.json` interchange files, read back through
     * [[Bpe.loadMerges]]/[[Bpe.loadVocab]], and the loaded model drives
-    * `encodeIdsBytesRaw(hf = true)` — the documented kernel for
+    * `encodeIds(regime = Regime.Raw(hf = true))` — the documented kernel for
     * imported vocabularies. The oracle never sees the files: it
     * restates the expected END result from the pinned table, so any
     * loss in render→parse (rank order, multi-byte symbols, specials,
@@ -968,13 +973,13 @@ object TrainGates {
         Bpe.renderMerges(PinnedRawMerges))
       java.nio.file.Files.writeString(vPath,
         Bpe.renderVocab(Bpe.vocabBytes(s, PinnedRawMerges, Specials)))
-      // loadMerges/loadVocab/encodeIdsBytesRaw all collect the model
+      // loadMerges/loadVocab/encodeIds all collect the model
       // EAGERLY (bounded-model contract), so the temp files can be
       // deleted before the returned frame is ever evaluated
       val merges = Bpe.mergesOf(Bpe.loadMerges(s, mPath.toString))
       val vocab = Bpe.loadVocab(s, vPath.toString)
-      Bpe.encodeIdsBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-          merges, vocab, hf = true)
+      Bpe.encodeIds(rawDocsDf(s, dir), "doc_id", "text",
+          merges, vocab, regime = Bpe.Regime.Raw(hf = true))
         .select(col("doc_id"), col("n_tokens"),
           array_join(transform(col("token_ids"), i => i.cast("string")), " ")
             .as("ids_str"))
@@ -1027,16 +1032,16 @@ object TrainGates {
     (bs("a"), bs("n")),
     (bs("i"), bs("n")))
 
-  /** [[Bpe.encodeBytesRaw]] in `hf = true` mode under [[PinnedHfMerges]]
-    * over the raw union corpus — the [[Bpe.encodeWordHf]] kernel (the
-    * published GPT-2/HuggingFace min-rank-first algorithm) against an
-    * oracle that independently unrolls the min-rank merge steps. A
-    * pass-form kernel here would hash-mismatch on every document
-    * containing "the".
+  /** [[Bpe.encodeWithMergesFast]] under `Regime.Raw(hf = true)` and
+    * [[PinnedHfMerges]] over the raw union corpus — the
+    * [[Bpe.encodeWordHf]] kernel (the published GPT-2/HuggingFace
+    * min-rank-first algorithm) against an oracle that independently
+    * unrolls the min-rank merge steps. A pass-form kernel here would
+    * hash-mismatch on every document containing "the".
     */
   def bpeEncodeHf(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-        PinnedHfMerges, hf = true)
+    Bpe.encodeWithMergesFast(rawDocsDf(s, dir), "doc_id", "text",
+        PinnedHfMerges, regime = Bpe.Regime.Raw(hf = true))
       .select(col("doc_id"), col("n_tokens"),
         array_join(col("tokens"), " ").as("tok_str"))
       .orderBy("doc_id")
@@ -1175,14 +1180,14 @@ object TrainGates {
        |  FROM gsy)""".stripMargin
   }
 
-  /** [[Bpe.encodeBytesRaw]] with `gpt2Ws = true` under
+  /** [[Bpe.encodeWithMergesFast]] under `Regime.Raw(gpt2Ws = true)` and
     * [[PinnedRawMerges]] — raw byte tokens over the EXACT GPT-2 pieces
     * (the `ĠĠ` whitespace-run merge now sees run[0..n−2] pieces, and
     * every post-run word carries its donated `Ġ`).
     */
   def bpeEncodeBytesGpt2(s: SparkSession, dir: String): DataFrame =
-    Bpe.encodeBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-        PinnedRawMerges, gpt2Ws = true)
+    Bpe.encodeWithMergesFast(rawDocsDf(s, dir), "doc_id", "text",
+        PinnedRawMerges, regime = Bpe.Regime.Raw(gpt2Ws = true))
       .select(col("doc_id"), col("n_tokens"),
         array_join(col("tokens"), " ").as("tok_str"))
       .orderBy("doc_id")
@@ -1195,20 +1200,20 @@ object TrainGates {
 
   /** GPT-2-split exact round-trip: the split is still a lossless
     * partition (segments concatenate to the input, each segment's
-    * pieces to the segment), so `decodeBytes ∘ encodeBytesRaw(gpt2Ws)`
-    * stays the identity on arbitrary UTF-8 — the oracle is again the
-    * raw input column.
+    * pieces to the segment), so `decodeBytes ∘ encode` under
+    * `Raw(gpt2Ws = true)` stays the identity on arbitrary UTF-8 — the
+    * oracle is again the raw input column.
     */
   def bpeBytesRoundtripGpt2(s: SparkSession, dir: String): DataFrame =
     Bpe.decodeBytes(
-        Bpe.encodeBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-          PinnedRawMerges, gpt2Ws = true),
+        Bpe.encodeWithMergesFast(rawDocsDf(s, dir), "doc_id", "text",
+          PinnedRawMerges, regime = Bpe.Regime.Raw(gpt2Ws = true)),
         "doc_id")
       .orderBy("doc_id")
 
   val bpeBytesRoundtripGpt2Sql: String = bpeBytesRoundtripRawSql
 
-  /** [[Bpe.trainBytesRaw]] with `gpt2Ws = true` — merges learned over
+  /** [[Bpe.train]] under `Regime.Raw(gpt2Ws = true)` — merges learned over
     * exactly the GPT-2 pieces [[bpeEncodeBytesGpt2]] consumes: the
     * trailing-space split changes the learned vocabulary on
     * indentation-heavy text (multi-space tokens shrink by one, donated
@@ -1216,7 +1221,8 @@ object TrainGates {
     * exact split exists.
     */
   def bpeTrainBytesGpt2(s: SparkSession, dir: String): DataFrame =
-    Bpe.trainBytesRaw(rawDocsDf(s, dir), "text", BpeRounds, gpt2Ws = true)
+    Bpe.train(rawDocsDf(s, dir), "text", BpeRounds,
+      regime = Bpe.Regime.Raw(gpt2Ws = true))
       .orderBy("rank")
 
   val bpeTrainBytesGpt2Sql: String = trainRoundsSql(Seq(
@@ -1247,8 +1253,8 @@ object TrainGates {
         Bpe.renderVocab(Bpe.vocabBytes(s, PinnedRawMerges, Specials)))
       val merges = Bpe.mergesOf(Bpe.loadMerges(s, mPath.toString))
       val vocab = Bpe.loadVocab(s, vPath.toString)
-      Bpe.encodeIdsBytesRaw(rawDocsDf(s, dir), "doc_id", "text",
-          merges, vocab, hf = true, gpt2Ws = true)
+      Bpe.encodeIds(rawDocsDf(s, dir), "doc_id", "text",
+          merges, vocab, regime = Bpe.Regime.Raw(gpt2Ws = true, hf = true))
         .select(col("doc_id"), col("n_tokens"),
           array_join(transform(col("token_ids"), i => i.cast("string")), " ")
             .as("ids_str"))
@@ -1785,7 +1791,7 @@ object TrainGates {
        |${tokPackChainFrom("keptk")}""".stripMargin
 
   /** [[graft.operators.Selection.byTokenBudget]] with counts from the
-    * RAW BYTE tier ([[Bpe.encodeBytesRaw]] under [[PinnedRawMerges]]) —
+    * RAW BYTE regime (`Regime.Raw()` under [[PinnedRawMerges]]) —
     * the production wiring: training budgets are byte-tokenizer-
     * accurate, not whitespace-proxy counts. Rank (n_chars desc,
     * doc_id), budget 60k byte tokens.
@@ -1794,7 +1800,8 @@ object TrainGates {
 
   def selectBudgetBytes(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
-    val toks = Bpe.encodeBytesRaw(docs, "doc_id", "text", PinnedRawMerges)
+    val toks = Bpe.encodeWithMergesFast(docs, "doc_id", "text", PinnedRawMerges,
+      regime = Bpe.Regime.Raw())
       .select(col("doc_id"), col("n_tokens").cast("long").as("toks"))
     val d = docs.select(col("doc_id").cast("long").as("doc_id"), col("lang"),
         col("n_chars"))
@@ -1830,7 +1837,7 @@ object TrainGates {
     * `t`) ending in `etokb(conv_id, turn_idx, masked, ntok)`: each
     * rendered line pre-tokenized ([[preTokSqlLit]]), pieces mapped to
     * byte symbols, the [[PinnedRawMerges]] replace chain, token count —
-    * the oracle restatement of `Sft.withLineTokens(byteLevel = true)`.
+    * the oracle restatement of `Sft.transcriptsTokens(regime = Regime.Raw())`.
     */
   private val sftTokBytesCtes: String = {
     val chain = PinnedRawMerges.foldLeft(
@@ -1870,7 +1877,7 @@ object TrainGates {
   def sftPackTokensBytes(s: SparkSession, dir: String): DataFrame =
     Sft.packTokens(sftTurnsDf(s, dir), PinnedRawMerges,
         blockTokens = TokBlock, nShards = PackShards, portable = true,
-        byteLevel = true, eosId = Some(EosId))
+        regime = Bpe.Regime.Raw(), eosId = Some(EosId))
       .orderBy("shard", "block_id", "conv_id")
 
   val sftPackTokensBytesSql: String = {
@@ -1890,9 +1897,9 @@ object TrainGates {
   def sftRunTokensBytes(s: SparkSession, dir: String): DataFrame =
     Sft.packTokens(
         Sft.truncateLatestTokens(sftTurnsDf(s, dir), SftTokBudgetBytes,
-          PinnedRawMerges, byteLevel = true),
+          PinnedRawMerges, regime = Bpe.Regime.Raw()),
         PinnedRawMerges, blockTokens = TokBlock, nShards = PackShards,
-        portable = true, byteLevel = true, eosId = Some(EosId))
+        portable = true, regime = Bpe.Regime.Raw(), eosId = Some(EosId))
       .orderBy("shard", "block_id", "conv_id")
 
   val sftRunTokensBytesSql: String = {
@@ -1922,7 +1929,7 @@ object TrainGates {
     Sft.materializeBlocks(sftTurnsDf(s, dir), PinnedRawMerges,
         Bpe.vocabBytes(s, PinnedRawMerges, Specials),
         blockTokens = TokBlock, nShards = PackShards, portable = true,
-        byteLevel = true, eosId = EosId,
+        regime = Bpe.Regime.Raw(), eosId = EosId,
         padId = Some(Specials.indexOf("<|pad|>")))
       .select(col("shard"), col("block_id"), col("n_tokens"), col("n_pad"),
         array_join(transform(col("token_ids"), i => i.cast("string")), " ")

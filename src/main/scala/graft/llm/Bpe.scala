@@ -1,10 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Byte-pair-encoding tokenizer: distributed vocabulary counting, a
   * budgeted driver-side merge learner, and a broadcast encode kernel —
@@ -45,12 +47,15 @@ import scala.collection.mutable
   * repetition makes the memo hit rate extreme, and there is no shuffle
   * at all.
   *
-  * Three tiers share the kernels: the CHAR tier above (normalized
-  * shared-word analytics), the NORMALIZED BYTE tier ([[encodeBytes]] —
-  * GPT-2 byte symbols under the same word convention), and the RAW
-  * BYTE tier ([[encodeBytesRaw]] — [[preTokenize]] pieces,
+  * One [[Regime]] value decides how a document becomes the word units
+  * the kernel sees: [[Regime.Char]] (the normalized shared-word
+  * convention above), [[Regime.Bytes]] (GPT-2 byte symbols under the
+  * same word convention) or [[Regime.Raw]] ([[preTokenize]] pieces,
   * normalization-free, exact identity round-trip; the production
-  * tokenizer regime).
+  * tokenizer regime). [[train]], [[encodeWithMergesFast]],
+  * [[encodeIds]] and [[fertility]] all take it, and every encode path —
+  * here, in [[Unigram]] and in [[Sft]] — runs through the one memoized
+  * narrow kernel [[segmentRows]].
   */
 object Bpe {
 
@@ -78,15 +83,6 @@ object Bpe {
         memo.update(k, v)
         v
     }
-
-  /** Distributed `(word, cnt)` table over the corpus — BPE training
-    * input, ordered (cnt desc, word asc) for deterministic budgeting.
-    */
-  def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(regexp_replace(trim(lower(col(textCol))),
-        "\\s+", " "), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** One non-overlapping left-to-right merge pass. */
   private[llm] def mergePass(syms: Array[String], l: String,
@@ -209,12 +205,12 @@ object Bpe {
     * corpus, false for adversarial or imported tables (BpeSpec pins a
     * table where they provably differ; the `bpe_encode_hf` gate pins
     * this form against a DuckDB oracle that unrolls the min-rank
-    * steps). WHICH TIER CONSUMES WHICH: tables trained HERE
-    * ([[train]]/[[trainBytes]]/[[trainBytesRaw]]) are encoded with the
-    * pass-form kernels (the trainer applies merges as ranked passes, so
-    * the pass form reproduces the train-time segmentation); an IMPORTED
-    * production vocabulary ([[loadMerges]] of a published `merges.txt`)
-    * must be encoded with THIS kernel — the artifact's publisher ran
+    * steps). WHICH TABLE CONSUMES WHICH: tables trained HERE ([[train]],
+    * any regime) are encoded with the pass-form kernels (the trainer
+    * applies merges as ranked passes, so the pass form reproduces the
+    * train-time segmentation); an IMPORTED production vocabulary
+    * ([[loadMerges]] of a published `merges.txt`) must be encoded with
+    * THIS kernel, `Regime.Raw(hf = true)` — the artifact's publisher ran
     * this algorithm, and the pass form mistokenizes on exactly the
     * re-creation tables above.
     *
@@ -273,53 +269,189 @@ object Bpe {
     syms
   }
 
-  /** Learn `numMerges` merges from the corpus. Returns
-    * `(rank, left, right, pair_count)` — rank 0 first. The driver-side
-    * loop runs over at most `vocabBudget` distinct words (top by
-    * count, word-asc ties); `capStats`, when supplied, receives the
-    * number of distinct words the budget dropped (0 on typical
-    * corpora — the budget is a guard, not a sampler).
+  /** How a document turns into the word units a merge kernel sees, and
+    * which per-word kernel runs on them — the one place that decision
+    * lives. A regime owns the Catalyst normalization of the text column
+    * (null → empty), the per-string word splitter (its units are also
+    * the encode memo keys), the symbol mapping + merge kernel applied to
+    * each unit, and the word count [[fertility]] divides by.
+    */
+  sealed abstract class Regime extends Serializable {
+    /** The normalized text, a Catalyst projection (never null). */
+    def normalize(text: Column): Column
+    /** Word units of one normalized text; none for empty text. */
+    def words(t: String): Iterator[String]
+    /** Kernel symbols of one word unit. */
+    def symbols(w: String): String
+    /** Words per document — the fertility denominator. */
+    def wordCount(text: Column): Column
+    protected def kernel: (String, MergeIndex) => Array[String] =
+      encodeWordFast
+    /** Per-word encoder over a merge index (built per partition). */
+    final def encoder(idx: MergeIndex): String => Array[String] = {
+      val k = kernel
+      w => k(symbols(w), idx)
+    }
+    /** [[encoder]] with each token mapped through a `token → id`
+      * vocabulary; an absent token maps to −1.
+      */
+    final def idEncoder(model: (MergeIndex, Map[String, Int]))
+        : String => Array[Int] = {
+      val (enc, vm) = (encoder(model._1), model._2)
+      w => enc(w).map(vm.getOrElse(_, -1))
+    }
+  }
+
+  object Regime {
+    private def collapsed(text: Column): Column =
+      regexp_replace(trim(lower(coalesce(text, lit("")))), "\\s+", " ")
+
+    private def splitCount(t: Column): Column =
+      when(t === "", lit(0L)).otherwise(size(split(t, " ")).cast("long"))
+
+    /** Character symbols over the whitespace-normalized words of
+      * `trim(lower(text))` — the shared-word analytics convention.
+      * Empty split pieces are not words (they carry no symbols).
+      */
+    case object Char extends Regime {
+      def normalize(text: Column): Column = collapsed(text)
+      def words(t: String): Iterator[String] =
+        t.split(" ").iterator.filter(_.nonEmpty)
+      def symbols(w: String): String = w
+      def wordCount(text: Column): Column = splitCount(normalize(text))
+    }
+
+    /** UTF-8 byte symbols ([[byteSyms]]) over the same normalized words;
+      * every word after the first carries its LEADING SPACE into the
+      * unit (GPT-2's `Ġword`), so the token stream is losslessly
+      * invertible ([[decodeBytes]]; BpeBytesSpec and the
+      * `bpe_bytes_roundtrip` gate pin it on multi-byte Vietnamese +
+      * astral-plane input). No OOV symbol exists.
+      */
+    case object Bytes extends Regime {
+      def normalize(text: Column): Column = collapsed(text)
+      def words(t: String): Iterator[String] =
+        if (t.isEmpty) Iterator.empty
+        else t.split(" ").iterator.zipWithIndex.map { case (w, i) =>
+          if (i == 0) w else " " + w
+        }
+      def symbols(w: String): String = byteSyms(w)
+      def wordCount(text: Column): Column = splitCount(normalize(text))
+    }
+
+    /** Normalization-free byte symbols over [[preTokenize]] pieces of
+      * the raw text (case- and whitespace-preserving; single spaces ride
+      * into the following piece, whitespace RUNS are their own pieces).
+      * The pieces partition the text and the byte mapping is a
+      * bijection, so `decodeBytes ∘ encode` is the IDENTITY on arbitrary
+      * UTF-8 (the `bpe_bytes_roundtrip_raw` gate). `gpt2Ws` swaps in
+      * [[preTokenizeGpt2]]'s exact trailing-space split; `hf` swaps the
+      * kernel for [[encodeWordHf]] — REQUIRED when the merges are an
+      * imported production vocabulary ([[loadMerges]]). Words (for
+      * fertility) are the [[PreTokPattern]] pieces holding a
+      * non-whitespace character: whitespace-run pieces bear tokens but
+      * are not words, and counting them would flatter fertility.
+      */
+    final case class Raw(gpt2Ws: Boolean = false, hf: Boolean = false)
+        extends Regime {
+      def normalize(text: Column): Column = coalesce(text, lit(""))
+      def words(t: String): Iterator[String] =
+        (if (gpt2Ws) preTokenizeGpt2(t) else preTokenize(t)).iterator
+      def symbols(w: String): String = byteSyms(w)
+      def wordCount(text: Column): Column =
+        size(filter(regexp_extract_all(normalize(text), lit(PreTokPattern),
+          lit(0)), p => p.rlike(NonWsClass))).cast("long")
+      override protected def kernel: (String, MergeIndex) => Array[String] =
+        if (hf) encodeWordHf else encodeWordFast
+    }
+  }
+
+  /** THE narrow token kernel behind every encode path — [[Bpe]]'s
+    * regimes, [[Unigram]]'s Viterbi segmenters and [[Sft]]'s
+    * distinct-line encodes: `model` is broadcast once; per partition,
+    * `segment` builds the per-word encoder from it and a
+    * [[MemoCap]]-bounded word memo caches it (Zipf repetition makes the
+    * hit rate extreme). Each row's text — already normalized, never
+    * null — splits into `words`; empty text gives an empty array. One
+    * mapPartitions, no shuffle.
+    */
+  private[llm] def segmentRows[K: TypeTag, M: ClassTag, V: TypeTag: ClassTag](
+      rows: Dataset[(K, String)], model: M, words: String => Iterator[String])(
+      segment: M => String => Array[V]): Dataset[(K, Array[V])] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model)
+    rows.mapPartitions { it =>
+      val seg = segment(bc.value)
+      val memo = mutable.HashMap.empty[String, Array[V]]
+      it.map { case (k, t) =>
+        val out = mutable.ArrayBuilder.make[V]
+        if (t.nonEmpty) words(t).foreach(w => out ++= memoized(memo, w)(seg(w)))
+        (k, out.result())
+      }
+    }
+  }
+
+  /** [[segmentRows]] over documents: `(idCol, outCol, countCol)` — the
+    * id cast to long, `text` the normalized text Column (a Catalyst
+    * projection in front of the kernel), `countCol` the int array size.
+    */
+  private[llm] def encodeDocs[M: ClassTag, V: TypeTag: ClassTag](
+      docs: DataFrame, idCol: String, text: Column,
+      words: String => Iterator[String], model: M, outCol: String,
+      countCol: String)(segment: M => String => Array[V]): DataFrame = {
+    import docs.sparkSession.implicits._
+    segmentRows(docs.select(col(idCol).cast("long"), text.as("__t"))
+        .as[(Long, String)], model, words)(segment)
+      .toDF(idCol, outCol)
+      .select(col(idCol), col(outCol), size(col(outCol)).as(countCol))
+  }
+
+  /** Collected `unit → id` map of a vocabulary table (bounded-model
+    * contract: the vocabulary is collected, then broadcast).
+    */
+  private[llm] def idsOf(vocabDf: DataFrame, unitCol: String,
+                         idCol: String): Map[String, Int] = {
+    import vocabDf.sparkSession.implicits._
+    vocabDf.select(col(unitCol), col(idCol).cast("int"))
+      .as[(String, Int)].collect().toMap
+  }
+
+  /** Distributed `(word, cnt)` table over the corpus — the char-regime
+    * words every word-level trainer here counts ([[Unigram]] too).
+    */
+  def wordCounts(docs: DataFrame, textCol: String): DataFrame =
+    unitCounts(docs, textCol, Regime.Char)
+
+  /** BPE training input under `regime`: its word units, each mapped to
+    * its kernel symbols (so the learned table's application domain is
+    * exactly the encoder's input domain — a byte table trained on bare
+    * words would never learn the `Ġ`-boundary merges production
+    * tokenizers live on), counted. ONE distributed aggregation; the
+    * split is a narrow per-row kernel inside it.
+    */
+  private def unitCounts(docs: DataFrame, textCol: String,
+                         regime: Regime): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(regime.normalize(col(textCol))).as[String]
+      .flatMap(t => regime.words(t).map(regime.symbols))
+      .toDF("word")
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+  }
+
+  /** Learn `numMerges` merges from the corpus under `regime`. Returns
+    * `(rank, left, right, pair_count)` — rank 0 first. The corpus-sized
+    * work is ONE distributed word-count aggregation ([[unitCounts]]);
+    * the driver-side loop runs over at most `vocabBudget` distinct
+    * words (top by count, word-asc ties); `capStats`, when supplied,
+    * receives the number of distinct words the budget dropped (0 on
+    * typical corpora — the budget is a guard, not a sampler).
     */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
             vocabBudget: Int = 1 << 16,
-            capStats: Option[CapStats] = None): DataFrame =
-    trainFromWordCounts(wordCounts(docs, textCol), numMerges,
-      vocabBudget, capStats)
-
-  /** BYTE-LEVEL train: merges learned over exactly the word forms
-    * [[encodeBytes]] consumes — whitespace-normalized words, non-first
-    * words carrying their leading space (`Ġword`), each mapped to UTF-8
-    * byte symbols — through the same budget + incremental learner, so
-    * the learned table's application domain is the encoder's input
-    * domain (a table trained on bare words would never learn the
-    * `Ġ`-boundary merges production tokenizers live on). The
-    * corpus-sized work stays ONE distributed word-count aggregation;
-    * the byte mapping is a narrow per-row kernel inside it.
-    */
-  def trainBytes(docs: DataFrame, textCol: String, numMerges: Int,
-                 vocabBudget: Int = 1 << 16,
-                 capStats: Option[CapStats] = None): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val norm = docs.select(
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val words = norm.as[String].flatMap { t =>
-      if (t.isEmpty) Iterator.empty[String]
-      else t.split(" ").iterator.zipWithIndex.map { case (w, i) =>
-        byteSyms(if (i == 0) w else " " + w)
-      }
-    }.toDF("word")
-    val wc = words.groupBy("word").agg(count(lit(1)).as("cnt"))
-    trainFromWordCounts(wc, numMerges, vocabBudget, capStats)
-  }
-
-  /** Shared budget + learner tail of [[train]]/[[trainBytes]]:
-    * `(word, cnt)` in, `(rank, left, right, pair_count)` out.
-    */
-  private def trainFromWordCounts(wc: DataFrame, numMerges: Int,
-                                  vocabBudget: Int,
-                                  capStats: Option[CapStats]): DataFrame = {
+            capStats: Option[CapStats] = None,
+            regime: Regime = Regime.Char): DataFrame = {
+    val wc = unitCounts(docs, textCol, regime)
     val spark = wc.sparkSession
     import spark.implicits._
     val total = wc.count()
@@ -490,22 +622,13 @@ object Bpe {
     out.toArray
   }
 
-  /** Encode every document against a learned (or supplied) merge
-    * table: `(id, tokens: array<string>, n_tokens)`. `merges` is
-    * [[train]]'s output shape (`rank, left, right`) — collected under
-    * the same bounded-model contract as [[Ann.ivfTopKTrained]]'s
-    * centroids, then broadcast into a narrow memoized kernel.
-    */
-  def encode(docs: DataFrame, idCol: String, textCol: String,
-             merges: DataFrame): DataFrame =
-    encodeWithMergesFast(docs, idCol, textCol, mergesOf(merges))
-
-  /** Rank-ordered merge list from a [[train]]/[[trainBytes]]-shaped
-    * table (`rank, left, right`) — the LOAD half of model persistence:
-    * the model is rows, so `merges.write.parquet(path)` saves it and
+  /** Rank-ordered merge list from a [[train]]-shaped table (`rank,
+    * left, right`) — the LOAD half of model persistence: the model is
+    * rows, so `merges.write.parquet(path)` saves it and
     * `mergesOf(spark.read.parquet(path))` restores it on any engine
     * with the same rank order (BpeBytesSpec pins the disk round-trip
-    * for both tiers). Bounded-model contract: |merges| rows collected.
+    * for the byte regime). Bounded-model contract: |merges| rows
+    * collected.
     */
   def mergesOf(merges: DataFrame): Array[(String, String)] = {
     import merges.sparkSession.implicits._
@@ -514,62 +637,30 @@ object Bpe {
       .map { case (_, l, r) => (l, r) }
   }
 
-  /** [[encode]] over an in-memory merge list (rank order = array
-    * order). The hot path: no shuffle, broadcast merges, per-partition
-    * word→tokens memo.
+  /** Pass-form REFERENCE encode: the shared kernel under
+    * [[Regime.Char]] with [[encodeWord]] (one pass per merge), the
+    * oracle-checkable form the `bpe_encode` gate pins.
+    * `(id, tokens: array<string>, n_tokens)`.
     */
   def encodeWithMerges(docs: DataFrame, idCol: String, textCol: String,
-                       merges: Array[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(merges)
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val ms = bc.value
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val toks =
-          if (t.isEmpty) Array.empty[String]
-          else t.split(" ").iterator.flatMap { w =>
-            memoized(memo, w)(encodeWord(w, ms))
-          }.toArray
-        (id, toks)
-      }
-    }.toDF(idCol, "tokens")
-    encoded.select(col(idCol), col("tokens"),
-      size(col("tokens")).as("n_tokens"))
-  }
+                       merges: Array[(String, String)]): DataFrame =
+    encodeDocs(docs, idCol, Regime.Char.normalize(col(textCol)),
+      Regime.Char.words, merges, "tokens", "n_tokens")(
+      ms => encodeWord(_, ms))
 
-  /** [[encodeWithMerges]] on the [[encodeWordFast]] kernel — identical
-    * tokens (spec-pinned), per-word cost independent of the merge-table
-    * size. This is the production path ([[encode]] routes here); the
-    * pass-form kernel survives as the oracle-checkable reference.
+  /** Encode every document against an in-memory merge list (rank order
+    * = array order) under `regime`: `(id, tokens: array<string>,
+    * n_tokens)`. The production path — the regime's kernel
+    * ([[encodeWordFast]], token-for-token equal to [[encodeWithMerges]]
+    * with per-word cost independent of the merge-table size, or
+    * [[encodeWordHf]] under `Raw(hf = true)`) over a broadcast merge
+    * index in the one narrow memoized kernel; no shuffle.
     */
   def encodeWithMergesFast(docs: DataFrame, idCol: String, textCol: String,
-                           merges: Array[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val idx = bc.value
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val toks =
-          if (t.isEmpty) Array.empty[String]
-          else t.split(" ").iterator.flatMap { w =>
-            memoized(memo, w)(encodeWordFast(w, idx))
-          }.toArray
-        (id, toks)
-      }
-    }.toDF(idCol, "tokens")
-    encoded.select(col(idCol), col("tokens"),
-      size(col("tokens")).as("n_tokens"))
-  }
+                           merges: Array[(String, String)],
+                           regime: Regime = Regime.Char): DataFrame =
+    encodeDocs(docs, idCol, regime.normalize(col(textCol)), regime.words,
+      new MergeIndex(merges), "tokens", "n_tokens")(regime.encoder)
 
   /** Token vocabulary implied by a merge table over a corpus:
     * `(token_id, token)` — base characters (every distinct character
@@ -597,47 +688,27 @@ object Bpe {
       .toDF("token_id", "token")
   }
 
-  /** Encode to TRAINER-CONTRACT integer ids: `(id, token_ids:
-    * array<int>, n_tokens)` — the fast kernel's tokens mapped through a
-    * broadcast `(token, token_id)` vocabulary ([[vocab]] output or a
-    * tokenizer's own table); tokens absent from the vocabulary map to
-    * −1 (impossible when the vocabulary was built from the same corpus
-    * and merge table — the spec pins both directions). Same narrow
-    * zero-shuffle shape as [[encodeWithMergesFast]], with the id lookup
-    * folded into the per-partition word memo.
+  /** Encode to TRAINER-CONTRACT integer ids under `regime`: `(id,
+    * token_ids: array<int>, n_tokens)` — the regime's tokens mapped
+    * through a broadcast `(token, token_id)` vocabulary ([[vocab]] /
+    * [[vocabBytes]] output or a tokenizer's own table, [[loadVocab]]),
+    * the id lookup folded into the per-partition word memo. Tokens
+    * absent from the vocabulary map to −1: impossible when the
+    * vocabulary was built from the same corpus and merge table (the
+    * spec pins both directions), and impossible BY CONSTRUCTION under a
+    * byte regime with [[vocabBytes]] of the same merges (the byte
+    * alphabet is closed; any `specials` prefix threads through, the
+    * lookup is by token string).
     */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
                 merges: Array[(String, String)],
-                vocabDf: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vmap: Map[String, Int] = vocabDf
-      .select(col("token"), col("token_id").cast("int"))
-      .as[(String, Int)].collect().toMap
-    val bcV = spark.sparkContext.broadcast(vmap)
-    val bcM = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    norm.as[(Long, String)].mapPartitions { rows =>
-      val idx = bcM.value
-      val vm = bcV.value
-      val memo = mutable.HashMap.empty[String, Array[Int]]
-      rows.map { case (id, t) =>
-        val ids =
-          if (t.isEmpty) Array.empty[Int]
-          else t.split(" ").iterator.flatMap { w =>
-            memoized(memo, w)(
-              encodeWordFast(w, idx).map(s => vm.getOrElse(s, -1)))
-          }.toArray
-        (id, ids)
-      }
-    }.toDF(idCol, "token_ids")
-      .select(col(idCol), col("token_ids"),
-        size(col("token_ids")).as("n_tokens"))
-  }
+                vocabDf: DataFrame,
+                regime: Regime = Regime.Char): DataFrame =
+    encodeDocs(docs, idCol, regime.normalize(col(textCol)), regime.words,
+      (new MergeIndex(merges), idsOf(vocabDf, "token", "token_id")),
+      "token_ids", "n_tokens")(regime.idEncoder)
 
-  // ---- Byte-level tier --------------------------------------------------
+  // ---- Byte symbols -----------------------------------------------------
 
   /** GPT-2-style byte→unicode symbol mapping (Radford et al. 2019's
     * `bytes_to_unicode`, restated as a closed formula): every
@@ -648,9 +719,9 @@ object Bpe {
     * — the visible word-boundary marker of every production byte-level
     * tokenizer. The mapping is a bijection byte↔symbol, so byte-level
     * BPE has NO out-of-vocabulary symbol at all and round-trips
-    * arbitrary UTF-8 exactly — the property the char-within-word tier
-    * above cannot offer (an unseen character there is an unsplittable
-    * singleton token).
+    * arbitrary UTF-8 exactly — the property the char regime cannot
+    * offer (an unseen character there is an unsplittable singleton
+    * token).
     */
   private def keepByte(b: Int): Boolean =
     (b >= 33 && b <= 126) || (b >= 161 && b <= 172) || (b >= 174 && b <= 255)
@@ -693,56 +764,12 @@ object Bpe {
     new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** BYTE-LEVEL encode — the production-tokenizer tier: words are the
-    * same whitespace-normalized split as the char tier, but each word
-    * is pre-mapped to its UTF-8 byte symbols (non-first words carry
-    * their LEADING SPACE into the word, GPT-2's `Ġword` convention, so
-    * the token stream is losslessly invertible), then fed to the SAME
-    * heap-indexed fast kernel under a byte-symbol merge table. Exact
-    * round-trip for arbitrary UTF-8 ([[decodeBytes]]; BpeBytesSpec and
-    * the `bpe_bytes_roundtrip` gate pin it on multi-byte Vietnamese +
-    * astral-plane input), no OOV symbol, per-word cost tracks the word.
-    * Same narrow zero-shuffle shape as [[encodeWithMergesFast]]:
-    * broadcast merge table, per-partition word memo.
-    */
-  def encodeBytes(docs: DataFrame, idCol: String, textCol: String,
-                  merges: Array[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val idx = bc.value
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val toks =
-          if (t.isEmpty) Array.empty[String]
-          else {
-            val words = t.split(" ")
-            val out = mutable.ArrayBuffer.empty[String]
-            var i = 0
-            while (i < words.length) {
-              val w = if (i == 0) words(i) else " " + words(i)
-              out ++= memoized(memo, w)(encodeWordFast(byteSyms(w), idx))
-              i += 1
-            }
-            out.toArray
-          }
-        (id, toks)
-      }
-    }.toDF(idCol, "tokens")
-    encoded.select(col(idCol), col("tokens"),
-      size(col("tokens")).as("n_tokens"))
-  }
-
-  /** Byte-tier vocabulary implied by a merge table: `(token_id,
+  /** Byte-regime vocabulary implied by a merge table: `(token_id,
     * token)` — `specials` (reserved BOS/EOS/PAD strings, optional)
     * take ids 0..k-1, the 256 byte symbols follow at k..k+255 (id =
     * k + byte value; the GPT-2 convention when k = 0), merge OUTPUTS
     * after that in rank order (first token string wins on duplicates,
-    * ids compacted). Corpus-INDEPENDENT, unlike the char tier's
+    * ids compacted). Corpus-INDEPENDENT, unlike the char regime's
     * [[vocab]]: the byte alphabet is closed, so the same merge table +
     * special list yields the same ids with no corpus scan at all — and
     * no token can ever be out of vocabulary. |specials| + |merges| +
@@ -786,85 +813,7 @@ object Bpe {
       .toDF("token_id", "token")
   }
 
-  /** [[encodeBytes]] to TRAINER-CONTRACT integer ids: `(id, token_ids:
-    * array<int>, n_tokens)` — the byte-tier analogue of [[encodeIds]].
-    * When `vocabDf` is [[vocabBytes]] of the same merge table, −1 is
-    * IMPOSSIBLE by construction (the byte alphabet is closed); it
-    * remains the out-of-vocabulary marker under a foreign table. Same
-    * narrow zero-shuffle shape: broadcast merges + vocab map, id
-    * lookup folded into the per-partition word memo.
-    */
-  def encodeIdsBytes(docs: DataFrame, idCol: String, textCol: String,
-                     merges: Array[(String, String)],
-                     vocabDf: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vmap: Map[String, Int] = vocabDf
-      .select(col("token"), col("token_id").cast("int"))
-      .as[(String, Int)].collect().toMap
-    val bcV = spark.sparkContext.broadcast(vmap)
-    val bcM = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    norm.as[(Long, String)].mapPartitions { rows =>
-      val idx = bcM.value
-      val vm = bcV.value
-      val memo = mutable.HashMap.empty[String, Array[Int]]
-      rows.map { case (id, t) =>
-        val ids =
-          if (t.isEmpty) Array.empty[Int]
-          else {
-            val words = t.split(" ")
-            val out = mutable.ArrayBuffer.empty[Int]
-            var i = 0
-            while (i < words.length) {
-              val w = if (i == 0) words(i) else " " + words(i)
-              out ++= memoized(memo, w)(
-                encodeWordFast(byteSyms(w), idx).map(s => vm.getOrElse(s, -1)))
-              i += 1
-            }
-            out.toArray
-          }
-        (id, ids)
-      }
-    }.toDF(idCol, "token_ids")
-      .select(col(idCol), col("token_ids"),
-        size(col("token_ids")).as("n_tokens"))
-  }
-
-  /** Byte-tier [[fertility]]: learned-subword tokens per word under a
-    * BYTE merge table, per group — the coverage metric that shows a
-    * byte-level vocabulary under-serving a script (fertility near the
-    * UTF-8 byte length of a word means the table fell back to raw
-    * bytes there — the multi-byte-script failure mode byte tokenizers
-    * must be audited for). Words counted with the same normalization;
-    * one encode scan + one narrow count scan, exact long sums, ONE
-    * IEEE division.
-    */
-  def fertilityBytes(docs: DataFrame, idCol: String, textCol: String,
-                     groupCol: String,
-                     merges: Array[(String, String)]): DataFrame = {
-    val enc = encodeBytes(docs, idCol, textCol, merges)
-      .select(col(idCol), col("n_tokens").cast("long").as("__nt"))
-    val t = regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-      "\\s+", " ")
-    val words = docs.select(col(idCol).cast("long").as(idCol),
-      col(groupCol),
-      when(t === "", lit(0L)).otherwise(size(split(t, " ")).cast("long"))
-        .as("__nw"))
-    words.join(enc, Seq(idCol))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("__nw")).as("n_words"),
-        sum(col("__nt")).as("n_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_tokens"),
-        when(col("n_words") === 0L, lit(null).cast("double"))
-          .otherwise(col("n_tokens").cast("double")
-            / col("n_words").cast("double")).as("fertility"))
-  }
-
-  /** Decode an [[encodeBytes]] token table back to text:
+  /** Decode a byte-regime token table back to text:
     * `(id, text_rt)`. Tokens concatenate with NO separator (the space
     * lives inside the `Ġ` symbols), then symbols → bytes → UTF-8 — the
     * exact inverse, independent of which merges fired. Narrow, no
@@ -880,7 +829,7 @@ object Bpe {
       .toDF(idCol, "text_rt")
   }
 
-  // ---- Raw byte-level tier (pre-tokenized, normalization-free) ---------
+  // ---- Raw-regime pre-tokenizers (normalization-free) ------------------
 
   /** GPT-2-style pre-tokenizer pattern (Radford et al. 2019's
     * tokenizer regex, restated LOOKAHEAD-FREE so it is portable across
@@ -997,151 +946,6 @@ object Bpe {
     out.toArray
   }
 
-  /** Kernel-side pre-tokenizer selection — `gpt2Ws = true` is the
-    * exact-GPT-2 split, false the portable single-pattern split.
-    */
-  private def pretokOf(gpt2Ws: Boolean): String => Array[String] =
-    if (gpt2Ws) preTokenizeGpt2 else preTokenize
-
-  /** RAW byte-level train: merges learned over the [[preTokenize]]
-    * pieces of the UNNORMALIZED text, each mapped to UTF-8 byte
-    * symbols — the application domain of [[encodeBytesRaw]]. This is
-    * the production byte-BPE regime (GPT-2/cl100k): case- and
-    * whitespace-preserving, word-vs-punctuation splits from the regex,
-    * no normalizer anywhere — where [[trainBytes]] learns over the
-    * whitespace-normalized shared-word forms the analytics tier uses.
-    * Same scale shape: ONE distributed piece-count aggregation, the
-    * budgeted driver-side learner on the collected counts.
-    */
-  def trainBytesRaw(docs: DataFrame, textCol: String, numMerges: Int,
-                    vocabBudget: Int = 1 << 16,
-                    capStats: Option[CapStats] = None,
-                    gpt2Ws: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val pretok = pretokOf(gpt2Ws)
-    val words = docs.select(coalesce(col(textCol), lit("")).as("__t"))
-      .as[String].flatMap(t => pretok(t).iterator.map(byteSyms))
-      .toDF("word")
-    val wc = words.groupBy("word").agg(count(lit(1)).as("cnt"))
-    trainFromWordCounts(wc, numMerges, vocabBudget, capStats)
-  }
-
-  /** RAW byte-level encode — [[encodeBytes]] minus the normalizer: the
-    * text is split into [[preTokenize]] pieces (case- and
-    * whitespace-preserving; single spaces ride into the following
-    * piece, GPT-2's `Ġword`; whitespace RUNS are their own pieces), each
-    * piece mapped to byte symbols and fed to the fast kernel. Because
-    * the pieces partition the text and the byte mapping is a bijection,
-    * `decodeBytes ∘ encodeBytesRaw` is the IDENTITY on arbitrary UTF-8
-    * — the headline byte-tier property, with no normalization proviso
-    * (the `bpe_bytes_roundtrip_raw` gate hash-compares against the raw
-    * input column). Same narrow zero-shuffle shape: broadcast merges,
-    * cap-bounded per-partition piece memo.
-    *
-    * `hf = true` swaps the kernel for [[encodeWordHf]] — REQUIRED when
-    * `merges` is an imported production vocabulary ([[loadMerges]]);
-    * the default pass form is for tables trained here (the kernel docs
-    * carry the which-consumes-which contract). The round-trip identity
-    * holds under either kernel (tokens partition the symbols either
-    * way).
-    */
-  def encodeBytesRaw(docs: DataFrame, idCol: String, textCol: String,
-                     merges: Array[(String, String)],
-                     hf: Boolean = false,
-                     gpt2Ws: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val encodeOne: (String, MergeIndex) => Array[String] =
-      if (hf) encodeWordHf else encodeWordFast
-    val pretok = pretokOf(gpt2Ws)
-    val raw = docs.select(col(idCol).cast("long"),
-      coalesce(col(textCol), lit("")).as("__t"))
-    val encoded = raw.as[(Long, String)].mapPartitions { rows =>
-      val idx = bc.value
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val toks = pretok(t).iterator.flatMap { p =>
-          memoized(memo, p)(encodeOne(byteSyms(p), idx))
-        }.toArray
-        (id, toks)
-      }
-    }.toDF(idCol, "tokens")
-    encoded.select(col(idCol), col("tokens"),
-      size(col("tokens")).as("n_tokens"))
-  }
-
-  /** [[encodeBytesRaw]] to TRAINER-CONTRACT integer ids — the raw-tier
-    * analogue of [[encodeIdsBytes]]. Under a [[vocabBytes]] table of
-    * the same merges (any `specials` prefix — the lookup is by token
-    * string, so shifted ids thread through untouched), −1 is impossible
-    * by construction. `hf = true` swaps in the [[encodeWordHf]] kernel
-    * — required for imported production vocabularies ([[loadMerges]]).
-    */
-  def encodeIdsBytesRaw(docs: DataFrame, idCol: String, textCol: String,
-                        merges: Array[(String, String)],
-                        vocabDf: DataFrame,
-                        hf: Boolean = false,
-                        gpt2Ws: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vmap: Map[String, Int] = vocabDf
-      .select(col("token"), col("token_id").cast("int"))
-      .as[(String, Int)].collect().toMap
-    val bcV = spark.sparkContext.broadcast(vmap)
-    val bcM = spark.sparkContext.broadcast(new MergeIndex(merges))
-    val encodeOne: (String, MergeIndex) => Array[String] =
-      if (hf) encodeWordHf else encodeWordFast
-    val pretok = pretokOf(gpt2Ws)
-    val raw = docs.select(col(idCol).cast("long"),
-      coalesce(col(textCol), lit("")).as("__t"))
-    raw.as[(Long, String)].mapPartitions { rows =>
-      val idx = bcM.value
-      val vm = bcV.value
-      val memo = mutable.HashMap.empty[String, Array[Int]]
-      rows.map { case (id, t) =>
-        val ids = pretok(t).iterator.flatMap { p =>
-          memoized(memo, p)(
-            encodeOne(byteSyms(p), idx).map(s => vm.getOrElse(s, -1)))
-        }.toArray
-        (id, ids)
-      }
-    }.toDF(idCol, "token_ids")
-      .select(col(idCol), col("token_ids"),
-        size(col("token_ids")).as("n_tokens"))
-  }
-
-  /** RAW-tier [[fertilityBytes]]: tokens per WORD PIECE under a raw
-    * byte merge table, per group — words here are the [[preTokenize]]
-    * pieces containing at least one non-whitespace character
-    * (whitespace-run pieces are token-bearing but not words; counting
-    * them would flatter fertility on airy text). Cased scripts change
-    * fertility vs the normalized tier — the audit this raw re-run
-    * exists for. Same shape: one encode scan + one narrow
-    * `regexp_extract_all` count scan, exact long sums, ONE division.
-    */
-  def fertilityBytesRaw(docs: DataFrame, idCol: String, textCol: String,
-                        groupCol: String,
-                        merges: Array[(String, String)]): DataFrame = {
-    val enc = encodeBytesRaw(docs, idCol, textCol, merges)
-      .select(col(idCol), col("n_tokens").cast("long").as("__nt"))
-    val pieces = regexp_extract_all(coalesce(col(textCol), lit("")),
-      lit(PreTokPattern), lit(0))
-    val words = docs.select(col(idCol).cast("long").as(idCol),
-      col(groupCol),
-      size(filter(pieces, p => p.rlike(NonWsClass))).cast("long").as("__nw"))
-    words.join(enc, Seq(idCol))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("__nw")).as("n_words"),
-        sum(col("__nt")).as("n_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_tokens"),
-        when(col("n_words") === 0L, lit(null).cast("double"))
-          .otherwise(col("n_tokens").cast("double")
-            / col("n_words").cast("double")).as("fertility"))
-  }
-
   // ---- Vocabulary interchange (merges.txt / vocab.json) ----------------
 
   /** Render a merge table in the standard `merges.txt` interchange
@@ -1185,9 +989,9 @@ object Bpe {
   /** Load a published `merges.txt` into the model-as-rows form
     * ([[train]]'s `(rank, left, right)` shape, `pair_count` absent —
     * the artifact does not carry counts); `mergesOf` of the result is
-    * the in-memory table [[encodeBytesRaw]]/[[encodeIdsBytesRaw]]
-    * consume — in `hf = true` mode, ALWAYS: the artifact's publisher
-    * ran the min-rank algorithm, see [[encodeWordHf]]. Reads through
+    * the in-memory table [[encodeWithMergesFast]]/[[encodeIds]]
+    * consume — under `Regime.Raw(hf = true)`, ALWAYS: the artifact's
+    * publisher ran the min-rank algorithm, see [[encodeWordHf]]. Reads through
     * the Hadoop filesystem layer (any `wholeTextFiles`-able URI);
     * bounded-model contract — a merges.txt is a model artifact, not a
     * dataset.
@@ -1247,41 +1051,41 @@ object Bpe {
       .select(col("token_id"), col("token"))
   }
 
-  /** Exact learned-subword token counts: `(id, n_tokens)` — the
-    * drop-in upgrade for every token-budget consumer. */
-  def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
-                  merges: DataFrame): DataFrame =
-    encode(docs, idCol, textCol, merges).select(col(idCol), col("n_tokens"))
-
-  /** Tokenizer FERTILITY per group (typically language): learned-subword
-    * tokens per word under a pinned merge table — the coverage metric
-    * that decides whether a tokenizer under-serves a language before a
-    * run commits to it (fertility approaching mean word length means
-    * the vocabulary is falling back to characters there). Words are the
-    * same whitespace-normalized tokens the trainer counts; `fertility`
-    * is ONE IEEE division of two exact long sums (engine-portable),
-    * null for word-less groups. One encode scan + one narrow word-count
-    * scan joined on the id (three slim columns), one partial agg.
+  /** Tokenizer FERTILITY per group (typically language) under
+    * `regime`: learned-subword tokens per word under a pinned merge
+    * table — the coverage metric that decides whether a tokenizer
+    * under-serves a language before a run commits to it (fertility
+    * approaching mean word length — or, under a byte regime, the UTF-8
+    * byte length — means the vocabulary is falling back to characters
+    * or raw bytes there). Words are the regime's [[Regime.wordCount]];
+    * `fertility` is ONE IEEE division of two exact long sums
+    * (engine-portable), null for word-less groups.
     */
   def fertility(docs: DataFrame, idCol: String, textCol: String,
                 groupCol: String,
-                merges: Array[(String, String)]): DataFrame = {
-    val enc = encodeWithMergesFast(docs, idCol, textCol, merges)
-      .select(col(idCol), col("n_tokens").cast("long").as("__nt"))
-    val t = regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-      "\\s+", " ")
+                merges: Array[(String, String)],
+                regime: Regime = Regime.Char): DataFrame =
+    fertilityRollup(encodeWithMergesFast(docs, idCol, textCol, merges, regime),
+      docs, idCol, groupCol, regime.wordCount(col(textCol)), "n_tokens")
+
+  /** The fertility rollup shared with [[Unigram.fertility]]: one encode
+    * scan (`enc`'s `unit` count column) + one narrow word-count scan
+    * joined on the id (three slim columns), one partial agg.
+    */
+  private[llm] def fertilityRollup(enc: DataFrame, docs: DataFrame,
+                                   idCol: String, groupCol: String,
+                                   nWords: Column, unit: String): DataFrame = {
     val words = docs.select(col(idCol).cast("long").as(idCol),
-      col(groupCol),
-      when(t === "", lit(0L)).otherwise(size(split(t, " ")).cast("long"))
-        .as("__nw"))
-    words.join(enc, Seq(idCol))
+      col(groupCol), nWords.as("__nw"))
+    words.join(enc.select(col(idCol), col(unit).cast("long").as("__nt")),
+        Seq(idCol))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("__nw")).as("n_words"),
-        sum(col("__nt")).as("n_tokens"))
-      .select(col(groupCol), col("n_docs"), col("n_words"), col("n_tokens"),
+        sum(col("__nt")).as(unit))
+      .select(col(groupCol), col("n_docs"), col("n_words"), col(unit),
         when(col("n_words") === 0L, lit(null).cast("double"))
-          .otherwise(col("n_tokens").cast("double")
+          .otherwise(col(unit).cast("double")
             / col("n_words").cast("double")).as("fertility"))
   }
 }

@@ -126,42 +126,14 @@ object Dedup {
     graft.expressions.WordShingles.word_shingles(normalize(text), n,
       distinct = true)
 
-  /** MinHash signatures: k independent min-hashes over the shingle set.
-    * One explode + one groupBy(id) shuffle; k mins aggregate map-side.
-    */
-  /** MinHash signatures: k independent min-hashes over the shingle set.
-    * One explode + ONE groupBy(id) shuffle with map-side partial mins.
-    * Each shingle is string-hashed ONCE (murmur3, widened to an unsigned
-    * 32-bit long); the k hash functions are universal-family transforms
-    * (a·h+b) mod p with p = 2^31−1 — the mod is ESSENTIAL: without it the
-    * affine map is monotone and min() commutes with it, collapsing all k
-    * "independent" minhashes into transforms of one shingle. Products stay
-    * under 2^63 so ANSI arithmetic never overflows. 1 string hash + k
-    * multiply-add-mods per row instead of k string hashes.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 32, shingleN: Int = 3): DataFrame = {
-    val P = 2147483647L // 2^31 - 1, prime
-    val rnd = new scala.util.Random(9591)
-    val coefs = IndexedSeq.fill(numHashes)(
-      (rnd.nextInt(Int.MaxValue).toLong | 1L, rnd.nextInt(Int.MaxValue).toLong))
-    val mins = coefs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("__h") * a + b, lit(P))).as(s"__h$i") }
-    df.select(col(idCol),
-        explode(shinglesDistinct(col(textCol), shingleN)).as("__shingle"))
-      .withColumn("__h", hash(col("__shingle")).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-      .groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"__h$i")): _*).as("signature"))
-  }
-
-  /** Shuffle-FREE signature variant: the k min-hashes computed per row as
-    * array_min over transforms of the shingle-hash array — no explode, no
-    * groupBy. Same hash family as [[minhashSignatures]] (identical
-    * output). Trades k·|shingles| interpreted ops per row for zero
-    * shuffle — the winning shape when the corpus is large and documents
-    * are short-to-medium.
+  /** MinHash signatures: k independent min-hashes over the shingle set,
+    * computed per row — no explode, no groupBy, no shuffle. Each shingle
+    * is string-hashed ONCE (murmur3, widened to an unsigned 32-bit long);
+    * the k hash functions are universal-family transforms (a·h+b) mod p
+    * with p = 2^31−1 — the mod is ESSENTIAL: without it the affine map is
+    * monotone and min() commutes with it, collapsing all k "independent"
+    * minhashes into transforms of one shingle. Products stay under 2^63,
+    * so ANSI arithmetic never overflows.
     */
   def minhashSignaturesInline(df: DataFrame, idCol: String, textCol: String,
                               numHashes: Int = 32, shingleN: Int = 3): DataFrame =

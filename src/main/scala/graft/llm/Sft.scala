@@ -122,66 +122,45 @@ object Sft {
         length(col("transcript")).as("n_chars"),
         col("transcript"), col("mask_spans"))
 
-  /** Per-turn token counts under a pinned merge table, joined back onto
-    * the turns rows as `__ntok` — the shared primitive of the
-    * token-space family: encode only the DISTINCT rendered lines
-    * ([[Bpe.encodeWordFast]] kernel) and hash-join counts back.
-    *
-    * Two token coordinate systems, selected by `byteLevel`:
-    * `false` = the char tier (whitespace-normalized words, merges over
-    * character symbols — the shared-word analytics convention);
-    * `true` = the RAW byte tier ([[Bpe.preTokenize]] pieces of the
-    * UNNORMALIZED rendered line → byte symbols → the same kernel) —
-    * the production-tokenizer coordinates a real trainer's loss
-    * actually indexes, case- and whitespace-preserving.
-    *
-    * Byte-tier fidelity knobs (ignored at the char tier), mirroring
-    * [[Bpe.encodeBytesRaw]]: `hf = true` swaps the encode kernel for
-    * [[Bpe.encodeWordHf]] (REQUIRED under an imported production merge
-    * table — [[Bpe.loadMerges]]); `gpt2Ws = true` swaps the
-    * pre-tokenizer for [[Bpe.preTokenizeGpt2]]'s exact trailing-space
-    * split. Every token-coordinate consumer below threads both, so a
-    * trainer's budgets, spans, and materialized blocks can be computed
-    * in EXACTLY the coordinates a published GPT-2-family tokenizer
-    * produces.
+  /** The turns rows with each rendered line's token array under
+    * `regime` joined back as `__seg` — the shared primitive of the
+    * token-space family: only the DISTINCT rendered lines (normalized by
+    * the regime) go through [[Bpe]]'s shared kernel, then hash-join
+    * back. `vocab` maps tokens to ids (−1 when absent); `None` keeps the
+    * token strings. The regime picks the token coordinates: `Char` is
+    * the shared-word analytics convention, `Raw` the production
+    * byte-level coordinates a real trainer's loss actually indexes
+    * (`Raw(hf = true, gpt2Ws = true)` is exactly a published
+    * GPT-2-family tokenizer under an imported merge table,
+    * [[Bpe.loadMerges]]).
     */
+  private def withLineSegments(turnsDf: DataFrame,
+                               merges: Array[(String, String)],
+                               regime: Bpe.Regime,
+                               vocab: Option[DataFrame]): DataFrame = {
+    import turnsDf.sparkSession.implicits._
+    val withLine = turnsDf.withColumn("__line",
+      regime.normalize(lineOf(col("role"), col("content"))))
+    val idx = new Bpe.MergeIndex(merges)
+    val lines = withLine.select(col("__line")).distinct()
+      .select(col("__line"), col("__line")).as[(String, String)]
+    val segs = vocab match {
+      case None =>
+        Bpe.segmentRows(lines, idx, regime.words)(regime.encoder)
+          .toDF("__line", "__seg")
+      case Some(v) =>
+        Bpe.segmentRows(lines, (idx, Bpe.idsOf(v, "token", "token_id")),
+          regime.words)(regime.idEncoder).toDF("__line", "__seg")
+    }
+    withLine.join(segs, Seq("__line")).drop("__line")
+  }
+
+  /** [[withLineSegments]]' token COUNTS as `__ntok` (long). */
   private def withLineTokens(turnsDf: DataFrame,
                              merges: Array[(String, String)],
-                             byteLevel: Boolean = false,
-                             hf: Boolean = false,
-                             gpt2Ws: Boolean = false): DataFrame = {
-    val spark = turnsDf.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new Bpe.MergeIndex(merges))
-    val line = lineOf(col("role"), col("content"))
-    val lineKey = if (byteLevel) line
-      else regexp_replace(trim(lower(line)), "\\s+", " ")
-    val withLine = turnsDf.withColumn("__line", lineKey)
-    val encodeOne: (String, Bpe.MergeIndex) => Array[String] =
-      if (hf) Bpe.encodeWordHf else Bpe.encodeWordFast
-    val pretok: String => Array[String] =
-      if (gpt2Ws) Bpe.preTokenizeGpt2 else Bpe.preTokenize
-    val counted = withLine.select(col("__line")).distinct().as[String]
-      .mapPartitions { it =>
-        val idx = bc.value
-        val memo = scala.collection.mutable.HashMap.empty[String, Int]
-        it.map { t =>
-          val n =
-            if (byteLevel)
-              pretok(t).iterator.map { p =>
-                Bpe.memoized(memo, p)(
-                  encodeOne(Bpe.byteSyms(p), idx).length)
-              }.sum
-            else if (t.isEmpty) 0
-            else t.split(" ").iterator.map { w =>
-              Bpe.memoized(memo, w)(Bpe.encodeWordFast(w, idx).length)
-            }.sum
-          (t, n)
-        }
-      }.toDF("__line", "__ntok")
-    withLine.join(counted, Seq("__line")).drop("__line")
-      .withColumn("__ntok", col("__ntok").cast("long"))
-  }
+                             regime: Bpe.Regime): DataFrame =
+    withLineSegments(turnsDf, merges, regime, None)
+      .withColumn("__ntok", size(col("__seg")).cast("long")).drop("__seg")
 
   /** [[truncateLatest]] with a TOKEN budget: keep the latest whole
     * turns whose learned-subword token counts sum to ≤ `maxTokens`
@@ -192,12 +171,10 @@ object Sft {
     */
   def truncateLatestTokens(turnsDf: DataFrame, maxTokens: Int,
                            merges: Array[(String, String)],
-                           byteLevel: Boolean = false,
-                           hf: Boolean = false,
-                           gpt2Ws: Boolean = false): DataFrame = {
+                           regime: Bpe.Regime = Bpe.Regime.Char): DataFrame = {
     val wDesc = Window.partitionBy(col("conv_id"))
       .orderBy(col("turn_idx").desc)
-    val kept = withLineTokens(turnsDf, merges, byteLevel, hf, gpt2Ws)
+    val kept = withLineTokens(turnsDf, merges, regime)
       .withColumn("__sfx", sum(col("__ntok")).over(
         wDesc.rowsBetween(Window.unboundedPreceding, 0)))
       .filter(col("__sfx") <= maxTokens)
@@ -221,15 +198,15 @@ object Sft {
     * useless to a loss over token logits).
     *
     * Coordinate semantics: a turn's token count is the BPE token count
-    * of its rendered line (`role ⧺ ": " ⧺ content`, normalized by the
-    * tokenizer's own trim/lower/whitespace-collapse convention). The
-    * transcript's `\n` joints vanish under whitespace tokenization, so
-    * the transcript token stream is exactly the per-turn streams
-    * concatenated: turn i's span = [Σ prior turns' counts, + own count)
-    * with NO joint term — unlike char space's `line_len + 1`.
+    * of its rendered line (`role ⧺ ": " ⧺ content`) under `regime` —
+    * exactly [[Bpe.encodeWithMergesFast]]'s `n_tokens` of that line.
+    * The `\n` joints are not tokens, so the transcript token stream is
+    * the per-turn streams concatenated: turn i's span = [Σ prior turns'
+    * counts, + own count) with NO joint term — unlike char space's
+    * `line_len + 1`.
     *
     * Scale shape: token counting encodes only the DISTINCT rendered
-    * lines ([[Bpe.encodeWordFast]] kernel — per-word cost independent
+    * lines ([[Bpe]]'s shared kernel — per-word cost independent
     * of merge-table size) and hash-joins the counts back; offsets are
     * the same per-conversation window as [[turns]]; the rollup is one
     * sorted-struct aggregation. One extra shuffle (the distinct) over
@@ -237,11 +214,9 @@ object Sft {
     */
   def transcriptsTokens(turnsDf: DataFrame,
                         merges: Array[(String, String)],
-                        byteLevel: Boolean = false,
-                        hf: Boolean = false,
-                        gpt2Ws: Boolean = false): DataFrame = {
+                        regime: Bpe.Regime = Bpe.Regime.Char): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val toks = withLineTokens(turnsDf, merges, byteLevel, hf, gpt2Ws)
+    val toks = withLineTokens(turnsDf, merges, regime)
       .select(col("conv_id"), col("turn_idx"), col("masked"), col("__ntok"))
       .withColumn("tok_start", coalesce(
         sum(col("__ntok")).over(w.rowsBetween(Window.unboundedPreceding, -1)),
@@ -271,10 +246,10 @@ object Sft {
     */
   def packTokens(turnsDf: DataFrame, merges: Array[(String, String)],
                  blockTokens: Int = 2048, nShards: Int = 16,
-                 portable: Boolean = false, byteLevel: Boolean = false,
-                 eosId: Option[Int] = None,
-                 hf: Boolean = false, gpt2Ws: Boolean = false): DataFrame = {
-    val packed = pack(transcriptsTokens(turnsDf, merges, byteLevel, hf, gpt2Ws)
+                 portable: Boolean = false,
+                 regime: Bpe.Regime = Bpe.Regime.Char,
+                 eosId: Option[Int] = None): DataFrame = {
+    val packed = pack(transcriptsTokens(turnsDf, merges, regime)
         .select(col("conv_id"), col("n_tokens").as("n_chars"),
           col("mask_spans")),
         blockChars = blockTokens, nShards = nShards, portable = portable)
@@ -285,58 +260,6 @@ object Sft {
     // the trainer's materializer never guesses. None keeps the legacy
     // schema (joint id left to the consumer).
     eosId.fold(packed)(id => packed.withColumn("eos_id", lit(id)))
-  }
-
-  /** Per-turn token-ID arrays under a pinned merge table + vocabulary,
-    * joined back as `__ids` — [[withLineTokens]]' sibling for the
-    * MATERIALIZATION path: same distinct-line kernel, but the ids
-    * themselves survive instead of collapsing to a count.
-    */
-  private def withLineIds(turnsDf: DataFrame,
-                          merges: Array[(String, String)],
-                          vocabDf: DataFrame,
-                          byteLevel: Boolean,
-                          hf: Boolean = false,
-                          gpt2Ws: Boolean = false): DataFrame = {
-    val spark = turnsDf.sparkSession
-    import spark.implicits._
-    val vmap: Map[String, Int] = {
-      import org.apache.spark.sql.functions.{col => c}
-      vocabDf.select(c("token"), c("token_id").cast("int"))
-        .as[(String, Int)].collect().toMap
-    }
-    val bcV = spark.sparkContext.broadcast(vmap)
-    val bcM = spark.sparkContext.broadcast(new Bpe.MergeIndex(merges))
-    val line = lineOf(col("role"), col("content"))
-    val lineKey = if (byteLevel) line
-      else regexp_replace(trim(lower(line)), "\\s+", " ")
-    val withLine = turnsDf.withColumn("__line", lineKey)
-    val encodeOne: (String, Bpe.MergeIndex) => Array[String] =
-      if (hf) Bpe.encodeWordHf else Bpe.encodeWordFast
-    val pretok: String => Array[String] =
-      if (gpt2Ws) Bpe.preTokenizeGpt2 else Bpe.preTokenize
-    val counted = withLine.select(col("__line")).distinct().as[String]
-      .mapPartitions { it =>
-        val idx = bcM.value
-        val vm = bcV.value
-        val memo = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.map { t =>
-          val ids =
-            if (byteLevel)
-              pretok(t).iterator.flatMap { p =>
-                Bpe.memoized(memo, p)(
-                  encodeOne(Bpe.byteSyms(p), idx)
-                    .map(s => vm.getOrElse(s, -1)))
-              }.toArray
-            else if (t.isEmpty) Array.empty[Int]
-            else t.split(" ").iterator.flatMap { w =>
-              Bpe.memoized(memo, w)(
-                Bpe.encodeWordFast(w, idx).map(s => vm.getOrElse(s, -1)))
-            }.toArray
-          (t, ids)
-        }
-      }.toDF("__line", "__ids")
-    withLine.join(counted, Seq("__line")).drop("__line")
   }
 
   /** MATERIALIZED trainer blocks — the last step before the trainer:
@@ -365,12 +288,12 @@ object Sft {
     * Output: `(shard, block_id, n_tokens, n_pad, token_ids,
     * loss_mask)` — `n_tokens` is the content size before padding.
     *
-    * `hf`/`gpt2Ws` (byte tier only) select the PRODUCTION tokenizer
-    * regime — [[Bpe.encodeWordHf]] + [[Bpe.preTokenizeGpt2]] — so
-    * blocks can be materialized in exactly the id coordinates of an
-    * IMPORTED published vocabulary ([[Bpe.loadMerges]]/[[Bpe.loadVocab]]
-    * + [[Bpe.vocabBytes]] specials); SftMaterializeSpec pins the
-    * decode-back law under the full imported-GPT-2 regime.
+    * `Bpe.Regime.Raw(hf = true, gpt2Ws = true)` selects the PRODUCTION
+    * tokenizer regime — [[Bpe.encodeWordHf]] + [[Bpe.preTokenizeGpt2]]
+    * — so blocks can be materialized in exactly the id coordinates of
+    * an IMPORTED published vocabulary ([[Bpe.loadMerges]]/
+    * [[Bpe.loadVocab]] + [[Bpe.vocabBytes]] specials); SftMaterializeSpec
+    * pins the decode-back law under the full imported-GPT-2 regime.
     *
     * Scale shape: the distinct-line encode join + the funnel-free
     * offset cumsum over COUNTS ONLY (both shared with [[packTokens]]),
@@ -391,15 +314,14 @@ object Sft {
                         vocabDf: DataFrame,
                         blockTokens: Int, nShards: Int = 16,
                         portable: Boolean = false,
-                        byteLevel: Boolean = false,
-                        eosId: Int, padId: Option[Int] = None,
-                        hf: Boolean = false,
-                        gpt2Ws: Boolean = false): DataFrame = {
+                        regime: Bpe.Regime = Bpe.Regime.Char,
+                        eosId: Int, padId: Option[Int] = None): DataFrame = {
     require(blockTokens > 0, s"blockTokens must be positive, got $blockTokens")
     import graft.operators.Sharding
     val b = lit(blockTokens.toLong)
     val wT = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
-    val toks = withLineIds(turnsDf, merges, vocabDf, byteLevel, hf, gpt2Ws)
+    val toks = withLineSegments(turnsDf, merges, regime, Some(vocabDf))
+      .withColumnRenamed("__seg", "__ids")
       .withColumn("__nt", size(col("__ids")).cast("long"))
       .withColumn("tok_start", coalesce(
         sum(col("__nt")).over(wT.rowsBetween(Window.unboundedPreceding, -1)),

@@ -1,9 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Unigram-LM tokenizer — the OTHER production subword family (Kudo
   * 2018, the SentencePiece unigram model shipped by T5/Llama-class
@@ -14,7 +16,7 @@ import scala.collection.mutable
   *
   * Semantics (pinned, engine-portable):
   *   - Words are the whitespace-normalized tokens of `trim(lower(text))`
-  *     — the [[Bpe.train]] char-tier convention. Pieces never cross a
+  *     — the [[Bpe.Regime.Char]] convention. Pieces never cross a
   *     word boundary.
   *   - All string positions are CODE POINTS (what Spark `substring`/
   *     `length` and DuckDB `substr`/`len` both count — the JVM kernel
@@ -50,8 +52,8 @@ import scala.collection.mutable
   * substring explode + one aggregation; each EM round is a narrow
   * broadcast-model Viterbi kernel over distinct words ([[Bpe.MemoCap]]-
   * bounded memos) + one piece-count aggregation + a top-`budget`
-  * TakeOrdered. Encoding is a zero-shuffle broadcast kernel, the
-  * [[Bpe.encodeWithMergesFast]] shape verbatim. The model is rows
+  * TakeOrdered. Encoding runs [[Bpe]]'s shared narrow kernel
+  * ([[Bpe.segmentRows]]) with the Viterbi segmenter. The model is rows
   * (`piece, cnt`) — parquet-persistable, bounded-collect on use.
   */
 object Unigram {
@@ -182,32 +184,47 @@ object Unigram {
     buf.toArray
   }
 
+  /** The Viterbi segmenter over a collected score map, built per
+    * partition: the per-word encoder [[Bpe.segmentRows]] memoizes.
+    */
+  private def viterbi(maxPieceLen: Int)(scores: Map[String, Double])
+      : String => Array[String] = {
+    val sc = mkScore(scores)
+    w => viterbiSegment(w, sc, maxPieceLen)
+  }
+
+  /** [[Bpe.encodeDocs]] with `n_pieces` as long — every unigram encode's
+    * `(idCol, outCol, n_pieces)` shape.
+    */
+  private def encodePieces[M: ClassTag, V: TypeTag: ClassTag](
+      docs: DataFrame, idCol: String, text: Column,
+      words: String => Iterator[String], model: M, outCol: String)(
+      segment: M => String => Array[V]): DataFrame =
+    Bpe.encodeDocs(docs, idCol, text, words, model, outCol, "n_pieces")(
+        segment)
+      .withColumn("n_pieces", col("n_pieces").cast("long"))
+
   /** Viterbi-encode a corpus under a model: `(idCol, pieces, n_pieces)`
-    * — the [[Bpe.encodeWithMergesFast]] shape: zero shuffle, broadcast
-    * scores, per-partition word→pieces memo, empty text → empty array.
+    * — [[Bpe.Regime.Char]]'s normalizer and words through the shared
+    * zero-shuffle kernel: broadcast scores, per-partition word→pieces
+    * memo, empty text → empty array.
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
-             model: DataFrame, maxPieceLen: Int = 10): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(scoresOf(model))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val sc = mkScore(bc.value)
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val pieces =
-          if (t.isEmpty) Array.empty[String]
-          else t.split(" ").iterator.flatMap { w =>
-            Bpe.memoized(memo, w)(viterbiSegment(w, sc, maxPieceLen))
-          }.toArray
-        (id, pieces)
-      }
-    }.toDF(idCol, "pieces")
-    encoded.select(col(idCol), col("pieces"),
-      size(col("pieces")).cast("long").as("n_pieces"))
+             model: DataFrame, maxPieceLen: Int = 10): DataFrame =
+    encodePieces(docs, idCol, Bpe.Regime.Char.normalize(col(textCol)),
+      Bpe.Regime.Char.words, scoresOf(model), "pieces")(viterbi(maxPieceLen))
+
+  /** [[Bpe.segmentRows]] over a `(word, cnt)` table, each word one
+    * unit, one output row per segment element: `(__c, __s)` — the
+    * E-steps' shared narrow scan.
+    */
+  private def segmentWordCounts[M: ClassTag, V: TypeTag: ClassTag](
+      wc: DataFrame, model: M)(segment: M => String => Array[V]): DataFrame = {
+    import wc.sparkSession.implicits._
+    Bpe.segmentRows(wc.select(col("cnt").cast("long"), col("word"))
+        .as[(Long, String)], model, Iterator.single(_))(segment)
+      .toDF("__c", "__seg")
+      .select(col("__c"), explode(col("__seg")).as("__s"))
   }
 
   /** One hard-EM round: Viterbi-segment the distinct-word table under
@@ -219,20 +236,9 @@ object Unigram {
     */
   def emStepHard(wc: DataFrame, model: DataFrame, maxPieceLen: Int = 10,
                  budget: Int = 4096): DataFrame = {
-    val spark = wc.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(scoresOf(model))
-    val segmented = wc
-      .select(col("word"), col("cnt").cast("long").as("cnt"))
-      .as[(String, Long)]
-      .mapPartitions { rows =>
-        val sc = mkScore(bc.value)
-        val memo = mutable.HashMap.empty[String, Array[String]]
-        rows.flatMap { case (w, c) =>
-          Bpe.memoized(memo, w)(viterbiSegment(w, sc, maxPieceLen))
-            .iterator.map(p => (p, c))
-        }
-      }.toDF("piece", "__c")
+    val segmented = segmentWordCounts(wc, scoresOf(model))(
+        viterbi(maxPieceLen))
+      .select(col("__s").as("piece"), col("__c"))
     val counts = segmented.groupBy("piece").agg(sum(col("__c")).as("cnt"))
     val newSingles = counts.where(length(col("piece")) === 1)
     val keptSingles = model.select(col("piece"))
@@ -253,12 +259,9 @@ object Unigram {
   // the first — the add_dummy_prefix convention), and decode is
   // concat → ▁→space → drop the leading space. That makes the token
   // stream losslessly invertible back to the whitespace-collapsed text —
-  // the [[Bpe.encodeBytes]] Ġ-convention, one family over. (Precondition
+  // the [[Bpe.Regime.Bytes]] Ġ-convention, one family over. (Precondition
   // shared with real SentencePiece: text containing a literal ▁ decodes
   // it as a space — the marker is reserved.)
-
-  private def spNorm(textCol: String): org.apache.spark.sql.Column =
-    spNorm(textCol, nfkc = false)
 
   /** The SP tier's normalizer: optional NFKC compatibility fold (the
     * SentencePiece nmt-NFKC-family default — ligatures split, fullwidth
@@ -266,7 +269,7 @@ object Unigram {
     * whitespace collapse, so an NBSP becomes a word boundary), then
     * trim + whitespace-run collapse.
     */
-  private def spNorm(textCol: String, nfkc: Boolean): org.apache.spark.sql.Column = {
+  private def spNorm(textCol: String, nfkc: Boolean): Column = {
     val t = coalesce(col(textCol), lit(""))
     val n = if (nfkc) graft.expressions.UnicodeNormalize.unicode_nfkc(t) else t
     regexp_replace(trim(n), "\\s+", " ")
@@ -288,34 +291,19 @@ object Unigram {
     seedVocabFromWordCounts(wordCountsSp(docs, textCol, nfkc), maxPieceLen,
       budget)
 
+  /** The ▁ tier's words: every normalized word as `▁word`. */
+  private def spWords(t: String): Iterator[String] =
+    t.split(" ").iterator.map("▁" + _)
+
   /** [[encode]] under the ▁ convention: case preserved, every word
     * entering the kernel as `▁word`. Same zero-shuffle broadcast+memo
     * shape; [[decodeSp]] inverts the stream exactly.
     */
   def encodeSp(docs: DataFrame, idCol: String, textCol: String,
                model: DataFrame, maxPieceLen: Int = 10,
-               nfkc: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(scoresOf(model))
-    val norm = docs.select(col(idCol).cast("long"),
-      spNorm(textCol, nfkc).as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val sc = mkScore(bc.value)
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val pieces =
-          if (t.isEmpty) Array.empty[String]
-          else t.split(" ").iterator.flatMap { w =>
-            val mw = "▁" + w
-            Bpe.memoized(memo, mw)(viterbiSegment(mw, sc, maxPieceLen))
-          }.toArray
-        (id, pieces)
-      }
-    }.toDF(idCol, "pieces")
-    encoded.select(col(idCol), col("pieces"),
-      size(col("pieces")).cast("long").as("n_pieces"))
-  }
+               nfkc: Boolean = false): DataFrame =
+    encodePieces(docs, idCol, spNorm(textCol, nfkc), spWords,
+      scoresOf(model), "pieces")(viterbi(maxPieceLen))
 
   /** Exact inverse of [[encodeSp]]: `(idCol, text_rt)` — concatenate,
     * ▁→space, drop the leading space. `decodeSp ∘ encodeSp` is the
@@ -379,34 +367,14 @@ object Unigram {
     */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
                 model: DataFrame, vocabDf: DataFrame,
-                maxPieceLen: Int = 10): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val vmap: Map[String, Int] = vocabDf
-      .select(col("piece"), col("piece_id").cast("int"))
-      .as[(String, Int)].collect().toMap
-    val bcV = spark.sparkContext.broadcast(vmap)
-    val bcS = spark.sparkContext.broadcast(scoresOf(model))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    norm.as[(Long, String)].mapPartitions { rows =>
-      val sc = mkScore(bcS.value)
-      val vm = bcV.value
-      val memo = mutable.HashMap.empty[String, Array[Int]]
-      rows.map { case (id, t) =>
-        val ids =
-          if (t.isEmpty) Array.empty[Int]
-          else t.split(" ").iterator.flatMap { w =>
-            Bpe.memoized(memo, w)(
-              viterbiSegment(w, sc, maxPieceLen).map(vm.getOrElse(_, -1)))
-          }.toArray
-        (id, ids)
-      }
-    }.toDF(idCol, "piece_ids")
-      .select(col(idCol), col("piece_ids"),
-        size(col("piece_ids")).cast("long").as("n_pieces"))
-  }
+                maxPieceLen: Int = 10): DataFrame =
+    encodePieces(docs, idCol, Bpe.Regime.Char.normalize(col(textCol)),
+      Bpe.Regime.Char.words,
+      (scoresOf(model), Bpe.idsOf(vocabDf, "piece", "piece_id")),
+      "piece_ids") { case (scores, vm) =>
+      val seg = viterbi(maxPieceLen)(scores)
+      w => seg(w).map(vm.getOrElse(_, -1))
+    }
 
   /** Per-group fertility (pieces per word) under a model — the
     * [[Bpe.fertility]] shape: tokenizer-quality triage per language/
@@ -415,26 +383,10 @@ object Unigram {
     */
   def fertility(docs: DataFrame, idCol: String, textCol: String,
                 groupCol: String, model: DataFrame,
-                maxPieceLen: Int = 10): DataFrame = {
-    val enc = encode(docs, idCol, textCol, model, maxPieceLen)
-      .select(col(idCol), col("n_pieces").as("__np"))
-    val t = regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-      "\\s+", " ")
-    val words = docs.select(col(idCol).cast("long").as(idCol),
-      col(groupCol),
-      when(t === "", lit(0L)).otherwise(size(split(t, " ")).cast("long"))
-        .as("__nw"))
-    words.join(enc, Seq(idCol))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("__nw")).as("n_words"),
-        sum(col("__np")).as("n_pieces"))
-      .select(col(groupCol), col("n_docs"), col("n_words"),
-        col("n_pieces"),
-        when(col("n_words") === 0L, lit(null).cast("double"))
-          .otherwise(col("n_pieces").cast("double")
-            / col("n_words").cast("double")).as("fertility"))
-  }
+                maxPieceLen: Int = 10): DataFrame =
+    Bpe.fertilityRollup(encode(docs, idCol, textCol, model, maxPieceLen),
+      docs, idCol, groupCol, Bpe.Regime.Char.wordCount(col(textCol)),
+      "n_pieces")
 
   /** Per-chunk forward–backward edge expectations of one word — the
     * SOFT (true Kudo) E-step kernel: over the word's piece lattice,
@@ -586,22 +538,14 @@ object Unigram {
   private def emStepSoftScores(wc: DataFrame, scores: Map[String, Double],
                                prevModel: DataFrame, maxPieceLen: Int,
                                budget: Int): DataFrame = {
-    val spark = wc.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(scores)
-    val contrib = wc
-      .select(col("word"), col("cnt").cast("long").as("cnt"))
-      .as[(String, Long)]
-      .mapPartitions { rows =>
-        val sc = mkScore(bc.value)
-        // memo on the word's edge expectations (pure in word)
-        val memo = mutable.HashMap.empty[String, Array[(String, Double)]]
-        rows.flatMap { case (w, c) =>
-          val cd = c.toDouble
-          Bpe.memoized(memo, w)(fbExpectations(w, sc, maxPieceLen).toArray)
-            .iterator.map { case (p, e) => (p, e * cd) }
-        }
-      }.toDF("piece", "__w")
+    // each lattice edge's posterior (pure in the word, memoized) times
+    // the word's corpus frequency — one more exactly-rounded op
+    val contrib = segmentWordCounts(wc, scores) { m =>
+        val sc = mkScore(m)
+        w => fbExpectations(w, sc, maxPieceLen).toArray
+      }
+      .select(col("__s._1").as("piece"),
+        (col("__s._2") * col("__c").cast("double")).as("__w"))
     val weights = contrib
       .select(col("piece"), col("__w").cast("decimal(28,15)").as("__q"))
       .groupBy("piece").agg(sum(col("__q")).as("weight"))
@@ -649,28 +593,10 @@ object Unigram {
     * [[scoresOfWeighted]]; the soft-trained artifact's serving path.
     */
   def encodeW(docs: DataFrame, idCol: String, textCol: String,
-              modelW: DataFrame, maxPieceLen: Int = 10): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(scoresOfWeighted(modelW))
-    val norm = docs.select(col(idCol).cast("long"),
-      regexp_replace(trim(lower(coalesce(col(textCol), lit("")))),
-        "\\s+", " ").as("__t"))
-    val encoded = norm.as[(Long, String)].mapPartitions { rows =>
-      val sc = mkScore(bc.value)
-      val memo = mutable.HashMap.empty[String, Array[String]]
-      rows.map { case (id, t) =>
-        val pieces =
-          if (t.isEmpty) Array.empty[String]
-          else t.split(" ").iterator.flatMap { w =>
-            Bpe.memoized(memo, w)(viterbiSegment(w, sc, maxPieceLen))
-          }.toArray
-        (id, pieces)
-      }
-    }.toDF(idCol, "pieces")
-    encoded.select(col(idCol), col("pieces"),
-      size(col("pieces")).cast("long").as("n_pieces"))
-  }
+              modelW: DataFrame, maxPieceLen: Int = 10): DataFrame =
+    encodePieces(docs, idCol, Bpe.Regime.Char.normalize(col(textCol)),
+      Bpe.Regime.Char.words, scoresOfWeighted(modelW),
+      "pieces")(viterbi(maxPieceLen))
 
   /** Hard-EM training: seed → `iters` rounds of [[emStepHard]]. The
     * word-count table is computed once and persisted across rounds
@@ -914,35 +840,19 @@ object Unigram {
     * collapsed, every word entering the lattice as `▁word`
     * (add_dummy_prefix), log-space Viterbi over the vocabulary's own
     * max piece length, byte-fallback/unk OOV post-pass. Output
-    * `(idCol, pieces, piece_ids, n_pieces)`. Same zero-shuffle
-    * broadcast+memo shape as [[encodeSp]]; [[decodeImported]] inverts
+    * `(idCol, pieces, piece_ids, n_pieces)`. The same shared kernel and
+    * ▁ words as [[encodeSp]]; [[decodeImported]] inverts
     * the stream exactly under a byte-fallback vocabulary.
     */
   def encodeImported(docs: DataFrame, idCol: String, textCol: String,
-                     vocab: DataFrame, nfkc: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(collectImported(vocab))
-    val norm = docs.select(col(idCol).cast("long"),
-      spNorm(textCol, nfkc).as("__t"))
-    norm.as[(Long, String)].mapPartitions { rows =>
-      val m = bc.value
+                     vocab: DataFrame, nfkc: Boolean = false): DataFrame =
+    encodePieces(docs, idCol, spNorm(textCol, nfkc), spWords,
+        collectImported(vocab), "__ps") { m =>
       val sc = mkScoreLog(m.scores)
-      val memo = mutable.HashMap.empty[String, Array[(String, Int)]]
-      rows.map { case (id, t) =>
-        val ps =
-          if (t.isEmpty) Array.empty[(String, Int)]
-          else t.split(" ").iterator.flatMap { w =>
-            val mw = "▁" + w
-            Bpe.memoized(memo, mw)(fallbackPieces(m,
-              viterbiSegmentLog(mw, sc, m.maxPieceLen)))
-          }.toArray
-        (id, ps.map(_._1), ps.map(_._2))
-      }
-    }.toDF(idCol, "pieces", "piece_ids")
-      .select(col(idCol), col("pieces"), col("piece_ids"),
-        size(col("pieces")).cast("long").as("n_pieces"))
-  }
+      w => fallbackPieces(m, viterbiSegmentLog(w, sc, m.maxPieceLen))
+    }.select(col(idCol), transform(col("__ps"), _.getField("_1")).as("pieces"),
+      transform(col("__ps"), _.getField("_2")).as("piece_ids"),
+      col("n_pieces"))
 
   /** Exact inverse of [[encodeImported]] under a byte-fallback
     * vocabulary: `<0xXX>` runs → bytes → UTF-8, other pieces concatenate,

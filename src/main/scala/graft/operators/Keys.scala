@@ -63,8 +63,4 @@ object Keys {
     }
     spark.createDataFrame(rows, schema)
   }
-
-  /** Current max SK (0 for an empty dim) — the `NEXTVAL` starting point. */
-  def maxSk(dim: DataFrame, skCol: String): Long =
-    dim.agg(coalesce(max(col(skCol)), lit(0L))).head().getLong(0)
 }

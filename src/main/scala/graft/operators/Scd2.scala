@@ -104,21 +104,4 @@ object Scd2 {
     Seq(hist.select(cols.map(col): _*), kept, expired, fresh)
       .reduce(_ unionByName _)
   }
-
-  /** Merge statistics matching the reference's {inserted, updated, unchanged}
-    * counters (`dimensions/job.py:89-92`). One extra pass over the join.
-    */
-  def mergeStats(existing: DataFrame, incoming: DataFrame,
-                 key: Seq[String], compare: Seq[String]): DataFrame = {
-    val inc = incoming.dropDuplicates(key)
-    val cur = existing.filter(col(CurrentCol))
-    val j = inc.as("inc").join(cur.as("cur"),
-      key.map(k => col(s"cur.$k") === col(s"inc.$k")).reduce(_ && _), "left_outer")
-    val hasCur  = col(s"cur.${key.head}").isNotNull
-    val changed = changedPredicate(compare, arrayTyped(existing))
-    j.agg(
-      count(when(!hasCur, 1)).as("inserted"),
-      count(when(hasCur && changed, 1)).as("updated"),
-      count(when(hasCur && !changed, 1)).as("unchanged"))
-  }
 }

@@ -197,20 +197,23 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("byte-level BPE encode is a narrow zero-shuffle scan") {
+    import graft.llm.Bpe
     val docs = Tables(spark, dir, "documents")
     val merges = Array(("t", "h"), ("Ġ", "t"))
-    val p = plan(graft.llm.Bpe.encodeBytes(docs, "doc_id", "text", merges))
-    assert(!p.contains("Exchange"), p.take(800))
-    val p2 = plan(graft.llm.Bpe.decodeBytes(
-      graft.llm.Bpe.encodeBytes(docs, "doc_id", "text", merges), "doc_id"))
-    assert(!p2.contains("Exchange"), p2.take(800))
-    // the RAW tier keeps the same shape: preTokenize runs inside the
-    // same mapPartitions kernel, so no new boundary appears
-    val p3 = plan(graft.llm.Bpe.encodeBytesRaw(docs, "doc_id", "text", merges))
-    assert(!p3.contains("Exchange"), p3.take(800))
-    val p4 = plan(graft.llm.Bpe.decodeBytes(
-      graft.llm.Bpe.encodeBytesRaw(docs, "doc_id", "text", merges), "doc_id"))
-    assert(!p4.contains("Exchange"), p4.take(800))
+    val vocab = Bpe.vocabBytes(spark, merges)
+    // every regime runs the same one-mapPartitions kernel: the
+    // normalization is a projection and the splitter, symbol map and
+    // merge kernel all run inside it, so no regime adds a boundary
+    for (regime <- Seq(Bpe.Regime.Char, Bpe.Regime.Bytes, Bpe.Regime.Raw(),
+        Bpe.Regime.Raw(gpt2Ws = true), Bpe.Regime.Raw(hf = true))) {
+      val enc = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+        regime)
+      for (df <- Seq(enc, Bpe.decodeBytes(enc, "doc_id"),
+          Bpe.encodeIds(docs, "doc_id", "text", merges, vocab, regime))) {
+        val p = plan(df)
+        assert(!p.contains("Exchange"), s"$regime: ${p.take(800)}")
+      }
+    }
   }
 
   test("encoding-damage scan is a pure codegen'd projection, no shuffle") {

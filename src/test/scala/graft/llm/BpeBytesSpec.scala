@@ -42,7 +42,8 @@ class BpeBytesSpec extends SparkSpec {
       (oSyms.substring(0, 1), oSyms.substring(1, 2)),
       (oSyms.substring(0, 2), oSyms.substring(2)))
     val docs = Seq((1L, "th ộ the t"), (2L, "")).toDF("doc_id", "text")
-    val enc = Bpe.encodeBytes(docs, "doc_id", "text", merges)
+    val enc = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+      regime = Bpe.Regime.Bytes)
       .orderBy("doc_id")
       .select(col("doc_id"), col("tokens"))
       .as[(Long, Seq[String])].collect()
@@ -62,7 +63,8 @@ class BpeBytesSpec extends SparkSpec {
     val merges = Array((Bpe.byteSyms("t"), Bpe.byteSyms("h")),
       (Bpe.byteSyms(" "), Bpe.byteSyms("t")))
     val rt = Bpe.decodeBytes(
-        Bpe.encodeBytes(docs, "doc_id", "text", merges), "doc_id")
+        Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+          regime = Bpe.Regime.Bytes), "doc_id")
       .orderBy("doc_id").as[(Long, String)].collect().toMap
     assert(rt(1L) === "the table hà nội")
     assert(rt(2L) === "hồ chí minh 🙂")
@@ -75,7 +77,8 @@ class BpeBytesSpec extends SparkSpec {
       (1L, "the theme the theme"),
       (2L, "the ộ the ộ the"),
       (3L, "theme ộ the")).toDF("doc_id", "text")
-    val model = Bpe.trainBytes(docs, "text", numMerges = 4)
+    val model = Bpe.train(docs, "text", numMerges = 4,
+      regime = Bpe.Regime.Bytes)
     val merges = Bpe.mergesOf(model)
     assert(merges.length === 4)
     // word forms are the encoder's: "Ġthe" (x7 as a non-first word) has
@@ -84,7 +87,8 @@ class BpeBytesSpec extends SparkSpec {
     // — just pin that the boundary symbol participates at all and that
     // training is deterministic across runs
     assert(merges.exists { case (l, r) => (l + r).contains("Ġ") })
-    val again = Bpe.mergesOf(Bpe.trainBytes(docs, "text", numMerges = 4))
+    val again = Bpe.mergesOf(Bpe.train(docs, "text", numMerges = 4,
+      regime = Bpe.Regime.Bytes))
     assert(merges.toSeq === again.toSeq)
 
     // disk round-trip: rows are the model
@@ -93,9 +97,11 @@ class BpeBytesSpec extends SparkSpec {
     model.write.mode("overwrite").parquet(path)
     val reloaded = Bpe.mergesOf(spark.read.parquet(path))
     assert(reloaded.toSeq === merges.toSeq)
-    val direct = Bpe.encodeBytes(docs, "doc_id", "text", merges)
+    val direct = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+      regime = Bpe.Regime.Bytes)
       .orderBy("doc_id").select("tokens").as[Seq[String]].collect().toSeq
-    val viaDisk = Bpe.encodeBytes(docs, "doc_id", "text", reloaded)
+    val viaDisk = Bpe.encodeWithMergesFast(docs, "doc_id", "text", reloaded,
+      regime = Bpe.Regime.Bytes)
       .orderBy("doc_id").select("tokens").as[Seq[String]].collect().toSeq
     assert(direct === viaDisk)
   }
@@ -119,14 +125,16 @@ class BpeBytesSpec extends SparkSpec {
       (Bpe.byteSyms(" "), Bpe.byteSyms("t")))
     val vocab = Bpe.vocabBytes(spark, merges)
     val docs = Seq((1L, "th ộ 🙂 t"), (2L, "")).toDF("doc_id", "text")
-    val ids = Bpe.encodeIdsBytes(docs, "doc_id", "text", merges, vocab)
+    val ids = Bpe.encodeIds(docs, "doc_id", "text", merges, vocab,
+      regime = Bpe.Regime.Bytes)
       .orderBy("doc_id").as[(Long, Seq[Int], Int)].collect()
     assert(ids(0)._2.forall(_ >= 0))           // closed alphabet: no OOV ever
     assert(ids(1)._2.isEmpty && ids(1)._3 === 0)
     // the id stream decodes back through the vocab to the token stream
     val idOf = vocab.as[(Int, String)].collect().map(_.swap).toMap
     val tokOf = idOf.map(_.swap)
-    val toks = Bpe.encodeBytes(docs, "doc_id", "text", merges)
+    val toks = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+      regime = Bpe.Regime.Bytes)
       .orderBy("doc_id").select("tokens").as[Seq[String]].collect()
     assert(ids(0)._2.map(tokOf) === toks(0))
   }
@@ -169,7 +177,8 @@ class BpeBytesSpec extends SparkSpec {
     val text = "the ộ🙂 thộ 🙂🙂 end"
     val docs = Seq((1L, text)).toDF("doc_id", "text")
     val rt = Bpe.decodeBytes(
-        Bpe.encodeBytes(docs, "doc_id", "text", merges), "doc_id")
+        Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+          regime = Bpe.Regime.Bytes), "doc_id")
       .as[(Long, String)].collect().head._2
     assert(rt === text)
   }

@@ -3,11 +3,11 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** RAW byte-level BPE tier: the lookahead-free GPT-2-style
+/** RAW byte-level BPE regime: the lookahead-free GPT-2-style
   * pre-tokenizer (a lossless partition of any string), the
   * normalization-free encode whose decode round-trip is the IDENTITY
-  * on arbitrary UTF-8 (the property [[Bpe.encodeBytes]] only offers
-  * modulo its normalizer), raw training, the reserved-special vocab
+  * on arbitrary UTF-8 (the property `Regime.Bytes` only offers modulo
+  * its normalizer), raw training, the reserved-special vocab
   * prefix, and the encode-memo cap's pure-cache law.
   */
 class BpeRawSpec extends SparkSpec {
@@ -122,7 +122,8 @@ class BpeRawSpec extends SparkSpec {
     val docs = nasty.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val rt = Bpe.decodeBytes(
-        Bpe.encodeBytesRaw(docs, "doc_id", "text", merges, gpt2Ws = true),
+        Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+          regime = Bpe.Regime.Raw(gpt2Ws = true)),
         "doc_id")
       .orderBy("doc_id").as[(Long, String)].collect()
     rt.foreach { case (id, s) => assert(s === nasty(id.toInt), s"doc $id") }
@@ -140,7 +141,8 @@ class BpeRawSpec extends SparkSpec {
     val docs = nasty.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val rt = Bpe.decodeBytes(
-        Bpe.encodeBytesRaw(docs, "doc_id", "text", merges), "doc_id")
+        Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+          regime = Bpe.Regime.Raw()), "doc_id")
       .orderBy("doc_id").as[(Long, String)].collect()
     rt.foreach { case (id, s) =>
       assert(s === nasty(id.toInt), s"doc $id")  // EXACT, not normalized
@@ -164,7 +166,8 @@ class BpeRawSpec extends SparkSpec {
       (i.toLong, strGen.pureApply(Gen.Parameters.default, Seed(1000L + i))))
     val docs = samples.toDF("doc_id", "text")
     val rt = Bpe.decodeBytes(
-        Bpe.encodeBytesRaw(docs, "doc_id", "text", merges), "doc_id")
+        Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+          regime = Bpe.Regime.Raw()), "doc_id")
       .as[(Long, String)].collect().toMap
     samples.foreach { case (id, s) => assert(rt(id) === s, s"doc $id") }
   }
@@ -172,7 +175,8 @@ class BpeRawSpec extends SparkSpec {
   test("raw mode preserves case: 'The' and 'the' encode differently") {
     val merges = Array((Bpe.byteSyms("t"), Bpe.byteSyms("h")))
     val docs = Seq((1L, "The the")).toDF("doc_id", "text")
-    val toks = Bpe.encodeBytesRaw(docs, "doc_id", "text", merges)
+    val toks = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+      regime = Bpe.Regime.Raw())
       .select("tokens").as[Seq[String]].collect().head
     // "The": (t,h) cannot fire on "Th"; " the": Ġ+th merges
     assert(toks === Seq("T", "h", "e", "Ġ", "th", "e"))
@@ -182,12 +186,14 @@ class BpeRawSpec extends SparkSpec {
     val docs = Seq(
       (1L, "The Theme The Theme"),
       (2L, "The THE The the")).toDF("doc_id", "text")
-    val merges = Bpe.mergesOf(Bpe.trainBytesRaw(docs, "text", numMerges = 3))
+    val merges = Bpe.mergesOf(Bpe.train(docs, "text", numMerges = 3,
+      regime = Bpe.Regime.Raw()))
     assert(merges.length === 3)
     // the hot word piece is " The" (ĠThe): uppercase T survives raw
     assert(merges.exists { case (l, r) => (l + r).contains("T") })
     // deterministic
-    val again = Bpe.mergesOf(Bpe.trainBytesRaw(docs, "text", numMerges = 3))
+    val again = Bpe.mergesOf(Bpe.train(docs, "text", numMerges = 3,
+      regime = Bpe.Regime.Raw()))
     assert(merges.toSeq === again.toSeq)
   }
 
@@ -205,8 +211,8 @@ class BpeRawSpec extends SparkSpec {
     assert(v(259) === ((259, "th")))
     // raw id encode under the shifted vocab: all content ids >= 3
     val docs = Seq((1L, "th ộ")).toDF("doc_id", "text")
-    val ids = Bpe.encodeIdsBytesRaw(docs, "doc_id", "text", merges,
-        Bpe.vocabBytes(spark, merges, specials))
+    val ids = Bpe.encodeIds(docs, "doc_id", "text", merges,
+        Bpe.vocabBytes(spark, merges, specials), regime = Bpe.Regime.Raw())
       .select("token_ids").as[Seq[Int]].collect().head
     assert(ids.forall(_ >= 3))
     assert(ids.head === 259)  // "th" is the first token
@@ -242,7 +248,8 @@ class BpeRawSpec extends SparkSpec {
     try {
       val docs = Seq((1L, "The Theme tàu 🙂 The tàu"),
         (2L, "the   theme isn't")).toDF("doc_id", "text")
-      val merges = Bpe.mergesOf(Bpe.trainBytesRaw(docs, "text", 5))
+      val merges = Bpe.mergesOf(Bpe.train(docs, "text", 5,
+        regime = Bpe.Regime.Raw()))
       val mPath = tmp.resolve("merges.txt")
       java.nio.file.Files.writeString(mPath, Bpe.renderMerges(merges))
       // mergesOf ∘ loadMerges ∘ renderMerges = identity (multi-byte
@@ -276,7 +283,8 @@ class BpeRawSpec extends SparkSpec {
     val n = Bpe.MemoCap + 5000
     val text = (0 until n).map(i => "w" + (i % 97) + "x" + i).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text").coalesce(1)
-    val got = Bpe.encodeBytesRaw(docs, "doc_id", "text", merges)
+    val got = Bpe.encodeWithMergesFast(docs, "doc_id", "text", merges,
+      regime = Bpe.Regime.Raw())
       .select("n_tokens").as[Int].collect().head
     val expected = Bpe.preTokenize(text).iterator
       .map(p => Bpe.encodeWordFast(Bpe.byteSyms(p), idx).length).sum
@@ -294,7 +302,7 @@ class BpeRawSpec extends SparkSpec {
       (2L, 1L, 201L, "view", null.asInstanceOf[String]))
       .toDF("user_id", "ts", "event_id", "event_type", "props")
     val turnsDf = Sft.turns(events, "user_id", "ts", "event_type", "props")
-    val tt = Sft.transcriptsTokens(turnsDf, merges, byteLevel = true)
+    val tt = Sft.transcriptsTokens(turnsDf, merges, regime = Bpe.Regime.Raw())
       .orderBy("conv_id")
       .select("conv_id", "n_tokens").as[(Long, Long)].collect().toMap
     def ntok(line: String): Long = Bpe.preTokenize(line).iterator
@@ -308,7 +316,8 @@ class BpeRawSpec extends SparkSpec {
       .select("token_id").as[Int].collect().head
     assert(eos === 1)
     val packed = Sft.packTokens(turnsDf, merges, blockTokens = 8,
-      nShards = 2, portable = true, byteLevel = true, eosId = Some(eos))
+      nShards = 2, portable = true, regime = Bpe.Regime.Raw(),
+        eosId = Some(eos))
     assert(packed.columns.contains("eos_id"))
     assert(packed.select("eos_id").distinct().as[Int].collect().toSeq === Seq(1))
     // default: legacy schema, no eos_id column

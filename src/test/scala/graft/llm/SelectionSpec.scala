@@ -289,8 +289,8 @@ class SelectionSpec extends SparkSpec {
     val salad = Seq((21L,
       "the quick fox sleeps and the lazy dog jumps over the quick fox"))
     val docs = (fluent ++ salad).toDF("id", "text")
-    val kn3 = LmScore.knTrigramScore(docs, "id", "text")
-      .orderBy("id").select("kn3_score").as[Double].collect()
+    val kn3 = LmScore.knNgramScore(docs, "id", "text", order = 3)
+      .orderBy("id").select("kn_score").as[Double].collect()
     assert(kn3(0) > kn3(20), s"fluent ${kn3(0)} !> salad ${kn3(20)}")
     // measured separation vs the JM trigram on the same corpus: the
     // discounted matched tier + continuation backoff punishes the
@@ -313,42 +313,28 @@ class SelectionSpec extends SparkSpec {
     // end to end on a corpus whose trigram types are all singletons
     // (n2 = n3 = 0 → fallback): scores stay finite and positive
     val docs = Seq((1L, "a b c d e"), (2L, "f g h i j")).toDF("id", "text")
-    val out = LmScore.knTrigramScore(docs, "id", "text")
-      .select("kn3_score").as[Double].collect()
+    val out = LmScore.knNgramScore(docs, "id", "text", order = 3)
+      .select("kn_score").as[Double].collect()
     assert(out.forall(s => !s.isNaN && !s.isInfinite && s > 0.0),
       out.mkString(","))
   }
 
   test("modified-KN trigram: null below three tokens; minTri prunes matched mass") {
-    val r = LmScore.knTrigramScore(
-        Seq((1L, "just two"), (2L, "")).toDF("id", "text"), "id", "text")
-      .orderBy("id").select("n_trigrams", "kn3_score").collect()
+    val r = LmScore.knNgramScore(
+        Seq((1L, "just two"), (2L, "")).toDF("id", "text"), "id", "text",
+        order = 3)
+      .orderBy("id").select("n_grams", "kn_score").collect()
     assert(r.forall(row => row.getLong(0) == 0L && row.isNullAt(1)))
     // pruning the matched tier can only lower a doc's score (its
     // backoff mass survives, its matched mass does not)
     val docs = ((1L to 5L).map(i => (i, "one two three four")) ++
       Seq((9L, "one two three four"))).toDF("id", "text")
-    val full = LmScore.knTrigramScore(docs, "id", "text")
-      .filter($"id" === 9L).select("kn3_score").as[Double].head()
-    val pruned = LmScore.knTrigramScore(docs, "id", "text", minTri = 100L)
-      .filter($"id" === 9L).select("kn3_score").as[Double].head()
+    val full = LmScore.knNgramScore(docs, "id", "text", order = 3)
+      .filter($"id" === 9L).select("kn_score").as[Double].head()
+    val pruned = LmScore.knNgramScore(docs, "id", "text", order = 3,
+        minTop = 100L)
+      .filter($"id" === 9L).select("kn_score").as[Double].head()
     assert(pruned < full, s"$pruned !< $full")
-  }
-
-  test("order-n modified KN: order 3 reproduces knTrigramScore bitwise") {
-    val docs = ((1L to 20L).map(i =>
-      (i, "the quick fox jumps over the lazy dog and the quick fox sleeps")) ++
-      Seq((21L, "the quick fox sleeps and the lazy dog jumps over the quick"),
-        (22L, "just two"), (23L, ""))).toDF("id", "text")
-    val a = LmScore.knTrigramScore(docs, "id", "text", minTri = 2L)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-    val b = LmScore.knNgramScore(docs, "id", "text", order = 3, minTop = 2L)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2))))
-    assert(a.toSeq == b.toSeq) // bitwise: same doubles, same nulls
   }
 
   test("order-n modified KN: the 5-gram rung separates 4-gram-novel text") {
