@@ -673,7 +673,7 @@ object Bench {
           val docs = Tables(spark, dir, "documents")
             .orderBy("doc_id").limit(auditSlice)
           graft.llm.Dedup.nearDupAudit(docs, "doc_id", "text",
-            threshold = 0.3, portable = true).count()
+            threshold = 0.3).count()
         }
         scaleQs("dedup_audit_slice") = (timeSlice(sfDir), timeSlice(scaleDir))
       } catch {

@@ -60,7 +60,7 @@ object Profile {
   /** Key-skew report: the `k` heaviest join/group keys with their share
     * of all rows and their ratio to the mean key load — the diagnostic
     * behind "will this key melt a task at 100 TB" and the input to a
-    * `skewSalts`/AQE-threshold decision. One partial-agg'd count per
+    * salting/AQE-threshold decision. One partial-agg'd count per
     * key, one bounded stats row, a `TakeOrderedAndProject` top-k —
     * never a global sort. Both ratios are single IEEE divisions of
     * exact integers, so an oracle reproduces them bitwise.

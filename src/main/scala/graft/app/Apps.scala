@@ -27,10 +27,14 @@ object Apps {
 
   /** `jobinsight_pipeline` (§3.1): HTML batch → parse → validate+gate →
     * raw merge → staging transform → validate+gate. Returns the staging
-    * slice it wrote. Each run appends one `etl_metrics` row and one
-    * `quality_metrics` row under `<root>/monitoring/` (success OR
-    * failure — the reference's DAG-callback instrumentation), which the
-    * served `vw_pipeline_health` / `vw_data_quality_trend` roll up.
+    * slice it wrote: the merged raw rows of the jobs crawled today, as
+    * the reference stages only the day's crawl (a job absent from
+    * today's pages keeps its earlier staging partitions and is not
+    * restaged with a due date recomputed from today). Each run appends
+    * one `etl_metrics` row and one `quality_metrics` row under
+    * `<root>/monitoring/` (success OR failure — the reference's
+    * DAG-callback instrumentation), which the served
+    * `vw_pipeline_health` / `vw_data_quality_trend` roll up.
     */
   def runIngestDay(spark: SparkSession, htmlDir: String, warehouseRoot: String,
                    runDate: String): DataFrame =
@@ -44,8 +48,11 @@ object Apps {
                             runDate: String): (DataFrame, Long, Long) = {
     val pages = spark.read.option("wholetext", "true").text(htmlDir)
       .withColumnRenamed("value", "html")
+    // materialized once: crawl stats, the raw merge and the staging
+    // filter all read the batch, and each would otherwise re-parse the HTML
     val jobs = HtmlParser.parseJobs(pages)
       .dropDuplicates("job_id") // DAG-level re-dedup (pipeline_dag.py:113-114)
+      .localCheckpoint(true)
 
     val crawlStats = Validators.crawlStats(jobs).head()
     Metrics.recordQuality(spark, warehouseRoot, "crawl",
@@ -73,7 +80,9 @@ object Apps {
     val crawledAt = lit(runDate + " 06:00:00").cast("timestamp")
     val sal = Salary.normalizeSalary(col("salary"))
     val due = Salary.dueDate(crawledAt, col("deadline"))
-    val staging = spark.read.parquet(rawPath).select(
+    val staging = spark.read.parquet(rawPath)
+      .join(jobs.select("job_id"), Seq("job_id"), "left_semi")
+      .select(
       col("job_id"),
       Cleaners.cleanTitle(col("title")).as("title_clean"),
       col("job_url"),
@@ -118,10 +127,10 @@ object Apps {
         .drop("crawl_date")
 
       val state = WarehouseJob.State(readStar(spark, warehouseRoot))
-      // checkpoint = true: materialize results BEFORE the writes below
-      // replace the very files their plans read from.
+      // runDay materializes its results BEFORE the writes below replace
+      // the very files their plans read from.
       val next = WarehouseJob.runDay(spark, state, staging, runDate,
-        checkpoint = true, onStage = onStage)
+        onStage = onStage)
 
       val tWrites = System.nanoTime()
       val dwh = s"$warehouseRoot/dwh"

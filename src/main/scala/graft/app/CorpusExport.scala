@@ -7,7 +7,7 @@ import graft.operators.{Checksum, Sharding}
 import graft.storage.TableStore
 
 /** Training-corpus EXPORT — the last mile of the curation pipeline:
-  * shard deterministically ([[Sharding.shardIdPortable]], so any
+  * shard deterministically ([[Sharding.shardId]], so any
   * engine re-derives the same membership), write one JSONL directory
   * per shard (temp-and-swap: a half-written corpus is never visible),
   * and emit a MANIFEST `(shard, n_docs, checksum)` whose order-free
@@ -27,7 +27,7 @@ object CorpusExport {
              root: String, nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val sharded = docs.withColumn("shard",
-      Sharding.shardIdPortable(col(idCol), nShards))
+      Sharding.shardId(col(idCol), nShards))
     val tmp = root.stripSuffix("/") + ".__tmp"
     sharded.repartition(nShards, col("shard"))
       .write.mode(SaveMode.Overwrite).partitionBy("shard").json(tmp)
@@ -81,7 +81,6 @@ object CorpusExport {
                          nShards: Int = 8, minQuality: Double = 0.6,
                          splits: Seq[(String, Double)] =
                            Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-                         portable: Boolean = true,
                          evalSet: Option[DataFrame] = None,
                          contaminationThreshold: Double = 0.8,
                          shingleN: Int = 3): (Long, DataFrame) = {
@@ -91,7 +90,7 @@ object CorpusExport {
     require(splits.map(_._1).distinct.size == splits.size,
       s"duplicate split names: ${splits.map(_._1)}")
     val cleaned = graft.llm.Curation.cleanCorpus(
-      docs, "doc_id", "text", minQuality, portable = portable)
+      docs, "doc_id", "text", minQuality)
     val curated = evalSet match {
       case Some(es) =>
         val hits = graft.llm.Contamination.detect(cleaned, es,

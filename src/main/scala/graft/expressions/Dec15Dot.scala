@@ -40,8 +40,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Null semantics of the zip_with fold, replicated: null array → null;
   * any null element → null; array length ≠ weight length (zip_with
-  * null-padding on either side) → null. OptKernelsSpec pins all of it
-  * against the verbatim old tree.
+  * null-padding on either side) → null; a NaN or ±Inf product → null
+  * (Cast(Double→Decimal) of a non-finite double is null, ANSI or not);
+  * a product of 13 or more integer digits overflows decimal(28,15) →
+  * null, or an ArithmeticException under ANSI, like the cast. The
+  * running sum cannot overflow its 23 integer digits below 10^10
+  * terms. OptKernelsSpec pins all of it against the verbatim old tree.
   */
 case class Dec15Dot(child: Expression, w: Array[Double])
   extends UnaryExpression {
@@ -73,15 +77,23 @@ case class Dec15Dot(child: Expression, w: Array[Double])
 }
 
 object Dec15Dot {
-  /** One pass; null (boxed) for ragged lengths or null elements. */
+  /** One pass; null (boxed) for ragged lengths, null elements and
+    * non-finite products. */
   def dot(x: ArrayData, w: Array[Double]): java.lang.Double = {
     if (x.numElements() != w.length) return null
     var acc = JBigDecimal.ZERO
     var j = 0
     while (j < w.length) {
       if (x.isNullAt(j)) return null
-      acc = acc.add(JBigDecimal.valueOf(x.getDouble(j) * w(j))
-          .setScale(15, RoundingMode.HALF_UP))
+      val p = x.getDouble(j) * w(j)
+      if (p.isNaN || p.isInfinite) return null
+      val t = JBigDecimal.valueOf(p).setScale(15, RoundingMode.HALF_UP)
+      if (t.precision > 28) {
+        if (org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+          throw new ArithmeticException(s"$t cannot be represented as Decimal(28, 15)")
+        return null
+      }
+      acc = acc.add(t)
         .setScale(14, RoundingMode.HALF_UP) // Add((38,15),(28,15))→(38,14)
       j += 1
     }

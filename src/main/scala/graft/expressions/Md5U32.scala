@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why it exists: the Catalyst chain pays a MessageDigest provider
   * lookup, a 32-char hex render, a substring and an interpreted base
   * conversion per row — on the explode'd token/shingle streams that
-  * feed feature hashing, DSIR bigrams, portable minhash and every
+  * feed feature hashing, DSIR bigrams, minhash and every
   * hash-routing decision, that chain was the scan-stage hot spot. Here
   * the digest object is thread-local (reset per call) and no string is
   * ever built.

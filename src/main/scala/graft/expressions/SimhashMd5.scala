@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The PORTABLE (md5-hex-digit) 64-bit SimHash of an ALREADY-NORMALIZED
-  * string — [[graft.llm.Dedup.simhashPortable]]'s whole per-document
+  * string — [[graft.llm.Dedup.simhash]]'s whole per-document
   * computation as ONE per-row pass: distinct words, one md5 per word,
   * 64 integer votes from the first-16-hex-digit nibble bits, sign-pack.
   *

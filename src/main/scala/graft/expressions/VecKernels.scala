@@ -187,8 +187,9 @@ case class SignBucket(child: Expression, planes: Array[Array[Double]])
   * `aggregate(zip_with(tbl, codes, (t, c) => element_at(t, c + 1)), 0.0, +)`
   * fold of [[graft.llm.Pq.pqTopK]] as one loop. Null semantics: null
   * tbl/codes array or ragged lengths (zip_with padding) or a null
-  * element on either side → NULL. Lookups are in-bounds by construction
-  * (codes come from the encoder that built the table).
+  * element on either side → NULL, and a code outside `[0, row length)`
+  * (a stale or mismatched model) → NULL, `element_at`'s out-of-range
+  * result with ANSI off — never an out-of-bounds read.
   */
 case class AdcSum(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {
@@ -212,7 +213,7 @@ case class AdcSum(left: Expression, right: Expression)
       if (tbl.isNullAt(i) || codes.isNullAt(i)) return null
       val row = tbl.getArray(i)
       val c = codes.getInt(i)
-      if (row.isNullAt(c)) return null
+      if (c < 0 || c >= row.numElements() || row.isNullAt(c)) return null
       s += row.getDouble(c)
       i += 1
     }

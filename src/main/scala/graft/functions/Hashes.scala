@@ -20,10 +20,11 @@ object Hashes {
 
   /** THE portable 32-bit hash: first 8 md5 hex digits as a u32-ranged
     * long. Every deterministic routing decision in the engine (shard
-    * membership, split assignment, feature buckets, CMS cells) is this
-    * one expression, and every DuckDB oracle re-derives it byte-for-
-    * byte — keep the single definition; a drifted copy would silently
-    * re-route one consumer while the rest stay consistent.
+    * membership, split assignment, minhash base hashes, feature buckets,
+    * CMS cells) is this one expression — there is no second, faster
+    * family — and every DuckDB oracle re-derives it byte-for-byte. Keep
+    * the single definition; a drifted copy would silently re-route one
+    * consumer while the rest stay consistent.
     *
     * Since round 15 the value is computed by the
     * [[graft.expressions.Md5U32]] kernel (digest bytes directly — no

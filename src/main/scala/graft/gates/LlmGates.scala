@@ -8,14 +8,14 @@ import graft.llm.{Ann, Contamination, CorpusStats, Dedup, ImageIoDecoder, Multim
 /** Correctness gates for the LLM-data-pipeline operators over
   * `documents.parquet` / `embeddings.parquet`.
   *
-  * EVERY gate here carries a full DuckDB oracle. The near-dup/ANN gates
-  * run their operators in a PORTABLE hash mode (md5-string minhash,
-  * md5-hex-digit simhash bits, literal Rademacher hyperplanes) so the
-  * oracle can restate the ENTIRE pipeline — candidate generation,
-  * skew caps, verification — in SQL and hash-match the exact output.
-  * The xxhash64 fast paths remain the library defaults; their
-  * equivalence-of-behavior (recall vs brute force, planted-pair
-  * detection) is asserted in LlmSpec.
+  * EVERY gate here carries a full DuckDB oracle. The near-dup/ANN
+  * operators hash only with restatable families (md5-string minhash
+  * and band keys, md5-hex-digit simhash bits, literal Rademacher
+  * hyperplanes), so the oracle restates the ENTIRE pipeline —
+  * candidate generation, skew caps, verification — in SQL and
+  * hash-matches the exact output of the code that runs by default.
+  * Behavior beyond the fixtures (recall vs brute force, planted-pair
+  * detection) is asserted in LlmSpec and PropertySpec.
   *
   * Floating-point parity rules used throughout the oracles:
   *   - dot/norm are SEQUENTIAL left folds on both sides (Spark
@@ -141,7 +141,7 @@ object LlmGates {
        |        FROM $table)
        |  WHERE rn = 1)""".stripMargin
 
-  /** The full portable-minhash near-dup CTE chain over `table`, ending in
+  /** The full minhash near-dup CTE chain over `table`, ending in
     * `verified(id_a, id_b, jaccard)` (all candidates) and
     * `pairs(id_a, id_b, jaccard)` (jaccard ≥ `threshold`) — shared by
     * the `dedup_minhash`, `dedup_clusters` and `llm_clean_corpus`
@@ -149,7 +149,7 @@ object LlmGates {
     */
   private def minhashCtes(table: String, threshold: Double,
                           shingleN: Int = 2): String = {
-    val mins = Dedup.minhashCoefsPortable(32).map { case (a, b) =>
+    val mins = Dedup.minhashCoefs(32).map { case (a, b) =>
       s"min(($a * h + $b) % 2147483647)"
     }.mkString("[", ", ", "]")
     s"""${shingleCteN(shingleN, table)},
@@ -307,15 +307,15 @@ object LlmGates {
        |SELECT query_id, neighbor_id, cosine, rank FROM ranked
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  // ---- MinHash/LSH near-dup: portable mode + full-pipeline oracle -----
+  // ---- MinHash/LSH near-dup: full-pipeline oracle ---------------------
 
-  /** MinHash/LSH near-dup pairs in PORTABLE mode (md5-string minhash
-    * family): the oracle below restates signatures, banding, the skew cap
-    * and the exact-Jaccard verification — a full-pipeline hash match.
+  /** MinHash/LSH near-dup pairs (md5-string minhash family): the oracle
+    * below restates signatures, banding, the skew cap and the
+    * exact-Jaccard verification — a full-pipeline hash match.
     */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
     Dedup.nearDupMinhash(Tables(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2, portable = true)
+        threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2)
       .orderBy("id_a", "id_b")
 
   val dedupMinhashSql: String =
@@ -323,7 +323,7 @@ object LlmGates {
        |SELECT id_a, id_b, jaccard FROM pairs ORDER BY id_a, id_b""".stripMargin
 
   /** [[graft.llm.Dedup.nearDupAudit]] at t = 0.4 (32 hashes, 8 bands,
-    * 2-shingles, portable): ground-truth exact pairs vs the banded
+    * 2-shingles): ground-truth exact pairs vs the banded
     * tier, published as counts + recall/precision. t = 0.4, not the
     * minhash gate's 0.1, ON PURPOSE: the exact tier's prefix filter is
     * strong there (the audit stays cheap enough for the bench base
@@ -356,8 +356,7 @@ object LlmGates {
               size(col("__pws"))), " ")))
           .otherwise(col("text")).as("text"))
     Dedup.nearDupAudit(mixed, "doc_id", "text",
-      threshold = 0.25, numHashes = 32, bands = 8, shingleN = 3,
-      portable = true)
+      threshold = 0.25, numHashes = 32, bands = 8, shingleN = 3)
   }
 
   val dedupAuditSql: String =
@@ -396,7 +395,7 @@ object LlmGates {
        |    ELSE CAST(n_both AS DOUBLE) / CAST(n_approx AS DOUBLE) END AS precision
        |FROM cnt""".stripMargin
 
-  /** Cluster resolution over the portable-minhash pair set: every doc →
+  /** Cluster resolution over the minhash pair set: every doc →
     * the minimum id of its near-dup connected component. The oracle
     * computes the transitive closure of the SAME pairs with a recursive
     * CTE — so both the pair pipeline and the component semantics are
@@ -405,7 +404,7 @@ object LlmGates {
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val pairs = Dedup.nearDupMinhash(docs, "doc_id", "text",
-      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2, portable = true)
+      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2)
     Dedup.resolveClusters(pairs, docs, "doc_id")
       .orderBy("doc_id")
   }
@@ -426,7 +425,7 @@ object LlmGates {
   def dedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val pairs = Dedup.nearDupMinhash(docs, "doc_id", "text",
-      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2, portable = true)
+      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2)
     val clusters = Dedup.resolveClusters(pairs, docs, "doc_id")
     Dedup.keepBest(docs, "doc_id", "n_chars", clusters)
       .select("doc_id", "canonical_id", "cluster_size", "n_chars")
@@ -449,15 +448,15 @@ object LlmGates {
        |SELECT doc_id, canonical_id, cluster_size, n_chars
        |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  /** The FULL curation chain (quality ≥ 0.6 → exact dedup → portable
-    * minhash pairs → cluster resolution → canonical survivors) against a
+  /** The FULL curation chain (quality ≥ 0.6 → exact dedup → minhash
+    * pairs → cluster resolution → canonical survivors) against a
     * single composed oracle: the same five stages as chained CTEs. This
     * is the end-to-end proof that the verified pieces compose.
     */
   def llmCleanCorpus(s: SparkSession, dir: String): DataFrame =
     graft.llm.Curation.cleanCorpus(Tables(s, dir, "documents"), "doc_id", "text",
         minQuality = 0.6, nearDupThreshold = 0.1, numHashes = 32, bands = 8,
-        shingleN = 2, portable = true)
+        shingleN = 2)
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
 
@@ -485,7 +484,7 @@ object LlmGates {
     graft.llm.Curation.budgetCorpus(Tables(s, dir, "documents"), "doc_id", "text",
         scoreCol = "n_chars", tokenBudget = 12000L,
         minQuality = 0.6, nearDupThreshold = 0.1, numHashes = 32, bands = 8,
-        shingleN = 2, portable = true)
+        shingleN = 2)
       .select("doc_id", "lang", "source", "n_chars", "toks", "cum_tokens")
       .orderBy("doc_id")
 
@@ -528,9 +527,9 @@ object LlmGates {
     val survivors = graft.llm.Curation.cleanCorpus(
       Tables(s, dir, "documents"), "doc_id", "text",
       minQuality = 0.6, nearDupThreshold = 0.1, numHashes = 32, bands = 8,
-      shingleN = 2, portable = true)
+      shingleN = 2)
     graft.llm.Packing.blocks(survivors, "doc_id", "text",
-        blockSize = 256, nShards = 8, portable = true)
+        blockSize = 256, nShards = 8)
       .groupBy("shard", "block_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("tokens_in_block")).as("n_tokens"))
       .orderBy("shard", "block_id")
@@ -577,15 +576,15 @@ object LlmGates {
        |    / len(list_distinct(a.shset || b.shset)) >= 0.5
        |ORDER BY id_a, id_b""".stripMargin
 
-  // ---- SimHash near-dup: portable mode + full-pipeline oracle ---------
+  // ---- SimHash near-dup: full-pipeline oracle -------------------------
 
-  /** SimHash near-dup pairs in PORTABLE mode (md5-hex-digit bits): the
-    * oracle restates votes, 16-bit band buckets, the skew cap and the
-    * Hamming verification.
+  /** SimHash near-dup pairs (md5-hex-digit bits): the oracle restates
+    * votes, 16-bit band buckets, the skew cap and the Hamming
+    * verification.
     */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame =
     Dedup.nearDupSimhash(Tables(s, dir, "documents"), "doc_id", "text",
-        maxDistance = 8, maxBucket = 500, portable = true)
+        maxDistance = 8, maxBucket = 500)
       .orderBy("id_a", "id_b")
 
   val dedupSimhashSql: String =
@@ -1218,17 +1217,16 @@ object LlmGates {
     require(maxId < 1000000L,
       s"dedup_incremental_near fixture contract: max(doc_id) = $maxId must stay below the 10^6 batch-id offset hardcoded in the oracle SQL")
     val corpusSigs = Dedup.signatureTable(d, "doc_id", "text",
-      numHashes = 32, shingleN = 2, portable = true)
+      numHashes = 32, shingleN = 2)
     val batch = d.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     Dedup.nearDupMinhashIncremental(batch, "doc_id", "text", corpusSigs,
-        threshold = 0.7, numHashes = 32, bands = 8, shingleN = 2,
-        portable = true)
+        threshold = 0.7, numHashes = 32, bands = 8, shingleN = 2)
       .orderBy("id_a", "id_b")
   }
 
   val dedupIncrementalNearSql: String = {
-    val mins = Dedup.minhashCoefsPortable(32).map { case (a, b) =>
+    val mins = Dedup.minhashCoefs(32).map { case (a, b) =>
       s"min(($a * h + $b) % 2147483647)"
     }.mkString("[", ", ", "]")
     s"""WITH u AS (
@@ -1268,7 +1266,7 @@ object LlmGates {
     * `dedup_incremental_near`): same planted re-crawl fixture — every
     * 5th doc re-crawled verbatim under id +10^6, so each batch doc must
     * hit its corpus original at Hamming distance 0. Corpus side joins
-    * in as the persisted portable fingerprint table; the oracle
+    * in as the persisted fingerprint table; the oracle
     * restates fingerprints over batch ∪ corpus, quarter-band buckets,
     * the combined-occupancy cap, and batch-anchored candidates.
     */
@@ -1277,11 +1275,11 @@ object LlmGates {
     val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
     require(maxId < 1000000L,
       s"dedup_incremental_simhash fixture contract: max(doc_id) = $maxId must stay below the 10^6 batch-id offset hardcoded in the oracle SQL")
-    val corpusFps = Dedup.simhashPortable(d, "doc_id", "text")
+    val corpusFps = Dedup.simhash(d, "doc_id", "text")
     val batch = d.filter(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
     Dedup.nearDupSimhashIncremental(batch, "doc_id", "text", corpusFps,
-        maxDistance = 8, maxBucket = 500, portable = true)
+        maxDistance = 8, maxBucket = 500)
       .orderBy("id_a", "id_b")
   }
 
@@ -1814,7 +1812,7 @@ object LlmGates {
   def splitByCluster(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val pairs = Dedup.nearDupMinhash(docs, "doc_id", "text",
-      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2, portable = true)
+      threshold = 0.1, numHashes = 32, bands = 8, shingleN = 2)
     val clusters = Dedup.resolveClusters(pairs, docs, "doc_id")
     graft.operators.Sampling.splitByCluster(docs.select(col("doc_id")),
         "doc_id", clusters, "doc_id", "canonical_id",

@@ -19,7 +19,7 @@ object PipelineGates {
     "string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')"
 
   /** md5-hex-fold shard id over `idExpr` — the SQL restatement of
-    * [[Sharding.shardIdPortable]], shared by every gate that shards
+    * [[Sharding.shardId]], shared by every gate that shards
     * (here and the composed LlmGates trainer-handoff oracle).
     */
   private[gates] def shardFoldSql(idExpr: String, nShards: Int): String =
@@ -196,7 +196,7 @@ object PipelineGates {
 
   def shardAssign(s: SparkSession, dir: String): DataFrame =
     Sharding.profile(Tables(s, dir, "documents"), "doc_id", col("n_chars"),
-        NShards, portable = true)
+        NShards)
       .orderBy("shard")
 
   val shardAssignSql: String =
@@ -215,7 +215,7 @@ object PipelineGates {
     Sharding.epochOrder(
         Tables(s, dir, "documents").select(col("doc_id"),
           explode(array(lit(0), lit(1))).as("epoch")),
-        "doc_id", "epoch", nShards = 4, portable = true)
+        "doc_id", "epoch", nShards = 4)
       .select(col("doc_id"), col("epoch"), col("shard"), col("seq"))
       .orderBy("shard", "epoch", "seq")
 
@@ -245,7 +245,7 @@ object PipelineGates {
           explode(array(lit(0), lit(1))).as("epoch"),
           when(col("n_chars") < 300, 0)
             .when(col("n_chars") < 600, 1).otherwise(2).as("tier")),
-        "doc_id", "epoch", "tier", nShards = 4, portable = true)
+        "doc_id", "epoch", "tier", nShards = 4)
       .select(col("doc_id"), col("epoch"), col("tier"), col("shard"),
         col("seq"))
       .orderBy("shard", "epoch", "seq")
@@ -274,7 +274,7 @@ object PipelineGates {
 
   def packBlocks(s: SparkSession, dir: String): DataFrame =
     graft.llm.Packing.blocks(Tables(s, dir, "documents"), "doc_id", "text",
-        blockSize = BlockB, nShards = PackShards, portable = true)
+        blockSize = BlockB, nShards = PackShards)
       .orderBy("shard", "block_id", "doc_id")
 
   val packBlocksSql: String =

@@ -1639,7 +1639,7 @@ object TrainGates {
     */
   def sftPack(s: SparkSession, dir: String): DataFrame =
     Sft.pack(Sft.transcripts(sftTurnsDf(s, dir)), blockChars = PackChars,
-        nShards = PackShards, portable = true)
+        nShards = PackShards)
       .orderBy("shard", "block_id", "conv_id")
 
   /** Oracle: the full transcript chain nested as a subquery, then the
@@ -1703,7 +1703,7 @@ object TrainGates {
     */
   def sftPackTokens(s: SparkSession, dir: String): DataFrame =
     Sft.packTokens(sftTurnsDf(s, dir), PinnedMerges, blockTokens = TokBlock,
-        nShards = PackShards, portable = true)
+        nShards = PackShards)
       .orderBy("shard", "block_id", "conv_id")
 
   /** Oracle: per-turn line token counts via the same replace-chain
@@ -1769,8 +1769,7 @@ object TrainGates {
     Sft.packTokens(
         Sft.truncateLatestTokens(sftTurnsDf(s, dir), SftTokBudget,
           PinnedMerges),
-        PinnedMerges, blockTokens = TokBlock, nShards = PackShards,
-        portable = true)
+        PinnedMerges, blockTokens = TokBlock, nShards = PackShards)
       .orderBy("shard", "block_id", "conv_id")
 
   /** Oracle: the token-count chain, a separator-free DESC suffix
@@ -1876,7 +1875,7 @@ object TrainGates {
     */
   def sftPackTokensBytes(s: SparkSession, dir: String): DataFrame =
     Sft.packTokens(sftTurnsDf(s, dir), PinnedRawMerges,
-        blockTokens = TokBlock, nShards = PackShards, portable = true,
+        blockTokens = TokBlock, nShards = PackShards,
         regime = Bpe.Regime.Raw(), eosId = Some(EosId))
       .orderBy("shard", "block_id", "conv_id")
 
@@ -1899,7 +1898,7 @@ object TrainGates {
         Sft.truncateLatestTokens(sftTurnsDf(s, dir), SftTokBudgetBytes,
           PinnedRawMerges, regime = Bpe.Regime.Raw()),
         PinnedRawMerges, blockTokens = TokBlock, nShards = PackShards,
-        portable = true, regime = Bpe.Regime.Raw(), eosId = Some(EosId))
+        regime = Bpe.Regime.Raw(), eosId = Some(EosId))
       .orderBy("shard", "block_id", "conv_id")
 
   val sftRunTokensBytesSql: String = {
@@ -1928,7 +1927,7 @@ object TrainGates {
   def sftMaterializeBlocks(s: SparkSession, dir: String): DataFrame =
     Sft.materializeBlocks(sftTurnsDf(s, dir), PinnedRawMerges,
         Bpe.vocabBytes(s, PinnedRawMerges, Specials),
-        blockTokens = TokBlock, nShards = PackShards, portable = true,
+        blockTokens = TokBlock, nShards = PackShards,
         regime = Bpe.Regime.Raw(), eosId = EosId,
         padId = Some(Specials.indexOf("<|pad|>")))
       .select(col("shard"), col("block_id"), col("n_tokens"), col("n_pad"),
@@ -2010,8 +2009,7 @@ object TrainGates {
     */
   def sftRun(s: SparkSession, dir: String): DataFrame =
     Sft.pack(Sft.transcripts(Sft.truncateLatest(sftTurnsDf(s, dir),
-        SftBudget)), blockChars = PackChars, nShards = PackShards,
-        portable = true)
+        SftBudget)), blockChars = PackChars, nShards = PackShards)
       .orderBy("shard", "block_id", "conv_id")
 
   val sftRunSql: String =

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *     The query side broadcasts; the corpus streams once. Right answer,
   *     O(|Q|·|C|) work — fine for |Q| small, not the 100 TB path.
   *   - [[lshTopK]]: sign-random-projection LSH — corpus and queries hash
-  *     to sign-bit buckets (deterministic pseudo-random hyperplanes from
-  *     xxhash64); candidates are bucket collisions (plus 1-bit-flip probes
+  *     to sign-bit buckets (deterministic pseudo-random hyperplanes,
+  *     [[planes]]); candidates are bucket collisions (plus 1-bit-flip probes
   *     on the query side for recall), then exact cosine within candidates.
   *     Work scales with bucket occupancy, not corpus size × queries.
   *
@@ -424,14 +424,6 @@ object Ann {
       .select(col(idCol), col("cid"), col("__did").isNull.as("keep"))
   }
 
-  /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
-    * threshold) via shared LSH buckets — never all-pairs. `maxBucket`
-    * guards skew exactly like Dedup.candidatePairs: a degenerate bucket
-    * (e.g. all-zero vectors landing in bucket 0) would otherwise self-join
-    * quadratically; oversize buckets are dropped, and the drops are
-    * reported through `capStats` ([[CapStats]], eagerly filled) exactly
-    * like Dedup.candidatePairs.
-    */
   /** Bucket-count sizing for [[nearDupCosine]]: pick `bits` so the
     * EXPECTED bucket occupancy stays ~`targetBucket` as the corpus
     * grows — buckets must scale WITH n (2^bits ≈ n / target) or
@@ -448,6 +440,14 @@ object Ann {
     math.min(24, math.max(4, raw))
   }
 
+  /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
+    * threshold) via shared LSH buckets — never all-pairs. `maxBucket`
+    * guards skew exactly like Dedup.candidatePairs: a degenerate bucket
+    * (e.g. all-zero vectors landing in bucket 0) would otherwise self-join
+    * quadratically; oversize buckets are dropped, and the drops are
+    * reported through `capStats` ([[CapStats]], eagerly filled) exactly
+    * like Dedup.candidatePairs.
+    */
   def nearDupCosine(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, bits: Int = 12, dim: Int = 64,
                     maxBucket: Int = 1000,
@@ -457,20 +457,11 @@ object Ann {
       signBucket(col(vecCol), bits, dim).as("__bucket"))
     // materialized once: the self-join reads both sides, and the norm +
     // interpreted sign-projection work would otherwise run twice (same
-    // reason the minhash/simhash pipelines checkpoint their signatures).
-    // Bucket sizes via partial-agg count + semi-join over the checkpoint,
-    // never count-over-window (no partial agg → the degenerate bucket the
-    // cap targets would stall one task; see Dedup.candidatePairs).
-    val hc = h0.localCheckpoint(true)
-    val h = Dedup.capBuckets(hc, Seq("__bucket"), maxBucket, capStats)
-    val a = h.select(col("__bucket"), col(idCol).as("id_a"),
-      col("__v").as("__va"), col("__n").as("__na"))
-    val b = h.select(col("__bucket"), col(idCol).as("id_b"),
-      col("__v").as("__vb"), col("__n").as("__nb"))
-    a.join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
+    // reason the minhash/simhash pipelines checkpoint their signatures)
+    Dedup.bucketPairs(h0.localCheckpoint(true), Seq("__bucket"), idCol,
+        Seq("__v", "__n"), maxBucket, capStats)
       .select(col("id_a"), col("id_b"),
-        round(cosinePre(col("__va"), col("__vb"), col("__na"), col("__nb")), 6)
+        round(cosinePre(col("__v_a"), col("__v_b"), col("__n_a"), col("__n_b")), 6)
           .as("cosine"))
       .distinct()
       .filter(col("cosine") >= threshold)

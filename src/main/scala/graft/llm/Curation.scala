@@ -14,20 +14,20 @@ import org.apache.spark.sql.functions._
   *
   * Every stage is set-level; the only materializations are the ones the
   * stages themselves need (signature checkpoint, label iteration). The
-  * `llm_clean_corpus` gate runs this whole chain in portable-hash mode
-  * against a single composed SQL oracle.
+  * `llm_clean_corpus` gate runs this whole chain against a single
+  * composed SQL oracle.
   */
 object Curation {
 
   def cleanCorpus(docs: DataFrame, idCol: String, textCol: String,
                   minQuality: Double = 0.6, nearDupThreshold: Double = 0.7,
-                  numHashes: Int = 32, bands: Int = 8, shingleN: Int = 3,
-                  portable: Boolean = false): DataFrame = {
+                  numHashes: Int = 32, bands: Int = 8,
+                  shingleN: Int = 3): DataFrame = {
     val quality = docs.filter(TextStats.qualityScore(col(textCol)) >= minQuality)
     // reused by pair generation, cluster resolution AND the survivor join
     val exact = Dedup.exactDedup(quality, idCol, textCol).localCheckpoint(true)
     val pairs = Dedup.nearDupMinhash(exact, idCol, textCol, nearDupThreshold,
-      numHashes, bands, shingleN, portable)
+      numHashes, bands, shingleN)
     val clusters = Dedup.resolveClusters(pairs, exact, idCol)
     exact.join(
       clusters.filter(col(idCol) === col("canonical_id")).select(col(idCol)),
@@ -47,12 +47,12 @@ object Curation {
   def budgetCorpus(docs: DataFrame, idCol: String, textCol: String,
                    scoreCol: String, tokenBudget: Long,
                    minQuality: Double = 0.6, nearDupThreshold: Double = 0.7,
-                   numHashes: Int = 32, bands: Int = 8, shingleN: Int = 3,
-                   portable: Boolean = false): DataFrame = {
+                   numHashes: Int = 32, bands: Int = 8,
+                   shingleN: Int = 3): DataFrame = {
     val quality = docs.filter(TextStats.qualityScore(col(textCol)) >= minQuality)
     val exact = Dedup.exactDedup(quality, idCol, textCol).localCheckpoint(true)
     val pairs = Dedup.nearDupMinhash(exact, idCol, textCol, nearDupThreshold,
-      numHashes, bands, shingleN, portable)
+      numHashes, bands, shingleN)
     val clusters = Dedup.resolveClusters(pairs, exact, idCol)
     val best = Dedup.keepBest(exact, idCol, scoreCol, clusters)
       .drop("canonical_id", "cluster_size")

@@ -38,8 +38,11 @@ final class CapStats extends Serializable {
   *   - SimHash: 64-bit sign fingerprint → 16-bit band buckets →
   *     Hamming-distance verify on candidates only.
   *
-  * Signatures use `xxhash64` (codegen'd, seed folded as a literal column);
-  * everything is native Column expressions — no UDFs in any hot path.
+  * ONE hash family routes every tier: md5 ([[graft.functions.Hashes.u32OfMd5]]
+  * for minhash, md5 band keys, md5-nibble simhash bits) — the family the
+  * DuckDB oracle restates, so the gates check the code that runs by
+  * default. Everything is native Column expressions or compiled
+  * kernels — no UDFs in any hot path.
   */
 object Dedup {
 
@@ -128,121 +131,107 @@ object Dedup {
 
   /** MinHash signatures: k independent min-hashes over the shingle set,
     * computed per row — no explode, no groupBy, no shuffle. Each shingle
-    * is string-hashed ONCE (murmur3, widened to an unsigned 32-bit long);
-    * the k hash functions are universal-family transforms (a·h+b) mod p
-    * with p = 2^31−1 — the mod is ESSENTIAL: without it the affine map is
-    * monotone and min() commutes with it, collapsing all k "independent"
-    * minhashes into transforms of one shingle. Products stay under 2^63,
-    * so ANSI arithmetic never overflows.
+    * is string-hashed ONCE with [[graft.functions.Hashes.u32OfMd5]] (the
+    * first 8 md5 hex digits as an unsigned 32-bit long), so every step
+    * is restatable in SQL and the correctness oracle mirrors the whole
+    * LSH pipeline. The k hash functions are universal-family transforms
+    * (a·h+b) mod p with p = 2^31−1 — the mod is ESSENTIAL: without it the
+    * affine map is monotone and min() commutes with it, collapsing all k
+    * "independent" minhashes into transforms of one shingle. Products
+    * stay under 2^63 ((2^31−1)·(2^32−1) + 2^31 < 2^63−1): no ANSI
+    * overflow here, no BIGINT overflow in the oracle.
     */
   def minhashSignaturesInline(df: DataFrame, idCol: String, textCol: String,
                               numHashes: Int = 32, shingleN: Int = 3): DataFrame =
-    signaturesFromSets(shingleSets(df, idCol, textCol, shingleN), idCol,
-      numHashes, portable = false)
+    signaturesFromSets(shingleSets(df, idCol, textCol, shingleN), idCol, numHashes)
 
   /** Signature projection over a PRE-COMPUTED [[shingleSets]] relation —
-    * the shared body of the inline/portable signature variants, and the
-    * hook that lets [[nearDupMinhash]]/[[nearDupAudit]] derive signatures
-    * from the SAME checkpointed sets the verify step reads. One string
-    * hash per shingle, then the fused k-transform MinHash kernel
-    * ([[graft.expressions.MinhashAffine]]); identical output to the
-    * pre-r16 per-variant bodies (same coefficients, same hash family).
+    * the hook that lets [[nearDupMinhash]]/[[nearDupAudit]] derive
+    * signatures from the SAME checkpointed sets the verify step reads.
+    * One string hash per shingle, then the fused k-transform MinHash
+    * kernel ([[graft.expressions.MinhashAffine]]).
     */
   private[llm] def signaturesFromSets(sets: DataFrame, idCol: String,
-                                      numHashes: Int,
-                                      portable: Boolean): DataFrame = {
-    val P = 2147483647L
-    val coefs =
-      if (portable) minhashCoefsPortable(numHashes)
-      else {
-        val rnd = new scala.util.Random(9591)
-        IndexedSeq.fill(numHashes)(
-          (rnd.nextInt(Int.MaxValue).toLong | 1L, rnd.nextInt(Int.MaxValue).toLong))
-      }
-    val hs =
-      if (portable) transform(col("__set"),
-        s => graft.functions.Hashes.u32OfMd5(s))
-      else transform(col("__set"),
-        s => hash(s).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-    sets.select(col(idCol), hs.as("__hs"))
-      .select(col(idCol),
-        graft.expressions.MinhashAffine.minhash_affine(col("__hs"), coefs, P)
-          .as("signature"))
-  }
+                                      numHashes: Int): DataFrame =
+    sets.select(col(idCol),
+      graft.expressions.MinhashAffine.minhash_affine(
+        transform(col("__set"), s => graft.functions.Hashes.u32OfMd5(s)),
+        minhashCoefs(numHashes), 2147483647L).as("signature"))
 
   /** The seeded universal-family coefficients behind
-    * [[minhashSignaturesPortable]], exposed so the correctness oracle can
+    * [[minhashSignaturesInline]], exposed so the correctness oracle can
     * inject the IDENTICAL literals into its SQL.
     */
-  def minhashCoefsPortable(k: Int): IndexedSeq[(Long, Long)] = {
+  def minhashCoefs(k: Int): IndexedSeq[(Long, Long)] = {
     val rnd = new scala.util.Random(4243)
     IndexedSeq.fill(k)(
       (rnd.nextInt(Int.MaxValue).toLong | 1L, rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  /** PORTABLE signature variant: identical pipeline shape to
-    * [[minhashSignaturesInline]] — ONE string hash per shingle, then k
-    * multiply-add-mod transforms — but the base hash is the first 8 hex
-    * digits of md5 instead of murmur3, so every step is restatable in SQL
-    * (DuckDB folds the same 8 hex chars to the same 32-bit value) and the
-    * correctness harness can mirror the ENTIRE LSH pipeline. Products
-    * stay under 2^63 ((2^31−1)·(2^32−1) + 2^31 < 2^63−1): no ANSI
-    * overflow here, no BIGINT overflow in the oracle.
-    */
-  def minhashSignaturesPortable(df: DataFrame, idCol: String, textCol: String,
-                                numHashes: Int = 32, shingleN: Int = 3): DataFrame =
-    signaturesFromSets(shingleSets(df, idCol, textCol, shingleN), idCol,
-      numHashes, portable = true)
+  /** The `(band, bucket)` key every banded tier joins on. */
+  private val BandKey = Seq("__band", "__bucket")
 
-  /** LSH banding: (band index, hash of the band's r signature rows) keys.
-    * Docs sharing any band key are candidates. bands*rowsPerBand must equal
-    * the signature length.
+  /** LSH banding: (band index, bucket) keys, the bucket being the md5 of
+    * the band's r signature values rendered as decimal strings and
+    * joined with '|' (mirrors DuckDB
+    * `md5(array_to_string([x::VARCHAR ...], '|'))`). Docs sharing any
+    * band key are candidates. bands*rowsPerBand must equal the
+    * signature length.
     */
   def lshBands(sigs: DataFrame, idCol: String,
                bands: Int, rowsPerBand: Int): DataFrame =
     sigs.select(col(idCol),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          j => xxhash64(j, slice(col("signature"), j * lit(rowsPerBand) + 1,
-            lit(rowsPerBand))))).as(Seq("__band", "__bucket")))
-
-  /** Portable banding: bucket = md5 of the band's '|'-joined minhash
-    * values rendered as decimal strings (mirrors DuckDB
-    * `md5(array_to_string([x::VARCHAR ...], '|'))`).
-    */
-  def lshBandsPortable(sigs: DataFrame, idCol: String,
-                       bands: Int, rowsPerBand: Int): DataFrame =
-    sigs.select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
           j => md5(concat_ws("|",
             transform(slice(col("signature"), j * lit(rowsPerBand) + 1,
               lit(rowsPerBand)), x => x.cast("string"))))))
-          .as(Seq("__band", "__bucket")))
+          .as(BandKey))
 
   /** Candidate pairs (a < b) from shared LSH buckets. `maxBucket` guards
     * skew: a degenerate bucket (e.g. empty-text docs) would otherwise
     * explode quadratically; oversize buckets are dropped, mirroring
-    * production near-dup pipelines.
-    *
-    * Bucket sizes come from `groupBy().count()` + a semi-join back, NOT a
-    * count-over-window: WindowExec has no partial aggregation, so the
-    * degenerate bucket the cap exists for would itself stall one task with
-    * its full row set. The partial count makes the hot bucket nearly free
-    * map-side, and the join-back is an equi-join AQE can skew-split.
-    *
-    * Dropping is no longer silent: pass `capStats` (a fresh [[CapStats]])
-    * and it is filled with the dropped bucket/banded-row counts (see
-    * [[CapStats]] for the eager-fill contract and why it is not an
-    * `Observation`). The main pipeline shape is identical either way.
+    * production near-dup pipelines. Pass `capStats` (a fresh
+    * [[CapStats]]) to learn what the cap dropped.
     */
   def candidatePairs(bandsDf: DataFrame, idCol: String,
                      maxBucket: Int = 1000,
-                     capStats: Option[CapStats] = None): DataFrame = {
-    val sized = capBuckets(bandsDf, Seq("__band", "__bucket"), maxBucket, capStats)
-    val a = sized.select(col("__band"), col("__bucket"), col(idCol).as("id_a"))
-    val b = sized.select(col("__band"), col("__bucket"), col(idCol).as("id_b"))
-    a.join(b, Seq("__band", "__bucket"))
-      .filter(col("id_a") < col("id_b"))
+                     capStats: Option[CapStats] = None): DataFrame =
+    bucketPairs(bandsDf, BandKey, idCol, Nil, maxBucket, capStats)
       .select("id_a", "id_b").distinct()
+
+  /** THE capped bucket self-join behind every banded near-dup tier
+    * ([[candidatePairs]], [[nearDupMinhashIncremental]],
+    * [[nearDupSimhash]], [[nearDupSimhashIncremental]] and
+    * [[Ann.nearDupCosine]]): cap the buckets ([[capBuckets]]), join the
+    * rows to themselves on `keys`, keep each unordered pair as
+    * `id_a < id_b`. Every `payload` column comes out once per side,
+    * suffixed `_a`/`_b`, for the caller's score; a pair sharing several
+    * buckets comes out once per bucket, so callers `distinct()` after
+    * scoring.
+    *
+    * With `corpus` the join is batch-anchored: `rows` is the batch,
+    * `corpus` the persisted side (same columns, disjoint ids). The cap
+    * counts the COMBINED occupancy — a bucket degenerate only in union
+    * (half batch, half corpus) still joins quadratically — and the
+    * output is every batch-internal pair a < b plus every batch×corpus
+    * collision, the batch id always in `id_a`.
+    */
+  private[llm] def bucketPairs(rows: DataFrame, keys: Seq[String], idCol: String,
+                               payload: Seq[String], maxBucket: Int,
+                               capStats: Option[CapStats],
+                               corpus: Option[DataFrame] = None): DataFrame = {
+    val all = corpus.fold(rows)(c => rows.withColumn("__src", lit("b"))
+      .unionByName(c.withColumn("__src", lit("c"))))
+    val sized = capBuckets(all, keys, maxBucket, capStats)
+    def side(s: String): Seq[Column] = keys.map(col) ++
+      (col(idCol).as(s"id_$s") +: payload.map(p => col(p).as(s"${p}_$s")))
+    val a = corpus.fold(sized)(_ => sized.filter(col("__src") === "b"))
+      .select(side("a"): _*)
+    val b = sized.select(side("b") ++ corpus.map(_ => col("__src")): _*)
+    val keep = corpus.fold(col("id_a") < col("id_b"))(_ =>
+      col("id_a") =!= col("id_b") &&
+        (col("__src") === "c" || col("id_a") < col("id_b")))
+    a.join(b, keys).filter(keep)
   }
 
   /** Shared skew cap: keep only rows whose `keys`-group has ≤ `maxBucket`
@@ -330,7 +319,7 @@ object Dedup {
   def nearDupMinhash(df: DataFrame, idCol: String, textCol: String,
                      threshold: Double = 0.7, numHashes: Int = 32,
                      bands: Int = 8, shingleN: Int = 3,
-                     portable: Boolean = false, maxBucket: Int = 1000,
+                     maxBucket: Int = 1000,
                      capStats: Option[CapStats] = None): DataFrame =
     // the sets relation stays LAZY here: post-r15 the shingle kernel is
     // an O(len) byte scan, and measured at sf0.1 re-deriving it per
@@ -338,7 +327,7 @@ object Dedup {
     // recompute is the expensive side; [[nearDupAudit]], whose input is
     // itself a computed join, is the case where checkpointing wins)
     nearDupMinhashFromSets(shingleSets(df, idCol, textCol, shingleN),
-      idCol, threshold, numHashes, bands, portable, maxBucket, capStats)
+      idCol, threshold, numHashes, bands, maxBucket, capStats)
 
   /** [[nearDupMinhash]] over a caller-provided [[shingleSets]] relation
     * (checkpointed by callers like [[nearDupAudit]] whose sets are
@@ -348,20 +337,15 @@ object Dedup {
     * Inline signatures: per-row scalar computation, zero shuffle, and
     * measured 5× faster than the explode+groupBy form (identical
     * output). Materialized once because the band self-join reads it
-    * twice (a/b sides). `portable = true` swaps in the md5-string hash
-    * family ([[minhashSignaturesPortable]]) so a SQL oracle can mirror
-    * the whole pipeline.
+    * twice (a/b sides).
     */
   private[llm] def nearDupMinhashFromSets(sets: DataFrame, idCol: String,
                                           threshold: Double, numHashes: Int,
-                                          bands: Int, portable: Boolean,
-                                          maxBucket: Int,
+                                          bands: Int, maxBucket: Int,
                                           capStats: Option[CapStats]): DataFrame = {
-    val sigs = signaturesFromSets(sets, idCol, numHashes, portable)
-      .localCheckpoint(true)
-    val banded = if (portable) lshBandsPortable(sigs, idCol, bands, numHashes / bands)
-                 else lshBands(sigs, idCol, bands, numHashes / bands)
-    val cands = candidatePairs(banded, idCol, maxBucket, capStats)
+    val sigs = signaturesFromSets(sets, idCol, numHashes).localCheckpoint(true)
+    val cands = candidatePairs(lshBands(sigs, idCol, bands, numHashes / bands),
+      idCol, maxBucket, capStats)
     jaccardVerifySets(cands, sets, idCol)
       .filter(col("jaccard") >= threshold)
   }
@@ -374,18 +358,15 @@ object Dedup {
     * re-shingling corpus text.
     */
   def signatureTable(df: DataFrame, idCol: String, textCol: String,
-                     numHashes: Int = 32, shingleN: Int = 3,
-                     portable: Boolean = false): DataFrame =
-    if (portable) minhashSignaturesPortable(df, idCol, textCol, numHashes, shingleN)
-    else minhashSignaturesInline(df, idCol, textCol, numHashes, shingleN)
+                     numHashes: Int = 32, shingleN: Int = 3): DataFrame =
+    minhashSignaturesInline(df, idCol, textCol, numHashes, shingleN)
 
   /** Incremental MinHash near-dup — the daily corpus-scale path for
     * NEAR duplicates (what [[exactDedupIncremental]] is for exact ones):
     * signatures are computed for the BATCH only; the corpus side joins
     * in as a persisted [[signatureTable]]. Candidates come from shared
-    * LSH band buckets over batch ∪ corpus bands (batch-internal pairs
-    * a < b, plus every batch×corpus collision), capped per bucket like
-    * [[candidatePairs]]; verification is SIGNATURE-estimated Jaccard —
+    * LSH band buckets over batch ∪ corpus bands ([[bucketPairs]]'
+    * batch-anchored mode); verification is SIGNATURE-estimated Jaccard —
     * the fraction of agreeing minhash components, an unbiased estimator
     * of true Jaccard with granularity 1/k — because corpus text is, by
     * design, not available. Daily cost tracks the batch size plus
@@ -393,8 +374,7 @@ object Dedup {
     *
     * CONTRACT: batch and corpus id spaces must be disjoint (a re-crawl
     * mints new ids); `corpusSigs` must come from [[signatureTable]] with
-    * the SAME (numHashes, shingleN, portable) parameters — signatures
-    * from different hash families estimate garbage.
+    * the SAME (numHashes, shingleN) parameters.
     *
     * Output: (id_a = batch id, id_b = batch or corpus id, est_jaccard)
     * with est_jaccard ≥ threshold. The match fraction divides by a
@@ -403,10 +383,9 @@ object Dedup {
   def nearDupMinhashIncremental(incoming: DataFrame, idCol: String, textCol: String,
                                 corpusSigs: DataFrame, threshold: Double = 0.7,
                                 numHashes: Int = 32, bands: Int = 8,
-                                shingleN: Int = 3, portable: Boolean = false,
-                                maxBucket: Int = 1000,
+                                shingleN: Int = 3, maxBucket: Int = 1000,
                                 capStats: Option[CapStats] = None): DataFrame = {
-    val batchSigs = signatureTable(incoming, idCol, textCol, numHashes, shingleN, portable)
+    val batchSigs = signatureTable(incoming, idCol, textCol, numHashes, shingleN)
       .localCheckpoint(true)
     // The corpus side is consumed twice (banding + the verify join): a
     // caller passing raw signatureTable lineage would otherwise re-shingle
@@ -414,21 +393,9 @@ object Dedup {
     // (~numHashes longs/doc — the signature table, never the text) keeps
     // the "daily cost tracks the batch" contract honest for any input.
     val corpSigs = corpusSigs.localCheckpoint(true)
-    def band(s: DataFrame): DataFrame =
-      if (portable) lshBandsPortable(s, idCol, bands, numHashes / bands)
-      else lshBands(s, idCol, bands, numHashes / bands)
-    // caps apply to the COMBINED bucket occupancy: a bucket degenerate
-    // only in union (half batch, half corpus) still joins quadratically
-    val all = band(batchSigs).withColumn("__src", lit("b"))
-      .unionByName(band(corpSigs).withColumn("__src", lit("c")))
-    val sized = capBuckets(all, Seq("__band", "__bucket"), maxBucket, capStats)
-    val a = sized.filter(col("__src") === "b")
-      .select(col("__band"), col("__bucket"), col(idCol).as("id_a"))
-    val b = sized.select(col("__band"), col("__bucket"),
-      col(idCol).as("id_b"), col("__src"))
-    val cands = a.join(b, Seq("__band", "__bucket"))
-      .filter(col("id_a") =!= col("id_b") &&
-        (col("__src") === "c" || col("id_a") < col("id_b")))
+    def band(s: DataFrame): DataFrame = lshBands(s, idCol, bands, numHashes / bands)
+    val cands = bucketPairs(band(batchSigs), BandKey, idCol, Nil, maxBucket,
+        capStats, corpus = Some(band(corpSigs)))
       .select("id_a", "id_b").distinct()
     val sa = batchSigs.select(col(idCol).as("id_a"), col("signature").as("__sa"))
     val sb = batchSigs.unionByName(corpSigs)
@@ -564,8 +531,7 @@ object Dedup {
     * id-unique by construction) and one window hash-partitioned by
     * `canonical_id` — cluster sizes are near-dup groups (small by
     * nature; a degenerate all-equal corpus degrades to a hot key, the
-    * same exposure `dedupByPriority` documents, with the same
-    * `skewSalts` escape hatch via a pre-aggregation if ever needed).
+    * same exposure `dedupByPriority` has).
     */
   def keepBest(docs: DataFrame, idCol: String, scoreCol: String,
                clusters: DataFrame): DataFrame = {
@@ -638,46 +604,22 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** 64-bit SimHash over the word set: bit i is the sign of the sum of
-    * ±1 votes from each word's hash bit i. Explode + 64 conditional sums:
-    * the sums are whole-stage-codegen'd, which beats an inline
-    * 64-aggregate higher-order-function fold (interpreted) by ~2× cold —
-    * the opposite trade from MinHash, where the inline form replaced a
-    * shuffle AND its per-element work was cheap arithmetic. Bit 63 lands
-    * in the long sign bit, fine for a fingerprint.
+  /** 64-bit SimHash over the distinct words of the normalized text: bit
+    * i is the sign of the sum of ±1 votes from each word's hash bit i,
+    * where bit i of a word's hash is bit `i%4` of hex digit `i/4` of the
+    * word's md5. Every step is restatable in SQL
+    * (`strpos('0123456789abcdef', substr(md5(w),…))` in DuckDB), so the
+    * correctness oracle hash-verifies the full near-dup pipeline. Bit 63
+    * lands in the long sign bit, fine for a fingerprint.
+    *
+    * ONE narrow per-row kernel ([[graft.expressions.SimhashMd5]]):
+    * distinct words, one md5 each, the 64 nibble-bit votes and the
+    * sign-pack in a single pass — no explode, no corpus×words shuffle.
+    * OptKernelsSpec pins it against the old explode + 64-conditional-sum
+    * aggregation; the isNotNull filter replicates that aggregation's
+    * absent row for null-text documents.
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val words = df.select(col(idCol),
-      explode(array_distinct(split(normalize(col(textCol)), " "))).as("__w"))
-    val h = xxhash64(col("__w"))
-    val votes = (0 until 64).map(i =>
-      sum(when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as(s"__b$i"))
-    val packed = (0 until 64).map(i =>
-        when(col(s"__b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    words.groupBy(col(idCol))
-      .agg(votes.head, votes.tail: _*)
-      .select(col(idCol), packed.as("simhash"))
-  }
-
-  /** PORTABLE simhash: same vote/pack shape as [[simhash]], but bit i of a
-    * word's hash comes from the word's md5 HEX DIGITS — hex char `i/4`,
-    * bit `i%4` — instead of xxhash64 bits. Every step is restatable in SQL
-    * (`strpos('0123456789abcdef', substr(md5(w),…))` in DuckDB mirrors
-    * `conv(substring(md5(w),…),16,10)` here), so the correctness harness
-    * can hash-verify the full near-dup pipeline. Costlier per word (16
-    * conv+substring vs 1 xxhash64) — oracle-verifiable mode, not the
-    * default.
-    */
-  def simhashPortable(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    // ONE narrow per-row kernel (graft.expressions.SimhashMd5): distinct
-    // words, one md5 each, the 64 nibble-bit votes and the sign-pack all
-    // in a single pass — replacing explode(distinct words) + 16 hex-digit
-    // projections per word + a 64-conditional-sum hash aggregation (a
-    // corpus×words shuffle). Bit-for-bit the same fingerprint
-    // (OptKernelsSpec pins it against the verbatim old aggregation); the
-    // isNotNull filter replicates the old groupBy's absent row for
-    // null-text documents.
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
         graft.expressions.SimhashMd5.simhash_md5(normalize(col(textCol)))
           .as("simhash"))
@@ -686,35 +628,33 @@ object Dedup {
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** The 4 16-bit quarters of each fingerprint as `(band, bucket)` keys. */
+  private def simhashBands(fps: DataFrame, idCol: String): DataFrame =
+    fps.select(col(idCol), col("simhash"),
+      posexplode(array((0 until 4).map(q =>
+        shiftright(col("simhash"), q * 16).bitwiseAND(lit(0xFFFFL))): _*))
+        .as(BandKey))
+
+  /** Hamming-verified `(id_a, id_b, distance)` out of [[bucketPairs]]. */
+  private def hammingPairs(pairs: DataFrame, maxDistance: Int): DataFrame = {
+    val d = hamming(col("simhash_a"), col("simhash_b"))
+    pairs.filter(d <= maxDistance)
+      .select(col("id_a"), col("id_b"), d.as("distance"))
+      .distinct()
+  }
+
   /** SimHash near-dup: bucket by the 4 16-bit quarters (a pair within
     * Hamming distance 3 must agree on at least one quarter), verify
-    * Hamming ≤ maxDistance on candidates only.
+    * Hamming ≤ maxDistance on candidates only. Same skew cap as MinHash:
+    * correlated corpora concentrate band buckets.
     */
   def nearDupSimhash(df: DataFrame, idCol: String, textCol: String,
                      maxDistance: Int = 3, maxBucket: Int = 1000,
-                     portable: Boolean = false,
                      capStats: Option[CapStats] = None): DataFrame = {
-    // The inline simhash has no shuffle for downstream plans to reuse, so
-    // without materialization the 64-vote fold would re-run for the
-    // window AND both join sides.
-    val sigs = (if (portable) simhashPortable(df, idCol, textCol)
-                else simhash(df, idCol, textCol)).localCheckpoint(true)
-    val banded = sigs.select(col(idCol), col("simhash"),
-      posexplode(array((0 until 4).map(q =>
-        shiftright(col("simhash"), q * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("__band", "__bucket")))
-    // Same skew guard as MinHash: correlated corpora concentrate band
-    // buckets; an uncapped bucket joins quadratically.
-    val sized = capBuckets(banded, Seq("__band", "__bucket"), maxBucket, capStats)
-    val a = sized.select(col("__band"), col("__bucket"),
-      col(idCol).as("id_a"), col("simhash").as("__sa"))
-    val b = sized.select(col("__band"), col("__bucket"),
-      col(idCol).as("id_b"), col("simhash").as("__sb"))
-    a.join(b, Seq("__band", "__bucket"))
-      .filter(col("id_a") < col("id_b") &&
-        hamming(col("__sa"), col("__sb")) <= maxDistance)
-      .select(col("id_a"), col("id_b"), hamming(col("__sa"), col("__sb")).as("distance"))
-      .distinct()
+    // materialized: the self-join reads the fingerprints twice
+    val fps = simhash(df, idCol, textCol).localCheckpoint(true)
+    hammingPairs(bucketPairs(simhashBands(fps, idCol), BandKey, idCol,
+      Seq("simhash"), maxBucket, capStats), maxDistance)
   }
 
   /** Incremental SimHash near-dup — the daily path for the SimHash tier
@@ -724,46 +664,25 @@ object Dedup {
     * as a persisted `(id, simhash)` table — ONE long per document, the
     * cheapest persisted dedup state of the three tiers. Candidates come
     * from shared 16-bit quarter buckets over batch ∪ corpus bands
-    * (batch-internal pairs a < b, plus every batch×corpus collision),
-    * capped on COMBINED occupancy; verification is Hamming distance on
-    * the fingerprints themselves — corpus text is never re-read, so the
-    * daily cost tracks the batch plus collision volume.
+    * ([[bucketPairs]]' batch-anchored mode); verification is Hamming
+    * distance on the fingerprints themselves — corpus text is never
+    * re-read, so the daily cost tracks the batch plus collision volume.
     *
     * CONTRACT: batch and corpus id spaces must be disjoint; `corpusFps`
-    * must come from [[simhash]]/[[simhashPortable]] in the SAME mode.
-    * Output: `(id_a = batch id, id_b, distance)` with
-    * distance ≤ maxDistance.
+    * must come from [[simhash]]. Output: `(id_a = batch id, id_b,
+    * distance)` with distance ≤ maxDistance.
     */
   def nearDupSimhashIncremental(incoming: DataFrame, idCol: String,
                                 textCol: String, corpusFps: DataFrame,
                                 maxDistance: Int = 3, maxBucket: Int = 1000,
-                                portable: Boolean = false,
                                 capStats: Option[CapStats] = None): DataFrame = {
-    val batchFps = (if (portable) simhashPortable(incoming, idCol, textCol)
-                    else simhash(incoming, idCol, textCol))
-      .localCheckpoint(true)
+    val batchFps = simhash(incoming, idCol, textCol).localCheckpoint(true)
     // bounded: one long per corpus doc — same honesty note as the
     // minhash incremental (raw lineage would re-fingerprint per consumer)
     val corpFps = corpusFps.localCheckpoint(true)
-    def band(s: DataFrame): DataFrame = s.select(col(idCol), col("simhash"),
-      posexplode(array((0 until 4).map(q =>
-        shiftright(col("simhash"), q * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("__band", "__bucket")))
-    val all = band(batchFps).withColumn("__src", lit("b"))
-      .unionByName(band(corpFps).withColumn("__src", lit("c")))
-    val sized = capBuckets(all, Seq("__band", "__bucket"), maxBucket, capStats)
-    val a = sized.filter(col("__src") === "b")
-      .select(col("__band"), col("__bucket"), col(idCol).as("id_a"),
-        col("simhash").as("__sa"))
-    val b = sized.select(col("__band"), col("__bucket"),
-      col(idCol).as("id_b"), col("simhash").as("__sb"), col("__src"))
-    a.join(b, Seq("__band", "__bucket"))
-      .filter(col("id_a") =!= col("id_b") &&
-        (col("__src") === "c" || col("id_a") < col("id_b")) &&
-        hamming(col("__sa"), col("__sb")) <= maxDistance)
-      .select(col("id_a"), col("id_b"),
-        hamming(col("__sa"), col("__sb")).as("distance"))
-      .distinct()
+    hammingPairs(bucketPairs(simhashBands(batchFps, idCol), BandKey, idCol,
+      Seq("simhash"), maxBucket, capStats,
+      corpus = Some(simhashBands(corpFps, idCol))), maxDistance)
   }
 
   /** Chunk-level duplication profile over CONTENT-DEFINED chunks
@@ -815,8 +734,7 @@ object Dedup {
     */
   def nearDupAudit(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, numHashes: Int = 32, bands: Int = 8,
-                   shingleN: Int = 3, portable: Boolean = false,
-                   maxBucket: Int = 1000): DataFrame = {
+                   shingleN: Int = 3, maxBucket: Int = 1000): DataFrame = {
     // ONE shingle scan for the WHOLE audit: both tiers (and both verify
     // sides of each) read the same checkpointed set relation. Pre-r16
     // the audit re-shingled the input six times — and the input here is
@@ -826,7 +744,7 @@ object Dedup {
     val exact = nearDupJaccardExactFromSets(sets, idCol, threshold)
       .select("id_a", "id_b")
     val approx = nearDupMinhashFromSets(sets, idCol, threshold, numHashes,
-        bands, portable, maxBucket, capStats = None)
+        bands, maxBucket, capStats = None)
       .select("id_a", "id_b")
     exact.withColumn("__e", lit(1))
       .join(approx.withColumn("__a", lit(1)), Seq("id_a", "id_b"), "full_outer")

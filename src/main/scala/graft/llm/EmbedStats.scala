@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * distribution move (the embedding analogue of the token-level
   * `corpus_drift`).
   *
-  * Two Gram tiers, same shape as the dedup families:
+  * Two Gram tiers:
   *   - [[gramExact]] — the ORACLE-portable tier: per-row products
   *     quantize to `decimal(28,15)` (exact for float inputs widened to
   *     double: ≤ 2·24 significand bits each, well inside 15 decimal
@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   *     stream through it, partials reduce on the driver-side collect of
   *     #partitions matrices. No shuffle proportional to n·dim²; float
   *     summation order varies with partitioning, so it is
-  *     spec-equivalent (1e-9) to the exact tier, not hash-equal —
-  *     exactly the xxhash64-vs-md5 trade the minhash family makes.
+  *     spec-equivalent (1e-9) to the exact tier, not hash-equal.
   *
   * Output matrices publish the UPPER TRIANGLE only (j ≤ k): the matrix
   * is symmetric, half the cells is the whole answer.

@@ -38,11 +38,9 @@ object Packing {
     * owns it.
     */
   def blocks(docs: DataFrame, idCol: String, textCol: String,
-             blockSize: Int = 2048, nShards: Int = 16,
-             portable: Boolean = false): DataFrame = {
+             blockSize: Int = 2048, nShards: Int = 16): DataFrame = {
     require(blockSize > 0, s"blockSize must be positive, got $blockSize")
-    val sid = if (portable) Sharding.shardIdPortable(col(idCol), nShards)
-              else Sharding.shardId(col(idCol), nShards)
+    val sid = Sharding.shardId(col(idCol), nShards)
     val toks = size(split(Dedup.normalize(col(textCol)), " ")).cast("long")
     val b = lit(blockSize.toLong)
     val withOffset = graft.operators.Cumsum.exclusivePerShard(

@@ -246,13 +246,12 @@ object Sft {
     */
   def packTokens(turnsDf: DataFrame, merges: Array[(String, String)],
                  blockTokens: Int = 2048, nShards: Int = 16,
-                 portable: Boolean = false,
                  regime: Bpe.Regime = Bpe.Regime.Char,
                  eosId: Option[Int] = None): DataFrame = {
     val packed = pack(transcriptsTokens(turnsDf, merges, regime)
         .select(col("conv_id"), col("n_tokens").as("n_chars"),
           col("mask_spans")),
-        blockChars = blockTokens, nShards = nShards, portable = portable)
+        blockChars = blockTokens, nShards = nShards)
       .withColumnRenamed("chars_in_block", "toks_in_block")
     // The packer's +1 joint between conversations IS one separator
     // token; `eosId` pins WHICH id that joint carries (a reserved
@@ -313,7 +312,6 @@ object Sft {
                         merges: Array[(String, String)],
                         vocabDf: DataFrame,
                         blockTokens: Int, nShards: Int = 16,
-                        portable: Boolean = false,
                         regime: Bpe.Regime = Bpe.Regime.Char,
                         eosId: Int, padId: Option[Int] = None): DataFrame = {
     require(blockTokens > 0, s"blockTokens must be positive, got $blockTokens")
@@ -331,8 +329,7 @@ object Sft {
     val convN = toks.groupBy(col("conv_id"))
       .agg(sum(col("__nt")).as("__n"))
       .filter(col("__n") > 0)
-    val sid = if (portable) Sharding.shardIdPortable(col("conv_id"), nShards)
-              else Sharding.shardId(col("conv_id"), nShards)
+    val sid = Sharding.shardId(col("conv_id"), nShards)
     // funnel-free offsets, as in [[pack]] — two passes over a slim
     // (shard, conv_id, count) checkpoint
     val offsets = graft.operators.Cumsum.exclusivePerShard(
@@ -459,11 +456,10 @@ object Sft {
     * no join, no global order.
     */
   def pack(transcripts: DataFrame, blockChars: Int = 2048,
-           nShards: Int = 16, portable: Boolean = false): DataFrame = {
+           nShards: Int = 16): DataFrame = {
     require(blockChars > 0, s"blockChars must be positive, got $blockChars")
     import graft.operators.Sharding
-    val sid = if (portable) Sharding.shardIdPortable(col("conv_id"), nShards)
-              else Sharding.shardId(col("conv_id"), nShards)
+    val sid = Sharding.shardId(col("conv_id"), nShards)
     val b = lit(blockChars.toLong)
     // null-safe: an external transcripts table may carry null mask_spans
     // where [[transcripts]] renders ""; both mean "no masked turns"

@@ -58,7 +58,7 @@ object TextStats {
         length(regexp_replace(trim(text), "\\s+", "")).cast("double") /
           (regexp_count(trim(text), lit("\\s+")) + 1))
 
-  /** Exposed (like Ann.planes / Dedup.minhashCoefsPortable) so the
+  /** Exposed (like Ann.planes / Dedup.minhashCoefs) so the
     * correctness oracle injects the IDENTICAL profile literals.
     */
   private[graft] val stopwords: Map[String, Seq[String]] = Map(

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * 90% of a corpus), `salts > 1` routes through a two-phase top-n:
   * per-(group, salt) top-n, then top-n of the ≤ salts·n winners — top-n
   * under a total order composes across phases, so the rows are IDENTICAL
-  * to the unsalted draw (same trick as Snapshots.dedupByPrioritySalted,
-  * generalized from n = 1).
+  * to the unsalted draw (the two-phase top-1 trick, generalized to
+  * top-n).
   */
 object Sampling {
 

@@ -8,23 +8,14 @@ import org.apache.spark.sql.functions._
   * byte-identical shard membership regardless of cluster size, task
   * retries, or input split order (unlike `repartition(n)`'s round-robin,
   * which is none of those things).
-  *
-  * Two hash modes, mirroring the dedup/ANN families:
-  *   - `shardId` (default): xxhash64 — one codegen'd call, the
-  *     production path;
-  *   - `shardIdPortable`: fold of the first 8 md5 hex digits — cross-
-  *     engine reproducible, so the DuckDB oracle derives the IDENTICAL
-  *     assignment (same trick as [[graft.llm.Dedup.minhashPortable]]).
   */
 object Sharding {
 
-  def shardId(id: Column, nShards: Int): Column =
-    pmod(xxhash64(id.cast("string")), lit(nShards.toLong)).cast("int")
-
-  /** Portable mode: first 8 md5 hex digits as a 32-bit value, mod n —
-    * restatable in any engine with md5 + string ops.
+  /** The shard of `id`: [[graft.functions.Hashes.u32OfMd5]] of the id
+    * rendered as a string, mod n — restatable in any engine with md5 and
+    * string ops, so the DuckDB oracle derives the IDENTICAL assignment.
     */
-  def shardIdPortable(id: Column, nShards: Int): Column =
+  def shardId(id: Column, nShards: Int): Column =
     pmod(graft.functions.Hashes.u32OfMd5(id.cast("string")),
       lit(nShards.toLong)).cast("int")
 
@@ -32,11 +23,8 @@ object Sharding {
     * The balance check a pipeline runs before shipping shards to
     * trainers; a skewed hash or a hot key shows up here first.
     */
-  def profile(df: DataFrame, idCol: String, weightCol: Column, nShards: Int,
-              portable: Boolean = false): DataFrame = {
-    val sid = if (portable) shardIdPortable(col(idCol), nShards)
-              else shardId(col(idCol), nShards)
-    df.select(sid.as("shard"), col(idCol).as("__id"), weightCol.as("__w"))
+  def profile(df: DataFrame, idCol: String, weightCol: Column, nShards: Int): DataFrame = {
+    df.select(shardId(col(idCol), nShards).as("shard"), col(idCol).as("__id"), weightCol.as("__w"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_rows"), sum(col("__w")).as("weight"),
         min(col("__id")).as("min_id"), max(col("__id")).as("max_id"))
@@ -47,11 +35,8 @@ object Sharding {
     * number of whole files (`repartition` by the shard column hashes
     * rows of one shard to one task; partitionBy then splits nothing).
     */
-  def writeSharded(df: DataFrame, idCol: String, path: String, nShards: Int,
-                   portable: Boolean = false): Unit = {
-    val sid = if (portable) shardIdPortable(col(idCol), nShards)
-              else shardId(col(idCol), nShards)
-    df.withColumn("shard", sid)
+  def writeSharded(df: DataFrame, idCol: String, path: String, nShards: Int): Unit = {
+    df.withColumn("shard", shardId(col(idCol), nShards))
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
   }
@@ -72,15 +57,13 @@ object Sharding {
     * global sort.
     */
   def epochOrder(df: DataFrame, idCol: String, epochCol: String,
-                 nShards: Int, portable: Boolean = false): DataFrame = {
+                 nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sid = if (portable) shardIdPortable(col(idCol), nShards)
-              else shardId(col(idCol), nShards)
     val key = graft.functions.Hashes.u32OfMd5(concat_ws(":",
       col(epochCol).cast("string"), col(idCol).cast("string")))
     val w = Window.partitionBy(col("shard"), col(epochCol))
       .orderBy(key.asc, col(idCol).asc)
-    df.withColumn("shard", sid)
+    df.withColumn("shard", shardId(col(idCol), nShards))
       .withColumn("seq", row_number().over(w))
   }
 
@@ -99,17 +82,14 @@ object Sharding {
     */
   def curriculumOrder(df: DataFrame, idCol: String, epochCol: String,
                       tierCol: String, nShards: Int,
-                      ascending: Boolean = true,
-                      portable: Boolean = false): DataFrame = {
+                      ascending: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sid = if (portable) shardIdPortable(col(idCol), nShards)
-              else shardId(col(idCol), nShards)
     val key = graft.functions.Hashes.u32OfMd5(concat_ws(":",
       col(epochCol).cast("string"), col(idCol).cast("string")))
     val tier = if (ascending) col(tierCol).asc else col(tierCol).desc
     val w = Window.partitionBy(col("shard"), col(epochCol))
       .orderBy(tier, key.asc, col(idCol).asc)
-    df.withColumn("shard", sid)
+    df.withColumn("shard", shardId(col(idCol), nShards))
       .withColumn("seq", row_number().over(w))
   }
 }

@@ -50,24 +50,4 @@ object Snapshots {
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
-
-  /** Skew-safe variant of [[dedupByPriority]]: two-phase top-1-per-key.
-    * Phase 1 picks a winner within each of `salts` random sub-partitions
-    * of a key (parallelizing a hot key across `salts` tasks); phase 2
-    * picks the winner of winners — its input is ≤ `salts` rows per key
-    * regardless of skew. Top-1 composes across phases, so the result is
-    * identical to the unsalted window (same priority + tiebreak order).
-    * Use when a single key can hold a large fraction of a partition's
-    * rows (SCALE.md "what breaks first" #1).
-    */
-  def dedupByPrioritySalted(df: DataFrame, key: Seq[String], salts: Int,
-                            priority: Column, tiebreak: Column*): DataFrame = {
-    // Variadic hash over the tiebreak columns directly — no arithmetic, so
-    // string tiebreaks don't hit ANSI cast errors and long tiebreaks can't
-    // overflow; any tiebreak value distribution spreads across the salts.
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64((tiebreak :+ priority).toIndexedSeq: _*), lit(salts)))
-    val phase1 = dedupByPriority(salted, key :+ "__salt", priority, tiebreak: _*)
-    dedupByPriority(phase1.drop("__salt"), key, priority, tiebreak: _*)
-  }
 }

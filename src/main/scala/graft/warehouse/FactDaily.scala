@@ -25,33 +25,6 @@ import graft.operators.{Keys, Snapshots}
   */
 object FactDaily {
 
-  /** Sentinel for [[buildDay]]'s `skewSalts`: measure the day slice's
-    * dedup-key skew with [[graft.analytics.Profile.keySkew]] and decide
-    * the salt count from it (diagnostic → decision, SCALE.md "what
-    * breaks first" #1).
-    */
-  val AutoSalts: Int = -1
-
-  /** Salt-count decision from a key-skew profile: 0 (plain window) when
-    * the hottest dedup key carries less than `skewThreshold`× the mean
-    * key load; otherwise enough salts to bring that key's per-task
-    * share back under the threshold, with 2× headroom, capped at
-    * `maxSalts` (salts multiply phase-1 groups, so more is not free).
-    * Costs one counting pass over `df` — callers on a hot path should
-    * profile a cached/checkpointed frame.
-    */
-  def autoSkewSalts(df: DataFrame, keys: Seq[String],
-                    skewThreshold: Double = 8.0, maxSalts: Int = 32): Int = {
-    require(skewThreshold > 1.0, s"skewThreshold must exceed 1, got $skewThreshold")
-    if (df.isEmpty) 0
-    else {
-      val top = graft.analytics.Profile.keySkew(df, keys, k = 1).head()
-      val skew = top.getAs[Double]("skew_vs_avg")
-      if (skew < skewThreshold) 0
-      else math.min(maxSalts, math.ceil(skew / skewThreshold).toInt * 2)
-    }
-  }
-
   /** Build today's fact slice.
     *
     * @param factYesterday yesterday's fact slice (empty frame on day 1)
@@ -61,20 +34,11 @@ object FactDaily {
     * @param dimJob / dimCompany post-merge dims (current rows used)
     * @param runDate today
     * @param maxFactId current max fact_id across the fact table
-    * @param skewSalts 0/1 = plain priority-dedup window; >1 = the two-phase
-    *                  salted dedup ([[Snapshots.dedupByPrioritySalted]],
-    *                  property-proven identical output) for corpora where
-    *                  one (job_sk, date_id) key can dominate a partition —
-    *                  e.g. a re-run replaying many revisions of one job;
-    *                  [[AutoSalts]] = profile the unioned slice with
-    *                  [[autoSkewSalts]] and flip the salted path on
-    *                  automatically (one extra counting pass)
     * @return today's complete fact slice (Schemas.factDaily)
     */
   def buildDay(factYesterday: DataFrame, factTodayExisting: DataFrame,
                staging: DataFrame, dimJob: DataFrame, dimCompany: DataFrame,
-               runDate: Column, crawledAt: Column, maxFactId: Long,
-               skewSalts: Int = 0): DataFrame = {
+               runDate: Column, crawledAt: Column, maxFactId: Long): DataFrame = {
     val today = runDate.cast("date")
 
     // M5: carried rows, re-stamped (daily.py:138-146); fact_id re-minted below.
@@ -118,15 +82,11 @@ object FactDaily {
     val unioned = existing.unionByName(
       fromStaging.withColumn("fact_id", lit(null).cast("long")), allowMissingColumns = true)
       .unionByName(carried.withColumn("fact_id", lit(null).cast("long")))
-    val salts =
-      if (skewSalts == AutoSalts) autoSkewSalts(unioned, Seq("job_sk", "date_id"))
-      else skewSalts
-    val deduped = (if (salts > 1)
-        Snapshots.dedupByPrioritySalted(unioned, Seq("job_sk", "date_id"),
-          salts, col("__priority"), col("fact_id"))
-      else
-        Snapshots.dedupByPriority(unioned, Seq("job_sk", "date_id"),
-          col("__priority"), col("fact_id"))).drop("__priority")
+    // Through Apps a (job_sk, date_id) key holds at most three rows — one
+    // each from staging (read from the job_id-keyed raw table), the
+    // existing slice and the carry — so the window has no hot key.
+    val deduped = Snapshots.dedupByPriority(unioned, Seq("job_sk", "date_id"),
+      col("__priority"), col("fact_id")).drop("__priority")
 
     // Fresh fact_ids, deterministic by job_sk within the day slice (unique
     // after the (job_sk, date_id) dedup — date_id is constant). Minting is

@@ -36,9 +36,7 @@ object WarehouseJob {
   /** Run one day: returns the new warehouse state. `staging` must follow
     * [[Schemas.staging]]. Frames are localCheckpoint'd so multi-day runs
     * don't stack lineage (the on-disk table layer plays this role in
-    * production). `skewSalts > 1` routes the fact dedup through the
-    * salted two-phase variant (identical output; for skewed day slices);
-    * [[FactDaily.AutoSalts]] profiles the slice and decides per day.
+    * production).
     *
     * Stages are checkpointed IN DEPENDENCY ORDER and each later stage is
     * built from the already-checkpointed frames, so (a) the dim merges
@@ -46,13 +44,12 @@ object WarehouseJob {
     * plans, and (b) `onStage` receives a per-stage wall time
     * (`scd2_dim_job`, `scd2_dim_company`, `dim_location`, `dim_date`,
     * `fact`, `bridge`) — the instrumentation that localizes a regression
-    * inside the otherwise-opaque day-build composite. With
-    * `checkpoint = false` the frames stay lazy and the stage times are
-    * construction-only (~0) — callers wanting timings need eager mode.
+    * inside the otherwise-opaque day-build composite. The checkpoints
+    * also let a caller overwrite the very files the input plans read
+    * from ([[graft.app.Apps.runWarehouseDay]] does).
     */
   def runDay(spark: SparkSession, state: State, staging: DataFrame,
-             runDate: String, checkpoint: Boolean = true,
-             skewSalts: Int = 0,
+             runDate: String,
              onStage: (String, Double) => Unit = (_, _) => ()): State = {
     val rd = lit(runDate)
     val today = java.sql.Date.valueOf(runDate)
@@ -60,7 +57,7 @@ object WarehouseJob {
 
     def staged(name: String)(df: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
-      val out = if (checkpoint) df.localCheckpoint(eager = true) else df
+      val out = df.localCheckpoint(eager = true)
       onStage(name, (System.nanoTime() - t0) / 1e9)
       out
     }
@@ -81,8 +78,7 @@ object WarehouseJob {
 
     val factToday = FactDaily.buildDay(
       factYesterday, factTodayExisting, staging, dimJob, dimCompany,
-      runDate = rd, crawledAt = lit(runDate + " 07:00:00"), maxFactId = maxFactId,
-      skewSalts = skewSalts)
+      runDate = rd, crawledAt = lit(runDate + " 07:00:00"), maxFactId = maxFactId)
     val fact = staged("fact")(factOther.unionByName(factToday))
 
     val bridge = staged("bridge")(Bridge.buildDay(

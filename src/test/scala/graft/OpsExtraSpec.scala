@@ -1,41 +1,12 @@
 package graft
 
-import graft.operators.{Scd2, Snapshots}
+import graft.operators.Scd2
 import graft.functions.Hashes
 import org.apache.spark.sql.functions._
 
-/** Salted dedup equivalence + JSON skills codec round-trip. */
+/** SCD2 change-detection edge cases + JSON skills codec round-trip. */
 class OpsExtraSpec extends SparkSpec {
   import spark.implicits._
-
-  test("salted dedup equals unsalted dedup, including on a skewed key") {
-    // one hot key with 5000 rows + 50 normal keys
-    val rows = (1 to 5000).map(i => ("hot", i % 3, i.toLong)) ++
-      (1 to 50).flatMap(k => (1 to 4).map(i => (s"k$k", i % 2, (k * 10 + i).toLong)))
-    val df = rows.toDF("k", "prio", "tb")
-    val plain = Snapshots.dedupByPriority(df, Seq("k"), col("prio"), col("tb"))
-      .orderBy("k").collect().toSeq
-    val salted = Snapshots.dedupByPrioritySalted(df, Seq("k"), 16, col("prio"), col("tb"))
-      .orderBy("k").collect().toSeq
-    assert(plain == salted)
-  }
-
-  test("salted dedup works with STRING tiebreaks under ANSI mode") {
-    // Would throw (ANSI string→double cast) with an arithmetic salt; the
-    // variadic-hash salt must both run and spread rows across salts.
-    val rows = (1 to 2000).map(i => ("hot", i % 3, f"row$i%05d")) ++
-      (1 to 20).map(k => (s"k$k", 1, s"t$k"))
-    val df = rows.toDF("k", "prio", "tb")
-    val plain = Snapshots.dedupByPriority(df, Seq("k"), col("prio"), col("tb"))
-      .orderBy("k").collect().toSeq
-    val salted = Snapshots.dedupByPrioritySalted(df, Seq("k"), 16, col("prio"), col("tb"))
-      .orderBy("k").collect().toSeq
-    assert(plain == salted)
-    // the salt actually distributes (not one constant value)
-    val nSalts = df.select(pmod(xxhash64(col("tb"), col("prio")), lit(16)))
-      .distinct().count()
-    assert(nSalts > 1)
-  }
 
   test("SCD2: empty skills array vs null is NOT a change (Python falsy parity)") {
     // reference job.py: str(new_skills) if new_skills else None — [] is falsy,

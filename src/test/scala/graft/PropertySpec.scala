@@ -92,24 +92,22 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("salted dedup ≡ plain dedup over generated skewed inputs") {
-    // The skew path production relies on: two-phase salted dedup must be
-    // EXACTLY the one-phase dedup for any priority/tiebreak distribution,
-    // including hot keys (90% of rows on one key) and tie-heavy data.
-    val rowGen = Gen.zip(
-      Gen.frequency(9 -> Gen.const("hot"), 1 -> Gen.choose(1, 5).map(i => s"k$i")),
-      Gen.choose(0, 2), Gen.choose(1, 4).map(i => s"t$i"))
-    forAllSeeded(Gen.listOfN(60, rowGen), cases = 5) { rows =>
-      val df = rows.toDF("k", "prio", "tb")
-      val plain = Snapshots.dedupByPriority(df, Seq("k"), col("prio"), col("tb"))
-        .orderBy("k").collect().toSeq
-      for (salts <- Seq(2, 16)) {
-        val salted = Snapshots
-          .dedupByPrioritySalted(df, Seq("k"), salts, col("prio"), col("tb"))
-          .orderBy("k").collect().toSeq
-        assert(salted == plain, s"salts=$salts diverged")
-      }
-    }
+  /** Clustered corpora: 4 base docs of 5–12 words over a 14-word
+    * vocabulary plus 4 variants of them (0 = exact dup, 1–2 word swaps =
+    * near-dup), ids 0–7. */
+  private val clusteredCorpusGen: Gen[Seq[(Long, String)]] = {
+    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
+      "golf", "hotel", "india", "juliet", "kilo", "lima", "mike", "november")
+    val docGen = Gen.choose(5, 12).flatMap(len => Gen.listOfN(len, Gen.oneOf(vocab)).map(_.toVector))
+    for {
+      bases <- Gen.listOfN(4, docGen)
+      variants <- Gen.listOfN(4, for {
+        b <- Gen.oneOf(bases)
+        k <- Gen.choose(0, 2)
+        idxs <- Gen.listOfN(k, Gen.choose(0, 99))
+        w <- Gen.oneOf(vocab)
+      } yield idxs.foldLeft(b)((d, i) => d.updated(i % d.size, w)))
+    } yield (bases ++ variants).zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
   }
 
   test("exact Jaccard near-dup ≡ brute-force all-pairs over generated clustered corpora") {
@@ -117,8 +115,6 @@ class PropertySpec extends SparkSpec {
     // filter never lose a true pair) checked against literal all-pairs
     // Jaccard computed Scala-side, for clustered corpora (variants of
     // shared base docs + noise) across thresholds 0.5–0.9.
-    val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
-      "golf", "hotel", "india", "juliet", "kilo", "lima", "mike", "november")
     def shingleSet(text: String, n: Int): Set[String] = {
       val norm = text.trim.toLowerCase.replaceAll("\\s+", " ")
       val words = norm.split(" ", -1).toVector
@@ -127,17 +123,7 @@ class PropertySpec extends SparkSpec {
     }
     def jac(a: Set[String], b: Set[String]): Double =
       a.intersect(b).size.toDouble / a.union(b).size
-    val docGen = Gen.choose(5, 12).flatMap(len => Gen.listOfN(len, Gen.oneOf(vocab)).map(_.toVector))
-    val corpusGen = for {
-      bases <- Gen.listOfN(4, docGen)
-      variants <- Gen.listOfN(4, for {
-        b <- Gen.oneOf(bases)
-        k <- Gen.choose(0, 2)          // 0 = exact dup; 1–2 word swaps = near-dup
-        idxs <- Gen.listOfN(k, Gen.choose(0, 99))
-        w <- Gen.oneOf(vocab)
-      } yield idxs.foldLeft(b)((d, i) => d.updated(i % d.size, w)))
-    } yield (bases ++ variants).zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
-    forAllSeeded(Gen.zip(corpusGen, Gen.oneOf(0.5, 0.7, 0.9)), cases = 6) { case (docs, t) =>
+    forAllSeeded(Gen.zip(clusteredCorpusGen, Gen.oneOf(0.5, 0.7, 0.9)), cases = 6) { case (docs, t) =>
       val df = docs.toDF("doc_id", "text")
       val got = graft.llm.Dedup.nearDupJaccardExact(df, "doc_id", "text", t)
         .select("id_a", "id_b").collect()
@@ -150,6 +136,41 @@ class PropertySpec extends SparkSpec {
       } yield (a, b)).toSet
       assert(got == want, s"t=$t missing=${want -- got} extra=${got -- want}")
     }
+  }
+
+  test("incremental simhash ≡ full simhash restricted to batch pairs over generated clustered corpora") {
+    // Both modes of the shared bucket-pair join: the batch-anchored join
+    // against a persisted fingerprint table must find exactly the pairs
+    // the plain self-join over batch ∪ corpus finds that touch the
+    // batch — batch-internal pairs once (a < b), batch×corpus pairs with
+    // the batch id first. maxBucket is large, so no cap drops differ.
+    import graft.llm.Dedup
+    var internal = 0
+    var cross = 0
+    val gen = Gen.zip(clusteredCorpusGen, Gen.listOfN(8, Gen.oneOf(true, false)),
+      Gen.oneOf(3, 8, 16))
+    forAllSeeded(gen, cases = 6) { case (docs, inBatch, maxD) =>
+      val batchIds = docs.map(_._1).filter(id => inBatch(id.toInt)).toSet
+      val df = docs.toDF("doc_id", "text")
+      val isBatch = col("doc_id").isin(batchIds.toSeq: _*)
+      val want = Dedup.nearDupSimhash(df, "doc_id", "text",
+          maxDistance = maxD, maxBucket = 100000)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        .collect {
+          case (a, b, d) if batchIds(a) => (a, b, d)
+          case (a, b, d) if batchIds(b) => (b, a, d)
+        }.toSet
+      val got = Dedup.nearDupSimhashIncremental(df.filter(isBatch), "doc_id", "text",
+          Dedup.simhash(df.filter(!isBatch), "doc_id", "text"),
+          maxDistance = maxD, maxBucket = 100000)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got == want, s"maxDistance=$maxD batch=$batchIds " +
+        s"missing=${want -- got} extra=${got -- want}")
+      internal += want.count(p => batchIds(p._2))
+      cross += want.count(p => !batchIds(p._2))
+    }
+    // non-vacuous: both modes of the join produced pairs
+    assert(internal > 0 && cross > 0, s"internal=$internal cross=$cross")
   }
 
   test("stratified sample: salted ≡ plain; exactly min(n, |group|) rows per group") {

@@ -49,6 +49,28 @@ class AppsE2ESpec extends SparkSpec {
     assert(staging.filter(col("title_clean").contains("Thu Nhập")).count() == 0)
   }
 
+  test("a later day stages only that day's crawl, not the whole raw snapshot") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("graft_e2e_days").toString
+    def crawl(day: String, ids: Seq[Int]): Unit = {
+      val dir = s"$r/html_$day"
+      Files.createDirectories(java.nio.file.Paths.get(dir))
+      Files.writeString(java.nio.file.Paths.get(s"$dir/page1.html"),
+        ids.map(i => card(s"100$i", s"Engineer Role $i", s"${10 + i % 20} - 40 triệu",
+          "Hà Nội", s"${5 + i % 10}")).mkString("\n"))
+      Apps.runIngestDay(spark, dir, r, day)
+    }
+    crawl("2026-02-01", 1 to 60)
+    val day2 = (1 to 60).filter(_ % 7 != 0) // 52 of day 1's 60 jobs
+    crawl("2026-02-02", day2)
+    val staged = spark.read.parquet(s"$r/staging_jobs")
+      .filter(col("crawl_date") === "2026-02-02")
+      .select("job_id").as[String].collect().sorted.toSeq
+    assert(staged == day2.map(i => s"100$i").sorted)
+    // the raw snapshot still holds every job ever crawled
+    assert(spark.read.parquet(s"$r/raw_jobs").count() == 60)
+  }
+
   test("staging read prunes to one crawl_date partition") {
     ran
     val pruned = spark.read.parquet(s"$root/staging_jobs")

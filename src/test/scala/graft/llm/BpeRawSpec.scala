@@ -316,13 +316,11 @@ class BpeRawSpec extends SparkSpec {
       .select("token_id").as[Int].collect().head
     assert(eos === 1)
     val packed = Sft.packTokens(turnsDf, merges, blockTokens = 8,
-      nShards = 2, portable = true, regime = Bpe.Regime.Raw(),
-        eosId = Some(eos))
+      nShards = 2, regime = Bpe.Regime.Raw(), eosId = Some(eos))
     assert(packed.columns.contains("eos_id"))
     assert(packed.select("eos_id").distinct().as[Int].collect().toSeq === Seq(1))
     // default: legacy schema, no eos_id column
-    val legacy = Sft.packTokens(turnsDf, merges, blockTokens = 8,
-      nShards = 2, portable = true)
+    val legacy = Sft.packTokens(turnsDf, merges, blockTokens = 8, nShards = 2)
     assert(!legacy.columns.contains("eos_id"))
   }
 }

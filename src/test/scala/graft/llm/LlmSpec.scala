@@ -29,18 +29,6 @@ class LlmSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("portable minhash mode behaves like the fast mode on planted pairs") {
-    // Same pipeline, different hash family (md5-string, oracle-mirrorable):
-    // it must catch the identical and near-dup pairs and exclude the
-    // unrelated doc, exactly like the xxhash64 default.
-    val pairs = Dedup.nearDupMinhash(docs.filter($"doc_id" =!= 5L), "doc_id", "text",
-        threshold = 0.3, numHashes = 32, bands = 16, shingleN = 2, portable = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 3L)))
-    assert(pairs.contains((1L, 2L)) || pairs.contains((2L, 3L)))
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
-  }
-
   test("clean corpus: quality filter, exact dup, near-dup cluster all applied") {
     // doc 5 (empty) fails quality; doc 3 is an exact dup of 1; docs 1 and 2
     // are near-dups (one cluster → keep min id 1); doc 4 survives alone
@@ -107,8 +95,26 @@ class LlmSpec extends SparkSpec {
   }
 
   test("portable simhash mode: identical same hash, near closer than far") {
-    val h = Dedup.simhashPortable(docs.filter($"doc_id" =!= 5L), "doc_id", "text")
+    // the fingerprint is the SQL-restatable md5 definition the oracle
+    // uses: bit i votes with bit i%4 of md5 hex digit i/4 of each
+    // distinct word of the normalized text
+    val h = Dedup.simhash(docs.filter($"doc_id" =!= 5L), "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def md5Hex(w: String): String = java.security.MessageDigest
+      .getInstance("MD5").digest(w.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def ref(text: String): Long = {
+      val words = text.trim.toLowerCase.replaceAll("\\s+", " ").split(" ", -1).distinct
+      (0 until 64).foldLeft(0L) { (acc, i) =>
+        val votes = words.map { w =>
+          val digit = Integer.parseInt(md5Hex(w).substring(i / 4, i / 4 + 1), 16)
+          if (((digit >> (i % 4)) & 1) == 1) 1 else -1
+        }.sum
+        if (votes > 0) acc | (1L << i) else acc
+      }
+    }
+    docs.filter($"doc_id" =!= 5L).collect().foreach { r =>
+      assert(h(r.getLong(0)) == ref(r.getString(1)), s"doc ${r.getLong(0)}")
+    }
     assert(h(1L) == h(3L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(h(1L), h(2L)) < ham(h(1L), h(4L)))

@@ -150,7 +150,7 @@ class OptKernelsSpec extends SparkSpec {
 
   test("MinhashAffine ≡ k array_min(transform(...)) incl. null array") {
     val P = 2147483647L
-    val coefs = Dedup.minhashCoefsPortable(8)
+    val coefs = Dedup.minhashCoefs(8)
     val rnd = new scala.util.Random(5)
     val rows: Seq[Option[Seq[Long]]] =
       Seq(None, Some(Seq.empty[Long]), Some(Seq(0L)),
@@ -295,6 +295,30 @@ class OptKernelsSpec extends SparkSpec {
     assert(bad == 0L)
   }
 
+  test("AdcSum ≡ old ADC fold on out-of-range codes: null, never an out-of-bounds read") {
+    val tbl = Seq(Seq(1.0, 2.0, 3.0, 4.0), Seq(10.0, 20.0, 30.0, 40.0))
+    val df = Seq(Seq(0, 3), Seq(4, 0), Seq(0, 5), Seq(100, 1), Seq(3, 3))
+      .map(c => (tbl, c)).toDF("tbl", "codes")
+    val oldAdc = aggregate(
+      zip_with(col("tbl"), col("codes"),
+        (t, c) => element_at(t, c.cast("int") + 1)),
+      lit(0.0), (acc, x) => acc + x)
+    // element_at past the end is NULL with ANSI off (ANSI on, it throws)
+    val got = withAnsi(on = false) {
+      df.select(oldAdc.as("o"),
+          graft.expressions.VecKernels.adc_sum(col("tbl"), col("codes")).as("n"))
+        .collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+    }
+    assert(got.toSeq == Seq((Some(41.0), Some(41.0)), (None, None), (None, None),
+      (None, None), (Some(44.0), Some(44.0))))
+    // no PQ code is negative: the kernel answers NULL where the old tree
+    // threw (c = −1 → index 0) or indexed from the end (c < −1)
+    val neg = Seq((tbl, Seq(-1, 0)), (tbl, Seq(0, -2))).toDF("tbl", "codes")
+      .select(graft.expressions.VecKernels.adc_sum(col("tbl"), col("codes")))
+      .collect()
+    assert(neg.forall(_.isNullAt(0)))
+  }
+
   test("Dsir bigram kernel ≡ old zip_with bigram construction") {
     // old gram construction, verbatim (incl. its null/edge filters)
     def oldGrams(t: Column): Column = {
@@ -385,15 +409,24 @@ class OptKernelsSpec extends SparkSpec {
       s"a=${r.get(2)} b=${r.get(3)}: old=${r.get(0)} new=${r.get(1)}").mkString("; "))
   }
 
+  // the pre-round-16 LogReg margin, verbatim
+  private def oldMargin(c: Column, w: Array[Double]): Column = {
+    val wLit = array(w.map(lit(_)): _*)
+    aggregate(
+      zip_with(c, wLit, (x, wj) => (x * wj).cast("decimal(28,15)")),
+      lit(0).cast("decimal(38,15)"),
+      (acc, t) => (acc + t).cast("decimal(38,15)")).cast("double")
+  }
+
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, before)
+  }
+
   test("Dec15Dot ≡ old aggregate(zip_with(cast(decimal))) margin fold") {
     val w = Array(0.5, -1.25, 2.0 / 3.0, 0.1, -0.000001, 123456.789)
-    def oldMargin(c: Column): Column = {
-      val wLit = array(w.map(lit(_)): _*)
-      aggregate(
-        zip_with(c, wLit, (x, wj) => (x * wj).cast("decimal(28,15)")),
-        lit(0).cast("decimal(38,15)"),
-        (acc, t) => (acc + t).cast("decimal(38,15)")).cast("double")
-    }
     val cases: Seq[Option[Seq[Option[Double]]]] = Seq(
       Some(Seq(1.0, 0.015625, -3.7, 0.1, 1e-7, 42.0).map(Some(_))),
       Some(Seq(0.0, -0.0, 1e-16, -1e-16, 0.3, 0.7).map(Some(_))),
@@ -409,7 +442,7 @@ class OptKernelsSpec extends SparkSpec {
           Some((r.nextDouble() - 0.5) * math.pow(10, r.nextInt(7) - 3))).toSeq)
       }
     val df = cases.toDF("x")
-    val bad = df.select(oldMargin(col("x")).as("o"),
+    val bad = df.select(oldMargin(col("x"), w).as("o"),
         graft.expressions.Dec15Dot.dec15_dot(col("x"), w).as("n"), col("x"))
       .collect().filterNot { r =>
         (r.isNullAt(0) && r.isNullAt(1)) ||
@@ -419,6 +452,35 @@ class OptKernelsSpec extends SparkSpec {
       }
     assert(bad.isEmpty, bad.map(r =>
       s"x=${r.get(2)}: old=${r.get(0)} new=${r.get(1)}").mkString("; "))
+  }
+
+  test("Dec15Dot ≡ old margin fold on NaN, ±Inf and decimal(28,15) overflow") {
+    val w = Array(0.5, -1.25, 0.0, 4.0)
+    def both(df: org.apache.spark.sql.DataFrame) = df.select(
+      oldMargin(col("x"), w).as("o"),
+      graft.expressions.Dec15Dot.dec15_dot(col("x"), w).as("n"))
+    // a non-finite product casts to a NULL decimal, ANSI or not: NaN and
+    // ±Inf elements, 0 · Inf, and a finite x whose product overflows
+    val nonFinite = both(Seq(
+      Seq(Double.NaN, 1.0, 1.0, 1.0),
+      Seq(1.0, Double.PositiveInfinity, 1.0, 1.0),
+      Seq(Double.NegativeInfinity, 1.0, 1.0, 1.0),
+      Seq(1.0, 1.0, Double.PositiveInfinity, 1.0),
+      Seq(1.0, 1.0, 1.0, 1e308)).toDF("x")).collect()
+    assert(nonFinite.forall(r => r.isNullAt(0) && r.isNullAt(1)),
+      nonFinite.mkString("; "))
+    // a finite product of 13+ integer digits overflows decimal(28,15):
+    // the old cast throws under ANSI (this session) and is NULL without
+    val over = Seq(Seq(1e14, 1.0, 1.0, 1.0)).toDF("x")
+    def failsOnDecimal(c: Column): Boolean = {
+      val e = intercept[Exception](over.select(c).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("Decimal(28, 15)"))
+    }
+    assert(failsOnDecimal(oldMargin(col("x"), w)))
+    assert(failsOnDecimal(graft.expressions.Dec15Dot.dec15_dot(col("x"), w)))
+    val lenient = withAnsi(on = false)(both(over).collect())
+    assert(lenient.forall(r => r.isNullAt(0) && r.isNullAt(1)), lenient.mkString("; "))
   }
 
   test("LogReg single-agg gradient ≡ posexplode/groupBy gradient (weights)") {
@@ -493,7 +555,7 @@ class OptKernelsSpec extends SparkSpec {
       .agg(votes.head, votes.tail: _*)
       .select(col("doc_id"), packed.as("simhash"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val neu = Dedup.simhashPortable(docs, "doc_id", "text")
+    val neu = Dedup.simhash(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(old == neu, {
       val keys = (old.keySet ++ neu.keySet).toSeq.sorted

@@ -77,18 +77,16 @@ class PipelineSpec extends SparkSpec {
 
   test("Sharding is deterministic, in-range, and partitions the input") {
     val df = spark.range(0, 1000).select($"id", lit(5L).as("w"))
-    for (portable <- Seq(false, true)) {
-      val prof = Sharding.profile(df, "id", $"w", 16, portable).collect()
-      assert(prof.map(_.getAs[Long]("n_rows")).sum == 1000L)
-      assert(prof.map(_.getAs[Long]("weight")).sum == 5000L)
-      assert(prof.forall(r => (0 until 16).contains(r.getAs[Int]("shard"))))
-      // deterministic: a second run assigns identically
-      val again = Sharding.profile(df, "id", $"w", 16, portable).collect()
-      assert(prof.map(r => r.getAs[Int]("shard") -> r.getAs[Long]("n_rows")).toMap ==
-        again.map(r => r.getAs[Int]("shard") -> r.getAs[Long]("n_rows")).toMap)
-      // no empty shards at 1000 rows / 16 shards (hash sanity, not a law)
-      assert(prof.length == 16)
-    }
+    val prof = Sharding.profile(df, "id", $"w", 16).collect()
+    assert(prof.map(_.getAs[Long]("n_rows")).sum == 1000L)
+    assert(prof.map(_.getAs[Long]("weight")).sum == 5000L)
+    assert(prof.forall(r => (0 until 16).contains(r.getAs[Int]("shard"))))
+    // deterministic: a second run assigns identically
+    val again = Sharding.profile(df, "id", $"w", 16).collect()
+    assert(prof.map(r => r.getAs[Int]("shard") -> r.getAs[Long]("n_rows")).toMap ==
+      again.map(r => r.getAs[Int]("shard") -> r.getAs[Long]("n_rows")).toMap)
+    // no empty shards at 1000 rows / 16 shards (hash sanity, not a law)
+    assert(prof.length == 16)
   }
 
   test("Sharding.writeSharded round-trips with shard directories") {
@@ -434,8 +432,7 @@ class PipelineSpec extends SparkSpec {
   test("epochOrder: complete per-stream ranks, epoch-distinct permutations, deterministic") {
     val rows = (0L until 200L).flatMap(id => Seq((id, 0), (id, 1)))
       .toDF("id", "epoch")
-    val out = Sharding.epochOrder(rows, "id", "epoch", nShards = 4,
-      portable = true)
+    val out = Sharding.epochOrder(rows, "id", "epoch", nShards = 4)
     val got = out.collect().map(r =>
       (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
     // each (shard, epoch) stream is ranked 1..n with no gaps
@@ -453,7 +450,7 @@ class PipelineSpec extends SparkSpec {
     assert(byEpoch(0) != byEpoch(1))
     // rerun under a different partitioning is identical
     val again = Sharding.epochOrder(rows.repartition(7), "id", "epoch",
-        nShards = 4, portable = true)
+        nShards = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
     assert(got.sortBy(t => (t._1, t._2)).toSeq ==
       again.sortBy(t => (t._1, t._2)).toSeq)
@@ -464,7 +461,7 @@ class PipelineSpec extends SparkSpec {
       .map { case (id, e) => (id, e, (id % 3).toInt) }
       .toDF("id", "epoch", "tier")
     val out = Sharding.curriculumOrder(rows, "id", "epoch", "tier",
-      nShards = 4, portable = true)
+      nShards = 4)
     val got = out.select("id", "epoch", "tier", "shard", "seq").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
         r.getInt(4)))
@@ -481,7 +478,7 @@ class PipelineSpec extends SparkSpec {
     assert(e0.toSet == e1.toSet && e0 != e1)
     // descending mode reverses the tier progression
     val desc = Sharding.curriculumOrder(rows, "id", "epoch", "tier",
-        nShards = 4, ascending = false, portable = true)
+        nShards = 4, ascending = false)
       .select("epoch", "tier", "shard", "seq").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
     desc.groupBy(t => (t._3, t._1)).foreach { case (_, g) =>

@@ -29,7 +29,7 @@ class SftMaterializeSpec extends SparkSpec {
       (3L, 1L, 301L, "error", "{\"k\": 7}")))
     val vocab = Bpe.vocabBytes(spark, merges, specials)
     val blocks = Sft.materializeBlocks(turnsDf, merges, vocab,
-      blockTokens = 8, nShards = 1, portable = true, regime = Bpe.Regime.Raw(),
+      blockTokens = 8, nShards = 1, regime = Bpe.Regime.Raw(),
       eosId = Eos, padId = Some(Pad)).cache()
     val tt = Sft.transcriptsTokens(turnsDf, merges, regime = Bpe.Regime.Raw())
       .select(col("n_tokens").cast("long"), col("n_masked_tokens").cast("long"))
@@ -62,11 +62,10 @@ class SftMaterializeSpec extends SparkSpec {
       (5L, 1L, 501L, "buy", "mu nu xi")))
     val vocab = Bpe.vocabBytes(spark, merges, specials)
     val mat = Sft.materializeBlocks(turnsDf, merges, vocab,
-      blockTokens = 16, nShards = 2, portable = true, regime = Bpe.Regime.Raw(),
+      blockTokens = 16, nShards = 2, regime = Bpe.Regime.Raw(),
       eosId = Eos)
     val packed = Sft.packTokens(turnsDf, merges, blockTokens = 16,
-      nShards = 2, portable = true, regime = Bpe.Regime.Raw(),
-        eosId = Some(Eos))
+      nShards = 2, regime = Bpe.Regime.Raw(), eosId = Some(Eos))
     // per (shard, block): materialized content size = packed pieces +
     // the joints that LAND in that block (joint position = the packed
     // row whose conversation starts at start_in_block > 0 carries a
@@ -95,8 +94,7 @@ class SftMaterializeSpec extends SparkSpec {
       (1L, 2L, 102L, "reply", "OK")))
     val vocab = Bpe.vocabBytes(spark, merges, specials)
     val blocks = Sft.materializeBlocks(turnsDf, merges, vocab,
-      blockTokens = 1000, nShards = 1, portable = true,
-        regime = Bpe.Regime.Raw(),
+      blockTokens = 1000, nShards = 1, regime = Bpe.Regime.Raw(),
       eosId = Eos)
     val ids = blocks.orderBy("block_id")
       .select(col("token_ids")).as[Seq[Int]].collect().flatten
@@ -127,8 +125,8 @@ class SftMaterializeSpec extends SparkSpec {
         (1L, 1L, 101L, "click", "The   theme"),
         (1L, 2L, 102L, "reply", "the The")))
       val blocks = Sft.materializeBlocks(turnsDf, merges2, vocab2,
-        blockTokens = 1000, nShards = 1, portable = true,
-          regime = Bpe.Regime.Raw(gpt2Ws = true, hf = true),
+        blockTokens = 1000, nShards = 1,
+        regime = Bpe.Regime.Raw(gpt2Ws = true, hf = true),
         eosId = Eos)
       val ids = blocks.orderBy("block_id")
         .select(col("token_ids")).as[Seq[Int]].collect().flatten
@@ -158,7 +156,7 @@ class SftMaterializeSpec extends SparkSpec {
       (1L, i, 100L + i, "click", s"some words here number $i")))
     val vocab = Bpe.vocabBytes(spark, merges, specials)
     val blocks = Sft.materializeBlocks(turnsDf, merges, vocab,
-      blockTokens = 8, nShards = 1, portable = true, regime = Bpe.Regime.Raw(),
+      blockTokens = 8, nShards = 1, regime = Bpe.Regime.Raw(),
       eosId = Eos)
     val plan = blocks.queryExecution.executedPlan.toString
     // the only array-building aggregate is the per-(shard, block)

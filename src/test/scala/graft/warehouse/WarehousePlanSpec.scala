@@ -64,70 +64,4 @@ class WarehousePlanSpec extends SparkSpec {
       assert(bad.isEmpty, s"$name build has an unpartitioned window:\n${bad.mkString("\n")}")
     }
   }
-
-  test("skewSalts routes the fact dedup through the salted variant with identical output") {
-    // The skew-threshold switch for hot (job_sk, date_id) keys: the salted
-    // two-phase dedup must yield the exact same day slice (rows AND minted
-    // fact_ids) as the plain window. Staging repeats each job 3× with
-    // distinct crawl times to give the dedup real duplicates to resolve.
-    import scala.jdk.CollectionConverters._
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    def row(id: String, h: Int): Row =
-      Row(id, "T", "u", Seq("S"), "C", null, null, true, "Hà Nội", null, null,
-        "negotiable", null, ts(f"2026-01-01 0$h:00:00"), null, ts(f"2026-01-01 0$h:00:00"))
-    val staging = spark.createDataFrame(
-      new java.util.ArrayList[Row](
-        (1 to 4).flatMap(i => (1 to 3).map(h => row(s"j$i", h))).asJava), Schemas.staging)
-    val s0 = WarehouseJob.emptyState(spark)
-    val plain = WarehouseJob.runDay(spark, s0, staging, "2026-01-01")
-    val salted = WarehouseJob.runDay(spark, s0, staging, "2026-01-01", skewSalts = 8)
-    assert(plain.star.fact.exceptAll(salted.star.fact).isEmpty &&
-      salted.star.fact.exceptAll(plain.star.fact).isEmpty,
-      "salted day slice diverged from plain")
-  }
-
-  test("AutoSalts: a planted hot key flips the salted path on, output identical") {
-    import scala.jdk.CollectionConverters._
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    def row(id: String, h: Int, m: Int): Row =
-      Row(id, "T", "u", Seq("S"), "C", null, null, true, "Hà Nội", null, null,
-        "negotiable", null, ts(f"2026-01-01 0$h%02d:$m%02d:00"), null,
-        ts(f"2026-01-01 0$h%02d:$m%02d:00"))
-    // j1 replayed 60× (a re-run storm on one job) vs 20 jobs seen once:
-    // total 80 rows over 21 keys, mean load ~3.8, so the hot key sits at
-    // ~16× the mean — over the 8× default threshold.
-    val hot = (0 until 60).map(i => row("j1", 1 + i / 30, i % 30))
-    val uniform = (2 to 21).map(i => row(s"j$i", 1, 0))
-    val staging = spark.createDataFrame(
-      new java.util.ArrayList[Row]((hot ++ uniform).asJava), Schemas.staging)
-
-    // The decision itself: uniform slice stays unsalted, hot slice salts.
-    val uniStaging = spark.createDataFrame(
-      new java.util.ArrayList[Row](uniform.asJava), Schemas.staging)
-    assert(FactDaily.autoSkewSalts(
-      uniStaging.select(col("job_id")), Seq("job_id")) == 0)
-    val decided = FactDaily.autoSkewSalts(
-      staging.select(col("job_id")), Seq("job_id"))
-    assert(decided > 1, s"hot key should salt, decided $decided")
-
-    // End to end through buildDay: AutoSalts output == plain output
-    // (rows AND minted fact_ids), the existing equivalence property.
-    val s0 = WarehouseJob.emptyState(spark)
-    val plain = WarehouseJob.runDay(spark, s0, staging, "2026-01-01")
-    val auto = WarehouseJob.runDay(spark, s0, staging, "2026-01-01",
-      skewSalts = FactDaily.AutoSalts)
-    assert(plain.star.fact.exceptAll(auto.star.fact).isEmpty &&
-      auto.star.fact.exceptAll(plain.star.fact).isEmpty,
-      "auto-salted day slice diverged from plain")
-  }
-
-  test("autoSkewSalts: empty frame decides 0, cap and threshold hold") {
-    import spark.implicits._
-    assert(FactDaily.autoSkewSalts(
-      Seq.empty[(Long, Long)].toDF("k", "v").select(col("k")), Seq("k")) == 0)
-    // one key with everything → skew = groups×share ≈ groups; cap at 32
-    val extreme = (1 to 200).map(i => (if (i <= 150) 0L else i.toLong))
-      .toDF("k")
-    assert(FactDaily.autoSkewSalts(extreme, Seq("k"), maxSalts = 32) <= 32)
-  }
 }
