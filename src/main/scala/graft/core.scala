@@ -32,18 +32,9 @@ object Tables {
   */
 object Exact {
   private val d12_2 = DecimalType(12, 2)
-  private val d6_4  = DecimalType(6, 4)
 
   /** SUM(x) as an exact decimal, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(d12_2)).cast(DoubleType)
-
-  /** SUM(a*b) with both factors exact decimals. */
-  def dsumProd(a: Column, b: Column): Column =
-    sum(a.cast(d12_2) * b.cast(d6_4)).cast(DoubleType)
-
-  /** SUM(a*b*c) — e.g. extendedprice * (1-discount) * (1+tax). */
-  def dsumProd3(a: Column, b: Column, c: Column): Column =
-    sum(a.cast(d12_2) * b.cast(d6_4) * c.cast(d6_4)).cast(DoubleType)
 
   /** Order-independent AVG: exact decimal sum / count, in doubles. */
   def davg(c: Column): Column = dsum(c) / count(c)
@@ -51,10 +42,6 @@ object Exact {
   // The same expressions in DuckDB SQL, for oracle text construction.
   def sqlSum(x: String): String =
     s"CAST(SUM(CAST($x AS DECIMAL(12,2))) AS DOUBLE)"
-  def sqlSumProd(a: String, b: String): String =
-    s"CAST(SUM(CAST($a AS DECIMAL(12,2)) * CAST($b AS DECIMAL(6,4))) AS DOUBLE)"
-  def sqlSumProd3(a: String, b: String, c: String): String =
-    s"CAST(SUM(CAST($a AS DECIMAL(12,2)) * CAST($b AS DECIMAL(6,4)) * CAST($c AS DECIMAL(6,4))) AS DOUBLE)"
   def sqlAvg(x: String): String = s"${sqlSum(x)} / COUNT($x)"
 }
 

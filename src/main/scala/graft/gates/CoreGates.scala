@@ -127,7 +127,7 @@ object CoreGates {
     */
   def skAssign(s: SparkSession, dir: String): DataFrame = {
     val segs = Tables(s, dir, "customer").select(col("c_mktsegment")).distinct()
-    Keys.assign(segs, Seq("c_mktsegment"), "sk", 100L).orderBy("c_mktsegment")
+    Keys.assignSorted(segs, Seq("c_mktsegment"), "sk", 100L).orderBy("c_mktsegment")
   }
 
   val skAssignSql: String =

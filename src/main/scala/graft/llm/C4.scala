@@ -106,21 +106,17 @@ object C4 {
     * of lowercase terms. Returns one row per document:
     * `(idCol, n_hits, n_distinct_hits, keep)` with keep = zero hits.
     *
-    * `broadcastList = true` (default) broadcasts the blocklist —
-    * right up to memory-sized lists; `false` falls back to a
-    * shuffle join on the token, the skew-guarded (AQE) shape for a
-    * dictionary-scale list. Either way the corpus side is one narrow
-    * explode + one aggregation keyed by doc id.
+    * The blocklist is broadcast (a term list is memory-sized); the
+    * corpus side is one narrow explode + one aggregation keyed by doc
+    * id.
     */
   def blocklistProbe(docs: DataFrame, idCol: String, textCol: String,
-                     blocklist: DataFrame, termCol: String = "term",
-                     broadcastList: Boolean = true): DataFrame = {
+                     blocklist: DataFrame, termCol: String = "term"): DataFrame = {
     val toks = docs.select(col(idCol),
         explode(split(regexp_replace(trim(lower(col(textCol))),
           "\\s+", " "), " ")).as("__tok"))
       .filter(col("__tok") =!= "")
-    val bl0 = blocklist.select(lower(col(termCol)).as("__tok")).distinct()
-    val bl = if (broadcastList) broadcast(bl0) else bl0
+    val bl = broadcast(blocklist.select(lower(col(termCol)).as("__tok")).distinct())
     val hits = toks.join(bl, Seq("__tok"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"),

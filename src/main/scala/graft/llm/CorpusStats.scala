@@ -29,32 +29,19 @@ object CorpusStats {
     * companion to [[topNgrams]], but conditioned per context instead of
     * globally ranked.
     *
-    * Shape: one narrow `zip_with` pairs each token with its successor
-    * (no shingle strings re-split), one partial-agg'd count shuffle to
-    * |vocab|² pair rows, and the context totals DERIVE from the pair
-    * counts (`n_ctx = Σ_w2 n_pair` — every non-final token is in exactly
-    * one pair), so the corpus text is read once. The probability is one
-    * integer-count IEEE division — order/partitioning/engine stable.
-    * `minPair` prunes the hapax tail (at web scale most pairs are seen
-    * once; the model table stays bounded by the kept head).
+    * Shape: [[LmScore]]'s pair positions and pair model — one O(len)
+    * `word_shingles` byte scan (no shingle strings re-split), one
+    * partial-agg'd count shuffle to |vocab|² pair rows, and the context
+    * totals DERIVE from the pair counts (`n_ctx = Σ_w2 n_pair` — every
+    * non-final token is in exactly one pair), so the corpus text is
+    * read once. The probability is one integer-count IEEE division —
+    * order/partitioning/engine stable. `minPair` prunes the hapax tail
+    * (at web scale most pairs are seen once; the model table stays
+    * bounded by the kept head) while `n_ctx` stays over every pair.
     */
   def bigramLm(docs: DataFrame, textCol: String, minPair: Long = 1L): DataFrame = {
-    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
-    // word_shingles pair builder — one O(len) byte scan instead of the
-    // interpreted zip_with/slice walk (LmScore.bigramBackoffScore's
-    // note; OptKernelsSpec pins the position multiset)
-    val pairs = docs.select(explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 1)
-      .select(substring_index(col("__g"), " ", 1).as("w1"),
-        substring_index(col("__g"), " ", -1).as("w2"))
-    val pairCounts = pairs.groupBy("w1", "w2")
-      .agg(count(lit(1)).as("n_pair"))
-    val ctx = pairCounts.groupBy("w1").agg(sum(col("n_pair")).as("n_ctx"))
-    pairCounts.join(ctx, "w1")
-      .where(col("n_pair") >= minPair)
+    val pm = LmScore.pairModel(LmScore.gramTf(docs, Seq.empty, textCol, 2), minPair)
+    pm.kept.join(pm.ctx, "w1")
       .select(col("w1"), col("w2"), col("n_pair"), col("n_ctx"),
         (col("n_pair").cast("double") / col("n_ctx").cast("double")).as("p"))
   }

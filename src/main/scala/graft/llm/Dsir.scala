@@ -42,11 +42,11 @@ object Dsir {
   def hashedBigramCounts(docs: DataFrame, textCol: String,
                          dim: Int = 4096): DataFrame = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
-    bigramTf(docs.select(lit(0L).as("__id"), col(textCol)), "__id", textCol, dim)
-      .groupBy(col("__i").as("i")).agg(sum(col("__tf")).as("c"))
+    bigramTf(docs, Seq.empty, textCol, dim)
+      .select(col("__i").as("i"), col("tf").as("c"))
   }
 
-  /** Per-doc hashed-bigram tf: `(idCol, __i, __tf)`.
+  /** Per-(keys…, bucket) hashed-bigram tf: `(keys…, __i, tf)`.
     *
     * Bigrams come from ONE O(len) byte scan
     * ([[graft.expressions.WordShingles]] at n = 2 — the r15 dedup
@@ -60,26 +60,45 @@ object Dsir {
     * end-space filters are LIVE, not defensive: `trim` strips only
     * 0x20, so a tab-leading doc normalizes to a leading empty word
     * whose gram starts with the joining space (OptKernelsSpec pins the
-    * gram-set equivalence on exactly these inputs).
+    * gram-set equivalence on exactly these inputs). That filter is why
+    * this is not [[LmScore]]'s position builder, which keeps such grams.
     */
-  private def bigramTf(docs: DataFrame, idCol: String, textCol: String,
-                       dim: Int): DataFrame =
-    docs.select(col(idCol), explode(
+  private def bigramTf(docs: DataFrame, keys: Seq[Column], textCol: String,
+                       dim: Int): DataFrame = {
+    val g = docs.select(keys :+ explode(
         graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
+          Dedup.normalize(col(textCol)), 2)).as("__g"): _*)
       .where(instr(col("__g"), " ") > 0 && !col("__g").startsWith(" ") &&
         !col("__g").endsWith(" "))
-      .groupBy(col(idCol),
-        pmod(graft.functions.Hashes.u32OfMd5(col("__g")), lit(dim.toLong)).as("__i"))
-      .agg(count(lit(1)).as("__tf"))
+    g.groupBy(g.columns.init.toIndexedSeq.map(col) :+
+        pmod(graft.functions.Hashes.u32OfMd5(col("__g")), lit(dim.toLong)).as("__i"): _*)
+      .agg(count(lit(1)).as("tf"))
+  }
+
+  /** The weight both entry points share: per-doc tf `(idCol, __i, tf)`
+    * against the bucket models `(__i, __pc)` (raw) and `(__i, __qc)`
+    * (target) with their token masses. Four exactly-rounded ops per
+    * term — (q+1)/(Nq+D), (p+1)/(Np+D), their ratio, ×tf — then
+    * [[LmScore.docMean]]'s exact decimal mean.
+    */
+  private def weigh(raw: DataFrame, idCol: String, tf: DataFrame,
+                    p: DataFrame, q: DataFrame, np: Long, nq: Long,
+                    dim: Int): DataFrame =
+    LmScore.docMean(raw, idCol,
+      tf.join(broadcast(q), Seq("__i"), "left")
+        .join(broadcast(p), Seq("__i"), "left"),
+      col("tf").cast("double") *
+        (((coalesce(col("__qc"), lit(0L)) + 1L).cast("double") /
+            lit(nq + dim).cast("double")) /
+          ((coalesce(col("__pc"), lit(0L)) + 1L).cast("double") /
+            lit(np + dim).cast("double"))),
+      "n_feats", "dsir_weight")
 
   /** Importance weight per raw document against a target slice:
     * `(idCol, n_feats, dsir_weight)` — `n_feats` the document's bigram
     * token mass, `dsir_weight` the mean smoothed probability ratio
     * (null for documents with fewer than two tokens; > 1 ⇒
-    * target-like). Both models broadcast; pass a persisted
-    * [[hashedBigramCounts]] pair via `targetModel`/`rawModel` (with
-    * their token masses) to skip refitting per batch.
+    * target-like). Both models broadcast.
     */
   def importanceWeights(raw: DataFrame, target: DataFrame,
                         idCol: String, textCol: String,
@@ -88,38 +107,17 @@ object Dsir {
     // ≤ min(bigrams, dim) numeric rows per doc, the same relation the
     // per-doc aggregation shuffles anyway) and the raw model p is
     // RE-AGGREGATED from it (Σ per-doc counts per bucket ≡
-    // hashedBigramCounts(raw) exactly, both integer sums). The previous
-    // shape scanned raw three times (Np scalar job, p model, tf) and
-    // target twice (Nq scalar job, q model); now raw and target are
-    // each read once and the scalar masses are jobs over the bounded
-    // checkpoints.
-    val tf = bigramTf(raw, idCol, textCol, dim).localCheckpoint(true)
-    val p = tf.groupBy(col("__i")).agg(sum(col("__tf")).as("__pc"))
+    // hashedBigramCounts(raw) exactly, both integer sums). Raw and
+    // target are each read once and the scalar masses are jobs over
+    // the bounded checkpoints.
+    val tf = bigramTf(raw, Seq(col(idCol)), textCol, dim).localCheckpoint(true)
+    val p = tf.groupBy(col("__i")).agg(sum(col("tf")).as("__pc"))
     val q = hashedBigramCounts(target, textCol, dim)
-      .withColumnRenamed("i", "__i").withColumnRenamed("c", "__qc")
+      .select(col("i").as("__i"), col("c").as("__qc"))
       .localCheckpoint(true) // ≤ dim rows
     val nq = q.agg(coalesce(sum(col("__qc")), lit(0L))).head().getLong(0)
     val np = p.agg(coalesce(sum(col("__pc")), lit(0L))).head().getLong(0)
-    // four exactly-rounded ops per term — (q+1)/(Nq+D), (p+1)/(Np+D),
-    // their ratio, ×tf — then the exact decimal quantization
-    val contrib = tf
-      .join(broadcast(q), Seq("__i"), "left")
-      .join(broadcast(p), Seq("__i"), "left")
-      .select(col(idCol), col("__tf"),
-        (col("__tf").cast("double") *
-          (((coalesce(col("__qc"), lit(0L)) + 1L).cast("double") /
-              lit(nq + dim).cast("double")) /
-            ((coalesce(col("__pc"), lit(0L)) + 1L).cast("double") /
-              lit(np + dim).cast("double"))))
-          .cast("decimal(28,15)").as("__r"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("__tf")).as("n_feats"), sum(col("__r")).as("__s"))
-      .select(col(idCol), col("n_feats"),
-        (col("__s").cast("double") / col("n_feats").cast("double"))
-          .as("dsir_weight"))
-    raw.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_feats"), lit(0L)).as("n_feats"),
-        col("dsir_weight"))
+    weigh(raw, idCol, tf, p, q, np, nq, dim)
   }
 
   /** [[importanceWeights]] for the common case where the target slice
@@ -142,45 +140,18 @@ object Dsir {
                                idCol: String, textCol: String,
                                dim: Int = 4096): DataFrame = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
-    val words = graft.expressions.WordShingles.word_shingles(
-      Dedup.normalize(col(textCol)), 2)
-    // bigramTf with the per-doc flag carried through the aggregation
-    // (one row per doc in the input ⇒ the flag is constant per id)
-    val tf = raw.select(col(idCol), targetFlag.as("__tgt"),
-        explode(words).as("__g"))
-      .where(instr(col("__g"), " ") > 0 && !col("__g").startsWith(" ") &&
-        !col("__g").endsWith(" "))
-      .groupBy(col(idCol), col("__tgt"),
-        pmod(graft.functions.Hashes.u32OfMd5(col("__g")), lit(dim.toLong)).as("__i"))
-      .agg(count(lit(1)).as("__tf"))
+    // the per-doc flag rides through the aggregation (one row per doc
+    // in the input ⇒ the flag is constant per id)
+    val tf = bigramTf(raw, Seq(col(idCol), targetFlag.as("__tgt")), textCol, dim)
       .localCheckpoint(true)
-    val p = tf.groupBy(col("__i")).agg(sum(col("__tf")).as("__pc"))
+    val p = tf.groupBy(col("__i")).agg(sum(col("tf")).as("__pc"))
     val q = tf.filter(col("__tgt")).groupBy(col("__i"))
-      .agg(sum(col("__tf")).as("__qc"))
+      .agg(sum(col("tf")).as("__qc"))
     // both scalar masses in ONE job over the bounded checkpoint
     val masses = tf.agg(
-      coalesce(sum(col("__tf")), lit(0L)),
-      coalesce(sum(when(col("__tgt"), col("__tf"))), lit(0L))).head()
-    val np = masses.getLong(0)
-    val nq = masses.getLong(1)
-    val contrib = tf
-      .join(broadcast(q), Seq("__i"), "left")
-      .join(broadcast(p), Seq("__i"), "left")
-      .select(col(idCol), col("__tf"),
-        (col("__tf").cast("double") *
-          (((coalesce(col("__qc"), lit(0L)) + 1L).cast("double") /
-              lit(nq + dim).cast("double")) /
-            ((coalesce(col("__pc"), lit(0L)) + 1L).cast("double") /
-              lit(np + dim).cast("double"))))
-          .cast("decimal(28,15)").as("__r"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("__tf")).as("n_feats"), sum(col("__r")).as("__s"))
-      .select(col(idCol), col("n_feats"),
-        (col("__s").cast("double") / col("n_feats").cast("double"))
-          .as("dsir_weight"))
-    raw.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("n_feats"), lit(0L)).as("n_feats"),
-        col("dsir_weight"))
+      coalesce(sum(col("tf")), lit(0L)),
+      coalesce(sum(when(col("__tgt"), col("tf"))), lit(0L))).head()
+    weigh(raw, idCol, tf, p, q, masses.getLong(0), masses.getLong(1), dim)
   }
 
   /** The resampling cut: top `n` documents by (weight desc, id asc) —

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Unigram language-model scoring — the CCNet-style "perplexity filter"
@@ -31,9 +31,20 @@ import org.apache.spark.sql.functions._
   * Scale shape: token explode (narrow) → `(doc, term)` tf aggregation
   * (the token-sized shuffle every bag-of-words operator pays) →
   * vocabulary-sized count aggregation with map-side partials → BROADCAST
-  * model join (vocabulary ≪ corpus; `broadcastModel = false` falls back
-  * to a shuffle join and leaves Zipf-head skew to AQE) → per-doc decimal
-  * sum with map-side partials. No global ordering anywhere.
+  * model join (vocabulary ≪ corpus) → per-doc decimal sum with map-side
+  * partials. No global ordering anywhere.
+  *
+  * Every scorer here (and [[CorpusStats.bigramLm]], [[Dsir]]) is built
+  * from one shared layer:
+  *   - [[grams]]: the word n-gram positions `(keep…, w1…wn)` of the
+  *     normalized text, and [[gramTf]] their per-key counts `tf`;
+  *   - [[pairModel]]: pair counts, context totals and the `minPair`
+  *     cut; [[unigramModel]]: the full unigram counts plus their mass N;
+  *   - [[docMean]]: the exact per-document mean — quantize each term to
+  *     `decimal(28,15)`, sum exactly, divide once, and keep documents
+  *     without positions (count 0, null score).
+  * A scorer adds only its probability formula. Every model is a
+  * broadcast join.
   */
 object LmScore {
 
@@ -78,9 +89,7 @@ object LmScore {
     */
   def score(docs: DataFrame, idCol: String, textCol: String,
             model: Option[DataFrame] = None,
-            totalTokens: Option[Long] = None,
-            broadcastModel: Boolean = true): DataFrame = {
-    val m0 = model.getOrElse(unigramCounts(docs, textCol))
+            totalTokens: Option[Long] = None): DataFrame = {
     val tf = docs
       .select(col(idCol), explode(split(Dedup.normalize(col(textCol)), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -93,26 +102,99 @@ object LmScore {
       require(model.isEmpty,
         "pass totalTokens alongside an external model (its token mass " +
           "is not derivable from possibly-pruned counts)")
-      tf.agg(sum(col("tf"))).head().getLong(0)
+      tf.agg(coalesce(sum(col("tf")), lit(0L))).head().getLong(0)
     }
-    val m = if (broadcastModel) broadcast(m0) else m0
-    val contrib = tf.join(m, Seq("term"), "left")
-      // tf/c: ONE exactly-rounded double division, then ONE deterministic
-      // decimal quantization — see the header's midpoint argument
-      .select(col(idCol), col("tf"),
-        (col("tf").cast("double") / coalesce(col("c"), lit(1L)).cast("double"))
-          .cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_tokens"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_tokens"),
-        // decimal→double conversion, ×N, ÷n: three exactly-rounded ops
-        (col("__s").cast("double") * lit(n).cast("double") /
-          col("n_tokens").cast("double")).as("lm_score"))
-    // keep empty docs: n_tokens 0, score null (filterable, not a crash)
+    val joined = tf.join(broadcast(model.getOrElse(unigramCounts(docs, textCol))),
+      Seq("term"), "left")
+    // tf/c: ONE exactly-rounded double division per term; the mean is
+    // (s·N)/n — decimal→double, ×N, ÷n: three exactly-rounded ops
+    docMean(docs, idCol, joined,
+      col("tf").cast("double") / coalesce(col("c"), lit(1L)).cast("double"),
+      "n_tokens", "lm_score", scale = Some(n))
+  }
+
+  /** Word n-gram positions of `textCol`: `(keep…, w1…wn)`, one row per
+    * position. ONE O(len) [[graft.expressions.WordShingles]] byte scan
+    * over the normalized text emits the n-gram substrings; a true
+    * n-gram has exactly n−1 joining spaces (the whole-text shingle of a
+    * doc under n words has fewer), and one codegen'd split per kept
+    * gram (subexpression-eliminated across the n projections) recovers
+    * w1…wn. Empty boundary words from non-0x20 whitespace (`trim`
+    * strips only 0x20, so a tab-led text normalizes to a leading empty
+    * word) keep their position — the position multiset of the old
+    * interpreted zip_with/slice builders (OptKernelsSpec pins it).
+    */
+  private def grams(docs: DataFrame, keep: Seq[String], textCol: String,
+                    n: Int): DataFrame = {
+    val g = docs.select(keep.map(col) :+ explode(
+        graft.expressions.WordShingles.word_shingles(
+          Dedup.normalize(col(textCol)), n)).as("__g"): _*)
+      .where(length(col("__g")) -
+        length(translate(col("__g"), " ", "")) === n - 1)
+    val parts = split(col("__g"), " ")
+    g.select(keep.map(col) ++ (1 to n).map(k => parts.getItem(k - 1).as(s"w$k")): _*)
+  }
+
+  /** [[grams]] counted per `(keep…, w1…wn)`: the `tf` column. */
+  private[llm] def gramTf(docs: DataFrame, keep: Seq[String], textCol: String,
+                          n: Int): DataFrame =
+    grams(docs, keep, textCol, n)
+      .groupBy((keep ++ (1 to n).map(k => s"w$k")).map(col): _*)
+      .agg(count(lit(1)).as("tf"))
+
+  /** The bigram model over a `(…, w1, w2, tf)` table. `counts` holds
+    * `n_pair` per pair; `ctx` holds, per w1, the context total `n_ctx`
+    * and the distinct-continuation count `n1p`; `kept` is `counts` cut
+    * at `n_pair >= minPair`. The cut prunes the Zipf hapax tail (what
+    * bounds the broadcast model at corpus scale; a pruned pair falls
+    * back, the standard pruned-model semantics), while `ctx` stays over
+    * the FULL pair table, so matched probabilities are true MLE.
+    */
+  private[llm] case class PairModel(counts: DataFrame, ctx: DataFrame,
+                                    kept: DataFrame)
+
+  private[llm] def pairModel(pairTf: DataFrame, minPair: Long): PairModel = {
+    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
+    val counts = pairTf.groupBy("w1", "w2").agg(sum(col("tf")).as("n_pair"))
+    PairModel(counts,
+      counts.groupBy("w1")
+        .agg(sum(col("n_pair")).as("n_ctx"), count(lit(1)).as("n1p")),
+      counts.where(col("n_pair") >= minPair))
+  }
+
+  /** The full (unpruned) unigram model as `(wordCol, __cu)` plus its
+    * token mass N (one count job; 0 for a corpus without tokens).
+    */
+  private def unigramModel(docs: DataFrame, textCol: String,
+                           wordCol: String): (DataFrame, Long) = {
+    val uni = unigramCounts(docs, textCol, pruneHapax = false)
+      .select(col("term").as(wordCol), col("c").as("__cu"))
+    (uni, uni.agg(coalesce(sum(col("__cu")), lit(0L))).head().getLong(0))
+  }
+
+  /** The exact per-document mean every scorer ends in. `q` is a term's
+    * contribution over `joined` (which carries `idCol` and `tf`): ONE
+    * deterministic `decimal(28,15)` quantization per term (the header's
+    * midpoint argument), an exact per-doc sum, then ONE division by the
+    * doc's position count — `(s·scale)/n` when `scale` is set (MITF's
+    * N). Output `(idCol, countCol, scoreCol)`, one row per `docs` row: a
+    * document without positions keeps count 0 and a null score
+    * (filterable, not a crash).
+    */
+  private[llm] def docMean(docs: DataFrame, idCol: String, joined: DataFrame,
+                           q: Column, countCol: String, scoreCol: String,
+                           scale: Option[Long] = None): DataFrame = {
+    val s = col("__s").cast("double")
+    val perDoc = joined
+      .select(col(idCol), col("tf"), q.cast("decimal(28,15)").as("__q"))
+      .groupBy(col(idCol))
+      .agg(sum(col("tf")).as(countCol), sum(col("__q")).as("__s"))
+      .select(col(idCol), col(countCol),
+        (scale.fold(s)(n => s * lit(n).cast("double")) /
+          col(countCol).cast("double")).as(scoreCol))
     docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        col("lm_score"))
+      .select(col(idCol), coalesce(col(countCol), lit(0L)).as(countCol),
+        col(scoreCol))
   }
 
   /** Bigram stupid-backoff predictability score — the bigram upgrade of
@@ -153,54 +235,23 @@ object LmScore {
     * for documents with fewer than two tokens.
     */
   def bigramBackoffScore(docs: DataFrame, idCol: String, textCol: String,
-                         minPair: Long = 1L,
-                         broadcastModel: Boolean = true): DataFrame = {
-    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
-    // ONE O(len) word_shingles byte scan per doc instead of the
-    // interpreted zip_with/slice pair builder; a true pair contains
-    // exactly ONE joining space (the <2-word whole-text shingle has
-    // none), and empty boundary words from non-0x20 whitespace keep
-    // their position through the substring_index split — the multiset
-    // of (w1, w2) positions is IDENTICAL (OptKernelsSpec pins it)
-    val pairs = docs.select(col(idCol), explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 1)
-      .select(col(idCol), substring_index(col("__g"), " ", 1).as("w1"),
-        substring_index(col("__g"), " ", -1).as("w2"))
-    val docPairTf = pairs.groupBy(col(idCol), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf"))
+                         minPair: Long = 1L): DataFrame = {
     // corpus model DERIVED from the per-doc tf table — the pair explode
     // runs once, not once per tier
-    val pairCounts = docPairTf.groupBy("w1", "w2")
-      .agg(sum(col("tf")).as("n_pair"))
-    val ctx = pairCounts.groupBy("w1").agg(sum(col("n_pair")).as("n_ctx"))
-    val kept = pairCounts.where(col("n_pair") >= minPair)
-    val uni = unigramCounts(docs, textCol, pruneHapax = false)
-      .withColumnRenamed("term", "w2").withColumnRenamed("c", "__c2")
-    val n = uni.agg(sum(col("__c2"))).head().getLong(0)
-    def maybeB(df: DataFrame) = if (broadcastModel) broadcast(df) else df
-    val contrib = docPairTf
-      .join(maybeB(kept), Seq("w1", "w2"), "left")
-      .join(maybeB(ctx), Seq("w1"), "left")
-      .join(maybeB(uni), Seq("w2"), "left")
-      .select(col(idCol), col("tf"),
-        when(col("n_pair").isNotNull,
-          (col("tf") * col("n_pair")).cast("double") /
-            col("n_ctx").cast("double"))
-          .otherwise((col("tf") * coalesce(col("__c2"), lit(1L))).cast("double") /
-            lit(2L * n).cast("double"))
-          .cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_bigrams"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / col("n_bigrams").cast("double"))
-          .as("sb_score"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("sb_score"))
+    val docPairTf = gramTf(docs, Seq(idCol), textCol, 2)
+    val pm = pairModel(docPairTf, minPair)
+    val (uni, n) = unigramModel(docs, textCol, "w2")
+    val joined = docPairTf
+      .join(broadcast(pm.kept), Seq("w1", "w2"), "left")
+      .join(broadcast(pm.ctx), Seq("w1"), "left")
+      .join(broadcast(uni), Seq("w2"), "left")
+    docMean(docs, idCol, joined,
+      when(col("n_pair").isNotNull,
+        (col("tf") * col("n_pair")).cast("double") /
+          col("n_ctx").cast("double"))
+        .otherwise((col("tf") * coalesce(col("__cu"), lit(1L))).cast("double") /
+          lit(2L * n).cast("double")),
+      "n_bigrams", "sb_score")
   }
 
   /** JELINEK-MERCER INTERPOLATED bigram score — the smoothed-LM upgrade
@@ -236,50 +287,24 @@ object LmScore {
     */
   def bigramInterpolatedScore(docs: DataFrame, idCol: String,
                               textCol: String,
-                              minPair: Long = 1L,
-                              broadcastModel: Boolean = true): DataFrame = {
-    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
-    // word_shingles pair builder — see bigramBackoffScore's note
-    val pairs = docs.select(col(idCol), explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 1)
-      .select(col(idCol), substring_index(col("__g"), " ", 1).as("w1"),
-        substring_index(col("__g"), " ", -1).as("w2"))
-    val docPairTf = pairs.groupBy(col(idCol), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf"))
-    val pairCounts = docPairTf.groupBy("w1", "w2")
-      .agg(sum(col("tf")).as("n_pair"))
-    val ctx = pairCounts.groupBy("w1").agg(sum(col("n_pair")).as("n_ctx"))
-    val kept = pairCounts.where(col("n_pair") >= minPair)
-    val uni = unigramCounts(docs, textCol, pruneHapax = false)
-      .withColumnRenamed("term", "w2").withColumnRenamed("c", "__c2")
-    val n = uni.agg(sum(col("__c2"))).head().getLong(0)
-    def maybeB(df: DataFrame) = if (broadcastModel) broadcast(df) else df
+                              minPair: Long = 1L): DataFrame = {
+    val docPairTf = gramTf(docs, Seq(idCol), textCol, 2)
+    val pm = pairModel(docPairTf, minPair)
+    val (uni, n) = unigramModel(docs, textCol, "w2")
     // both tiers as exact-integer-product divisions; the bigram tier
     // contributes 0 (not a fallback boost) when the pair is unseen —
     // interpolation, not backoff
     val bigramTerm = when(col("n_pair").isNotNull,
       (col("tf") * col("n_pair")).cast("double") /
         (lit(2L) * col("n_ctx")).cast("double")).otherwise(lit(0.0d))
-    val unigramTerm = (col("tf") * coalesce(col("__c2"), lit(1L)))
+    val unigramTerm = (col("tf") * coalesce(col("__cu"), lit(1L)))
       .cast("double") / lit(2L * n).cast("double")
-    val contrib = docPairTf
-      .join(maybeB(kept), Seq("w1", "w2"), "left")
-      .join(maybeB(ctx), Seq("w1"), "left")
-      .join(maybeB(uni), Seq("w2"), "left")
-      .select(col(idCol), col("tf"),
-        (bigramTerm + unigramTerm).cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_bigrams"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / col("n_bigrams").cast("double"))
-          .as("ilm_score"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("ilm_score"))
+    val joined = docPairTf
+      .join(broadcast(pm.kept), Seq("w1", "w2"), "left")
+      .join(broadcast(pm.ctx), Seq("w1"), "left")
+      .join(broadcast(uni), Seq("w2"), "left")
+    docMean(docs, idCol, joined, bigramTerm + unigramTerm,
+      "n_bigrams", "ilm_score")
   }
 
   /** INTERPOLATED TRIGRAM score — one more rung of the
@@ -313,72 +338,37 @@ object LmScore {
   def trigramInterpolatedScore(docs: DataFrame, idCol: String,
                                textCol: String,
                                minTri: Long = 1L,
-                               minPair: Long = 1L,
-                               broadcastModel: Boolean = true): DataFrame = {
+                               minPair: Long = 1L): DataFrame = {
     require(minTri >= 1L, s"minTri must be >= 1, got $minTri")
-    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
-    // word_shingles position builders (2 spaces ⇔ a true trigram, 1 ⇔ a
-    // true pair) — see bigramBackoffScore's note; the 3-way split is one
-    // codegen'd split per gram, subexpression-eliminated across the
-    // three projections
-    val __t3 = split(col("__g"), " ")
-    val triples = docs.select(col(idCol), explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 3)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 2)
-      .select(col(idCol), __t3.getItem(0).as("w1"),
-        __t3.getItem(1).as("w2"), __t3.getItem(2).as("w3"))
-    val docTriTf = triples.groupBy(col(idCol), col("w1"), col("w2"),
-        col("w3"))
-      .agg(count(lit(1)).as("tf"))
+    val docTriTf = gramTf(docs, Seq(idCol), textCol, 3)
     val triCounts = docTriTf.groupBy("w1", "w2", "w3")
       .agg(sum(col("tf")).as("n_tri"))
     val ctx2 = triCounts.groupBy("w1", "w2")
       .agg(sum(col("n_tri")).as("n_ctx2"))
     val keptTri = triCounts.where(col("n_tri") >= minTri)
     // bigram/unigram models over their OWN position universes — the
-    // same tables the bigram tier builds
-    val pairs = docs.select(explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 1)
-      .select(substring_index(col("__g"), " ", 1).as("w2"),
-        substring_index(col("__g"), " ", -1).as("w3"))
-    val pairCounts = pairs.groupBy("w2", "w3")
-      .agg(count(lit(1)).as("n_pair"))
-    val ctx1 = pairCounts.groupBy("w2").agg(sum(col("n_pair")).as("n_ctx1"))
-    val keptPair = pairCounts.where(col("n_pair") >= minPair)
-    val uni = unigramCounts(docs, textCol, pruneHapax = false)
-      .withColumnRenamed("term", "w3").withColumnRenamed("c", "__c3")
-    val n = uni.agg(sum(col("__c3"))).head().getLong(0)
-    def maybeB(df: DataFrame) = if (broadcastModel) broadcast(df) else df
+    // same tables the bigram tier builds, shifted onto (w2, w3)
+    val pm = pairModel(gramTf(docs, Seq.empty, textCol, 2), minPair)
+    val keptPair = pm.kept.select(col("w1").as("w2"), col("w2").as("w3"),
+      col("n_pair"))
+    val ctx1 = pm.ctx.select(col("w1").as("w2"), col("n_ctx").as("n_ctx1"))
+    val (uni, n) = unigramModel(docs, textCol, "w3")
     val triTerm = when(col("n_tri").isNotNull,
       (col("tf") * col("n_tri")).cast("double") /
         (lit(2L) * col("n_ctx2")).cast("double")).otherwise(lit(0.0d))
     val biTerm = when(col("n_pair").isNotNull,
       (col("tf") * col("n_pair")).cast("double") /
         (lit(4L) * col("n_ctx1")).cast("double")).otherwise(lit(0.0d))
-    val uniTerm = (col("tf") * coalesce(col("__c3"), lit(1L)))
+    val uniTerm = (col("tf") * coalesce(col("__cu"), lit(1L)))
       .cast("double") / lit(4L * n).cast("double")
-    val contrib = docTriTf
-      .join(maybeB(keptTri), Seq("w1", "w2", "w3"), "left")
-      .join(maybeB(ctx2), Seq("w1", "w2"), "left")
-      .join(maybeB(keptPair), Seq("w2", "w3"), "left")
-      .join(maybeB(ctx1), Seq("w2"), "left")
-      .join(maybeB(uni), Seq("w3"), "left")
-      .select(col(idCol), col("tf"),
-        (triTerm + biTerm + uniTerm).cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_trigrams"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_trigrams"),
-        (col("__s").cast("double") / col("n_trigrams").cast("double"))
-          .as("tlm_score"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        col("tlm_score"))
+    val joined = docTriTf
+      .join(broadcast(keptTri), Seq("w1", "w2", "w3"), "left")
+      .join(broadcast(ctx2), Seq("w1", "w2"), "left")
+      .join(broadcast(keptPair), Seq("w2", "w3"), "left")
+      .join(broadcast(ctx1), Seq("w2"), "left")
+      .join(broadcast(uni), Seq("w3"), "left")
+    docMean(docs, idCol, joined, triTerm + biTerm + uniTerm,
+      "n_trigrams", "tlm_score")
   }
 
   /** KNESER-NEY interpolated bigram score — the discounting scheme the
@@ -426,31 +416,13 @@ object LmScore {
     * for documents with fewer than two tokens.
     */
   def knBigramScore(docs: DataFrame, idCol: String, textCol: String,
-                    minPair: Long = 1L,
-                    broadcastModel: Boolean = true): DataFrame = {
-    require(minPair >= 1L, s"minPair must be >= 1, got $minPair")
-    // word_shingles pair builder — see bigramBackoffScore's note
-    val pairs = docs.select(col(idCol), explode(
-        graft.expressions.WordShingles.word_shingles(
-          Dedup.normalize(col(textCol)), 2)).as("__g"))
-      .where(length(col("__g")) -
-        length(translate(col("__g"), " ", "")) === 1)
-      .select(col(idCol), substring_index(col("__g"), " ", 1).as("w1"),
-        substring_index(col("__g"), " ", -1).as("w2"))
-    val docPairTf = pairs.groupBy(col(idCol), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("tf"))
-    val pairCounts = docPairTf.groupBy("w1", "w2")
-      .agg(sum(col("tf")).as("n_pair"))
-    // per-context totals AND distinct-continuation counts in one agg:
-    // both are per-w1 rows over the pair table
-    val ctx = pairCounts.groupBy("w1")
-      .agg(sum(col("n_pair")).as("n_ctx"), count(lit(1)).as("n1p"))
+                    minPair: Long = 1L): DataFrame = {
+    val docPairTf = gramTf(docs, Seq(idCol), textCol, 2)
+    val pm = pairModel(docPairTf, minPair)
     // continuation counts: distinct contexts PRECEDING each w2
-    val contw = pairCounts.groupBy("w2").agg(count(lit(1)).as("t_w2"))
+    val contw = pm.counts.groupBy("w2").agg(count(lit(1)).as("t_w2"))
     // N1+(··): total distinct pairs — one model-sized count job
-    val tTot = pairCounts.count()
-    val kept = pairCounts.where(col("n_pair") >= minPair)
-    def maybeB(df: DataFrame) = if (broadcastModel) broadcast(df) else df
+    val tTot = pm.counts.count()
     // matched term: counts >= 1 make 4c − 3 >= 1, so max(c − D, 0) is
     // structurally the positive branch
     val matchedTerm = when(col("n_pair").isNotNull,
@@ -462,21 +434,12 @@ object LmScore {
     val contTerm = (lit(3L) * col("n1p") * col("tf")).cast("double") /
       (lit(4L) * col("n_ctx")).cast("double") *
       (col("t_w2").cast("double") / lit(tTot).cast("double"))
-    val contrib = docPairTf
-      .join(maybeB(kept), Seq("w1", "w2"), "left")
-      .join(maybeB(ctx), Seq("w1"), "left")
-      .join(maybeB(contw), Seq("w2"), "left")
-      .select(col(idCol), col("tf"),
-        (matchedTerm + contTerm).cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_bigrams"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("__s").cast("double") / col("n_bigrams").cast("double"))
-          .as("kn_score"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("kn_score"))
+    val joined = docPairTf
+      .join(broadcast(pm.kept), Seq("w1", "w2"), "left")
+      .join(broadcast(pm.ctx), Seq("w1"), "left")
+      .join(broadcast(contw), Seq("w2"), "left")
+    docMean(docs, idCol, joined, matchedTerm + contTerm,
+      "n_bigrams", "kn_score")
   }
 
   /** The modified-KN discount triple (D1, D2, D3+) from count-of-counts
@@ -537,34 +500,12 @@ object LmScore {
     */
   def knNgramScore(docs: DataFrame, idCol: String, textCol: String,
                    order: Int, minTop: Long = 1L,
-                   broadcastModel: Boolean = true,
                    model: Option[DataFrame] = None): DataFrame = {
     require(order >= 2 && order <= 8, s"order must be in [2, 8], got $order")
     require(minTop >= 1L, s"minTop must be >= 1, got $minTop")
     val n = order
-    // position builder: ONE O(len) word_shingles byte scan emitting the
-    // n-gram SUBSTRINGS (the old form built a position sequence and
-    // SLICED an n-element array per position through an interpreted
-    // transform lambda — the dominant per-row cost of the whole family
-    // at n = 5); a true n-gram has exactly n−1 joining spaces, the
-    // <n-word whole-text shingle fewer, and ONE codegen'd split per
-    // kept gram (subexpression-eliminated across the n projections)
-    // recovers w1…wn with empty boundary words in position
-    def gramsOf(df: DataFrame, cols: Seq[org.apache.spark.sql.Column])
-        : DataFrame = {
-      val g = df.select(cols :+ explode(
-          graft.expressions.WordShingles.word_shingles(
-            Dedup.normalize(col(textCol)), n)).as("__g"): _*)
-        .where(length(col("__g")) -
-          length(translate(col("__g"), " ", "")) === n - 1)
-      val parts = split(col("__g"), " ")
-      val wcols = (1 to n).map(k => parts.getItem(k - 1).as(s"w$k"))
-      g.select(cols.indices.map(i => g.columns(i)).map(col) ++ wcols: _*)
-    }
-    val pos = gramsOf(docs, Seq(col(idCol)))
     val wNames = (1 to n).map(k => s"w$k")
-    val docTf = pos.groupBy(col(idCol) +: wNames.map(col): _*)
-      .agg(count(lit(1)).as("tf"))
+    val docTf = gramTf(docs, Seq(idCol), textCol, n)
     // type-table chain: T_n = raw n-gram counts over the MODEL corpus
     // (`model` = the CCNet reference-corpus setting: score `docs`
     // against statistics trained elsewhere; None = self-corpus, reusing
@@ -576,13 +517,10 @@ object LmScore {
     // bench's second trial) silently reused it — accidental cross-query
     // result caching. The checkpoint materializes once, unregistered.
     val typeTables = scala.collection.mutable.Map.empty[Int, DataFrame]
-    typeTables(n) = (model match {
-      case None => docTf.groupBy(wNames.map(col): _*)
-        .agg(sum(col("tf")).as(s"cnt_$n"))
-      case Some(ref) => gramsOf(ref, Seq.empty)
-        .groupBy(wNames.map(col): _*)
-        .agg(count(lit(1)).as(s"cnt_$n"))
-    }).localCheckpoint(true)
+    typeTables(n) = model.fold(docTf)(gramTf(_, Seq.empty, textCol, n))
+      .groupBy(wNames.map(col): _*)
+      .agg(sum(col("tf")).as(s"cnt_$n"))
+      .localCheckpoint(true)
     var k = n - 1
     while (k >= 2) {
       val keys = (n - k + 1 to n).map(j => s"w$j")
@@ -612,22 +550,21 @@ object LmScore {
     }.toMap
     val contw = typeTables(2).groupBy(s"w$n").agg(count(lit(1)).as("t_wn"))
     val tTot = typeTables(2).count()
-    def maybeB(df: DataFrame) = if (broadcastModel) broadcast(df) else df
     val keptTop = typeTables(n).where(col(s"cnt_$n") >= minTop)
     var joined = docTf
-      .join(maybeB(keptTop), wNames, "left")
+      .join(broadcast(keptTop), wNames, "left")
     k = n - 1
     while (k >= 2) {
-      joined = joined.join(maybeB(typeTables(k)),
+      joined = joined.join(broadcast(typeTables(k)),
         (n - k + 1 to n).map(j => s"w$j"), "left")
       k -= 1
     }
     (2 to n).foreach { k =>
-      joined = joined.join(maybeB(ctxTables(k)),
+      joined = joined.join(broadcast(ctxTables(k)),
         (n - k + 1 until n).map(j => s"w$j"), "left")
     }
-    joined = joined.join(maybeB(contw), Seq(s"w$n"), "left")
-    var p: org.apache.spark.sql.Column =
+    joined = joined.join(broadcast(contw), Seq(s"w$n"), "left")
+    var p: Column =
       coalesce(col("t_wn"), lit(1L)).cast("double") /
         lit(tTot).cast("double")
     (2 to n).foreach { k =>
@@ -643,17 +580,8 @@ object LmScore {
         + lit(d3) * col(s"t3p_$k").cast("double")) / ctx
       p = when(col(s"ctx_$k").isNotNull, matched + gamma * p).otherwise(p)
     }
-    val contrib = joined.select(col(idCol), col("tf"),
-      (col("tf").cast("double") * p).cast("decimal(28,15)").as("__q"))
-    val perDoc = contrib.groupBy(col(idCol))
-      .agg(sum(col("tf")).as("n_grams"), sum(col("__q")).as("__s"))
-      .select(col(idCol), col("n_grams"),
-        (col("__s").cast("double") / col("n_grams").cast("double"))
-          .as("kn_score"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        col("kn_score"))
+    docMean(docs, idCol, joined, col("tf").cast("double") * p,
+      "n_grams", "kn_score")
   }
 
   /** CCNet-style band label over the score: documents below `lo` are

@@ -40,12 +40,6 @@ object TextStats {
       .otherwise(length(regexp_replace(text, "[^0-9]", "")) /
         length(text).cast("double"))
 
-  /** Ratio of uppercase chars. */
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0 || text.isNull, 0.0)
-      .otherwise(length(regexp_replace(text, "[^A-Z]", "")) /
-        length(text).cast("double"))
-
   /** Mean word length. Σ length(word) over `split(trim, "\\s+")` is
     * exactly the non-whitespace character count (empty boundary fields
     * contribute 0), so the interpreted per-word `aggregate` fold is one
@@ -244,19 +238,16 @@ object TextStats {
     * word 50 times is 50/50 OOV — the rate that predicts UNK density in
     * training.
     *
-    * Scale shape: one token explode + one join against the vocab
-    * (broadcast when `broadcastVocab`, the right call for any
-    * human-scale vocabulary; disable for dictionary-busting term lists
-    * and let the optimizer shuffle-join) + one per-doc agg.
+    * Scale shape: one token explode + one broadcast join against the
+    * vocab (human-scale) + one per-doc agg.
     */
   def oovRate(docs: DataFrame, idCol: String, textCol: String,
-              vocab: DataFrame, broadcastVocab: Boolean = true): DataFrame = {
+              vocab: DataFrame): DataFrame = {
     val toks = docs.select(col(idCol),
         explode(split(normalizeWords(col(textCol)), " ")).as("token"))
       .filter(col("token") =!= "")
-    val v0 = vocab.select(col("token")).distinct()
-      .withColumn("__in", lit(1))
-    val v = if (broadcastVocab) broadcast(v0) else v0
+    val v = broadcast(vocab.select(col("token")).distinct()
+      .withColumn("__in", lit(1)))
     val per = toks.join(v, Seq("token"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),

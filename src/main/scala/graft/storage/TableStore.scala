@@ -147,10 +147,6 @@ object TableStore {
     }
   }
 
-  /** S7 verify: row-count check after an export (`archive.py:122-161`). */
-  def verifyCount(spark: SparkSession, path: String, expected: Long): Boolean =
-    spark.read.parquet(path).count() == expected
-
   /** Archive rows older than `cutoff` into `year=/month=` partitions
     * (`archive.py:32-97`), returning the archived frame for the
     * subsequent retention delete.
@@ -170,19 +166,19 @@ object TableStore {
   }
 
   /** S11 retention: source minus archived keys (null-safe anti-join,
-    * `archive.py:164-208`), rewritten via a temp snapshot so the source
-    * path is never read-while-overwritten.
+    * `archive.py:164-208`), published through [[writeSnapshot]] so the
+    * source path is never read-while-overwritten and a crash mid-publish
+    * leaves the prior snapshot recoverable. Returns the removed row
+    * count; the source is counted BEFORE the swap (its file listing is
+    * gone after it).
     */
   def retentionDelete(spark: SparkSession, tablePath: String,
                       archivedKeys: DataFrame, key: Seq[String]): Long = {
     val table = spark.read.parquet(tablePath)
-    val kept = graft.operators.Merge.deleteByKeys(table, archivedKeys, key)
-    val tmp = tablePath.stripSuffix("/") + ".tmp_rewrite"
-    kept.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val removed = table.count() - spark.read.parquet(tmp).count()
-    deleteRecursively(Paths.get(tablePath))
-    Files.move(Paths.get(tmp), Paths.get(tablePath))
-    removed
+    val before = table.count()
+    writeSnapshot(graft.operators.Merge.deleteByKeys(table, archivedKeys, key),
+      tablePath)
+    before - spark.read.parquet(tablePath).count()
   }
 
   private[graft] def deleteRecursively(p: Path): Unit =

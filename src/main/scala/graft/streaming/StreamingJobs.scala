@@ -154,39 +154,6 @@ object StreamingJobs {
       .drop("__dk")
   }
 
-  /** flatMapGroupsWithState variant: emits ONLY closed sessions (zero or
-    * one output per key per trigger), the right shape when downstream
-    * consumes completed sessions rather than running aggregates.
-    */
-  def sessionizeClosed(events: Dataset[(Long, java.sql.Timestamp, Double)],
-                       gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.start, s.last, s.events, s.totalValue))
-          } else {
-            val sorted = rows.toSeq.sortBy(_._2.getTime)
-            val merged = sorted.foldLeft(state.getOption) { (acc, r) =>
-              acc match {
-                case Some(s) => Some(s.copy(last = r._2, events = s.events + 1,
-                  totalValue = s.totalValue + r._3))
-                case None => Some(SessionState(r._2, r._2, 1L, r._3))
-              }
-            }
-            merged.foreach { m =>
-              state.update(m)
-              state.setTimeoutDuration(s"$gapMinutes minutes")
-            }
-            Iterator.empty
-          }
-      }
-  }
-
   /** Watermarked stream-stream inner join: pair rows of two unbounded
     * streams on an equality key when the right timestamp falls within
     * `[leftTs - before, leftTs + after]` — clicks↔impressions,

@@ -74,13 +74,12 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("NO gate plan contains an unpartitioned window (dim-delta sk_assign excepted)") {
+  test("NO gate plan contains an unpartitioned window (bounded frames excepted)") {
     // VERDICT r4 guard: `WindowExec` with an empty partitionSpec moves its
     // whole input through ONE task — fatal on anything bigger than a
-    // dimension delta. Allowlist: sk_assign (the dim-delta Keys.assign
-    // case, thousands of rows by contract), active_users (its running
-    // sum windows over the per-DAY delta frame — one row per calendar
-    // day in the observed span, bounded regardless of event volume), and
+    // dimension delta. Allowlist: active_users (its running sum windows
+    // over the per-DAY delta frame — one row per calendar day in the
+    // observed span, bounded regardless of event volume), and
     // hybrid_search (rank windows over each arm's ALREADY-LIMITED top-k
     // frame, <= kEach rows by construction); the driver-loop gates are
     // skipped for the same plan-construction reason as the cartesian
@@ -89,7 +88,7 @@ class PlanAuditSpec extends SparkSpec {
     // eval_auc: its one window orders DISTINCT round-6 scores — a frame
     // bounded by the score lattice (<= 4e6 + 1 values in [-1, 1]), not
     // by corpus size
-    val skip = Set("sk_assign", "active_users", "hybrid_search",
+    val skip = Set("active_users", "hybrid_search",
       "dedup_clusters", "llm_clean_corpus", "eval_auc", "split_by_cluster")
     for ((name, fn) <- SparkEntry.queries if !skip(name)) {
       val bad = fn(spark, dir).queryExecution.sparkPlan.collect {
