@@ -359,8 +359,13 @@ object Apps {
   def registerViews(spark: SparkSession, warehouseRoot: String, runDate: String): Unit =
     Views.registerAll(spark, readStar(spark, warehouseRoot), lit(runDate))
 
-  private def exists(path: String): Boolean =
+  /** Whether a table exists, after putting back a snapshot that a
+    * crashed [[TableStore.writeSnapshot]] left parked at `<path>.__old`.
+    */
+  private def exists(path: String): Boolean = {
+    TableStore.recoverSnapshot(path)
     java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+  }
 
   private def readOrEmpty(spark: SparkSession, path: String, like: DataFrame): DataFrame =
     if (exists(path)) spark.read.parquet(path) else like.limit(0)

@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,15 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * UNICODE CODE POINTS — the unit Spark's `substring` slices by, so
   * `substring(text, prev+1, end−prev)` reconstructs chunks exactly);
   * empty text → empty array; the final offset is always the length.
-  * Both the interpreted path and the generated code call the one
-  * static [[ContentChunkBounds.evalArray]] — a hand-inlined duplicate
-  * of the boundary scan would be a second implementation to keep
-  * byte-identical for no measurable gain (the scan is O(n) either way
-  * and stays inside the whole-stage pipeline).
   */
 case class ContentChunkBounds(child: Expression, k: Int, maskBits: Int,
                               minLen: Int, maxLen: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with NativeKernel {
   require(k >= 1, s"content_chunk_bounds: window k must be >= 1, got $k")
   require(maskBits >= 1 && maskBits <= 30,
     s"content_chunk_bounds: maskBits must be in 1..30, got $maskBits")
@@ -43,34 +37,17 @@ case class ContentChunkBounds(child: Expression, k: Int, maskBits: Int,
     s"content_chunk_bounds: minLen must be >= k, got $minLen < $k")
   require(maxLen > minLen,
     s"content_chunk_bounds: need maxLen > minLen, got $maxLen <= $minLen")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"content_chunk_bounds needs a string child, got ${child.dataType}")
-
   override def prettyName: String = "content_chunk_bounds"
-
-  override def nullSafeEval(input: Any): Any =
-    ContentChunkBounds.evalArray(
-      input.asInstanceOf[UTF8String], k, maskBits, minLen, maxLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.expressions.ContentChunkBounds.evalArray(
-         |  $c, $k, $maskBits, $minLen, $maxLen);""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def helper = (ContentChunkBounds, "evalArray")
+  override protected def state = Seq(k, maskBits, minLen, maxLen)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object ContentChunkBounds {
 
-  /** Shared scan (interpreted + codegen): cut after code point `i`
+  /** Cut after code point `i`
     * (0-based) when the window hash's low bits are zero AND the chunk
     * has `minLen` points, or unconditionally at `maxLen`. */
   def evalArray(input: UTF8String, k: Int, maskBits: Int,
@@ -109,8 +86,6 @@ object ContentChunkBounds {
   }
 
   def content_chunk_bounds(c: Column, k: Int = 16, maskBits: Int = 6,
-                           minLen: Int = 32, maxLen: Int = 256): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(ContentChunkBounds(shim.expression(c), k, maskBits, minLen, maxLen))
-  }
+                           minLen: Int = 32, maxLen: Int = 256): Column =
+    NativeKernel(c)(ContentChunkBounds(_, k, maskBits, minLen, maxLen))
 }

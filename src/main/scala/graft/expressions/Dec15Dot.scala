@@ -3,9 +3,7 @@ package graft.expressions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -48,32 +46,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * terms. OptKernelsSpec pins all of it against the verbatim old tree.
   */
 case class Dec15Dot(child: Expression, w: Array[Double])
-  extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"dec15_dot needs array<double>, got $other")
-  }
+  extends UnaryExpression with NativeKernel {
   override def prettyName: String = "dec15_dot"
-
-  override def nullSafeEval(a: Any): Any =
-    Dec15Dot.dot(a.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("dec15w", w, "double[]")
-    // boxed: the helper returns null for ragged/null-element inputs
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""java.lang.Double ${ev.value}Box = graft.expressions.Dec15Dot.dot($c, $wRef);
-         |if (${ev.value}Box == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}Box.doubleValue(); }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override protected def helper = (Dec15Dot, "dot")
+  override protected def state = Seq(w)
+  override protected def nullResult = true
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Dec15Dot {
@@ -100,8 +80,5 @@ object Dec15Dot {
     java.lang.Double.valueOf(acc.doubleValue())
   }
 
-  def dec15_dot(x: Column, w: Array[Double]): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(Dec15Dot(shim.expression(x), w))
-  }
+  def dec15_dot(x: Column, w: Array[Double]): Column = NativeKernel(x)(Dec15Dot(_, w))
 }

@@ -11,10 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.expressions.GraftExtensions …
   * }}}
   *
-  * registers `rolling_hash_min`, `unicode_nfc` and `strip_accents` as
-  * built-in functions of every session the cluster builds, the standard
-  * deployment hook for Catalyst extensions. Shares
-  * [[Functions.builders]] with the programmatic
+  * registers all six [[Functions.builders]] entries — `rolling_hash_min`,
+  * `content_chunk_bounds`, `unicode_nfc`, `unicode_nfkc`,
+  * `strip_accents` and `jaro_winkler` — as built-in functions of every
+  * session the cluster builds, the standard deployment hook for Catalyst
+  * extensions. Shares the builder table with the programmatic
   * [[Functions.register]] path, so the two surfaces cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,12 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaccard similarity of two SORTED distinct string arrays as one merge
   * pass — the verify kernel of the near-dup tiers.
@@ -38,30 +35,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *     propagation through size/divide);
   *   - a null ELEMENT present in both arrays counts once, like
   *     array_intersect; both-empty → 0/0 = NaN, same as double divide.
-  *
-  * Codegen delegates to the static [[JaccardSorted.jaccard]] helper so a
-  * codegen'd join condition or projection stays codegen'd.
   */
 case class JaccardSorted(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"jaccard_sorted needs two array<string>, got $other")
-    }
+  extends BinaryExpression with NativeKernel {
   override def prettyName: String = "jaccard_sorted"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    JaccardSorted.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.JaccardSorted.jaccard($a, $b)")
-
+  override def inputTypes =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = DoubleType
+  override protected def helper = (JaccardSorted, "jaccard")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -93,8 +74,5 @@ object JaccardSorted {
     inter.toDouble / (n + m - inter).toDouble
   }
 
-  def jaccard_sorted(a: Column, b: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(JaccardSorted(shim.expression(a), shim.expression(b)))
-  }
+  def jaccard_sorted(a: Column, b: Column): Column = NativeKernel(a, b)(JaccardSorted(_, _))
 }

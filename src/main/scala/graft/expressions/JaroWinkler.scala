@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,47 +21,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *     halved, `jaro = (m/l1 + m/l2 + (m−t)/m)/3`;
   *   - Winkler boost `jaro + prefix·0.1·(1−jaro)` with the common
   *     prefix capped at 4 bytes, applied only when `jaro > 0.7`.
-  *
-  * Both the interpreted and generated paths call the same static
-  * kernel (the `levenshtein` pattern — whole-stage codegen keeps the
-  * loop in one JIT-friendly static method).
   */
 case class JaroWinkler(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs two string children, got " +
-          s"${left.dataType} and ${right.dataType}")
-
+  extends BinaryExpression with NativeKernel {
   override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JaroWinkler.similarity(
-      l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.expressions.JaroWinkler.similarity($l, $r);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override def inputTypes = Seq(StringType, StringType)
+  override def dataType: DataType = DoubleType
+  override protected def helper = (JaroWinkler, "similarity")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 object JaroWinkler {
 
-  def jaro_winkler(l: Column, r: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(JaroWinkler(shim.expression(l), shim.expression(r)))
-  }
+  def jaro_winkler(l: Column, r: Column): Column = NativeKernel(l, r)(JaroWinkler(_, _))
 
-  /** Shared kernel for the interpreted and generated paths. */
   def similarity(a: UTF8String, b: UTF8String): Double = {
     val s1 = a.getBytes
     val s2 = b.getBytes

@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,27 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * the digest object is thread-local (reset per call) and no string is
   * ever built.
   */
-case class Md5U32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"md5_u32 needs a string child, got ${child.dataType}")
-
+case class Md5U32(child: Expression) extends UnaryExpression with NativeKernel {
   override def prettyName: String = "md5_u32"
-
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(Md5U32.hash(input.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.Md5U32.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = LongType
+  override protected def helper = (Md5U32, "hash")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Md5U32 {
@@ -62,8 +46,5 @@ object Md5U32 {
       ((dig(2) & 0xffL) << 8) | (dig(3) & 0xffL)
   }
 
-  def md5_u32(c: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(Md5U32(shim.expression(c)))
-  }
+  def md5_u32(c: Column): Column = NativeKernel(c)(Md5U32(_))
 }

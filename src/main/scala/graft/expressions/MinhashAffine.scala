@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -23,36 +21,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * propagates the null and array_min of null is null, but the array()
   * constructor itself never nulled); null ELEMENTS are ignored by the
   * min like array_min; an all-null/empty input yields k NULLs.
-  * CodegenFallback is deliberate: the kernel IS the projection's work,
-  * and the eval path is a compiled Scala loop.
   */
 case class MinhashAffine(child: Expression, coefsA: Array[Long],
                          coefsB: Array[Long], p: Long)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with NativeKernel {
   require(coefsA.length == coefsB.length && coefsA.nonEmpty,
     "minhash_affine: coefficient arrays must be same non-zero length")
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_affine needs array<bigint>, got $other")
-    }
-
   override def prettyName: String = "minhash_affine"
-
-  // NOT nullSafeEval: a null input must still produce the k-null array
-  override def eval(input: InternalRow): Any =
-    MinhashAffine.sig(child.eval(input).asInstanceOf[ArrayData],
-      coefsA, coefsB, p)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override protected def helper = (MinhashAffine, "sig")
+  override protected def state = Seq(coefsA, coefsB, p)
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object MinhashAffine {
@@ -85,9 +66,6 @@ object MinhashAffine {
   }
 
   def minhash_affine(c: Column, coefs: IndexedSeq[(Long, Long)],
-                     p: Long): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(MinhashAffine(shim.expression(c),
-      coefs.map(_._1).toArray, coefs.map(_._2).toArray, p))
-  }
+                     p: Long): Column =
+    NativeKernel(c)(MinhashAffine(_, coefs.map(_._1).toArray, coefs.map(_._2).toArray, p))
 }

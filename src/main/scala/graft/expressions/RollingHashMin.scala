@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,76 +15,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash), unlike [[graft.llm.TextStats.fingerprint]]'s whole-text md5.
   * The same computation via native `transform`/`substring` higher-order
   * functions would be O(n·k) AND interpreted; a Scala UDF would box every
-  * row. Both the interpreted `nullSafeEval` and the generated Java code
-  * implement the identical arithmetic (wrapping long multiply — plain JVM
-  * semantics, not ANSI SQL arithmetic), asserted equal in
-  * RollingHashSpec.
+  * row. The arithmetic is a wrapping long multiply — plain JVM
+  * semantics, not ANSI SQL arithmetic.
   *
   * Texts shorter than k hash their whole content (one window).
   */
 case class RollingHashMin(child: Expression, k: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with NativeKernel {
   require(k >= 1, s"rolling_hash_min: window k must be >= 1, got $k")
-
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"rolling_hash_min needs a string child, got ${child.dataType}")
-
   override def prettyName: String = "rolling_hash_min"
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    java.lang.Long.valueOf(RollingHashMin.eval(bytes, k))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val h = ctx.freshName("h")
-      val mn = ctx.freshName("mn")
-      val pow = ctx.freshName("pow")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val kk = ctx.freshName("kk")
-      // identical arithmetic to RollingHashMin.eval
-      s"""
-        byte[] $bytes = $c.getBytes();
-        int $n = $bytes.length;
-        int $kk = $n < $k ? ($n == 0 ? 1 : $n) : $k;
-        if ($n == 0) {
-          ${ev.value} = 0L;
-        } else {
-          long $h = 0L;
-          long $pow = 1L;
-          for (int $i = 0; $i < $kk - 1; $i++) $pow *= ${RollingHashMin.B}L;
-          for (int $i = 0; $i < $kk; $i++)
-            $h = $h * ${RollingHashMin.B}L + ($bytes[$i] & 0xFF);
-          long $mn = $h;
-          for (int $i = $kk; $i < $n; $i++) {
-            $h = ($h - ($bytes[$i - $kk] & 0xFF) * $pow) * ${RollingHashMin.B}L
-              + ($bytes[$i] & 0xFF);
-            if ($h < $mn) $mn = $h;
-          }
-          ${ev.value} = $mn;
-        }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = LongType
+  override protected def helper = (RollingHashMin, "hash")
+  override protected def state = Seq(k)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object RollingHashMin {
   /** Polynomial base; wrapping 64-bit arithmetic is the hash space. */
   final val B = 1000003L
 
-  /** Reference implementation shared by the interpreted path and tests. */
-  def eval(bytes: Array[Byte], k: Int): Long = {
+  /** Min window hash of the UTF-8 bytes of `s`. */
+  def hash(s: UTF8String, k: Int): Long = {
+    val bytes = s.getBytes
     val n = bytes.length
     if (n == 0) return 0L
     val kk = if (n < k) n else k
@@ -105,11 +57,6 @@ object RollingHashMin {
     mn
   }
 
-  /** Column API (via the spark-package shim — Spark 4's converters are
-    * private[sql]).
-    */
-  def rolling_hash_min(c: Column, k: Int = 16): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(RollingHashMin(shim.expression(c), k))
-  }
+  def rolling_hash_min(c: Column, k: Int = 16): Column =
+    NativeKernel(c)(RollingHashMin(_, k))
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,27 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This removes the explode (corpus × words row blow-up), the 16
   * hex-digit projections per word, and the 64-conditional-sum
-  * per-id hash aggregation — the whole fingerprint is narrow,
-  * shuffle-free, and whole-stage-codegen-friendly via the static
-  * helper (the [[WordShingles]] pattern).
+  * per-id hash aggregation — the whole fingerprint is narrow and
+  * shuffle-free.
   */
-case class SimhashMd5(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash_md5 needs a string child, got ${child.dataType}")
+case class SimhashMd5(child: Expression) extends UnaryExpression with NativeKernel {
   override def prettyName: String = "simhash_md5"
-
-  override def nullSafeEval(input: Any): Any =
-    SimhashMd5.simhash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.SimhashMd5.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = LongType
+  override protected def helper = (SimhashMd5, "simhash")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object SimhashMd5 {
@@ -103,8 +89,5 @@ object SimhashMd5 {
     packed
   }
 
-  def simhash_md5(norm: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(SimhashMd5(shim.expression(norm)))
-  }
+  def simhash_md5(norm: Column): Column = NativeKernel(norm)(SimhashMd5(_))
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,9 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * returned untouched after a byte scan — no decode, no `Normalizer`
   * call, no allocation — so the expression costs one branchy pass where
   * it can and the full ICU-free `java.text.Normalizer` path only where
-  * non-ASCII bytes actually appear. Both the interpreted and generated
-  * paths call the same static kernel, asserted equal in
-  * UnicodeNormalizeSpec.
+  * non-ASCII bytes actually appear.
   *
   * Accent stripping drops NON_SPACING_MARK characters after canonical
   * decomposition — 'á'→'a', 'ç'→'c', 'ñ'→'n'. Characters whose accent is
@@ -34,41 +31,20 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class UnicodeNormalize(child: Expression, strip: Boolean,
                             compat: Boolean = false)
-  extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a string child, got ${child.dataType}")
-
+  extends UnaryExpression with NativeKernel {
   override def prettyName: String =
     if (strip) { if (compat) "strip_accents_nfkc" else "strip_accents" }
     else if (compat) "unicode_nfkc" else "unicode_nfc"
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeNormalize.normalize(input.asInstanceOf[UTF8String], strip, compat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.UnicodeNormalize.normalize($c, $strip, $compat);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StringType
+  override protected def helper = (UnicodeNormalize, "normalize")
+  override protected def state = Seq(strip, compat)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object UnicodeNormalize {
 
-  /** Shared kernel for the interpreted and generated paths.
-    * The two-arg form (canonical regimes) is kept for source compat.
-    */
-  def normalize(u: UTF8String, strip: Boolean): UTF8String =
-    normalize(u, strip, compat = false)
-
-  def normalize(u: UTF8String, strip: Boolean, compat: Boolean): UTF8String = {
+  def normalize(u: UTF8String, strip: Boolean, compat: Boolean = false): UTF8String = {
     // ASCII fast path: ASCII is normalization-invariant under all four
     // forms (NFC/NFD/NFKC/NFKD) and accent-free already
     var i = 0
@@ -96,27 +72,16 @@ object UnicodeNormalize {
     UTF8String.fromString(out)
   }
 
-  /** NFC-compose (via the spark-package shim — Spark 4's converters are
-    * private[sql]).
-    */
-  def unicode_nfc(c: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(UnicodeNormalize(shim.expression(c), strip = false))
-  }
+  /** NFC-compose. */
+  def unicode_nfc(c: Column): Column = NativeKernel(c)(UnicodeNormalize(_, strip = false))
 
   /** NFD-decompose, drop combining marks, NFC-recompose. */
-  def strip_accents(c: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(UnicodeNormalize(shim.expression(c), strip = true))
-  }
+  def strip_accents(c: Column): Column = NativeKernel(c)(UnicodeNormalize(_, strip = true))
 
   /** NFKC compatibility composition — the tokenizer-regime normalizer
     * (SentencePiece's nmt-NFKC family): ligatures split, fullwidth/
     * circled/unit forms fold, compatibility spaces become U+0020.
     */
-  def unicode_nfkc(c: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(UnicodeNormalize(shim.expression(c), strip = false,
-      compat = true))
-  }
+  def unicode_nfkc(c: Column): Column =
+    NativeKernel(c)(UnicodeNormalize(_, strip = false, compat = true))
 }

@@ -1,10 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -29,101 +26,138 @@ import org.apache.spark.sql.types._
   *     [[graft.llm.Pq.pqTopKRefined]]'s exact re-score.
   *
   * Element types may be FLOAT or DOUBLE (the HOF forms cast per element;
-  * the kernels widen the same way). CodegenFallback is deliberate, the
-  * [[MinhashAffine]] argument: the kernel IS the projection's work and
-  * the eval path is a compiled Scala loop.
+  * the kernels widen the same way). Which one is decided once per
+  * expression instance and passed to the helper as a flag.
   */
-private[expressions] trait VecKernelHelpers {
-  protected def okArray(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
+object VecKernels {
+  private[expressions] val Vec =
+    org.apache.spark.sql.GraftColumnShim.anyOf(ArrayType(FloatType), ArrayType(DoubleType))
+  private[expressions] def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
     case _ => false
   }
-  /** element j widened to double; Double.NaN is a fine carrier but null
-    * must be checked by the caller via isNullAt. */
-  protected def elem(a: ArrayData, dt: DataType, j: Int): Double = dt match {
-    case ArrayType(FloatType, _) => a.getFloat(j).toDouble
-    case _ => a.getDouble(j)
-  }
-}
 
-case class VecDot(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback with VecKernelHelpers {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okArray(left.dataType) && okArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_dot needs two array<float|double>, got ${left.dataType}, ${right.dataType}")
-  override def prettyName: String = "vec_dot"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  /** element j widened to double; the caller checks isNullAt. */
+  @inline private def at(a: ArrayData, isFloat: Boolean, j: Int): Double =
+    if (isFloat) a.getFloat(j).toDouble else a.getDouble(j)
+
+  def dot(x: ArrayData, y: ArrayData, xf: Boolean, yf: Boolean): java.lang.Double = {
     // zip_with pads the shorter side with null → null product → null sum
     if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
     var s = 0.0
     var j = 0
-    while (j < n) {
+    while (j < x.numElements()) {
       if (x.isNullAt(j) || y.isNullAt(j)) return null
-      s += elem(x, left.dataType, j) * elem(y, right.dataType, j)
+      s += at(x, xf, j) * at(y, yf, j)
       j += 1
     }
     s
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
-case class VecNorm(child: Expression)
-  extends UnaryExpression with CodegenFallback with VecKernelHelpers {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okArray(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_norm needs array<float|double>, got ${child.dataType}")
-  override def prettyName: String = "vec_norm"
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
+  def norm(x: ArrayData, xf: Boolean): java.lang.Double = {
     var s = 0.0
     var j = 0
-    while (j < n) {
+    while (j < x.numElements()) {
       if (x.isNullAt(j)) return null
-      val v = elem(x, child.dataType, j)
+      val v = at(x, xf, j)
       s += v * v
       j += 1
     }
     math.sqrt(s)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
 
-case class VecL2Sq(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback with VecKernelHelpers {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okArray(left.dataType) && okArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_l2sq needs two array<float|double>, got ${left.dataType}, ${right.dataType}")
-  override def prettyName: String = "vec_l2sq"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  def l2sq(x: ArrayData, y: ArrayData, xf: Boolean, yf: Boolean): java.lang.Double = {
     if (x.numElements() != y.numElements()) return null
-    val n = x.numElements()
     var s = 0.0
     var j = 0
-    while (j < n) {
+    while (j < x.numElements()) {
       if (x.isNullAt(j) || y.isNullAt(j)) return null
-      val d = elem(x, left.dataType, j) - elem(y, right.dataType, j)
+      val d = at(x, xf, j) - at(y, yf, j)
       s += d * d
       j += 1
     }
     s
   }
+
+  /** `x` may be null (→ bucket 0). */
+  def signBucket(x: ArrayData, planes: Array[Array[Double]], xf: Boolean): Long = {
+    val dim = planes.head.length
+    if (x == null || x.numElements() != dim) return 0L
+    // widen once; bail to bucket 0 on any null element (the padded-null
+    // semantics of every plane's zip_with)
+    val v = new Array[Double](dim)
+    var j = 0
+    while (j < dim) {
+      if (x.isNullAt(j)) return 0L
+      v(j) = at(x, xf, j)
+      j += 1
+    }
+    var bucket = 0L
+    var i = 0
+    while (i < planes.length) {
+      val p = planes(i)
+      var s = 0.0
+      j = 0
+      while (j < dim) { s += v(j) * p(j); j += 1 }
+      if (s > 0) bucket |= (1L << i)
+      i += 1
+    }
+    bucket
+  }
+
+  def adc(tbl: ArrayData, codes: ArrayData): java.lang.Double = {
+    if (tbl.numElements() != codes.numElements()) return null
+    var s = 0.0
+    var i = 0
+    while (i < tbl.numElements()) {
+      if (tbl.isNullAt(i) || codes.isNullAt(i)) return null
+      val row = tbl.getArray(i)
+      val c = codes.getInt(i)
+      if (c < 0 || c >= row.numElements() || row.isNullAt(c)) return null
+      s += row.getDouble(c)
+      i += 1
+    }
+    s
+  }
+
+  def vec_dot(a: Column, b: Column): Column = NativeKernel(a, b)(VecDot)
+  def vec_norm(a: Column): Column = NativeKernel(a)(VecNorm)
+  def vec_l2sq(a: Column, b: Column): Column = NativeKernel(a, b)(VecL2Sq)
+  def sign_bucket(v: Column, planes: Array[Array[Double]]): Column =
+    NativeKernel(v)(SignBucket(_, planes))
+  def adc_sum(tbl: Column, codes: Column): Column = NativeKernel(tbl, codes)(AdcSum)
+}
+
+case class VecDot(left: Expression, right: Expression)
+  extends BinaryExpression with NativeKernel {
+  override def prettyName: String = "vec_dot"
+  override def inputTypes = Seq(VecKernels.Vec, VecKernels.Vec)
+  override def dataType: DataType = DoubleType
+  override protected def helper = (VecKernels, "dot")
+  override protected def state = Seq(VecKernels.isFloat(left), VecKernels.isFloat(right))
+  override protected def nullResult = true
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+case class VecNorm(child: Expression) extends UnaryExpression with NativeKernel {
+  override def prettyName: String = "vec_norm"
+  override def inputTypes = Seq(VecKernels.Vec)
+  override def dataType: DataType = DoubleType
+  override protected def helper = (VecKernels, "norm")
+  override protected def state = Seq(VecKernels.isFloat(child))
+  override protected def nullResult = true
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+case class VecL2Sq(left: Expression, right: Expression)
+  extends BinaryExpression with NativeKernel {
+  override def prettyName: String = "vec_l2sq"
+  override def inputTypes = Seq(VecKernels.Vec, VecKernels.Vec)
+  override def dataType: DataType = DoubleType
+  override protected def helper = (VecKernels, "l2sq")
+  override protected def state = Seq(VecKernels.isFloat(left), VecKernels.isFloat(right))
+  override protected def nullResult = true
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -141,46 +175,16 @@ case class VecL2Sq(left: Expression, right: Expression)
   * null. NaN projections also fail `> 0` → bit 0.
   */
 case class SignBucket(child: Expression, planes: Array[Array[Double]])
-  extends UnaryExpression with CodegenFallback with VecKernelHelpers {
+  extends UnaryExpression with NativeKernel {
   require(planes.nonEmpty && planes.forall(_.length == planes.head.length),
     "sign_bucket: planes must be non-empty and rectangular")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okArray(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sign_bucket needs array<float|double>, got ${child.dataType}")
   override def prettyName: String = "sign_bucket"
-  // NOT nullSafeEval: a null vector must still produce bucket 0L
-  override def eval(input: InternalRow): Any = {
-    val raw = child.eval(input)
-    if (raw == null) return 0L
-    val x = raw.asInstanceOf[ArrayData]
-    val dim = planes.head.length
-    if (x.numElements() != dim) return 0L
-    // widen once; bail to bucket 0 on any null element (the padded-null
-    // semantics of every plane's zip_with)
-    val v = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      if (x.isNullAt(j)) return 0L
-      v(j) = elem(x, child.dataType, j)
-      j += 1
-    }
-    var bucket = 0L
-    var i = 0
-    while (i < planes.length) {
-      val p = planes(i)
-      var s = 0.0
-      j = 0
-      while (j < dim) { s += v(j) * p(j); j += 1 }
-      if (s > 0) bucket |= (1L << i)
-      i += 1
-    }
-    bucket
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def inputTypes = Seq(VecKernels.Vec)
+  override def dataType: DataType = LongType
+  override protected def helper = (VecKernels, "signBucket")
+  override protected def state = Seq(planes, VecKernels.isFloat(child))
+  override protected def nullInput = true
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** ADC distance: Σ_s tbl(s)(codes(s)) in ascending-subspace order — the
@@ -192,47 +196,13 @@ case class SignBucket(child: Expression, planes: Array[Array[Double]])
   * result with ANSI off — never an out-of-bounds read.
   */
 case class AdcSum(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"adc_sum needs (array<array<double>>, array<int>), got $other")
-    }
+  extends BinaryExpression with NativeKernel {
   override def prettyName: String = "adc_sum"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val tbl = a.asInstanceOf[ArrayData]; val codes = b.asInstanceOf[ArrayData]
-    if (tbl.numElements() != codes.numElements()) return null
-    val m = tbl.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < m) {
-      if (tbl.isNullAt(i) || codes.isNullAt(i)) return null
-      val row = tbl.getArray(i)
-      val c = codes.getInt(i)
-      if (c < 0 || c >= row.numElements() || row.isNullAt(c)) return null
-      s += row.getDouble(c)
-      i += 1
-    }
-    s
-  }
+  override def inputTypes =
+    Seq(ArrayType(ArrayType(DoubleType)), ArrayType(IntegerType))
+  override def dataType: DataType = DoubleType
+  override protected def helper = (VecKernels, "adc")
+  override protected def nullResult = true
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object VecKernels {
-  private def shim = org.apache.spark.sql.GraftColumnShim
-  def vec_dot(a: Column, b: Column): Column =
-    shim.column(VecDot(shim.expression(a), shim.expression(b)))
-  def vec_norm(a: Column): Column =
-    shim.column(VecNorm(shim.expression(a)))
-  def vec_l2sq(a: Column, b: Column): Column =
-    shim.column(VecL2Sq(shim.expression(a), shim.expression(b)))
-  def sign_bucket(v: Column, planes: Array[Array[Double]]): Column =
-    shim.column(SignBucket(shim.expression(v), planes))
-  def adc_sum(tbl: Column, codes: Column): Column =
-    shim.column(AdcSum(shim.expression(tbl), shim.expression(codes)))
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,38 +24,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null on either side → null (callers coalesce the position array).
   */
 case class WordDropPositions(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType &&
-        right.dataType.isInstanceOf[ArrayType] &&
-        right.dataType.asInstanceOf[ArrayType].elementType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_drop_positions needs (string, array<int>), got " +
-          s"(${left.dataType}, ${right.dataType})")
-
+  extends BinaryExpression with NativeKernel {
   override def prettyName: String = "word_drop_positions"
-
-  override def nullSafeEval(norm: Any, cov: Any): Any =
-    WordDropPositions.drop(norm.asInstanceOf[UTF8String],
-      cov.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (n, c) =>
-      s"graft.expressions.WordDropPositions.drop($n, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override def inputTypes = Seq(StringType, ArrayType(IntegerType))
+  override def dataType: DataType = StringType
+  override protected def helper = (WordDropPositions, "drop")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 object WordDropPositions {
 
-  /** Static kernel shared by the interpreted and generated paths. */
   def drop(norm: UTF8String, cov: ArrayData): UTF8String = {
     val nCov = cov.numElements()
     if (nCov == 0) return norm
@@ -87,9 +65,6 @@ object WordDropPositions {
     UTF8String.fromBytes(out, 0, o)
   }
 
-  def word_drop_positions(norm: Column, positions: Column): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(WordDropPositions(
-      shim.expression(norm), shim.expression(positions)))
-  }
+  def word_drop_positions(norm: Column, positions: Column): Column =
+    NativeKernel(norm, positions)(WordDropPositions(_, _))
 }

@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,18 +24,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns array<int> of length K (the constructor's set order).
   */
 case class WordSetHits(child: Expression, sets: Array[Array[String]])
-  extends UnaryExpression {
+  extends UnaryExpression with NativeKernel {
   require(sets.nonEmpty && sets.length <= 32,
     s"word_set_hits supports 1..32 sets, got ${sets.length}")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_set_hits needs a string child, got ${child.dataType}")
   override def prettyName: String = "word_set_hits"
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def helper = (WordSetHits, "hits")
+  override protected def state = Seq(WordSetHits.masks(sets), sets.length)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
 
-  @transient private lazy val masks: java.util.HashMap[UTF8String, Integer] = {
+object WordSetHits {
+  /** word → bitmask of the sets holding it. */
+  def masks(sets: Array[Array[String]]): java.util.HashMap[UTF8String, Integer] = {
     val m = new java.util.HashMap[UTF8String, Integer]()
     var k = 0
     while (k < sets.length) {
@@ -51,20 +51,6 @@ case class WordSetHits(child: Expression, sets: Array[Array[String]])
     m
   }
 
-  override def nullSafeEval(input: Any): Any =
-    WordSetHits.hits(input.asInstanceOf[UTF8String], masks, sets.length)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("wshMasks", masks, "java.util.HashMap")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.WordSetHits.hits($c, $mRef, ${sets.length})")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordSetHits {
   def hits(norm: UTF8String, masks: java.util.HashMap[UTF8String, Integer],
            k: Int): ArrayData = {
     val bytes = norm.getBytes
@@ -90,8 +76,6 @@ object WordSetHits {
     new GenericArrayData(counts.map(Int.box))
   }
 
-  def word_set_hits(norm: Column, sets: Array[Array[String]]): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(WordSetHits(shim.expression(norm), sets))
-  }
+  def word_set_hits(norm: Column, sets: Array[Array[String]]): Column =
+    NativeKernel(norm)(WordSetHits(_, sets))
 }

@@ -2,7 +2,6 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,41 +30,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *     to save the extra pass over the array).
   *
   * Space scanning is byte-safe in UTF-8: 0x20 never occurs inside a
-  * multi-byte sequence. Codegen delegates to the static [[WordShingles.shingle]]
-  * helper so the surrounding projection keeps whole-stage codegen.
+  * multi-byte sequence.
   */
 case class WordShingles(child: Expression, n: Int, distinct: Boolean)
-  extends UnaryExpression {
+  extends UnaryExpression with NativeKernel {
   require(n >= 1, s"word_shingles: n must be >= 1, got $n")
-
+  override def prettyName: String = "word_shingles"
+  override def inputTypes = Seq(StringType)
   // containsNull = true matches the type of the zip_with/filter chain it
   // replaces (When unifies both branches' nullability), so no downstream
   // plan or schema nullability flag moves.
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_shingles needs a string child, got ${child.dataType}")
-
-  override def prettyName: String = "word_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingles.shingle(input.asInstanceOf[UTF8String], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.WordShingles.shingle($c, $n, $distinct)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def helper = (WordShingles, "shingle")
+  override protected def state = Seq(n, distinct)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object WordShingles {
 
-  /** Static kernel shared by the interpreted and generated paths. */
   def shingle(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -107,11 +89,6 @@ object WordShingles {
     }
   }
 
-  /** Column API (spark-package shim — Spark 4's converters are
-    * private[sql]).
-    */
-  def word_shingles(c: Column, n: Int, distinct: Boolean = false): Column = {
-    val shim = org.apache.spark.sql.GraftColumnShim
-    shim.column(WordShingles(shim.expression(c), n, distinct))
-  }
+  def word_shingles(c: Column, n: Int, distinct: Boolean = false): Column =
+    NativeKernel(c)(WordShingles(_, n, distinct))
 }

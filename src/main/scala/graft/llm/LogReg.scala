@@ -103,14 +103,9 @@ object LogReg {
     var w = Array.fill(dim)(0.0d)
     var it = 0
     while (it < iters) {
-      // residual pass is narrow (weights ride in a compiled kernel —
-      // graft.expressions.Dec15Dot, same exact decimal fold as the old
-      // zip_with tree); the gradient is ONE global aggregation of dim
-      // decimal sums over element_at projections — the posexplode form
-      // it replaces blew every row up (dim+1)× and shuffled the pairs
-      // into a (dim+1)-group hash agg. Per-term decimals and the exact
-      // order-free decimal sums are identical, so no published bit can
-      // move (pinned by LogRegSpec + the logreg_* oracle gates).
+      // residual pass is narrow: the weights ride in a compiled kernel
+      // (graft.expressions.Dec15Dot, the same exact decimal fold as the
+      // old zip_with tree), pinned by LogRegSpec + the logreg_* gates.
       val withR = iterBase.select(
         (round6(sigmoidAlg(
           graft.expressions.Dec15Dot.dec15_dot(col("__x"), w)))

@@ -2,58 +2,35 @@ package graft.expressions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import RollingHashMin.rolling_hash_min
 
-/** Native rolling-hash fingerprint: codegen vs interpreted vs reference
-  * implementation, shift tolerance, edge cases.
+/** Native rolling-hash fingerprint: shift tolerance, edge cases, SQL
+  * surface (codegen ≡ interpreted is a row of KernelCodegenSpec).
   */
 class RollingHashSpec extends SparkSpec {
   import spark.implicits._
 
-  private def viaSpark(texts: Seq[String], k: Int, codegen: Boolean): Seq[Any] = {
-    spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-    spark.conf.set("spark.sql.codegen.factoryMode",
-      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-    try texts.toDF("t").select(rolling_hash_min(col("t"), k).as("h"))
-      .collect().map(r => if (r.isNullAt(0)) null else r.getLong(0)).toSeq
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
-  }
-
-  private val samples = Seq(
-    "the quick brown fox jumps over the lazy dog",
-    "short", "", "x",
-    "Kỹ Sư Phần Mềm với tiếng Việt",
-    "aaaaaaaaaaaaaaaaaaaaaaaaaaaa")
-
-  test("codegen, interpreted and reference implementations agree") {
-    val ref = samples.map(s => RollingHashMin.eval(s.getBytes("UTF-8"), 8))
-    assert(viaSpark(samples, 8, codegen = true) == ref)
-    assert(viaSpark(samples, 8, codegen = false) == ref)
-  }
-
   test("shift tolerance: shared region dominates the fingerprint") {
     val a = "PREFIX zzz-common-fingerprint-region-zzz SUFFIX1"
     val b = "different-start zzz-common-fingerprint-region-zzz OTHER"
-    val ha = RollingHashMin.eval(a.getBytes("UTF-8"), 16)
-    val hb = RollingHashMin.eval(b.getBytes("UTF-8"), 16)
+    val ha = RollingHashMin.hash(UTF8String.fromString(a), 16)
+    val hb = RollingHashMin.hash(UTF8String.fromString(b), 16)
     // both minima fall inside the long shared region for these inputs
     assert(ha == hb, s"$ha vs $hb")
   }
 
   test("texts shorter than k hash their full content; empty is 0") {
-    assert(RollingHashMin.eval("ab".getBytes("UTF-8"), 16) ==
-      RollingHashMin.eval("ab".getBytes("UTF-8"), 2))
-    assert(RollingHashMin.eval(Array.empty[Byte], 16) == 0L)
+    assert(RollingHashMin.hash(UTF8String.fromString("ab"), 16) ==
+      RollingHashMin.hash(UTF8String.fromString("ab"), 2))
+    assert(RollingHashMin.hash(UTF8String.EMPTY_UTF8, 16) == 0L)
   }
 
   test("SQL surface: rolling_hash_min and clean_company_name registered") {
     Functions.register(spark)
     Seq("hello world document").toDF("t").createOrReplaceTempView("rh_t")
     val viaSql = spark.sql("SELECT rolling_hash_min(t, 8) FROM rh_t").head().getLong(0)
-    assert(viaSql == RollingHashMin.eval("hello world document".getBytes("UTF-8"), 8))
+    assert(viaSql == RollingHashMin.hash(UTF8String.fromString("hello world document"), 8))
     val name = spark.sql("SELECT clean_company_name('công ty tnhh fpt software')")
       .head().getString(0)
     assert(name == "Công Ty TNHH FPT Software")
