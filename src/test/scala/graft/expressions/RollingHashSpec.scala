@@ -5,11 +5,47 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import RollingHashMin.rolling_hash_min
 
-/** Native rolling-hash fingerprint: shift tolerance, edge cases, SQL
-  * surface (codegen ≡ interpreted is a row of KernelCodegenSpec).
+/** Native rolling-hash fingerprint: codegen vs interpreted vs an
+  * independent reference, shift tolerance, edge cases, SQL surface
+  * (adversarial codegen ≡ interpreted input is a row of KernelCodegenSpec).
   */
 class RollingHashSpec extends SparkSpec {
   import spark.implicits._
+
+  private def viaSpark(texts: Seq[String], k: Int, codegen: Boolean): Seq[Any] = {
+    val conf = Map(
+      "spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+    val saved = conf.keys.map(key => key -> spark.conf.getOption(key))
+    conf.foreach { case (key, value) => spark.conf.set(key, value) }
+    try texts.toDF("t").select(rolling_hash_min(col("t"), k).as("h"))
+      .collect().map(r => if (r.isNullAt(0)) null else r.getLong(0)).toSeq
+    finally saved.foreach { case (key, value) =>
+      value.fold(spark.conf.unset(key))(spark.conf.set(key, _)) }
+  }
+
+  /** Min over every k-byte window's polynomial hash, each window hashed
+    * from scratch (O(n·k), no rolling update).
+    */
+  private def reference(s: String, k: Int): Long = {
+    val bytes = s.getBytes("UTF-8")
+    if (bytes.isEmpty) 0L
+    else bytes.sliding(math.min(k, bytes.length))
+      .map(_.foldLeft(0L)((h, b) => h * RollingHashMin.B + (b & 0xFF))).min
+  }
+
+  private val samples = Seq(
+    "the quick brown fox jumps over the lazy dog",
+    "short", "", "x",
+    "Kỹ Sư Phần Mềm với tiếng Việt",
+    "aaaaaaaaaaaaaaaaaaaaaaaaaaaa")
+
+  test("codegen, interpreted and reference implementations agree") {
+    val ref = samples.map(s => reference(s, 8))
+    assert(viaSpark(samples, 8, codegen = true) == ref)
+    assert(viaSpark(samples, 8, codegen = false) == ref)
+    assert(samples.map(s => RollingHashMin.hash(UTF8String.fromString(s), 8)) == ref)
+  }
 
   test("shift tolerance: shared region dominates the fingerprint") {
     val a = "PREFIX zzz-common-fingerprint-region-zzz SUFFIX1"
