@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Concurrent
 import graft.functions.{Cleaners, Hashes, Salary}
 import graft.ingest.HtmlParser
 import graft.monitoring.Metrics
@@ -111,10 +112,12 @@ object Apps {
 
   /** `jobinsight_dwh` (§3.2): read today's staging partition
     * (partition-pruned, S4), run the warehouse day, write dims as
-    * snapshots and fact/bridge with dynamic partition overwrite.
+    * snapshots and fact/bridge with dynamic partition overwrite. The six
+    * table writes are independent, so they run side by side
+    * ([[graft.Concurrent.all]]); each keeps its own publish protocol.
     * `onStage` receives the per-stage wall times from
-    * [[WarehouseJob.runDay]] plus a final `writes` stage covering the
-    * snapshot/partition writes — the composite's regression localizer.
+    * [[WarehouseJob.runDay]] plus a final `writes` stage covering all six
+    * writes — the composite's regression localizer.
     */
   def runWarehouseDay(spark: SparkSession, warehouseRoot: String,
                       runDate: String,
@@ -134,16 +137,18 @@ object Apps {
 
       val tWrites = System.nanoTime()
       val dwh = s"$warehouseRoot/dwh"
-      TableStore.writeSnapshot(next.star.dimJob, s"$dwh/DimJob")
-      TableStore.writeSnapshot(next.star.dimCompany, s"$dwh/DimCompany")
-      TableStore.writeSnapshot(next.star.dimLocation, s"$dwh/DimLocation")
-      TableStore.writeSnapshot(next.star.dimDate, s"$dwh/DimDate")
       // Day-run rewrites only today's date_id partition.
       val todaysFact = next.star.fact
         .filter(col("date_id") === lit(runDate).cast("date"))
-      TableStore.replacePartitions(
-        todaysFact, s"$dwh/FactJobPostingDaily", Seq("date_id"))
-      TableStore.writeSnapshot(next.star.bridge, s"$dwh/FactJobLocationBridge")
+      Concurrent.all(Seq(
+        () => TableStore.writeSnapshot(next.star.dimJob, s"$dwh/DimJob"),
+        () => TableStore.writeSnapshot(next.star.dimCompany, s"$dwh/DimCompany"),
+        () => TableStore.writeSnapshot(next.star.dimLocation, s"$dwh/DimLocation"),
+        () => TableStore.writeSnapshot(next.star.dimDate, s"$dwh/DimDate"),
+        () => TableStore.replacePartitions(
+          todaysFact, s"$dwh/FactJobPostingDaily", Seq("date_id")),
+        () => TableStore.writeSnapshot(next.star.bridge,
+          s"$dwh/FactJobLocationBridge")))
       onStage("writes", (System.nanoTime() - tWrites) / 1e9)
       // counts on checkpointed frames — no plan re-execution
       ((), staging.count(), todaysFact.count())
@@ -290,19 +295,23 @@ object Apps {
     replay
   }
 
-  /** Read the star schema back from disk (empty frames before day 1). */
+  /** Read the star schema back from disk (empty frames before day 1).
+    * Each parquet read infers its schema with a Spark job, and the six
+    * reads are independent, so they run side by side.
+    */
   def readStar(spark: SparkSession, warehouseRoot: String): Star = {
     val dwh = s"$warehouseRoot/dwh"
     val empty = WarehouseJob.emptyState(spark).star
-    Star(
-      dimJob = readOrEmpty(spark, s"$dwh/DimJob", empty.dimJob),
-      dimCompany = readOrEmpty(spark, s"$dwh/DimCompany", empty.dimCompany),
-      dimLocation = if (exists(s"$dwh/DimLocation"))
+    val Seq(dimJob, dimCompany, dimLocation, dimDate, fact, bridge) = Concurrent.all(Seq(
+      () => readOrEmpty(spark, s"$dwh/DimJob", empty.dimJob),
+      () => readOrEmpty(spark, s"$dwh/DimCompany", empty.dimCompany),
+      () => if (exists(s"$dwh/DimLocation"))
         spark.read.parquet(s"$dwh/DimLocation") else empty.dimLocation,
-      dimDate = readOrEmpty(spark, s"$dwh/DimDate", empty.dimDate),
-      fact = readOrEmpty(spark, s"$dwh/FactJobPostingDaily", empty.fact)
+      () => readOrEmpty(spark, s"$dwh/DimDate", empty.dimDate),
+      () => readOrEmpty(spark, s"$dwh/FactJobPostingDaily", empty.fact)
         .select(empty.fact.columns.toIndexedSeq.map(col): _*), // partition col read-back order
-      bridge = readOrEmpty(spark, s"$dwh/FactJobLocationBridge", empty.bridge))
+      () => readOrEmpty(spark, s"$dwh/FactJobLocationBridge", empty.bridge)))
+    Star(dimJob, dimCompany, dimLocation, dimDate, fact, bridge)
   }
 
   /** `jobinsight_archive` + maintenance (§3 secondary): archive old raw

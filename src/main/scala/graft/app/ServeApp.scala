@@ -1,10 +1,14 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 import org.apache.hive.service.server.HiveServer2
-import graft.views.Views
+import graft.Concurrent
+import graft.monitoring.Metrics
+import graft.views.{View, Views}
 
 /** Entry point 3 — the BI serving endpoint (SURVEY §3.3).
   *
@@ -26,6 +30,9 @@ import graft.views.Views
   * client's forked session, never on the session the server was
   * started from. (The `singleSession=true` alternative shares the
   * parent session and with it every such mutation.)
+  *
+  * The views are materialized in memory when the catalog is registered
+  * and refreshed by the next registration (see [[registerCatalog]]).
   */
 object ServeApp {
 
@@ -35,10 +42,25 @@ object ServeApp {
   private val starTables = Seq("DimJob", "DimCompany", "DimLocation",
     "DimDate", "FactJobPostingDaily", "FactJobLocationBridge")
 
-  /** Register the serving catalog: the 15 analytic views plus the six
-    * star base tables, all as GLOBAL temp views — visible to every
-    * session forked from `spark`'s context under the `global_temp`
-    * database.
+  /** Register the serving catalog: the 15 analytic views and the 2
+    * monitoring rollups, each as a session temp view and as a GLOBAL temp
+    * view (visible to every session forked from `spark`'s context under
+    * the `global_temp` database), plus the six star base tables under
+    * `global_temp`.
+    *
+    * The views are MATERIALIZED here, all at once ([[graft.Concurrent.all]]):
+    * each view's rows below its final ORDER BY are `localCheckpoint`ed and
+    * the sort stays lazy on top ([[graft.views.View]]), so a served
+    * `SELECT … LIMIT n` is one top-k job over in-memory rows instead of a
+    * re-run of the star joins. The catalog therefore shows the warehouse
+    * as of this call; the next `registerCatalog` refreshes it and releases
+    * this one's blocks (a frame taken from the old catalog stops working
+    * then). `localCheckpoint` keeps no lineage: a lost executor loses its
+    * view blocks, and the remedy is to register again — a deliberate
+    * trade of fault tolerance for a serving catalog that costs no
+    * re-computation. The monitoring rollups are served whenever the apps
+    * have recorded run metrics under `<root>/monitoring/` (Grafana parity:
+    * reference `monitoring_schema.sql:58-80`).
     */
   def registerCatalog(spark: SparkSession, warehouseRoot: String,
                       runDate: String): Unit = {
@@ -47,33 +69,28 @@ object ServeApp {
       star.fact, star.bridge).zip(starTables).foreach {
       case (df, name) => df.createOrReplaceGlobalTempView(name)
     }
-    // Views.registerAll registers session-local names (the in-process
-    // surface); republish each under global_temp for served clients.
-    Views.registerAll(spark, star, lit(runDate))
-    val reg = spark.catalog.listTables()
-      .filter(col("isTemporary")).select("name").collect().map(_.getString(0))
-    reg.filter(_.startsWith("vw_")).foreach { v =>
-      spark.table(v).createOrReplaceGlobalTempView(v)
+    val monitoring = Seq(
+      "etl_metrics" -> Metrics.pipelineHealthView _,
+      "quality_metrics" -> Metrics.dataQualityTrendView _).collect {
+      case (table, view)
+          if Files.exists(Paths.get(s"$warehouseRoot/monitoring/$table")) =>
+        view(spark.read.parquet(s"$warehouseRoot/monitoring/$table"), lit(runDate))
     }
-    // the 2 monitoring views (Grafana parity: reference
-    // monitoring_schema.sql:58-80) — served whenever the apps have
-    // recorded run metrics under <root>/monitoring/
-    val mon = Seq(
-      ("etl_metrics", "vw_pipeline_health",
-        (df: org.apache.spark.sql.DataFrame) =>
-          graft.monitoring.Metrics.pipelineHealth(df, lit(runDate))),
-      ("quality_metrics", "vw_data_quality_trend",
-        (df: org.apache.spark.sql.DataFrame) =>
-          graft.monitoring.Metrics.dataQualityTrend(df, lit(runDate))))
-    mon.foreach { case (table, view, build) =>
-      val path = s"$warehouseRoot/monitoring/$table"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-        val v = build(spark.read.parquet(path))
-        v.createOrReplaceTempView(view)
-        v.createOrReplaceGlobalTempView(view)
-      }
+    val views = Views.all(star, lit(runDate)) ++ monitoring
+    val rows = Concurrent.all(
+      views.map(v => () => v.rows.localCheckpoint(eager = true)))
+    views.zip(rows).foreach { case (v, r) =>
+      val served = View(v.name, r, v.order: _*).df
+      served.createOrReplaceTempView(v.name)
+      served.createOrReplaceGlobalTempView(v.name)
     }
+    val previous = synchronized { val p = materialized; materialized = rows; p }
+    previous.foreach(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false)))
   }
+
+  /** The materialized view rows of the last [[registerCatalog]]. */
+  private var materialized = Seq.empty[DataFrame]
 
   /** Register the catalog and start the Thrift endpoint on `port`
     * (localhost bind; pass `bindHost` to expose it). Returns the server

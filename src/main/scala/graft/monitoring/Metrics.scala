@@ -3,6 +3,7 @@ package graft.monitoring
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.views.View
 
 /** ETL/quality run metrics (monitoring schema) + the 2 monitoring views
   * (A10) and DWH stats (A11).
@@ -52,7 +53,9 @@ object Metrics {
     * rollup — success ratio, avg duration, avg rows, last run.
     */
   def pipelineHealth(etlMetrics: DataFrame, now: Column): DataFrame =
-    etlMetrics
+    pipelineHealthView(etlMetrics, now).df
+  def pipelineHealthView(etlMetrics: DataFrame, now: Column): View =
+    View("vw_pipeline_health", etlMetrics
       .filter(col("started_at") >= date_sub(now.cast("date"), 7))
       .groupBy(col("dag_id"), col("task_id"))
       .agg(
@@ -61,22 +64,24 @@ object Metrics {
           count(lit(1)), 4).as("success_rate"),
         round(avg(col("duration_seconds")), 2).as("avg_duration_seconds"),
         round(avg(col("rows_out")), 1).as("avg_rows_out"),
-        max(col("started_at")).as("last_run_at"))
-      .orderBy(col("dag_id"), col("task_id"))
+        max(col("started_at")).as("last_run_at")),
+      col("dag_id"), col("task_id"))
 
   /** vw_data_quality_trend (monitoring_schema.sql:70-80): daily quality
     * rates over the last 7 days.
     */
   def dataQualityTrend(qualityMetrics: DataFrame, now: Column): DataFrame =
-    qualityMetrics
+    dataQualityTrendView(qualityMetrics, now).df
+  def dataQualityTrendView(qualityMetrics: DataFrame, now: Column): View =
+    View("vw_data_quality_trend", qualityMetrics
       .filter(col("recorded_at") >= date_sub(now.cast("date"), 7))
       .groupBy(col("execution_date"), col("validation_type"))
       .agg(
         round(avg(col("valid_rate")), 4).as("avg_valid_rate"),
         round(avg(col("duplicate_rate")), 4).as("avg_duplicate_rate"),
         sum(col("total_jobs")).as("total_jobs"),
-        count(when(col("status") === "failed", 1)).as("failed_checks"))
-      .orderBy(col("execution_date").desc, col("validation_type"))
+        count(when(col("status") === "failed", 1)).as("failed_checks")),
+      col("execution_date").desc, col("validation_type"))
 
   /** DWH stats (A11, dwh_dag.py:138-201): facts per date over the last 7
     * days + per-load-month rollups.

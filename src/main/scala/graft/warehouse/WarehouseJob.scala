@@ -2,12 +2,14 @@ package graft.warehouse
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Concurrent
 import graft.views.Star
 
 /** One warehouse day-run (the `jobinsight_dwh` DAG body, SURVEY.md §3.2):
   * staging slice → dimension merges (M1–M4) → fact build (M5+M6) → bridge
   * build (M7). Pure DataFrame-in/DataFrame-out so tests and the storage
-  * layer both drive it.
+  * layer both drive it. The four dimension merges run side by side;
+  * fact and bridge follow in order (see [[runDay]]).
   *
   * Scale: each step shuffles at most |current dims| + |one day of facts|;
   * dim lookups broadcast; fact/bridge history is only unioned, never
@@ -39,14 +41,22 @@ object WarehouseJob {
     * production).
     *
     * Stages are checkpointed IN DEPENDENCY ORDER and each later stage is
-    * built from the already-checkpointed frames, so (a) the dim merges
+    * built from the already-checkpointed frames, so the dim merges
     * execute once instead of being re-derived inside the fact/bridge
-    * plans, and (b) `onStage` receives a per-stage wall time
-    * (`scd2_dim_job`, `scd2_dim_company`, `dim_location`, `dim_date`,
-    * `fact`, `bridge`) — the instrumentation that localizes a regression
-    * inside the otherwise-opaque day-build composite. The checkpoints
-    * also let a caller overwrite the very files the input plans read
-    * from ([[graft.app.Apps.runWarehouseDay]] does).
+    * plans, and the bridge reads today's slice of the checkpointed fact
+    * rather than re-running the fact build (and its key minting). The
+    * four dimension merges depend only on the previous star and the
+    * staging slice, so they run side by side ([[graft.Concurrent.all]]);
+    * the fact waits for them, the bridge for the fact.
+    *
+    * `onStage` receives each stage's wall time (`scd2_dim_job`,
+    * `scd2_dim_company`, `dim_location`, `dim_date`, `fact`, `bridge`),
+    * always on the calling thread and in that order — the
+    * instrumentation that localizes a regression inside the
+    * otherwise-opaque day-build composite. The four dimension times
+    * overlap, so the stage times no longer sum to the day. The
+    * checkpoints also let a caller overwrite the very files the input
+    * plans read from ([[graft.app.Apps.runWarehouseDay]] does).
     */
   def runDay(spark: SparkSession, state: State, staging: DataFrame,
              runDate: String,
@@ -55,21 +65,28 @@ object WarehouseJob {
     val today = java.sql.Date.valueOf(runDate)
     val yesterday = java.sql.Date.valueOf(today.toLocalDate.minusDays(1))
 
-    def staged(name: String)(df: => DataFrame): DataFrame = {
+    def timed(df: => DataFrame): (DataFrame, Double) = {
       val t0 = System.nanoTime()
-      val out = df.localCheckpoint(eager = true)
-      onStage(name, (System.nanoTime() - t0) / 1e9)
+      (df.localCheckpoint(eager = true), (System.nanoTime() - t0) / 1e9)
+    }
+    def staged(name: String)(df: => DataFrame): DataFrame = {
+      val (out, secs) = timed(df)
+      onStage(name, secs)
       out
     }
 
-    val dimJob = staged("scd2_dim_job")(
-      Dimensions.mergeDimJob(state.star.dimJob, staging, rd))
-    val dimCompany = staged("scd2_dim_company")(
-      Dimensions.mergeDimCompany(state.star.dimCompany, staging, rd))
-    val dimLocation = staged("dim_location")(
-      Dimensions.mergeDimLocation(state.star.dimLocation, staging))
-    val dimDate = staged("dim_date")(DimDate.mergeInto(state.star.dimDate,
-      staging, Seq(col("posted_time"), col("due_date"), col("crawled_at")), rd))
+    val dims = Seq[(String, () => (DataFrame, Double))](
+      "scd2_dim_job" -> (() => timed(
+        Dimensions.mergeDimJob(state.star.dimJob, staging, rd))),
+      "scd2_dim_company" -> (() => timed(
+        Dimensions.mergeDimCompany(state.star.dimCompany, staging, rd))),
+      "dim_location" -> (() => timed(
+        Dimensions.mergeDimLocation(state.star.dimLocation, staging))),
+      "dim_date" -> (() => timed(DimDate.mergeInto(state.star.dimDate, staging,
+        Seq(col("posted_time"), col("due_date"), col("crawled_at")), rd))))
+    val merged = Concurrent.all(dims.map(_._2))
+    dims.map(_._1).zip(merged).foreach { case (name, (_, secs)) => onStage(name, secs) }
+    val Seq(dimJob, dimCompany, dimLocation, dimDate) = merged.map(_._1)
 
     val factYesterday = state.star.fact.filter(col("date_id") === lit(yesterday))
     val factOther = state.star.fact.filter(col("date_id") =!= lit(runDate).cast("date"))
@@ -82,8 +99,8 @@ object WarehouseJob {
     val fact = staged("fact")(factOther.unionByName(factToday))
 
     val bridge = staged("bridge")(Bridge.buildDay(
-      state.star.bridge, factToday, factTodayExisting, factYesterday,
-      staging, dimJob, dimLocation,
+      state.star.bridge, fact.filter(col("date_id") === lit(runDate).cast("date")),
+      factTodayExisting, factYesterday, staging, dimJob, dimLocation,
       maxBridgeId = maxOf(state.star.bridge, "bridge_id")))
 
     State(Star(dimJob, dimCompany, dimLocation, dimDate, fact, bridge))

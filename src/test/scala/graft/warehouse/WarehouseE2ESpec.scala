@@ -227,4 +227,14 @@ class WarehouseE2ESpec extends SparkSpec {
       .select("job_id").collect().map(_.getString(0)).toSet
     assert(hcm == Set("B"))
   }
+
+  test("runDay reports its six stages once each, in order, on the calling thread") {
+    val caller = Thread.currentThread().getId
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    WarehouseJob.runDay(spark, WarehouseJob.emptyState(spark), stagingDf(day1),
+      "2026-01-01", onStage = (stage, _) => seen += ((stage, Thread.currentThread().getId)))
+    assert(seen.map(_._1) == Seq("scd2_dim_job", "scd2_dim_company", "dim_location",
+      "dim_date", "fact", "bridge"))
+    assert(seen.forall(_._2 == caller))
+  }
 }
