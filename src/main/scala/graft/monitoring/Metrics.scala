@@ -54,6 +54,7 @@ object Metrics {
     */
   def pipelineHealth(etlMetrics: DataFrame, now: Column): DataFrame =
     pipelineHealthView(etlMetrics, now).df
+  /** [[pipelineHealth]] split at its ORDER BY, as the served catalog holds it. */
   def pipelineHealthView(etlMetrics: DataFrame, now: Column): View =
     View("vw_pipeline_health", etlMetrics
       .filter(col("started_at") >= date_sub(now.cast("date"), 7))
@@ -72,6 +73,7 @@ object Metrics {
     */
   def dataQualityTrend(qualityMetrics: DataFrame, now: Column): DataFrame =
     dataQualityTrendView(qualityMetrics, now).df
+  /** [[dataQualityTrend]] split at its ORDER BY, as the served catalog holds it. */
   def dataQualityTrendView(qualityMetrics: DataFrame, now: Column): View =
     View("vw_data_quality_trend", qualityMetrics
       .filter(col("recorded_at") >= date_sub(now.cast("date"), 7))
