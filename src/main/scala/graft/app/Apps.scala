@@ -2,6 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Concurrent
 import graft.functions.{Cleaners, Hashes, Salary}
 import graft.ingest.HtmlParser
@@ -10,7 +11,7 @@ import graft.operators.Merge
 import graft.quality.{QualityGate, Validators}
 import graft.storage.TableStore
 import graft.views.{Star, Views}
-import graft.warehouse.WarehouseJob
+import graft.warehouse.{Schemas, WarehouseJob}
 import scala.jdk.CollectionConverters._
 
 /** DAG-equivalent entry points (SURVEY.md §3): each app is the Spark
@@ -296,22 +297,26 @@ object Apps {
   }
 
   /** Read the star schema back from disk (empty frames before day 1).
-    * Each parquet read infers its schema with a Spark job, and the six
-    * reads are independent, so they run side by side.
+    * Each table is read with its declared [[Schemas]] schema, so a read
+    * runs no Spark job to infer one. An absent table is a `limit(0)`
+    * frame, which the optimizer knows to be empty and prunes the joins
+    * over.
     */
   def readStar(spark: SparkSession, warehouseRoot: String): Star = {
-    val dwh = s"$warehouseRoot/dwh"
-    val empty = WarehouseJob.emptyState(spark).star
-    val Seq(dimJob, dimCompany, dimLocation, dimDate, fact, bridge) = Concurrent.all(Seq(
-      () => readOrEmpty(spark, s"$dwh/DimJob", empty.dimJob),
-      () => readOrEmpty(spark, s"$dwh/DimCompany", empty.dimCompany),
-      () => if (exists(s"$dwh/DimLocation"))
-        spark.read.parquet(s"$dwh/DimLocation") else empty.dimLocation,
-      () => readOrEmpty(spark, s"$dwh/DimDate", empty.dimDate),
-      () => readOrEmpty(spark, s"$dwh/FactJobPostingDaily", empty.fact)
-        .select(empty.fact.columns.toIndexedSeq.map(col): _*), // partition col read-back order
-      () => readOrEmpty(spark, s"$dwh/FactJobLocationBridge", empty.bridge)))
-    Star(dimJob, dimCompany, dimLocation, dimDate, fact, bridge)
+    def read(table: String, schema: StructType, absent: => DataFrame): DataFrame = {
+      val path = s"$warehouseRoot/dwh/$table"
+      if (exists(path)) spark.read.schema(schema).parquet(path) else absent
+    }
+    def dwh(table: String, schema: StructType): DataFrame =
+      read(table, schema, Schemas.empty(spark, schema).limit(0))
+    Star(
+      dwh("DimJob", Schemas.dimJob),
+      dwh("DimCompany", Schemas.dimCompany),
+      read("DimLocation", Schemas.dimLocation, Schemas.seedDimLocation(spark)),
+      dwh("DimDate", Schemas.dimDate),
+      dwh("FactJobPostingDaily", Schemas.factDaily) // partition column read back last
+        .select(Schemas.factDaily.fieldNames.toIndexedSeq.map(col): _*),
+      dwh("FactJobLocationBridge", Schemas.bridge))
   }
 
   /** `jobinsight_archive` + maintenance (§3 secondary): archive old raw
@@ -348,25 +353,18 @@ object Apps {
       denormalized(readStar(spark, warehouseRoot)),
       s"$warehouseRoot/parquet/job_postings", Seq("load_month"))
 
-  /** The export's enrichment join, star in → denormalized rows out —
+  /** The export's enrichment join, star in → denormalized rows out: the
+    * facts with a current job and company in [[Views.current]] —
     * shared by [[exportDenormalized]] and the `export_denorm` gate so the
     * oracle verifies the REAL export plan, not an analogue.
     */
-  def denormalized(star: graft.views.Star): DataFrame =
-    star.fact.as("f")
-      .join(broadcast(star.dimJob.filter(col("is_current"))).as("j"),
-        col("f.job_sk") === col("j.job_sk"))
-      .join(broadcast(star.dimCompany.filter(col("is_current"))).as("c"),
-        col("f.company_sk") === col("c.company_sk"))
-      .select(col("f.fact_id"), col("j.job_id"), col("j.title"),
-        col("c.company_name"), col("c.verified_employer"), col("f.date_id"),
-        col("f.salary_min"), col("f.salary_max"), col("f.salary_type"),
-        col("f.due_date"), col("f.posted_time"), col("j.skills"),
-        col("j.job_url"), col("f.load_month"))
-
-  /** Register the BI surface (§3.3). */
-  def registerViews(spark: SparkSession, warehouseRoot: String, runDate: String): Unit =
-    Views.registerAll(spark, readStar(spark, warehouseRoot), lit(runDate))
+  def denormalized(star: Star): DataFrame =
+    Views.current(star).filter(col("has_job") && col("has_company"))
+      .select(col("fact_id"), col("job_id"), col("title"),
+        col("company_name"), col("verified_employer"), col("date_id"),
+        col("salary_min"), col("salary_max"), col("salary_type"),
+        col("due_date"), col("posted_time"), col("skills"),
+        col("job_url"), col("load_month"))
 
   /** Whether a table exists, after putting back a snapshot that a
     * crashed [[TableStore.writeSnapshot]] left parked at `<path>.__old`.

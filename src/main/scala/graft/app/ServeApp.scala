@@ -31,8 +31,10 @@ import graft.views.{View, Views}
   * started from. (The `singleSession=true` alternative shares the
   * parent session and with it every such mutation.)
   *
-  * The views are materialized in memory when the catalog is registered
-  * and refreshed by the next registration (see [[registerCatalog]]).
+  * The views are materialized in memory when the catalog is registered,
+  * over one shared current-star relation that is materialized first and
+  * released once the views exist, and refreshed by the next registration
+  * (see [[registerCatalog]]).
   */
 object ServeApp {
 
@@ -48,19 +50,23 @@ object ServeApp {
     * the `global_temp` database), plus the six star base tables under
     * `global_temp`.
     *
-    * The views are MATERIALIZED here, all at once ([[graft.Concurrent.all]]):
-    * each view's rows below its final ORDER BY are `localCheckpoint`ed and
-    * the sort stays lazy on top ([[graft.views.View]]), so a served
-    * `SELECT … LIMIT n` is one top-k job over in-memory rows instead of a
-    * re-run of the star joins. The catalog therefore shows the warehouse
-    * as of this call; the next `registerCatalog` refreshes it and releases
-    * this one's blocks (a frame taken from the old catalog stops working
-    * then). `localCheckpoint` keeps no lineage: a lost executor loses its
-    * view blocks, and the remedy is to register again — a deliberate
-    * trade of fault tolerance for a serving catalog that costs no
-    * re-computation. The monitoring rollups are served whenever the apps
-    * have recorded run metrics under `<root>/monitoring/` (Grafana parity:
-    * reference `monitoring_schema.sql:58-80`).
+    * The views are MATERIALIZED here. First the shared current-star
+    * relation ([[graft.views.Views.current]]) is `localCheckpoint`ed, so
+    * the star is read and the dims broadcast once; then all views at once
+    * over it ([[graft.Concurrent.all]]): each view's rows below its final
+    * ORDER BY are `localCheckpoint`ed and the sort stays lazy on top
+    * ([[graft.views.View]]), so a served `SELECT … LIMIT n` is one top-k
+    * job over in-memory rows instead of a re-run of the star joins. The
+    * shared relation's blocks are released as soon as the views exist.
+    * The catalog therefore shows the warehouse as of this call; the next
+    * `registerCatalog` refreshes it and releases this one's blocks (a
+    * frame taken from the old catalog stops working then).
+    * `localCheckpoint` keeps no lineage: a lost executor loses its view
+    * blocks, and the remedy is to register again — a deliberate trade of
+    * fault tolerance for a serving catalog that costs no re-computation.
+    * The monitoring rollups are served whenever the apps have recorded
+    * run metrics under `<root>/monitoring/` (Grafana parity: reference
+    * `monitoring_schema.sql:58-80`).
     */
   def registerCatalog(spark: SparkSession, warehouseRoot: String,
                       runDate: String): Unit = {
@@ -70,27 +76,34 @@ object ServeApp {
       case (df, name) => df.createOrReplaceGlobalTempView(name)
     }
     val monitoring = Seq(
-      "etl_metrics" -> Metrics.pipelineHealthView _,
-      "quality_metrics" -> Metrics.dataQualityTrendView _).collect {
-      case (table, view)
+      ("etl_metrics", Metrics.etlMetricsSchema, Metrics.pipelineHealth _),
+      ("quality_metrics", Metrics.qualityMetricsSchema, Metrics.dataQualityTrend _)).collect {
+      case (table, schema, view)
           if Files.exists(Paths.get(s"$warehouseRoot/monitoring/$table")) =>
-        view(spark.read.parquet(s"$warehouseRoot/monitoring/$table"), lit(runDate))
+        view(spark.read.schema(schema).parquet(s"$warehouseRoot/monitoring/$table"),
+          lit(runDate))
     }
-    val views = Views.all(star, lit(runDate)) ++ monitoring
-    val rows = Concurrent.all(
-      views.map(v => () => v.rows.localCheckpoint(eager = true)))
+    val current = Views.current(star).localCheckpoint(eager = true)
+    val views = Views.all(current, lit(runDate)) ++ monitoring
+    val rows =
+      try Concurrent.all(views.map(v => () => v.rows.localCheckpoint(eager = true)))
+      finally release(current)
     views.zip(rows).foreach { case (v, r) =>
       val served = View(v.name, r, v.order: _*).df
       served.createOrReplaceTempView(v.name)
       served.createOrReplaceGlobalTempView(v.name)
     }
     val previous = synchronized { val p = materialized; materialized = rows; p }
-    previous.foreach(_.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false)))
+    previous.foreach(release)
   }
 
   /** The materialized view rows of the last [[registerCatalog]]. */
   private var materialized = Seq.empty[DataFrame]
+
+  /** Drop the blocks of a `localCheckpoint`ed frame. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** Register the catalog and start the Thrift endpoint on `port`
     * (localhost bind; pass `bindHost` to expose it). Returns the server

@@ -150,7 +150,7 @@ object QualityGates {
       col("value").as("duration_seconds"),
       col("user_id").as("rows_out"),
       when(col("value") > 1.0, "success").otherwise("failed").as("status"))
-    Metrics.pipelineHealth(metrics, lit("2024-01-31"))
+    Metrics.pipelineHealth(metrics, lit("2024-01-31")).df
       .withColumn("last_run_at",
         date_format(col("last_run_at"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
   }

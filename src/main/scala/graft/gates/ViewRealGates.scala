@@ -122,12 +122,12 @@ object ViewRealGates {
       .select((col("fact_id") * 100 + col("location_sk")).as("bridge_id"),
         col("fact_id"), col("location_sk").cast("long").as("location_sk"))
 
-    Star(dimJob, dimCompany, dimLocation,
-      Schemas.empty(s, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("date_id",
-          org.apache.spark.sql.types.DateType)))),
+    Star(dimJob, dimCompany, dimLocation, Schemas.empty(s, Schemas.dimDate),
       fact, bridge)
   }
+
+  /** [[Views.current]] over the synthesized star: what every view gate reads. */
+  private def current(s: SparkSession, dir: String): DataFrame = Views.current(star(s, dir))
 
   /** The same star as DuckDB CTE text. */
   val starSql: String =
@@ -173,7 +173,7 @@ object ViewRealGates {
 
   /** vw_current_jobs over the synthesized star. */
   def realCurrentJobs(s: SparkSession, dir: String): DataFrame =
-    Views.currentJobs(star(s, dir))
+    Views.currentJobs(current(s, dir)).df
       .select(col("job_sk"), col("job_id"), col("title"), col("company_sk"),
         col("company_name"), col("verified_employer"), col("date_id"),
         col("salary_min").cast("double").as("salary_min"),
@@ -194,7 +194,7 @@ object ViewRealGates {
 
   /** vw_job_locations over the synthesized star. */
   def realJobLocations(s: SparkSession, dir: String): DataFrame =
-    Views.jobLocations(star(s, dir))
+    Views.jobLocations(current(s, dir)).df
       .orderBy("fact_id", "location_sk")
 
   val realJobLocationsSql: String =
@@ -211,7 +211,7 @@ object ViewRealGates {
   /** vw_jobs_hanoi over the synthesized star, anchored to a populated
     * date. */
   def realJobsHanoi(s: SparkSession, dir: String): DataFrame =
-    Views.jobsHanoi(star(s, dir), lit(anchorDate(s, dir)))
+    Views.jobsHanoi(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
       .drop("skills", "due_date", "time_remaining")
@@ -235,7 +235,7 @@ object ViewRealGates {
   /** vw_verified_employers (sorted STRING_AGG of cities, no averages)
     * over the synthesized star. */
   def realVerified(s: SparkSession, dir: String): DataFrame =
-    Views.verifiedEmployers(star(s, dir), lit(anchorDate(s, dir)))
+    Views.verifiedEmployers(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
       .drop("due_date")
@@ -261,7 +261,7 @@ object ViewRealGates {
 
   /** vw_monthly_stats over the synthesized star (decimal-exact AVG). */
   def realMonthlyStats(s: SparkSession, dir: String): DataFrame =
-    Views.monthlyStats(star(s, dir))
+    Views.monthlyStats(current(s, dir)).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy(col("load_month").desc)
@@ -280,7 +280,7 @@ object ViewRealGates {
 
   /** vw_top_companies over the synthesized star. */
   def realTopCompanies(s: SparkSession, dir: String): DataFrame =
-    Views.topCompanies(star(s, dir))
+    Views.topCompanies(current(s, dir)).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy("company_sk")
@@ -300,7 +300,7 @@ object ViewRealGates {
 
   /** vw_top_locations over the synthesized star. */
   def realTopLocations(s: SparkSession, dir: String): DataFrame =
-    Views.topLocations(star(s, dir))
+    Views.topLocations(current(s, dir)).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy("location_sk")
@@ -322,7 +322,7 @@ object ViewRealGates {
     * engine-portable).
     */
   def realFullDetails(s: SparkSession, dir: String): DataFrame =
-    Views.jobFullDetails(star(s, dir))
+    Views.jobFullDetails(current(s, dir)).df
       .drop("skills")
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
@@ -348,7 +348,7 @@ object ViewRealGates {
 
   /** vw_jobs_today over the synthesized star, anchored. */
   def realJobsToday(s: SparkSession, dir: String): DataFrame =
-    Views.jobsToday(star(s, dir), lit(anchorDate(s, dir)))
+    Views.jobsToday(current(s, dir), lit(anchorDate(s, dir))).df
       .drop("skills")
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
@@ -374,7 +374,7 @@ object ViewRealGates {
 
   /** vw_jobs_hcm over the synthesized star, anchored. */
   def realJobsHcm(s: SparkSession, dir: String): DataFrame =
-    Views.jobsHcm(star(s, dir), lit(anchorDate(s, dir)))
+    Views.jobsHcm(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
       .drop("skills", "due_date", "time_remaining")
@@ -400,7 +400,7 @@ object ViewRealGates {
     * due_date varies 0..20 days so the 7-day window is populated).
     */
   def realExpiringSoon(s: SparkSession, dir: String): DataFrame =
-    Views.jobsExpiringSoon(star(s, dir), lit(anchorDate(s, dir)))
+    Views.jobsExpiringSoon(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("salary_min", col("salary_min").cast("double"))
       .withColumn("salary_max", col("salary_max").cast("double"))
       .orderBy("job_id", "salary_min", "due_date")
@@ -429,7 +429,7 @@ object ViewRealGates {
     * on the bucket label (engine-portable) rather than the CASE sort key.
     */
   def realSalaryDist(s: SparkSession, dir: String): DataFrame =
-    Views.salaryDistribution(star(s, dir), lit(anchorDate(s, dir)))
+    Views.salaryDistribution(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("avg_min", col("avg_min").cast("double"))
       .withColumn("avg_max", col("avg_max").cast("double"))
       .orderBy("salary_range")
@@ -455,7 +455,7 @@ object ViewRealGates {
 
   /** vw_location_stats over the synthesized star, anchored. */
   def realLocationStats(s: SparkSession, dir: String): DataFrame =
-    Views.locationStats(star(s, dir), lit(anchorDate(s, dir)))
+    Views.locationStats(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy("city")
@@ -477,7 +477,7 @@ object ViewRealGates {
 
   /** vw_company_stats over the synthesized star, anchored. */
   def realCompanyStats(s: SparkSession, dir: String): DataFrame =
-    Views.companyStats(star(s, dir), lit(anchorDate(s, dir)))
+    Views.companyStats(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy("company_name")
@@ -497,7 +497,7 @@ object ViewRealGates {
 
   /** vw_daily_summary over the synthesized star. */
   def realDailySummary(s: SparkSession, dir: String): DataFrame =
-    Views.dailySummary(star(s, dir))
+    Views.dailySummary(current(s, dir)).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy(col("date_id").desc)
@@ -517,7 +517,7 @@ object ViewRealGates {
 
   /** vw_skills_demand over the synthesized star, anchored (true top-50). */
   def realSkillsDemand(s: SparkSession, dir: String): DataFrame =
-    Views.skillsDemand(star(s, dir), lit(anchorDate(s, dir)))
+    Views.skillsDemand(current(s, dir), lit(anchorDate(s, dir))).df
       .withColumn("avg_salary_min", col("avg_salary_min").cast("double"))
       .withColumn("avg_salary_max", col("avg_salary_max").cast("double"))
       .orderBy(col("job_count").desc, col("skill"))

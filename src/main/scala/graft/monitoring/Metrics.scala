@@ -52,10 +52,7 @@ object Metrics {
   /** vw_pipeline_health (monitoring_schema.sql:58-68): per dag/task 7-day
     * rollup — success ratio, avg duration, avg rows, last run.
     */
-  def pipelineHealth(etlMetrics: DataFrame, now: Column): DataFrame =
-    pipelineHealthView(etlMetrics, now).df
-  /** [[pipelineHealth]] split at its ORDER BY, as the served catalog holds it. */
-  def pipelineHealthView(etlMetrics: DataFrame, now: Column): View =
+  def pipelineHealth(etlMetrics: DataFrame, now: Column): View =
     View("vw_pipeline_health", etlMetrics
       .filter(col("started_at") >= date_sub(now.cast("date"), 7))
       .groupBy(col("dag_id"), col("task_id"))
@@ -71,10 +68,7 @@ object Metrics {
   /** vw_data_quality_trend (monitoring_schema.sql:70-80): daily quality
     * rates over the last 7 days.
     */
-  def dataQualityTrend(qualityMetrics: DataFrame, now: Column): DataFrame =
-    dataQualityTrendView(qualityMetrics, now).df
-  /** [[dataQualityTrend]] split at its ORDER BY, as the served catalog holds it. */
-  def dataQualityTrendView(qualityMetrics: DataFrame, now: Column): View =
+  def dataQualityTrend(qualityMetrics: DataFrame, now: Column): View =
     View("vw_data_quality_trend", qualityMetrics
       .filter(col("recorded_at") >= date_sub(now.cast("date"), 7))
       .groupBy(col("execution_date"), col("validation_type"))

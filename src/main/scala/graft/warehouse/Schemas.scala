@@ -41,6 +41,20 @@ object Schemas {
     StructField("city", StringType, nullable = false),
     StructField("country", StringType, nullable = false)))
 
+  /** The generated calendar ([[DimDate.attributes]]). */
+  val dimDate: StructType = StructType(Seq(
+    StructField("date_id", DateType),
+    StructField("day", LongType),
+    StructField("month", LongType),
+    StructField("quarter", LongType),
+    StructField("year", LongType),
+    StructField("week_of_year", LongType),
+    StructField("day_of_week", LongType),
+    StructField("weekday_name", StringType),
+    StructField("is_weekend", BooleanType),
+    StructField("year_month", StringType),
+    StructField("quarter_name", StringType)))
+
   val factDaily: StructType = StructType(Seq(
     StructField("fact_id", LongType, nullable = false),
     StructField("job_sk", LongType, nullable = false),

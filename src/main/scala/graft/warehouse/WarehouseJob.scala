@@ -24,14 +24,7 @@ object WarehouseJob {
     dimJob = Schemas.empty(spark, Schemas.dimJob),
     dimCompany = Schemas.empty(spark, Schemas.dimCompany),
     dimLocation = Schemas.seedDimLocation(spark),
-    dimDate = Schemas.empty(spark,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("date_id",
-          org.apache.spark.sql.types.DateType)))
-        .add("day", "long").add("month", "long").add("quarter", "long")
-        .add("year", "long").add("week_of_year", "long").add("day_of_week", "long")
-        .add("weekday_name", "string").add("is_weekend", "boolean")
-        .add("year_month", "string").add("quarter_name", "string")),
+    dimDate = Schemas.empty(spark, Schemas.dimDate),
     fact = Schemas.empty(spark, Schemas.factDaily),
     bridge = Schemas.empty(spark, Schemas.bridge)))
 

@@ -120,7 +120,7 @@ class AppsE2ESpec extends SparkSpec {
 
   test("views answer over the on-disk star") {
     ran
-    Apps.registerViews(spark, root, "2026-02-01")
+    ServeApp.registerCatalog(spark, root, "2026-02-01")
     val top = spark.sql("SELECT company_name, job_count FROM vw_top_companies").head()
     assert(top.getString(0) == "Acme Software") // F2 recapitalization
     assert(top.getLong(1) == 60)
@@ -181,7 +181,7 @@ class AppsE2ESpec extends SparkSpec {
     // the served monitoring rollup answers over the recorded rows
     val health = graft.monitoring.Metrics.pipelineHealth(
       etl, org.apache.spark.sql.functions.lit(
-        java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString))
+        java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString)).df
       .filter(col("dag_id") === "jobinsight_dwh").head()
     assert(health.getAs[Double]("success_rate") == 1.0)
   }

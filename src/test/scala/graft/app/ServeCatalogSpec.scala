@@ -41,27 +41,12 @@ class ServeCatalogSpec extends SparkSpec {
 
   /** The 17 served names and their lazy definitions over the on-disk star. */
   private def definitions(runDate: String): Map[String, DataFrame] = {
-    val s = Apps.readStar(spark, root)
     val d = lit(runDate)
     def monitoring(t: String) = spark.read.parquet(s"$root/monitoring/$t")
-    Map(
-      "vw_current_jobs" -> Views.currentJobs(s),
-      "vw_job_locations" -> Views.jobLocations(s),
-      "vw_monthly_stats" -> Views.monthlyStats(s),
-      "vw_top_companies" -> Views.topCompanies(s),
-      "vw_top_locations" -> Views.topLocations(s),
-      "vw_job_full_details" -> Views.jobFullDetails(s),
-      "vw_jobs_today" -> Views.jobsToday(s, d),
-      "vw_jobs_hanoi" -> Views.jobsHanoi(s, d),
-      "vw_jobs_hcm" -> Views.jobsHcm(s, d),
-      "vw_jobs_expiring_soon" -> Views.jobsExpiringSoon(s, d),
-      "vw_salary_distribution" -> Views.salaryDistribution(s, d),
-      "vw_verified_employers" -> Views.verifiedEmployers(s, d),
-      "vw_location_stats" -> Views.locationStats(s, d),
-      "vw_company_stats" -> Views.companyStats(s, d),
-      "vw_skills_demand" -> Views.skillsDemand(s, d),
-      "vw_pipeline_health" -> Metrics.pipelineHealth(monitoring("etl_metrics"), d),
-      "vw_data_quality_trend" -> Metrics.dataQualityTrend(monitoring("quality_metrics"), d))
+    (Views.all(Views.current(Apps.readStar(spark, root)), d) ++ Seq(
+      Metrics.pipelineHealth(monitoring("etl_metrics"), d),
+      Metrics.dataQualityTrend(monitoring("quality_metrics"), d)))
+      .map(v => v.name -> v.df).toMap
   }
 
   /** Whether the plan's last operator, under aliases and projections, is a sort. */
@@ -95,9 +80,19 @@ class ServeCatalogSpec extends SparkSpec {
     spark.table(v).queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }
   }
 
+  /** Register the catalog for `runDate` and check that the persistent
+    * RDDs the registration added are exactly the served views' own: the
+    * shared current-star relation it materialized first is released. */
+  private def register(runDate: String): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    ServeApp.registerCatalog(spark, root, runDate)
+    assert(sc.getPersistentRDDs.keySet -- before == servedRddIds())
+  }
+
   test("every served name holds the rows of its lazy definition") {
     day("2026-04-01", 1 to 60)
-    ServeApp.registerCatalog(spark, root, "2026-04-01")
+    register("2026-04-01")
     assertServes("2026-04-01")
   }
 
@@ -107,7 +102,7 @@ class ServeCatalogSpec extends SparkSpec {
     day("2026-04-02", 21 to 80)
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.size
-    ServeApp.registerCatalog(spark, root, "2026-04-02")
+    register("2026-04-02")
     assertServes("2026-04-02")
     assert(sc.getPersistentRDDs.size <= persistedBefore)
     assert(sc.getPersistentRDDs.keySet.intersect(first).isEmpty)

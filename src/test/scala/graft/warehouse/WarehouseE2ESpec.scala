@@ -200,30 +200,31 @@ class WarehouseE2ESpec extends SparkSpec {
 
   test("views: top_companies, salary_distribution, skills_demand over day 2") {
     val st = states(1)
-    val top = Views.topCompanies(st.star).collect()
+    val cur = Views.current(st.star)
+    val top = Views.topCompanies(cur).df.collect()
     assert(top.nonEmpty)
     val x = top.find(_.getAs[String]("company_name") == "Công Ty X").get
     assert(x.getAs[Long]("job_count") >= 2)
 
-    val dist = Views.salaryDistribution(st.star, lit("2026-01-02")).collect()
+    val dist = Views.salaryDistribution(cur, lit("2026-01-02")).df.collect()
     // 4 snapshot rows on day 2 (incl. A's stale-sk carried row — the view
     // has no dim join so the raw snapshot count shows); raw-VND quirk puts
     // every priced job in 'Trên 50M'.
     assert(dist.map(_.getAs[Long]("job_count")).sum == 4)
 
-    Views.registerAll(spark, st.star, lit("2026-01-02"))
-    val skills = spark.sql(
-      "SELECT skill, job_count FROM vw_skills_demand ORDER BY job_count DESC, skill").collect()
+    val skills = Views.skillsDemand(cur, lit("2026-01-02")).df
+      .select("skill", "job_count").collect()
     // B's carried day-2 fact keeps Java in demand alongside A's and C's skills.
     assert(skills.map(_.getString(0)).toSet == Set("Python", "SQL", "Spark", "Java"))
   }
 
   test("views: jobs_hanoi finds A, jobs_hcm finds B on day 1") {
     val st = states(0)
-    val hanoi = Views.jobsHanoi(st.star, lit("2026-01-01"))
+    val cur = Views.current(st.star)
+    val hanoi = Views.jobsHanoi(cur, lit("2026-01-01")).df
       .select("job_id").collect().map(_.getString(0)).toSet
     assert(hanoi == Set("A", "B")) // B is HCM & Hà Nội
-    val hcm = Views.jobsHcm(st.star, lit("2026-01-01"))
+    val hcm = Views.jobsHcm(cur, lit("2026-01-01")).df
       .select("job_id").collect().map(_.getString(0)).toSet
     assert(hcm == Set("B"))
   }
