@@ -334,23 +334,13 @@ object Bench {
           .withColumn("posted_time", lit("2026-01-02 06:00:00").cast("timestamp"))
           .withColumn("crawled_at", lit("2026-01-02 06:00:00").cast("timestamp"))
           .withColumn("crawl_date", lit("2026-01-02"))
-        day1.unionByName(day2)
-          .write.partitionBy("crawl_date").mode("overwrite")
-          .parquet(s"$root/staging_jobs")
+        graft.storage.Store.commit(root, Seq(graft.storage.Store.Snapshot(
+          "staging_jobs", day1.unionByName(day2), Seq("crawl_date"))))
       }
       val whBase = "target/bench_wh_base"
       val whScaled = s"$scaleDir/warehouse"
       writeStaging(sfDir, whBase)
       writeStaging(scaleDir, whScaled)
-      // Drop any dwh state a previous bench run left behind: runWarehouseDay
-      // reads prior dims/facts via readOrEmpty, so stale state would turn
-      // the intended mint-everything day-1 build into a light no-op merge
-      // and make timings incomparable across runs.
-      def deleteRecursive(path: String): Unit = {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(p, true)
-      }
       scaleGen = (System.nanoTime() - g0) / 1e9
       stampLoad("after_scale_gen")
 
@@ -367,7 +357,10 @@ object Bench {
                        st1: Seq[(String, Double)], st2: Seq[(String, Double)])
       def timeCycle(root: String): Option[Cycle] =
         try {
-          deleteRecursive(s"$root/dwh")
+          // the star a previous cycle or bench run left behind would turn
+          // the intended mint-everything day-1 build into a light no-op
+          // merge and make timings incomparable across runs
+          graft.app.Apps.resetStar(spark, root)
           val st1 = scala.collection.mutable.LinkedHashMap[String, Double]()
           val t0 = System.nanoTime()
           graft.app.Apps.runWarehouseDay(spark, root, "2026-01-01",

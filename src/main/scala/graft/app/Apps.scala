@@ -2,27 +2,30 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import graft.Concurrent
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.functions.{Cleaners, Hashes, Salary}
 import graft.ingest.HtmlParser
 import graft.monitoring.Metrics
 import graft.operators.Merge
 import graft.quality.{QualityGate, Validators}
-import graft.storage.TableStore
+import graft.storage.{Store, TableStore}
 import graft.views.{Star, Views}
 import graft.warehouse.{Schemas, WarehouseJob}
-import scala.jdk.CollectionConverters._
 
 /** DAG-equivalent entry points (SURVEY.md §3): each app is the Spark
-  * counterpart of one reference Airflow DAG, wired over the parquet table
-  * layer. Layout under a warehouse root:
+  * counterpart of one reference Airflow DAG. A warehouse root is one
+  * [[Store]]: every table below is committed through its `_head`, a day's
+  * tables in one commit, and a table directory holds exactly its live
+  * files once a commit returns.
   *
   * {{{
+  *   <root>/_head                the live files of every table
   *   <root>/raw_jobs/            (full snapshot)
   *   <root>/staging_jobs/        crawl_date=YYYY-MM-DD/   (partitioned)
   *   <root>/dwh/<DimX|Fact...>/  facts partitioned by date_id
+  *   <root>/monitoring/          etl_metrics/  quality_metrics/  (appends)
   *   <root>/archive/raw_jobs/    year=YYYY/month=MM/
+  *   <root>/_pins/day=<D>/       the star as of day D (hard links)
   * }}}
   */
 object Apps {
@@ -67,24 +70,19 @@ object Apps {
     QualityGate.evaluate(crawlStats, QualityGate.crawlConfig)
 
     // Raw merge (S5/M8) over the snapshot table.
-    val rawPath = s"$warehouseRoot/raw_jobs"
-    val incoming = jobs.withColumn("crawled_at",
-      lit(runDate + " 06:00:00").cast("timestamp"))
-    val existing = readOrEmpty(spark, rawPath, incoming)
-    val merged = Merge.upsert(existing, incoming,
+    val crawledAt = lit(runDate + " 06:00:00").cast("timestamp")
+    val incoming = jobs.withColumn("crawled_at", crawledAt)
+    val merged = Merge.upsert(
+      Store.read(spark, warehouseRoot, "raw_jobs", incoming.schema), incoming,
       key = Seq("job_id"),
       tracked = Seq("title", "company_name", "salary", "location", "deadline",
         "verified_employer"))
-      .drop(Merge.ClassCol)
-    TableStore.writeSnapshot(merged, rawPath)
 
-    // Staging transform (F1–F8 projection, staging_procedures.sql).
-    val crawledAt = lit(runDate + " 06:00:00").cast("timestamp")
+    // Staging transform (F1–F8 projection, staging_procedures.sql) of the
+    // merged rows of the jobs crawled today.
     val sal = Salary.normalizeSalary(col("salary"))
     val due = Salary.dueDate(crawledAt, col("deadline"))
-    val staging = spark.read.parquet(rawPath)
-      .join(jobs.select("job_id"), Seq("job_id"), "left_semi")
-      .select(
+    val staging = merged.filter(col(Merge.ClassCol) =!= "untouched").select(
       col("job_id"),
       Cleaners.cleanTitle(col("title")).as("title_clean"),
       col("job_url"),
@@ -102,23 +100,35 @@ object Apps {
       due.as("due_date"),
       crawledAt.as("crawled_at"))
       .withColumn("crawl_date", lit(runDate))
-    TableStore.replacePartitions(staging, s"$warehouseRoot/staging_jobs", Seq("crawl_date"))
+    Store.commit(warehouseRoot, Seq(
+      Store.Snapshot("raw_jobs", merged.drop(Merge.ClassCol)),
+      Store.Partitions("staging_jobs", staging, Seq("crawl_date"))))
 
-    val stagingStats = Validators.stagingStats(staging).head()
+    val staged = readStaging(spark, warehouseRoot, runDate)
+    val stagingStats = Validators.stagingStats(staged).head()
     QualityGate.evaluate(stagingStats, QualityGate.stagingConfig)
-    (staging.drop("crawl_date"),
+    (staged,
       crawlStats.getAs[Long]("total_jobs"),
       stagingStats.getAs[Long]("total_jobs"))
   }
 
+  /** The `crawl_date = runDate` partition of `staging_jobs`, partition
+    * column dropped. */
+  private def readStaging(spark: SparkSession, warehouseRoot: String,
+                          runDate: String): DataFrame =
+    Store.read(spark, warehouseRoot, "staging_jobs",
+        Schemas.staging.add("crawl_date", StringType))
+      .filter(col("crawl_date") === runDate)   // partition pruning, S4/P10
+      .drop("crawl_date")
+
   /** `jobinsight_dwh` (§3.2): read today's staging partition
-    * (partition-pruned, S4), run the warehouse day, write dims as
-    * snapshots and fact/bridge with dynamic partition overwrite. The six
-    * table writes are independent, so they run side by side
-    * ([[graft.Concurrent.all]]); each keeps its own publish protocol.
-    * `onStage` receives the per-stage wall times from
-    * [[WarehouseJob.runDay]] plus a final `writes` stage covering all six
-    * writes — the composite's regression localizer.
+    * (partition-pruned, S4), run the warehouse day and commit the six star
+    * tables in ONE store commit — dims and bridge as snapshots, today's
+    * fact partition as a partition change — so a crash leaves the star of
+    * the previous day or of this one, never a mix. `onStage` receives the
+    * per-stage wall times from [[WarehouseJob.runDay]] plus a final
+    * `writes` stage timing the commit — the composite's regression
+    * localizer.
     */
   def runWarehouseDay(spark: SparkSession, warehouseRoot: String,
                       runDate: String,
@@ -126,154 +136,79 @@ object Apps {
                       pin: Boolean = false): Unit = {
     Metrics.instrument(spark, warehouseRoot, "jobinsight_dwh", "load_dwh",
       runDate) {
-      val staging = spark.read.parquet(s"$warehouseRoot/staging_jobs")
-        .filter(col("crawl_date") === runDate)   // partition pruning, S4/P10
-        .drop("crawl_date")
-
+      val staging = readStaging(spark, warehouseRoot, runDate)
       val state = WarehouseJob.State(readStar(spark, warehouseRoot))
-      // runDay materializes its results BEFORE the writes below replace
+      // runDay materializes its results BEFORE the commit below deletes
       // the very files their plans read from.
       val next = WarehouseJob.runDay(spark, state, staging, runDate,
         onStage = onStage)
 
       val tWrites = System.nanoTime()
-      val dwh = s"$warehouseRoot/dwh"
       // Day-run rewrites only today's date_id partition.
       val todaysFact = next.star.fact
         .filter(col("date_id") === lit(runDate).cast("date"))
-      Concurrent.all(Seq(
-        () => TableStore.writeSnapshot(next.star.dimJob, s"$dwh/DimJob"),
-        () => TableStore.writeSnapshot(next.star.dimCompany, s"$dwh/DimCompany"),
-        () => TableStore.writeSnapshot(next.star.dimLocation, s"$dwh/DimLocation"),
-        () => TableStore.writeSnapshot(next.star.dimDate, s"$dwh/DimDate"),
-        () => TableStore.replacePartitions(
-          todaysFact, s"$dwh/FactJobPostingDaily", Seq("date_id")),
-        () => TableStore.writeSnapshot(next.star.bridge,
-          s"$dwh/FactJobLocationBridge")))
+      Store.commit(warehouseRoot, starChanges(next.star,
+        Store.Partitions(Fact, todaysFact, Seq("date_id"))))
       onStage("writes", (System.nanoTime() - tWrites) / 1e9)
       // counts on checkpointed frames — no plan re-execution
       ((), staging.count(), todaysFact.count())
     }
-    if (pin) pinWarehouse(spark, warehouseRoot, runDate)
+    if (pin) pinWarehouse(warehouseRoot, runDate)
   }
 
   // ---- Late-data correction: pinned snapshots + bounded replay ---------
 
-  private val PinTables = Seq("DimJob", "DimCompany", "DimLocation",
-    "DimDate", "FactJobPostingDaily", "FactJobLocationBridge")
+  private val Fact = "dwh/FactJobPostingDaily"
 
-  /** Pin the on-disk star as an immutable end-of-`runDate` snapshot:
-    * each table [[graft.storage.Versioned.write]]n under
-    * `<root>/pins/<table>/`, then a `day=<runDate>.pin` manifest
-    * (table=version lines) written LAST — the manifest is the day
-    * pin's commit marker, same write-then-publish invariant as the
-    * Versioned pointer itself. Pins are what turn a late-arriving row
-    * for a CLOSED day from "rebuild the warehouse from day zero" into
+  private[app] val StarTables = Seq("dwh/DimJob", "dwh/DimCompany", "dwh/DimLocation",
+    "dwh/DimDate", Fact, "dwh/FactJobLocationBridge")
+
+  /** The commit of `star`'s dims and bridge as snapshots, beside `fact`. */
+  private def starChanges(star: Star, fact: Store.Change): Seq[Store.Change] =
+    StarTables.zip(Seq(star.dimJob, star.dimCompany, star.dimLocation, star.dimDate,
+      star.fact, star.bridge)).map {
+      case (Fact, _) => fact
+      case (t, df) => Store.Snapshot(t, df)
+    }
+
+  /** Commit the empty star of [[WarehouseJob.emptyState]]: the warehouse
+    * before its first day. */
+  private[graft] def resetStar(spark: SparkSession, warehouseRoot: String): Unit = {
+    val empty = WarehouseJob.emptyState(spark).star
+    Store.commit(warehouseRoot,
+      starChanges(empty, Store.Snapshot(Fact, empty.fact, Seq("date_id"))))
+  }
+
+  /** Pin the star as it stands at the end of `runDate`: the pin
+    * `day=<runDate>` hard-links the six tables' live files
+    * ([[Store.pin]]), copying no data. Pins are what turn a late-arriving
+    * row for a CLOSED day from "rebuild the warehouse from day zero" into
     * the bounded [[rebuildFromDay]] replay.
     */
-  def pinWarehouse(spark: SparkSession, warehouseRoot: String,
-                   runDate: String): Unit = {
-    val star = readStar(spark, warehouseRoot)
-    val dfs = Map(
-      "DimJob" -> star.dimJob, "DimCompany" -> star.dimCompany,
-      "DimLocation" -> star.dimLocation, "DimDate" -> star.dimDate,
-      "FactJobPostingDaily" -> star.fact,
-      "FactJobLocationBridge" -> star.bridge)
-    val lines = PinTables.map { t =>
-      t + "=" + graft.storage.Versioned.write(dfs(t),
-        s"$warehouseRoot/pins/$t")
-    }
-    // Publish the manifest atomically (temp file + ATOMIC_MOVE, the same
-    // write-then-publish as the Versioned pointer): a crash mid-write
-    // must never leave a truncated day=<date>.pin that [[pinnedDays]]
-    // would treat as committed and [[rebuildFromDay]] would choke on.
-    val pinPath =
-      java.nio.file.Paths.get(s"$warehouseRoot/pins/day=$runDate.pin")
-    val tmp = java.nio.file.Files.createTempFile(
-      pinPath.getParent, s"day=$runDate", ".pin.tmp")
-    java.nio.file.Files.writeString(tmp, lines.mkString("\n"))
-    java.nio.file.Files.move(tmp, pinPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def pinWarehouse(warehouseRoot: String, runDate: String): Unit =
+    Store.pin(warehouseRoot, s"day=$runDate", StarTables)
 
-  /** Committed pin days (ascending ISO dates — lexicographic =
-    * temporal). Defense in depth behind [[pinWarehouse]]'s atomic
-    * publish: a manifest that does not parse (every [[PinTables]] key
-    * present with a long version) is skipped rather than surfaced, so
-    * a damaged pin can never block [[rebuildFromDay]] — the rebuild
-    * just falls back to the previous (or no) pin.
-    */
-  def pinnedDays(warehouseRoot: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(s"$warehouseRoot/pins")
-    if (!java.nio.file.Files.exists(p)) return Nil
-    val s = java.nio.file.Files.list(p)
-    def parses(day: String): Boolean =
-      try {
-        val versions = java.nio.file.Files.readString(
-            p.resolve(s"day=$day.pin")).linesIterator
-          .filter(_.contains("=")).map { l =>
-            val Array(t, v) = l.split("=", 2); (t, v.trim.toLong)
-          }.toMap
-        PinTables.forall(versions.contains)
-      } catch { case scala.util.control.NonFatal(_) => false }
-    try s.iterator().asScala.toList.map(_.getFileName.toString)
-      .collect { case n if n.startsWith("day=") && n.endsWith(".pin") =>
-        n.stripPrefix("day=").stripSuffix(".pin") }
-      .filter(parses)
-      .sorted
-    finally s.close()
-  }
+  /** Pinned days (ascending ISO dates — lexicographic = temporal). A pin
+    * is published by its own `_head`, so a pin a crash interrupted is not
+    * listed. */
+  def pinnedDays(warehouseRoot: String): Seq[String] =
+    Store.pins(warehouseRoot).collect {
+      case n if n.startsWith("day=") => n.stripPrefix("day=") }
 
-  /** Staged days on disk (`crawl_date=` partition directories, ascending). */
-  def stagedDays(warehouseRoot: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(s"$warehouseRoot/staging_jobs")
-    if (!java.nio.file.Files.exists(p)) return Nil
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala.toList.map(_.getFileName.toString)
-      .collect { case n if n.startsWith("crawl_date=") =>
-        n.stripPrefix("crawl_date=") }
-      .sorted
-    finally s.close()
-  }
-
-  /** Restore the on-disk dwh from the `day` pin manifest: the whole
-    * `<root>/dwh` is replaced wholesale (stale fact partitions from the
-    * overwritten timeline must not linger), dims/bridge as snapshots,
-    * the fact re-laid date_id-partitioned.
-    */
-  private def restorePin(spark: SparkSession, warehouseRoot: String,
-                         day: String): Unit = {
-    val manifest = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$warehouseRoot/pins/day=$day.pin"))
-    val versions: Map[String, Long] = manifest.linesIterator
-      .filter(_.contains("=")).map { l =>
-        val Array(t, v) = l.split("=", 2); (t, v.trim.toLong)
-      }.toMap
-    TableStore.deleteRecursively(
-      java.nio.file.Paths.get(s"$warehouseRoot/dwh"))
-    def pinned(t: String): DataFrame =
-      graft.storage.Versioned.read(spark, s"$warehouseRoot/pins/$t",
-        versions(t))
-    val dwh = s"$warehouseRoot/dwh"
-    Seq("DimJob", "DimCompany", "DimLocation", "DimDate",
-        "FactJobLocationBridge")
-      .foreach(t => TableStore.writeSnapshot(pinned(t), s"$dwh/$t"))
-    val fact = pinned("FactJobPostingDaily")
-    if (!fact.isEmpty)
-      TableStore.replacePartitions(fact, s"$dwh/FactJobPostingDaily",
-        Seq("date_id"))
-  }
+  /** Staged days (`crawl_date=` partitions of `staging_jobs`, ascending). */
+  def stagedDays(warehouseRoot: String): Seq[String] =
+    Store.head(warehouseRoot).of("staging_jobs")
+      .map(_.split('/')(1).stripPrefix("crawl_date=")).distinct.sorted
 
   /** LATE-DATA CORRECTION (§2.10's "late rows for a closed day =
     * snapshot rebuild", now an operator): after staging partitions ≤
     * some already-run `fromDay` changed, restore the newest pin
-    * STRICTLY BEFORE `fromDay` and replay every staged day after that
-    * pin through the REAL [[runWarehouseDay]] — the rebuilt warehouse
-    * equals the from-scratch run over the corrected staging (RebuildSpec
-    * pins the equality). With no eligible pin, the dwh resets to empty
-    * and the whole timeline replays (the documented unbounded
-    * fallback). Returns the replayed days.
+    * STRICTLY BEFORE `fromDay` (one commit of its links) and replay every
+    * staged day after that pin through the REAL [[runWarehouseDay]] — the
+    * rebuilt warehouse equals the from-scratch run over the corrected
+    * staging (RebuildSpec pins the equality). With no eligible pin, the
+    * star resets to empty and the whole timeline replays (the documented
+    * unbounded fallback). Returns the replayed days.
     *
     * Scale bound: cost = (#days after the newest pin < fromDay) ×
     * one day-run — pin cadence directly caps the replay window, so a
@@ -286,9 +221,8 @@ object Apps {
                      pin: Boolean = false): Seq[String] = {
     val base = pinnedDays(warehouseRoot).filter(_ < fromDay).lastOption
     base match {
-      case Some(d) => restorePin(spark, warehouseRoot, d)
-      case None => TableStore.deleteRecursively(
-        java.nio.file.Paths.get(s"$warehouseRoot/dwh"))
+      case Some(d) => Store.restore(warehouseRoot, s"day=$d", StarTables)
+      case None => resetStar(spark, warehouseRoot)
     }
     val replay = stagedDays(warehouseRoot)
       .filter(d => base.forall(_ < d))
@@ -298,24 +232,20 @@ object Apps {
 
   /** Read the star schema back from disk (empty frames before day 1).
     * Each table is read with its declared [[Schemas]] schema, so a read
-    * runs no Spark job to infer one. An absent table is a `limit(0)`
-    * frame, which the optimizer knows to be empty and prunes the joins
-    * over.
+    * runs no Spark job to infer one, and a table without files is an
+    * empty local frame the optimizer prunes joins over.
     */
   def readStar(spark: SparkSession, warehouseRoot: String): Star = {
-    def read(table: String, schema: StructType, absent: => DataFrame): DataFrame = {
-      val path = s"$warehouseRoot/dwh/$table"
-      if (exists(path)) spark.read.schema(schema).parquet(path) else absent
-    }
     def dwh(table: String, schema: StructType): DataFrame =
-      read(table, schema, Schemas.empty(spark, schema).limit(0))
+      Store.read(spark, warehouseRoot, s"dwh/$table", schema)
     Star(
       dwh("DimJob", Schemas.dimJob),
       dwh("DimCompany", Schemas.dimCompany),
-      read("DimLocation", Schemas.dimLocation, Schemas.seedDimLocation(spark)),
+      if (Store.head(warehouseRoot).of("dwh/DimLocation").isEmpty)
+        Schemas.seedDimLocation(spark)
+      else dwh("DimLocation", Schemas.dimLocation),
       dwh("DimDate", Schemas.dimDate),
-      dwh("FactJobPostingDaily", Schemas.factDaily) // partition column read back last
-        .select(Schemas.factDaily.fieldNames.toIndexedSeq.map(col): _*),
+      dwh("FactJobPostingDaily", Schemas.factDaily),
       dwh("FactJobLocationBridge", Schemas.bridge))
   }
 
@@ -324,21 +254,21 @@ object Apps {
     */
   def runArchive(spark: SparkSession, warehouseRoot: String, runDate: String,
                  retentionDays: Int = 30): Long = {
-    val rawPath = s"$warehouseRoot/raw_jobs"
-    if (!exists(rawPath)) return 0L
+    if (Store.head(warehouseRoot).of("raw_jobs").isEmpty) return 0L
     Metrics.instrument(spark, warehouseRoot, "jobinsight_archive",
       "archive_delete", runDate) {
-      val raw = spark.read.parquet(rawPath)
+      val raw = Store.read(spark, warehouseRoot, "raw_jobs")
       val cutoff = date_sub(lit(runDate).cast("date"), retentionDays).cast("timestamp")
       val archived = TableStore.archiveOlderThan(
         raw.orderBy(col("crawled_at").asc), col("crawled_at"), cutoff,
-        s"$warehouseRoot/archive/raw_jobs")
+        warehouseRoot, "archive/raw_jobs")
       val n = archived.count()
       if (n > 0) {
-        val expected = spark.read.parquet(s"$warehouseRoot/archive/raw_jobs")
+        val expected = Store.read(spark, warehouseRoot, "archive/raw_jobs")
           .filter(col("crawled_at") < cutoff).count()
         require(expected >= n, s"archive verify failed: $expected < $n") // S7
-        TableStore.retentionDelete(spark, rawPath, archived.select("job_id"), Seq("job_id"))
+        TableStore.retentionDelete(spark, warehouseRoot, "raw_jobs",
+          archived.select("job_id"), Seq("job_id"))
       }
       (n, n, n)
     }
@@ -349,9 +279,8 @@ object Apps {
     * DimCompany, snappy parquet under `parquet/load_month=YYYY-MM/`.
     */
   def exportDenormalized(spark: SparkSession, warehouseRoot: String): Unit =
-    TableStore.replacePartitions(
-      denormalized(readStar(spark, warehouseRoot)),
-      s"$warehouseRoot/parquet/job_postings", Seq("load_month"))
+    Store.commit(warehouseRoot, Seq(Store.Partitions("parquet/job_postings",
+      denormalized(readStar(spark, warehouseRoot)), Seq("load_month"))))
 
   /** The export's enrichment join, star in → denormalized rows out: the
     * facts with a current job and company in [[Views.current]] —
@@ -365,15 +294,4 @@ object Apps {
         col("salary_min"), col("salary_max"), col("salary_type"),
         col("due_date"), col("posted_time"), col("skills"),
         col("job_url"), col("load_month"))
-
-  /** Whether a table exists, after putting back a snapshot that a
-    * crashed [[TableStore.writeSnapshot]] left parked at `<path>.__old`.
-    */
-  private def exists(path: String): Boolean = {
-    TableStore.recoverSnapshot(path)
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
-  }
-
-  private def readOrEmpty(spark: SparkSession, path: String, like: DataFrame): DataFrame =
-    if (exists(path)) spark.read.parquet(path) else like.limit(0)
 }

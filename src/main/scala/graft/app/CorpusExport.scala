@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.operators.{Checksum, Sharding}
-import graft.storage.TableStore
+import graft.storage.{Store, TableStore}
 
 /** Training-corpus EXPORT — the last mile of the curation pipeline:
   * shard deterministically ([[Sharding.shardId]], so any
@@ -28,10 +28,8 @@ object CorpusExport {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val sharded = docs.withColumn("shard",
       Sharding.shardId(col(idCol), nShards))
-    val tmp = root.stripSuffix("/") + ".__tmp"
-    sharded.repartition(nShards, col("shard"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(tmp)
-    TableStore.swapInto(tmp, root)
+    TableStore.swapInto(root)(tmp => sharded.repartition(nShards, col("shard"))
+      .write.mode(SaveMode.Overwrite).partitionBy("shard").json(tmp))
     // manifest from a READ-BACK of the written shards, not from a
     // re-execution of the source plan: the published checksums describe
     // the bytes on disk BY CONSTRUCTION (a source that changed between
@@ -105,10 +103,9 @@ object CorpusExport {
     // mid-run would sink the preparation at 100 TB), a parquet staging
     // dir survives executor churn; it is cleaned up after the exports
     val staging = s"$outRoot/_staging"
-    TableStore.writeSnapshot(
-      graft.operators.Sampling.hashSplit(curated, "doc_id", splits), staging)
-    val spark = docs.sparkSession
-    val assigned = TableStore.read(spark, staging)
+    Store.commit(staging, Seq(Store.Snapshot("corpus",
+      graft.operators.Sampling.hashSplit(curated, "doc_id", splits))))
+    val assigned = Store.read(docs.sparkSession, staging, "corpus")
     val valueCols = curated.columns.toSeq
     val manifest = splits.map { case (name, _) =>
       val part = assigned.filter(col("split") === name).drop("split")

@@ -1,13 +1,14 @@
 package graft.app
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 import org.apache.hive.service.server.HiveServer2
 import graft.Concurrent
 import graft.monitoring.Metrics
+import graft.storage.Store
 import graft.views.{View, Views}
 
 /** Entry point 3 — the BI serving endpoint (SURVEY §3.3).
@@ -41,8 +42,7 @@ object ServeApp {
   /** Names under which the star base tables are served, Superset-parity
     * with the reference's `jobinsight` warehouse schema (`dwh` tables).
     */
-  private val starTables = Seq("DimJob", "DimCompany", "DimLocation",
-    "DimDate", "FactJobPostingDaily", "FactJobLocationBridge")
+  private val starTables = Apps.StarTables.map(_.stripPrefix("dwh/"))
 
   /** Register the serving catalog: the 15 analytic views and the 2
     * monitoring rollups, each as a session temp view and as a GLOBAL temp
@@ -64,9 +64,9 @@ object ServeApp {
     * `localCheckpoint` keeps no lineage: a lost executor loses its view
     * blocks, and the remedy is to register again — a deliberate trade of
     * fault tolerance for a serving catalog that costs no re-computation.
-    * The monitoring rollups are served whenever the apps have recorded
-    * run metrics under `<root>/monitoring/` (Grafana parity: reference
-    * `monitoring_schema.sql:58-80`).
+    * The monitoring rollups roll up the run metrics the apps record under
+    * `<root>/monitoring/`, and are empty before the first run (Grafana
+    * parity: reference `monitoring_schema.sql:58-80`).
     */
   def registerCatalog(spark: SparkSession, warehouseRoot: String,
                       runDate: String): Unit = {
@@ -75,16 +75,14 @@ object ServeApp {
       star.fact, star.bridge).zip(starTables).foreach {
       case (df, name) => df.createOrReplaceGlobalTempView(name)
     }
-    val monitoring = Seq(
-      ("etl_metrics", Metrics.etlMetricsSchema, Metrics.pipelineHealth _),
-      ("quality_metrics", Metrics.qualityMetricsSchema, Metrics.dataQualityTrend _)).collect {
-      case (table, schema, view)
-          if Files.exists(Paths.get(s"$warehouseRoot/monitoring/$table")) =>
-        view(spark.read.schema(schema).parquet(s"$warehouseRoot/monitoring/$table"),
-          lit(runDate))
-    }
+    def monitoring(table: String, schema: StructType) =
+      Store.read(spark, warehouseRoot, s"monitoring/$table", schema)
+    val rollups = Seq(
+      Metrics.pipelineHealth(monitoring("etl_metrics", Metrics.etlMetricsSchema), lit(runDate)),
+      Metrics.dataQualityTrend(
+        monitoring("quality_metrics", Metrics.qualityMetricsSchema), lit(runDate)))
     val current = Views.current(star).localCheckpoint(eager = true)
-    val views = Views.all(current, lit(runDate)) ++ monitoring
+    val views = Views.all(current, lit(runDate)) ++ rollups
     val rows =
       try Concurrent.all(views.map(v => () => v.rows.localCheckpoint(eager = true)))
       finally release(current)

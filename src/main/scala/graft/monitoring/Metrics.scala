@@ -3,6 +3,7 @@ package graft.monitoring
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.storage.Store
 import graft.views.View
 
 /** ETL/quality run metrics (monitoring schema) + the 2 monitoring views
@@ -98,27 +99,27 @@ object Metrics {
 
   // ---- persistence (the reference's monitoring.* tables) ---------------
 
-  /** Append one ETL run row to `<root>/monitoring/etl_metrics` — the
-    * table [[pipelineHealth]] rolls up and Grafana-parity dashboards
-    * read. Tiny appends (one row per task run): the table is a
-    * monitoring log, compacted like any other small-file producer when
-    * it matters. */
+  /** Append one ETL run row to the `monitoring/etl_metrics` table of the
+    * store at `warehouseRoot` — the table [[pipelineHealth]] rolls up and
+    * Grafana-parity dashboards read. Tiny appends (one row per task run):
+    * the table is a monitoring log, compacted
+    * ([[graft.storage.TableStore.compact]]) when it matters. */
   def recordEtl(spark: SparkSession, warehouseRoot: String, row: Row): Unit =
-    spark.createDataFrame(java.util.Arrays.asList(row), etlMetricsSchema)
-      .write.mode("append").parquet(s"$warehouseRoot/monitoring/etl_metrics")
+    Store.commit(warehouseRoot, Seq(Store.Append("monitoring/etl_metrics",
+      spark.createDataFrame(java.util.Arrays.asList(row), etlMetricsSchema))))
 
   /** Append one quality row (from a [[graft.quality.Validators]] stats
-    * row) to `<root>/monitoring/quality_metrics` — what
-    * [[dataQualityTrend]] rolls up. */
+    * row) to `monitoring/quality_metrics` — what [[dataQualityTrend]]
+    * rolls up. */
   def recordQuality(spark: SparkSession, warehouseRoot: String,
                     validationType: String, executionDate: java.sql.Date,
                     recordedAt: java.sql.Timestamp, totalJobs: Long,
                     validJobs: Long, validRate: Double,
                     duplicateRate: Double, status: String): Unit =
-    spark.createDataFrame(java.util.Arrays.asList(
-        Row(validationType, executionDate, recordedAt, totalJobs, validJobs,
-          validRate, duplicateRate, status)), qualityMetricsSchema)
-      .write.mode("append").parquet(s"$warehouseRoot/monitoring/quality_metrics")
+    Store.commit(warehouseRoot, Seq(Store.Append("monitoring/quality_metrics",
+      spark.createDataFrame(java.util.Arrays.asList(Row(validationType, executionDate,
+        recordedAt, totalJobs, validJobs, validRate, duplicateRate, status)),
+        qualityMetricsSchema))))
 
   /** Run `body`, record ONE etl_metrics row (success with its row
     * counts, or failed with the error message), rethrow failures — the

@@ -59,16 +59,13 @@ object Csv {
     (good, corrupt)
   }
 
-  /** Write with header, RFC-4180 quoting, and the same temp-and-swap
-    * crash safety as the parquet snapshot writer. */
-  def write(df: DataFrame, path: String, delimiter: String = ","): Unit = {
-    import java.nio.file.{Files, Paths}
-    val tmp = path.stripSuffix("/") + ".__tmp"
-    df.write.mode(SaveMode.Overwrite)
+  /** Write with header and RFC-4180 quoting, published by a directory
+    * swap ([[TableStore.swapInto]]): a half-written export is never
+    * visible under `path`. */
+  def write(df: DataFrame, path: String, delimiter: String = ","): Unit =
+    TableStore.swapInto(path)(tmp => df.write.mode(SaveMode.Overwrite)
       .option("header", "true")
       .option("sep", delimiter)
       .option("escape", "\"")
-      .csv(tmp)
-    TableStore.swapInto(tmp, path)
-  }
+      .csv(tmp))
 }

@@ -1,75 +1,38 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Exactly-once micro-batch sink for `foreachBatch`: Structured
   * Streaming guarantees at-least-once delivery to the sink function —
   * after a crash between a successful write and the checkpoint commit,
   * the SAME batchId is replayed. This sink makes the write idempotent,
-  * which upgrades the pipeline to exactly-once:
-  *
-  *   - each batch lands at `path/batch=<id>` via temp-and-swap, then a
-  *     `_COMMITTED` marker is stamped INSIDE the directory;
-  *   - a replayed batchId whose marker exists is skipped entirely;
-  *   - a half-written directory (crash before the marker) has no
-  *     marker, so the replay deletes and rewrites it;
-  *   - readers ([[readCommitted]]) take ONLY marked directories, so a
-  *     torn write is never visible downstream.
-  *
-  * This is the same write-audit-publish protocol object-store lakes
-  * use (Spark's own streaming file sink keeps an equivalent log); kept
-  * explicit here so ANY engine can read the layout — committedness is
-  * a visible marker file, not a sidecar log format.
+  * which upgrades the pipeline to exactly-once: each batch is one
+  * [[Store.Append]] commit to `table` of the store at `root` carrying the
+  * batch id as the head's `txn`, and a batch id at or below the head's
+  * txn is skipped (Delta's SetTransaction rule). A crash before the
+  * commit leaves torn files no reader sees, swept by the replay's commit.
   */
 object IdempotentSink {
 
-  private val Marker = "_COMMITTED"
+  private val Table = "batches"
 
-  def alreadyCommitted(path: String, batchId: Long): Boolean =
-    Files.exists(Paths.get(s"$path/batch=$batchId/$Marker"))
+  def alreadyCommitted(root: String, batchId: Long): Boolean =
+    Store.head(root).txn.exists(batchId <= _)
 
   /** Write one micro-batch; returns false when the batchId was already
     * committed (the replay case) and nothing was written. */
-  def writeBatch(df: DataFrame, path: String, batchId: Long): Boolean = {
-    if (alreadyCommitted(path, batchId)) false
-    else {
-      val dir = Paths.get(s"$path/batch=$batchId")
-      val tmp = Paths.get(s"$path/batch=$batchId.__tmp")
-      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      TableStore.deleteRecursively(dir) // a markerless torn write, if any
-      Files.createDirectories(dir.getParent)
-      Files.move(tmp, dir)
-      Files.createFile(dir.resolve(Marker))
-      true
-    }
-  }
+  def writeBatch(df: DataFrame, root: String, batchId: Long,
+                 table: String = Table, cols: Seq[String] = Nil): Boolean =
+    Store.commit(root, Seq(Store.Append(table, df, cols)), Some(batchId))
 
   /** Ready-made `foreachBatch` function. */
-  def sink(path: String): (DataFrame, Long) => Unit =
-    (df, batchId) => { writeBatch(df, path, batchId); () }
+  def sink(root: String): (DataFrame, Long) => Unit =
+    (df, batchId) => { writeBatch(df, root, batchId); () }
 
-  /** Union of all COMMITTED batches (torn writes invisible); `schema`
-    * covers the zero-committed-batches case. */
-  def readCommitted(spark: SparkSession, path: String,
-                    schema: StructType): DataFrame = {
-    val root = Paths.get(path)
-    val dirs =
-      if (!Files.exists(root)) Nil
-      else {
-        // Files.list holds a directory handle — close it (a poller
-        // calls this in a loop; leaked fds eventually starve the JVM)
-        val s = Files.list(root)
-        try s.iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("batch=") &&
-            Files.exists(p.resolve(Marker)))
-          .map(_.toString).toList
-        finally s.close()
-      }
-    if (dirs.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
-  }
+  /** Every committed batch (torn writes invisible); `schema` covers the
+    * zero-committed-batches case. */
+  def readCommitted(spark: SparkSession, root: String,
+                    schema: StructType): DataFrame =
+    Store.read(spark, root, Table, schema)
 }

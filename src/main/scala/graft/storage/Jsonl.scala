@@ -63,12 +63,9 @@ object Jsonl {
      else r).json(path)
   }
 
-  /** Write as JSONL with the same temp-and-swap crash safety as the
-    * parquet snapshot writer — a half-written corpus export is never
+  /** Write as JSONL, published by a directory swap
+    * ([[TableStore.swapInto]]) — a half-written corpus export is never
     * visible under the target path. */
-  def write(df: DataFrame, path: String): Unit = {
-    val tmp = path.stripSuffix("/") + ".__tmp"
-    df.write.mode(SaveMode.Overwrite).json(tmp)
-    TableStore.swapInto(tmp, path)
-  }
+  def write(df: DataFrame, path: String): Unit =
+    TableStore.swapInto(path)(tmp => df.write.mode(SaveMode.Overwrite).json(tmp))
 }

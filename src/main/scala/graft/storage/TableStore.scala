@@ -5,50 +5,36 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-/** Parquet table layer (S6/S7/S11): snapshot-replace writes, Hive-style
-  * partitioning, verify and archive/retention.
+/** Parquet table helpers beside the [[Store]] commit protocol:
+  * compaction, archive and retention as store commits, bucketed catalog
+  * tables, blobs and backups, and the directory swap the text exports
+  * publish through.
   *
   * Replaces the reference's MinIO layout (`src/storage/minio.py:253-308`:
   * `parquet/<table>/load_month=YYYY-MM/…`) and archive
   * (`src/storage/archive.py`: `year=YYYY/month=MM/`) with the same paths
-  * on a Hadoop-compatible FS.
-  *
-  * Scale notes:
-  *   - `replacePartitions` uses dynamic partition overwrite — only the
-  *     partitions present in the batch are rewritten (a day-run touches
-  *     one `date_id`), never the whole table;
-  *   - writes are atomic per partition via the parquet committer's
-  *     temp-dir + rename, replacing the reference's DELETE+INSERT
-  *     transactionality (SURVEY.md §4.2);
-  *   - readers prune on the partition column (`.explain` shows
-  *     PartitionFilters), which is what makes day-slice reads O(day) not
-  *     O(history).
+  * on a Hadoop-compatible FS. Readers prune on the partition column
+  * (`.explain` shows PartitionFilters), which is what makes day-slice
+  * reads O(day) not O(history).
   */
 object TableStore {
 
-  /** Full snapshot replace (dims — small, rewritten whole like the
-    * reference's dim tables). Writes to a temp dir then swaps, so a plan
-    * that lazily READS the current snapshot can safely produce its
-    * replacement (plain Overwrite deletes the target before the read
-    * executes).
+  /** Publish the directory `write` fills at a temporary path as `target`,
+    * without ever destroying the previous copy before the replacement
+    * lands: the old directory is RENAMED aside (metadata-only, same
+    * filesystem), the new one renamed into place, and only then the old
+    * copy deleted. A crash
+    * between the two renames leaves the prior copy intact at
+    * `<target>.__old`, which [[restoreParked]] puts back. Only the text
+    * exports (`Jsonl.write`, `Csv.write`, `CorpusExport.export`), which
+    * other engines read as plain directories, publish this way; parquet
+    * tables commit through [[Store]].
     */
-  def writeSnapshot(df: DataFrame, path: String): Unit = {
-    val tmp = path.stripSuffix("/") + ".__tmp"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(tmp, path)
-  }
-
-  /** Publish the fully-written `tmp` directory at `target` without ever
-    * destroying the previous snapshot before the replacement lands: the
-    * old directory is RENAMED aside (metadata-only, same filesystem),
-    * `tmp` renamed into place, and only then the old copy deleted. A
-    * crash between the two renames leaves the prior snapshot intact at
-    * `<target>.__old` — [[recoverSnapshot]] puts it back. (The previous
-    * delete-then-move order had a window where neither version existed.)
-    */
-  private[graft] def swapInto(tmp: String, target: String): Unit = {
+  private[graft] def swapInto(target: String)(write: String => Unit): Unit = {
+    val tmp = target.stripSuffix("/") + ".__tmp"
+    write(tmp)
     val old = Paths.get(target.stripSuffix("/") + ".__old")
-    recoverSnapshot(target)   // a crashed earlier swap: restore, then replace
+    restoreParked(target)   // a crashed earlier swap: restore, then replace
     deleteRecursively(old)
     val t = Paths.get(target)
     if (Files.exists(t)) Files.move(t, old)
@@ -56,26 +42,16 @@ object TableStore {
     deleteRecursively(old)
   }
 
-  /** If a swap crashed between its renames (no live snapshot at `path`,
-    * prior one parked at `<path>.__old`), restore the prior snapshot.
-    * Returns true when a restore happened.
+  /** If a swap crashed between its renames (nothing at `path`, the prior
+    * copy parked at `<path>.__old`), put the prior copy back. Returns true
+    * when it did.
     */
-  def recoverSnapshot(path: String): Boolean = {
+  private[storage] def restoreParked(path: String): Boolean = {
     val old = Paths.get(path.stripSuffix("/") + ".__old")
     val t = Paths.get(path)
     if (!Files.exists(t) && Files.exists(old)) { Files.move(old, t); true }
     else false
   }
-
-  /** Partitioned write replacing ONLY the partitions present in `df`. */
-  def replacePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
 
   /** Schema-evolution read: unions the footer schemas of EVERY file so
     * a table whose writer gained columns over time reads as one frame
@@ -103,24 +79,23 @@ object TableStore {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Small-file compaction: rewrite a parquet table into
-    * `ceil(bytes / targetFileBytes)` files (temp-dir + swap, same crash
-    * safety as [[writeSnapshot]]). Incremental writers — streaming
-    * micro-batches, per-day appends, dynamic partition replaces — leave
-    * thousands of KB-sized files whose open/footer overhead eventually
-    * dominates scan time and floods the driver's file listing; periodic
-    * compaction is the standard maintenance pass. Sizing uses the
-    * CURRENT on-disk bytes (already compressed), so output files land
-    * near the target without a decompression-ratio guess. `coalesce`
-    * merges partitions without a shuffle.
+  /** Small-file compaction: rewrite the unpartitioned `table` of the
+    * store at `root` into `ceil(bytes / targetFileBytes)` files, as one
+    * snapshot commit. Incremental writers — streaming micro-batches,
+    * per-run monitoring appends — leave many KB-sized files whose
+    * open/footer overhead eventually dominates scan time and floods the
+    * driver's file listing; periodic compaction is the standard
+    * maintenance pass. Sizing uses the CURRENT on-disk bytes (already
+    * compressed), so output files land near the target without a
+    * decompression-ratio guess. `coalesce` merges partitions without a
+    * shuffle.
     */
-  def compact(spark: SparkSession, path: String,
+  def compact(spark: SparkSession, root: String, table: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hPath).getLength
+    val bytes = Store.head(root).of(table).map(f => Files.size(Paths.get(root, f))).sum
     val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    writeSnapshot(spark.read.parquet(path).coalesce(files.toInt), path)
+    Store.commit(root, Seq(Store.Snapshot(table,
+      Store.read(spark, root, table).coalesce(files.toInt))))
     files
   }
 
@@ -147,38 +122,30 @@ object TableStore {
     }
   }
 
-  /** Archive rows older than `cutoff` into `year=/month=` partitions
-    * (`archive.py:32-97`), returning the archived frame for the
-    * subsequent retention delete.
+  /** Archive rows older than `cutoff` into the `year=/month=` partitions
+    * of `archiveTable` in the store at `root` (`archive.py:32-97`; a
+    * partition commit, so a month archived again is replaced), returning
+    * the archived frame for the subsequent retention delete.
     */
   def archiveOlderThan(table: DataFrame, tsCol: Column, cutoff: Column,
-                       archivePath: String): DataFrame = {
+                       root: String, archiveTable: String): DataFrame = {
     val old = table.filter(tsCol < cutoff)
-    old
+    Store.commit(root, Seq(Store.Partitions(archiveTable, old
       .withColumn("year", year(tsCol))
-      .withColumn("month", date_format(tsCol, "MM"))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite)
-      .partitionBy("year", "month")
-      .parquet(archivePath)
+      .withColumn("month", date_format(tsCol, "MM")), Seq("year", "month"))))
     old
   }
 
-  /** S11 retention: source minus archived keys (null-safe anti-join,
-    * `archive.py:164-208`), published through [[writeSnapshot]] so the
-    * source path is never read-while-overwritten and a crash mid-publish
-    * leaves the prior snapshot recoverable. Returns the removed row
-    * count; the source is counted BEFORE the swap (its file listing is
-    * gone after it).
+  /** S11 retention: `table` of the store at `root` minus the archived
+    * keys (null-safe anti-join, `archive.py:164-208`), as one snapshot
+    * commit. Returns the removed row count.
     */
-  def retentionDelete(spark: SparkSession, tablePath: String,
+  def retentionDelete(spark: SparkSession, root: String, table: String,
                       archivedKeys: DataFrame, key: Seq[String]): Long = {
-    val table = spark.read.parquet(tablePath)
-    val before = table.count()
-    writeSnapshot(graft.operators.Merge.deleteByKeys(table, archivedKeys, key),
-      tablePath)
-    before - spark.read.parquet(tablePath).count()
+    val before = Store.read(spark, root, table).count()
+    Store.commit(root, Seq(Store.Snapshot(table, graft.operators.Merge.deleteByKeys(
+      Store.read(spark, root, table), archivedKeys, key))))
+    before - Store.read(spark, root, table).count()
   }
 
   private[graft] def deleteRecursively(p: Path): Unit =

@@ -1,90 +1,60 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned table with time travel — the reproducibility primitive a
   * training pipeline needs: "the run trained on corpus VERSION 17" must
-  * stay answerable after tomorrow's write. Layout:
+  * stay answerable after tomorrow's write. A versioned root is a
+  * [[Store]] with one table; version N is the pin `v=N`:
   *
   * {{{
-  *   <root>/v=1/  v=2/  …      immutable snapshot directories
-  *   <root>/_LATEST            the committed version number
+  *   <root>/_head  <root>/data/…         the latest snapshot commit
+  *   <root>/_pins/v=1/  v=2/  …          immutable versions (hard links)
   * }}}
   *
-  * The `_LATEST` pointer is the COMMIT MARKER (write-audit-publish,
-  * same invariant as [[IdempotentSink]]): a snapshot directory becomes
-  * real only when the pointer names it. The pointer is updated by
-  * temp-file + atomic rename, so readers always resolve a fully
-  * written version; a crash mid-write leaves a torn `v=N` directory
-  * ABOVE the pointer, which the next [[write]] sweeps before
-  * committing (readers never looked at it). Old versions stay
-  * readable until [[retain]] drops them — retention is an explicit
-  * policy step, not a side effect of writing.
+  * A version becomes real when its pin is published, after the snapshot
+  * commit: a crash before that leaves the previous version the latest,
+  * and the next [[write]] commits over the unpinned snapshot. Old
+  * versions stay readable until [[retain]] unpins them — retention is an
+  * explicit policy step, not a side effect of writing.
   */
 object Versioned {
 
-  private val Pointer = "_LATEST"
+  private val Table = "data"
 
-  def latestVersion(root: String): Option[Long] = {
-    val p = Paths.get(root, Pointer)
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
+  def latestVersion(root: String): Option[Long] = versions(root).lastOption
 
-  // Files.list holds a directory handle; close it deterministically
-  private def listDir(r: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = Files.list(r)
-    try s.iterator().asScala.toList finally s.close()
-  }
+  /** All committed versions, ascending. */
+  def versions(root: String): Seq[Long] =
+    Store.pins(root).collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
+      .sorted
 
-  /** All COMMITTED versions (≤ the pointer), ascending. */
-  def versions(root: String): Seq[Long] = {
-    val committed = latestVersion(root).getOrElse(return Nil)
-    listDir(Paths.get(root))
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(_ <= committed).sorted
-  }
-
-  /** Write the next version and commit the pointer; returns the new
-    * version number. */
+  /** Write the next version; returns its number. */
   def write(df: DataFrame, root: String): Long = {
-    val r = Paths.get(root)
-    Files.createDirectories(r)
-    val committed = latestVersion(root).getOrElse(0L)
-    // sweep torn dirs a crashed writer left above the commit pointer
-    listDir(r)
-      .filter(p => p.getFileName.toString.startsWith("v=") &&
-        p.getFileName.toString.stripPrefix("v=").toLong > committed)
-      .foreach(TableStore.deleteRecursively)
-    val next = committed + 1
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/v=$next")
-    val tmp = r.resolve(Pointer + ".__tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, r.resolve(Pointer), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    val next = latestVersion(root).getOrElse(0L) + 1
+    Store.commit(root, Seq(Store.Snapshot(Table, df)))
+    Store.pin(root, s"v=$next", Seq(Table))
     next
   }
 
-  /** Read a pinned `version`, or the committed latest when omitted.
-    * Fails loudly on an uncommitted/retained-away version. */
+  /** Read a pinned `version`, or the latest when omitted. Fails loudly
+    * on an uncommitted/retained-away version. */
   def read(spark: SparkSession, root: String, version: Long = -1L): DataFrame = {
     val committed = latestVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no committed version under $root"))
     val v = if (version < 0) committed else version
     require(v <= committed, s"version $v is not committed (latest: $committed)")
-    require(Files.exists(Paths.get(s"$root/v=$v")),
+    require(versions(root).contains(v),
       s"version $v was retained away (available: ${versions(root).mkString(",")})")
-    spark.read.parquet(s"$root/v=$v")
+    Store.read(spark, Store.pinRoot(root, s"v=$v"), Table)
   }
 
-  /** Keep the newest `keep` versions, delete the rest; returns the
-    * dropped version numbers. The pointer target is always kept. */
+  /** Keep the newest `keep` versions, unpin the rest; returns the
+    * dropped version numbers. */
   def retain(root: String, keep: Int): Seq[Long] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     val drop = versions(root).dropRight(keep)
-    drop.foreach(v => TableStore.deleteRecursively(Paths.get(s"$root/v=$v")))
+    drop.foreach(v => Store.unpin(root, s"v=$v"))
     drop
   }
 }

@@ -77,10 +77,16 @@ object FactDaily {
     // Priority: staging > existing row > carried. The reference's re-run is
     // DELETE+INSERT (`daily.py:208-231`): a revised staging row OVERWRITES an
     // existing `(job_sk, date_id)` row and mints a fresh fact_id, so staging
-    // must outrank existing. Carried rows drop their old fact_id so every
-    // today-row gets a fresh id like the reference's NEXTVAL.
+    // must outrank existing. A staging row equal to the existing row is no
+    // revision: it is dropped and the existing row keeps its fact_id, so a
+    // rerun of the day rewrites the same rows. Carried rows drop their old
+    // fact_id so every today-row gets a fresh id like the reference's NEXTVAL.
+    val compared = fromStaging.columns.toSeq.filter(_ != "__priority")
+    val revised = fromStaging.join(
+      broadcast(existing.select(compared.map(c => col(c).as(s"__e_$c")): _*)),
+      compared.map(c => col(c) <=> col(s"__e_$c")).reduce(_ && _), "left_anti")
     val unioned = existing.unionByName(
-      fromStaging.withColumn("fact_id", lit(null).cast("long")), allowMissingColumns = true)
+      revised.withColumn("fact_id", lit(null).cast("long")), allowMissingColumns = true)
       .unionByName(carried.withColumn("fact_id", lit(null).cast("long")))
     // Through Apps a (job_sk, date_id) key holds at most three rows — one
     // each from staging (read from the job_id-keyed raw table), the

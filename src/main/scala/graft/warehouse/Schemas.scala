@@ -97,8 +97,10 @@ object Schemas {
     StructField("due_date", TimestampType),
     StructField("crawled_at", TimestampType)))
 
+  /** An empty frame on a `LocalRelation`, which the optimizer knows to be
+    * empty: joins and aggregates over it are pruned, not shuffled. */
   def empty(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** DimLocation seeded with the Unknown member (`dwh_schema.sql:175-176`). */
   def seedDimLocation(spark: SparkSession): DataFrame =

@@ -99,6 +99,10 @@ object WarehouseJob {
     State(Star(dimJob, dimCompany, dimLocation, dimDate, fact, bridge))
   }
 
+  /** The largest `c`, or 0: a top-1 (one pass, no exchange), which the
+    * optimizer prunes to nothing over an empty table — a global aggregate
+    * would still shuffle its one empty partial. */
   private def maxOf(df: DataFrame, c: String): Long =
-    df.agg(coalesce(max(col(c)), lit(0L))).head().getLong(0)
+    df.select(col(c)).where(col(c).isNotNull).orderBy(col(c).desc).head(1)
+      .headOption.fold(0L)(_.getLong(0))
 }

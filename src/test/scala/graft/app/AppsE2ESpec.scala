@@ -71,31 +71,6 @@ class AppsE2ESpec extends SparkSpec {
     assert(spark.read.parquet(s"$r/raw_jobs").count() == 60)
   }
 
-  test("a crash between a snapshot swap's two renames loses no history") {
-    import spark.implicits._
-    val r = Files.createTempDirectory("graft_e2e_crash").toString
-    def day(date: String, ids: Seq[Int]): Unit = {
-      val dir = s"$r/html_$date"
-      Files.createDirectories(java.nio.file.Paths.get(dir))
-      Files.writeString(java.nio.file.Paths.get(s"$dir/page1.html"),
-        ids.map(i => card(s"100$i", s"Engineer Role $i", s"${10 + i % 20} - 40 triệu",
-          "Hà Nội", s"${5 + i % 10}")).mkString("\n"))
-      Apps.runIngestDay(spark, dir, r, date)
-      Apps.runWarehouseDay(spark, r, date)
-    }
-    def keys(): Set[(String, Long)] = spark.read.parquet(s"$r/dwh/DimJob")
-      .select("job_id", "job_sk").as[(String, Long)].collect().toSet
-    day("2026-02-01", 1 to 60)
-    val day1Keys = keys()
-    // the crash: each live snapshot parked aside, its replacement not yet in place
-    for (t <- Seq("raw_jobs", "dwh/DimJob"))
-      Files.move(java.nio.file.Paths.get(s"$r/$t"), java.nio.file.Paths.get(s"$r/$t.__old"))
-    day("2026-02-02", 21 to 80) // jobs 1..20 are day-1-only (a crawl needs ≥ 50)
-    val raw = spark.read.parquet(s"$r/raw_jobs").select("job_id").as[String].collect().toSet
-    assert((1 to 80).map(i => s"100$i").toSet == raw)
-    assert(day1Keys.size == 60 && day1Keys.subsetOf(keys()))
-  }
-
   test("staging read prunes to one crawl_date partition") {
     ran
     val pruned = spark.read.parquet(s"$root/staging_jobs")
@@ -128,12 +103,31 @@ class AppsE2ESpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM vw_skills_demand").head().getString(0) == "Python")
   }
 
-  test("second day-run is idempotent-ish: no duplicate facts") {
-    ran
-    Apps.runWarehouseDay(spark, root, "2026-02-01") // re-run same day
-    val fact = spark.read.parquet(s"$root/dwh/FactJobPostingDaily")
-    assert(fact.groupBy("job_sk", "date_id").count().filter(col("count") > 1).count() == 0)
-    assert(fact.count() == 60)
+  test("rerunning a day's ingest and warehouse leaves all eight tables identical") {
+    val r = Files.createTempDirectory("graft_e2e_rerun").toString
+    val dir = s"$r/html"
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/page1.html"), (1 to 60).map(i =>
+      card(s"100$i", s"Engineer Role $i", s"${10 + i % 20} - 40 triệu",
+        if (i % 2 == 0) "Hà Nội" else "Hồ Chí Minh & Hà Nội", s"${5 + i % 10}")).mkString("\n"))
+    def run(): Unit = {
+      Apps.runIngestDay(spark, dir, r, "2026-02-01")
+      Apps.runWarehouseDay(spark, r, "2026-02-01")
+    }
+    val tables = Seq("raw_jobs", "staging_jobs", "dwh/DimJob", "dwh/DimCompany",
+      "dwh/DimLocation", "dwh/DimDate", "dwh/FactJobPostingDaily",
+      "dwh/FactJobLocationBridge")
+    def read(t: String) = graft.storage.Store.read(spark, r, t)
+    run()
+    // the rerun deletes the files the first run's frames read: keep their rows
+    val first = tables.map(t => t -> read(t).localCheckpoint(eager = true)).toMap
+    run()
+    for (t <- tables) {
+      val again = read(t)
+      assert(again.schema == first(t).schema, t)
+      assert(first(t).count() > 0, t)
+      assert(again.exceptAll(first(t)).isEmpty && first(t).exceptAll(again).isEmpty, t)
+    }
   }
 
   test("denormalized export lands in load_month partitions") {

@@ -48,6 +48,8 @@ class DeclaredSchemaSpec extends SparkSpec {
     for ((table, declared) <- tables)
       assert(shape(spark.read.parquet(s"$root/$table").schema) == shape(declared), table)
     // the partition column reads back last
+    assert(shape(spark.read.parquet(s"$root/staging_jobs").drop("crawl_date").schema) ==
+      shape(Schemas.staging), "staging_jobs")
     val (partition, data) = Schemas.factDaily.fields.partition(_.name == "date_id")
     assert(shape(spark.read.parquet(s"$root/dwh/FactJobPostingDaily").schema) ==
       shape(StructType(data ++ partition)))

@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.SparkSpec
-import graft.storage.TableStore
+import graft.storage.Store
 import graft.warehouse.Schemas
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -64,9 +64,8 @@ class RebuildSpec extends SparkSpec {
       Some("2026-01-09 00:00:00"), "2026-01-03 06:00:00"))
 
   private def writeStaging(root: String, day: String, rows: Seq[Row]): Unit =
-    TableStore.replacePartitions(
-      stagingDf(rows).withColumn("crawl_date", lit(day)),
-      s"$root/staging_jobs", Seq("crawl_date"))
+    Store.commit(root, Seq(Store.Partitions("staging_jobs",
+      stagingDf(rows).withColumn("crawl_date", lit(day)), Seq("crawl_date"))))
 
   private def readT(root: String, t: String): DataFrame =
     spark.read.parquet(s"$root/dwh/$t")
@@ -174,5 +173,42 @@ class RebuildSpec extends SparkSpec {
       .filter(col("date_id") === "2026-01-02").count() ===
       readT(rootB, "FactJobPostingDaily")
         .filter(col("date_id") === "2026-01-02").count())
+  }
+
+  test("a pin links the head's files and runs no Spark job") {
+    val root = Files.createTempDirectory("rebuild_pin").toString
+    writeStaging(root, "2026-01-01", day1)
+    Apps.runWarehouseDay(spark, root, "2026-01-01")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val group = "graft-pin"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (Option(e.properties.getProperty("spark.job.description")).contains("marker"))
+            marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "pin")
+    try {
+      Apps.pinWarehouse(root, "2026-01-01")
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1)).count() // the listener has seen every earlier job once it sees this
+      assert(marker.await(10, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.setJobDescription(null); sc.removeSparkListener(listener) }
+    assert(jobs.get() == 0)
+    val head = Store.head(root)
+    val pinned = Store.head(Store.pinRoot(root, "day=2026-01-01"))
+    val tables = Seq("DimJob", "DimCompany", "DimLocation", "DimDate",
+      "FactJobPostingDaily", "FactJobLocationBridge").map("dwh/" + _)
+    for (t <- tables) {
+      assert(pinned.of(t).nonEmpty && pinned.of(t) == head.of(t), t)
+      pinned.of(t).foreach(f => assert(Files.isSameFile(
+        java.nio.file.Paths.get(Store.pinRoot(root, "day=2026-01-01"), f),
+        java.nio.file.Paths.get(root, f)), f))
+    }
   }
 }

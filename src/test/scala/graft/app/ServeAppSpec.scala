@@ -35,8 +35,8 @@ class ServeAppSpec extends SparkSpec {
   }
 
   private lazy val server = {
-    staging().write.partitionBy("crawl_date").mode("overwrite")
-      .parquet(s"$root/staging_jobs")
+    graft.storage.Store.commit(root, Seq(graft.storage.Store.Partitions(
+      "staging_jobs", staging(), Seq("crawl_date"))))
     Apps.runWarehouseDay(spark, root, "2026-03-01")
     val port = { val s = new java.net.ServerSocket(0)
                  try s.getLocalPort finally s.close() }

@@ -24,13 +24,14 @@ class IdempotentSinkSpec extends SparkSpec {
   test("a torn write (no marker) is invisible and replay repairs it") {
     val path = Files.createTempDirectory("idem_torn").resolve("t").toString
     val df = Seq((1L, "a")).toDF("id", "v")
-    // simulate a crash after files landed but before the marker
-    df.write.parquet(s"$path/batch=0")
+    // simulate a crash after files landed but before the head moved
+    df.write.parquet(s"$path/batches")
     assert(!IdempotentSink.alreadyCommitted(path, 0L))
     assert(IdempotentSink.readCommitted(spark, path, df.schema).count() == 0L)
-    // the replay deletes the torn dir and commits cleanly
+    // the replay commits cleanly and its commit sweeps the torn files
     assert(IdempotentSink.writeBatch(df, path, 0L))
     assert(IdempotentSink.readCommitted(spark, path, df.schema).count() == 1L)
+    assert(spark.read.parquet(s"$path/batches").count() == 1L)
   }
 
   test("end-to-end: foreachBatch through the sink is exactly-once") {
@@ -46,6 +47,7 @@ class IdempotentSinkSpec extends SparkSpec {
       val back = IdempotentSink.readCommitted(spark, path, schema)
       assert(back.count() == 3L)
       assert(Files.list(Paths.get(path)).count() >= 2)
+      assert(Store.head(path).txn.contains(1L)) // two batches, ids 0 and 1
     } finally q.stop()
   }
 }

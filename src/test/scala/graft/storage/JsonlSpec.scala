@@ -34,10 +34,10 @@ class JsonlSpec extends SparkSpec {
     // simulate a crash between the two renames: old parked, target gone
     Files.move(java.nio.file.Paths.get(path),
       java.nio.file.Paths.get(path + ".__old"))
-    assert(TableStore.recoverSnapshot(path))
+    assert(TableStore.restoreParked(path))
     assert(Jsonl.read(spark, path, docs.schema).count() == 2L)
     // a live target is never clobbered by recover
-    assert(!TableStore.recoverSnapshot(path))
+    assert(!TableStore.restoreParked(path))
     // and the next write after a crashed swap replaces cleanly
     Files.move(java.nio.file.Paths.get(path),
       java.nio.file.Paths.get(path + ".__old"))

@@ -20,15 +20,20 @@ class VersionedSpec extends SparkSpec {
   test("a torn write above the pointer is invisible and swept") {
     val root = Files.createTempDirectory("versioned_torn").resolve("t").toString
     Versioned.write(Seq((1L, "a")).toDF("id", "v"), root)
-    // crash-sim: snapshot dir landed, pointer never moved
-    Seq((9L, "junk")).toDF("id", "v").write.parquet(s"$root/v=2")
+    // crash-sim: a snapshot's files landed, no head moved, no pin published
+    Seq((9L, "junk")).toDF("id", "v").write.mode("append").parquet(s"$root/data")
+    // crash-sim: a snapshot committed, its version pin never published
+    Store.commit(root, Seq(Store.Snapshot("data", Seq((8L, "junk")).toDF("id", "v"))))
+    Seq((7L, "junk")).toDF("id", "v").write.mode("append").parquet(s"$root/data")
     assert(Versioned.latestVersion(root).contains(1L))
     assert(Versioned.versions(root) == Seq(1L))
     intercept[IllegalArgumentException](Versioned.read(spark, root, 2L))
-    // the next write sweeps the torn dir and commits ITS version 2
+    assert(Versioned.read(spark, root).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // the next write sweeps the torn files and commits ITS version 2
     Versioned.write(Seq((2L, "real")).toDF("id", "v"), root)
     assert(Versioned.read(spark, root, 2L).collect()
       .map(_.getLong(0)).toSeq == Seq(2L))
+    assert(spark.read.parquet(s"$root/data").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("retain keeps the newest versions and pinned reads fail loudly after") {
@@ -41,6 +46,6 @@ class VersionedSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Versioned.read(spark, root, 1L))
     assert(e.getMessage.contains("retained away"))
-    assert(!Files.exists(Paths.get(s"$root/v=1")))
+    assert(!Files.exists(Paths.get(Store.pinRoot(root, "v=1"))))
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.app.Apps
+import graft.storage.{IdempotentSink, Store}
 import graft.warehouse.Schemas
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -13,7 +14,8 @@ import java.sql.Timestamp
   * reference's README future-work item): a landing-dir file stream of
   * staging-shaped JSONL, a streaming transform deriving the
   * `crawl_date` partition key, and a foreachBatch sink that appends to
-  * the partitioned staging store and runs the REAL day-merge
+  * the partitioned staging table exactly once
+  * ([[graft.storage.IdempotentSink]]) and runs the REAL day-merge
   * ([[Apps.runWarehouseDay]]: SCD2 dims, fact carry-forward+upsert,
   * bridge, partitioned writes) for each day the batch touches. After
   * EVERY micro-batch the streamed warehouse must equal the batch
@@ -30,7 +32,7 @@ import java.sql.Timestamp
   * staged revision REPLACING a previously carried-forward fact row.
   * Arrival is in day order: SCD2 merges are chronological by design,
   * so late rows for a CLOSED day are a correction path (rebuild from a
-  * [[graft.storage.TableStore]] snapshot), not an in-place merge —
+  * pinned star, [[Apps.rebuildFromDay]]), not an in-place merge —
   * same as the reference's daily DAG.
   */
 class MaintainedWarehouseSpec extends SparkSpec {
@@ -145,12 +147,14 @@ class MaintainedWarehouseSpec extends SparkSpec {
 
     val query = staged.writeStream
       .option("checkpointLocation", s"$base/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val days = batch.select("crawl_date").distinct()
           .collect().map(_.getString(0)).sorted
         if (days.nonEmpty) {
-          batch.write.mode("append").partitionBy("crawl_date")
-            .parquet(s"$streamRoot/staging_jobs")
+          // exactly once: a replayed batch id is not appended again, and
+          // rerunning its days is idempotent
+          IdempotentSink.writeBatch(batch, streamRoot, batchId,
+            table = "staging_jobs", cols = Seq("crawl_date"))
           days.foreach(d => Apps.runWarehouseDay(spark, streamRoot, d))
         }
         ()
@@ -168,8 +172,8 @@ class MaintainedWarehouseSpec extends SparkSpec {
           val refRoot = s"$base/ref_$i"
           val refStaging = stagingDf(seen.toSeq)
             .withColumn("crawl_date", date_format(col("crawled_at"), "yyyy-MM-dd"))
-          refStaging.write.mode("overwrite").partitionBy("crawl_date")
-            .parquet(s"$refRoot/staging_jobs")
+          Store.commit(refRoot, Seq(Store.Snapshot("staging_jobs", refStaging,
+            Seq("crawl_date"))))
           refStaging.select("crawl_date").distinct()
             .collect().map(_.getString(0)).sorted
             .foreach(d => Apps.runWarehouseDay(spark, refRoot, d))

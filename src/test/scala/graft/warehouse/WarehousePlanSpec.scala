@@ -64,4 +64,45 @@ class WarehousePlanSpec extends SparkSpec {
       assert(bad.isEmpty, s"$name build has an unpartitioned window:\n${bad.mkString("\n")}")
     }
   }
+
+  test("a day run from the empty state plans no exchange over its empty inputs") {
+    // Schemas.empty is a LocalRelation, so the optimizer prunes the joins,
+    // unions and aggregates over the empty dims and fact instead of
+    // shuffling or broadcasting nothing.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def row(id: String): Row =
+      Row(id, "T", "u", Seq("S"), "C", null, null, true, "Hà Nội", null, null,
+        "negotiable", null, ts("2026-01-01 06:00:00"), null, ts("2026-01-01 06:00:00"))
+    val staging = spark.createDataFrame(
+      new java.util.ArrayList[Row]((1 to 5).map(i => row(s"j$i")).asJava), Schemas.staging)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      WarehouseJob.runDay(spark, WarehouseJob.emptyState(spark), staging, "2026-01-01")
+      spark.range(1).toDF("marker").collect() // seen last: every earlier plan is in
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def emptyLeaf(p: SparkPlan): Boolean = p match {
+      case l: LocalTableScanExec => l.rows.isEmpty
+      case r: RDDScanExec => r.rdd.getNumPartitions == 0
+      case _ => false
+    }
+    assert(plans.asScala.count(_._1 == "localCheckpoint") >= 6)
+    val wasted = plans.asScala.toSeq.flatMap { case (_, plan) =>
+      helper.collect(plan) { case e: Exchange if helper.find(e)(emptyLeaf).isDefined => e }
+    }
+    assert(wasted.isEmpty, s"exchanges over empty inputs:\n${wasted.mkString("\n")}")
+  }
 }
