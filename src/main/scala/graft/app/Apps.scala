@@ -69,7 +69,9 @@ object Apps {
       if (crawlStats.getAs[Double]("valid_rate") >= 0.9) "passed" else "failed")
     QualityGate.evaluate(crawlStats, QualityGate.crawlConfig)
 
-    // Raw merge (S5/M8) over the snapshot table.
+    // Raw merge (S5/M8) over the snapshot table, materialized once: the
+    // raw snapshot and the staging partition are written side by side
+    // from it, and each would otherwise rerun the merge's shuffles.
     val crawledAt = lit(runDate + " 06:00:00").cast("timestamp")
     val incoming = jobs.withColumn("crawled_at", crawledAt)
     val merged = Merge.upsert(
@@ -77,6 +79,7 @@ object Apps {
       key = Seq("job_id"),
       tracked = Seq("title", "company_name", "salary", "location", "deadline",
         "verified_employer"))
+      .localCheckpoint(true)
 
     // Staging transform (F1–F8 projection, staging_procedures.sql) of the
     // merged rows of the jobs crawled today.

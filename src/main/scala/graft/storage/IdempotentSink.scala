@@ -8,9 +8,9 @@ import org.apache.spark.sql.types.StructType
   * after a crash between a successful write and the checkpoint commit,
   * the SAME batchId is replayed. This sink makes the write idempotent,
   * which upgrades the pipeline to exactly-once: each batch is one
-  * [[Store.Append]] commit to `table` of the store at `root` carrying the
-  * batch id as the head's `txn`, and a batch id at or below the head's
-  * txn is skipped (Delta's SetTransaction rule). A crash before the
+  * [[Store.Append]] commit to the `batches` table of the store at `root`
+  * carrying the batch id as the head's `txn`, and a batch id at or below
+  * the head's txn is skipped (Delta's SetTransaction rule). A crash before the
   * commit leaves torn files no reader sees, swept by the replay's commit.
   */
 object IdempotentSink {
@@ -22,9 +22,8 @@ object IdempotentSink {
 
   /** Write one micro-batch; returns false when the batchId was already
     * committed (the replay case) and nothing was written. */
-  def writeBatch(df: DataFrame, root: String, batchId: Long,
-                 table: String = Table, cols: Seq[String] = Nil): Boolean =
-    Store.commit(root, Seq(Store.Append(table, df, cols)), Some(batchId))
+  def writeBatch(df: DataFrame, root: String, batchId: Long): Boolean =
+    Store.commit(root, Seq(Store.Append(Table, df)), Some(batchId))
 
   /** Ready-made `foreachBatch` function. */
   def sink(root: String): (DataFrame, Long) => Unit =

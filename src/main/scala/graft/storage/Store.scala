@@ -123,19 +123,12 @@ object Store {
       scan(spark.read, root, table, files)
     }
 
-  /** After a commit the directory holds exactly the head's files and is
-    * read whole, as any engine reads it; only a crashed commit's leftovers
-    * make the reader list the head's files one by one. */
+  /** The head's `files` of `table`, with the table directory as base path
+    * so partition columns come back; torn files beside them are not read. */
   private def scan(reader: DataFrameReader, root: String, table: String,
-                   files: Seq[String]): DataFrame = {
-    val r = Paths.get(root)
-    val dir = r.resolve(table)
-    val paths =
-      if (dataFiles(dir).map(f => r.relativize(f).toString).toSet == files.toSet)
-        Seq(dir.toString)
-      else files.map(f => r.resolve(f).toString)
-    reader.option("basePath", dir.toString).parquet(paths: _*)
-  }
+                   files: Seq[String]): DataFrame =
+    reader.option("basePath", Paths.get(root, table).toString)
+      .parquet(files.map(f => Paths.get(root, f).toString): _*)
 
   /** Pin `tables` as they are in the head under `name`: their files are
     * hard-linked into `_pins/<name>/`, which is published by its own

@@ -83,7 +83,7 @@ object FactDaily {
     // fact_id so every today-row gets a fresh id like the reference's NEXTVAL.
     val compared = fromStaging.columns.toSeq.filter(_ != "__priority")
     val revised = fromStaging.join(
-      broadcast(existing.select(compared.map(c => col(c).as(s"__e_$c")): _*)),
+      existing.select(compared.map(c => col(c).as(s"__e_$c")): _*),
       compared.map(c => col(c) <=> col(s"__e_$c")).reduce(_ && _), "left_anti")
     val unioned = existing.unionByName(
       revised.withColumn("fact_id", lit(null).cast("long")), allowMissingColumns = true)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.app.Apps
-import graft.storage.{IdempotentSink, Store}
+import graft.storage.Store
 import graft.warehouse.Schemas
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,9 @@ import java.sql.Timestamp
   * reference's README future-work item): a landing-dir file stream of
   * staging-shaped JSONL, a streaming transform deriving the
   * `crawl_date` partition key, and a foreachBatch sink that appends to
-  * the partitioned staging table exactly once
-  * ([[graft.storage.IdempotentSink]]) and runs the REAL day-merge
+  * the partitioned staging table exactly once (a store `Append` commit
+  * carrying the batch id as its txn, as [[graft.storage.IdempotentSink]]
+  * commits) and runs the REAL day-merge
   * ([[Apps.runWarehouseDay]]: SCD2 dims, fact carry-forward+upsert,
   * bridge, partitioned writes) for each day the batch touches. After
   * EVERY micro-batch the streamed warehouse must equal the batch
@@ -151,10 +152,10 @@ class MaintainedWarehouseSpec extends SparkSpec {
         val days = batch.select("crawl_date").distinct()
           .collect().map(_.getString(0)).sorted
         if (days.nonEmpty) {
-          // exactly once: a replayed batch id is not appended again, and
-          // rerunning its days is idempotent
-          IdempotentSink.writeBatch(batch, streamRoot, batchId,
-            table = "staging_jobs", cols = Seq("crawl_date"))
+          // exactly once: a replayed batch id is not appended again (the
+          // sink's txn rule), and rerunning its days is idempotent
+          Store.commit(streamRoot,
+            Seq(Store.Append("staging_jobs", batch, Seq("crawl_date"))), Some(batchId))
           days.foreach(d => Apps.runWarehouseDay(spark, streamRoot, d))
         }
         ()
