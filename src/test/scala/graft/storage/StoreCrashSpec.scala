@@ -3,7 +3,7 @@ package graft.storage
 import graft.SparkSpec
 import graft.app.Apps
 import graft.storage.StoreFixture._
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /** Crash states of the store commit, for an ingest day and a warehouse
   * day on top of a one-day warehouse. A commit's on-disk state is fully
@@ -20,9 +20,9 @@ import java.nio.file.{Files, Path}
   * In each state the eight tables read as the day before or the day
   * itself, never a mix, and rerunning the day leaves them row-identical
   * to the uncrashed run. Two real faults — a table write that fails and a
-  * head that cannot move — show the same in the running code: the first
-  * catches a head moved before every write finished, the second files
-  * deleted before the head moved.
+  * head that cannot be moved into place once written — show the same in
+  * the running code: the first catches a head moved before every write
+  * finished, the second files deleted before the head moved.
   */
 class StoreCrashSpec extends SparkSpec {
 
@@ -127,6 +127,24 @@ class StoreCrashSpec extends SparkSpec {
   }
 
   test("a head that cannot move deletes nothing the live head lists") {
-    faulted(warehouseRun, warehouse, root => Files.createDirectory(root.resolve("_head.tmp")))
+    // The commit's own write turns the live head into a non-empty
+    // directory after the commit has read it: the new head is written in
+    // full but cannot be moved over it.
+    import spark.implicits._
+    val root = cloneRoot(ingestRun.before, "store_crash_fault")
+    val head = root.resolve("_head").toString
+    val saved = root.resolve("_head.saved").toString
+    val blocking = spark.range(0, 1, 1, 1).map { i =>
+      Files.move(Paths.get(head), Paths.get(saved))
+      Files.createDirectories(Paths.get(head, "blocked"))
+      i
+    }.toDF("id")
+    intercept[Exception](Store.commit(root.toString, Seq(Store.Snapshot("raw_jobs", blocking))))
+    TableStore.deleteRecursively(Paths.get(head))
+    Files.move(Paths.get(saved), Paths.get(head))
+    assert(tables(root) == ingestRun.rowsBefore, "a head that did not move lost files it lists")
+    ingest(root)
+    assert(tables(root) == ingestRun.rowsAfter)
+    assert(plainReadMismatches(spark, root.toString).isEmpty)
   }
 }
