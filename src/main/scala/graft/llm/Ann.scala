@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column.
   *
-  * Two paths:
+  * Three tiers, each ranked by round-6 cosine with the neighbor id as
+  * tiebreak:
   *   - [[bruteForceTopK]]: exact cosine top-k — the correctness baseline.
   *     The query side broadcasts; the corpus streams once. Right answer,
   *     O(|Q|·|C|) work — fine for |Q| small, not the 100 TB path.
@@ -16,9 +17,26 @@ import org.apache.spark.sql.functions._
   *     [[planes]]); candidates are bucket collisions (plus 1-bit-flip probes
   *     on the query side for recall), then exact cosine within candidates.
   *     Work scales with bucket occupancy, not corpus size × queries.
+  *   - [[ivfTopK]] / [[ivfTopKTrained]]: IVF lists over stride-sampled or
+  *     [[kmeansTrain]]ed centroids; queries probe their `nprobe` nearest.
   *
-  * All arithmetic in double via native higher-order functions
-  * (`zip_with` + `aggregate`) — codegen'd, no UDFs.
+  * Every operator of the embedding family (this object, [[Pq]],
+  * [[Classify]], [[EmbedStats]], [[Dpo]], [[LogReg]], [[Mining]]) is
+  * built from one shared layer:
+  *   - [[round6]]: the portable floor-based 6-dp rounding, and
+  *     [[exactMean]] the portable group mean (exact decimal sum, one
+  *     division, round6);
+  *   - [[dimMeans]]: the per-dimension exact means of a vector within
+  *     key groups, and [[gather]] their dim-ordered collect into
+  *     `(keys…, n_members, centroid)`;
+  *   - [[strideSample]] / [[centroidTable]]: the cid-ascending centroid
+  *     table with norms, and [[assignTopK]] the dense kernel that ranks
+  *     rows against it;
+  *   - [[cosinePre]]: the pair cosine with the zero-norm −∞ clamp;
+  *   - [[rankTail]]: `row_number` per partition, kept at `rank <= k`.
+  * An operator adds only its pairing and its score. Dot, norm and the
+  * kernels are compiled ascending-index loops
+  * ([[graft.expressions.VecKernels]]) — no UDFs.
   */
 object Ann {
 
@@ -46,7 +64,7 @@ object Ann {
     * inconsistently in the IVF insertion-sort kernel; −∞ orders LAST
     * everywhere, so all ranking paths agree on any input.
     */
-  private def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
+  private[llm] def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na * nb === 0.0, lit(Double.NegativeInfinity))
       .otherwise(dot(a, b) / (na * nb))
 
@@ -66,10 +84,7 @@ object Ann {
       .select(col(queryId), col(corpusId),
         round(cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")), 6)
           .as("cosine"))
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("cosine").desc, col(corpusId).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTail(scored, queryId, k, col("cosine").desc, col(corpusId).asc)
   }
 
   /** The seeded Rademacher hyperplanes behind [[signBucket]], exposed so
@@ -122,10 +137,7 @@ object Ann {
         round(cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")), 6)
           .as("cosine"))
       .dropDuplicates(queryId, corpusId)
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("cosine").desc, col(corpusId).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTail(scored, queryId, k, col("cosine").desc, col(corpusId).asc)
   }
 
   /** Stride that yields ≈`target` centroids from an `n`-row corpus —
@@ -198,19 +210,8 @@ object Ann {
               centroidTarget: Int = 0, nprobe: Int = 3,
               queryId: String = "query_id", corpusId: String = "neighbor_id",
               vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val stride = centroidStride(corpus.count(), centroidTarget)
-    val cents: Array[(Long, Array[Double], Double)] = corpus
-      .filter(pmod(col(corpusId), lit(stride)) === 0)
-      .select(col(corpusId).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (cid, cv) =>
-        // exact float→double widening: the kernel's per-element widening
-        // moved here, bitwise-identical cosines
-        val cd = cv.map(_.toDouble)
-        (cid, cd, normDd(cd))
-      }
-    ivfServe(queries, corpus, cents, k, nprobe, queryId, corpusId, vecCol)
+    ivfServe(queries, corpus, strideSample(corpus, corpusId, vecCol, centroidTarget),
+      k, nprobe, queryId, corpusId, vecCol)
   }
 
   /** IVF serve over TRAINED centroids — the [[kmeansTrain]] → query
@@ -224,18 +225,86 @@ object Ann {
                      k: Int, nprobe: Int = 3,
                      queryId: String = "query_id", corpusId: String = "neighbor_id",
                      vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col("cid").cast("long"), col("centroid"))
+    ivfServe(queries, corpus, centroidTable(centroids), k, nprobe,
+      queryId, corpusId, vecCol)
+  }
+
+  /** Portable 6-dp rounding, half toward +∞: `floor(x·10⁶ + 0.5)/10⁶`
+    * — pure IEEE ops, so the result is bitwise-identical in any engine.
+    * A library `round(x, 6)` is NOT portable here: exact decimal means
+    * over small counts land exactly on `…5` boundaries, where Spark's
+    * BigDecimal HALF_UP and DuckDB's scaled-multiply round disagree
+    * (measured on the k-means fixture).
+    */
+  private[llm] def round6(x: Column): Column =
+    floor(x * lit(1e6) + lit(0.5)) / lit(1e6)
+
+  /** The portable mean of `v` over a group, as an aggregate Column: an
+    * EXACT `decimal(20,10)` sum (one float→decimal cast per element,
+    * bitwise-identical across engines — verified against DuckDB), one
+    * decimal→double cast, one IEEE division by the row count, then
+    * [[round6]].
+    */
+  private[llm] def exactMean(v: Column): Column =
+    round6(sum(v.cast("decimal(20,10)")).cast("double") / count(lit(1)))
+
+  /** Per-dimension exact means of the vector `vec` within each `keys`
+    * group: `(keys…, __dim, __c, __m)` — `__dim` the 0-based position,
+    * `__c` the group's row count, `__m` its [[exactMean]]. One
+    * `(keys…, dim)`-keyed partial aggregation.
+    */
+  private[llm] def dimMeans(df: DataFrame, keys: Seq[String], vec: Column): DataFrame =
+    df.select(keys.map(col) :+ posexplode(vec).as(Seq("__dim", "__v")): _*)
+      .groupBy(keys.map(col) :+ col("__dim"): _*)
+      .agg(count(lit(1)).as("__c"), exactMean(col("__v")).as("__m"))
+
+  /** [[dimMeans]] rows gathered per group in dimension order:
+    * `(keys…, n_members, centroid: array<double>)`.
+    */
+  private[llm] def gather(means: DataFrame, keys: Seq[String]): DataFrame =
+    means.groupBy(keys.map(col): _*)
+      .agg(max(col("__c")).as("n_members"), // __c is identical across dims
+        sort_array(collect_list(struct(col("__dim"), col("__m")))).as("__dm"))
+      .select(keys.map(col) ++ Seq(col("n_members"),
+        transform(col("__dm"), s => s.getField("__m")).as("centroid")): _*)
+
+  /** A `(cid, centroid: array<double>)` model as the table
+    * [[assignTopK]] reads: cid-ascending, with each centroid's norm.
+    */
+  private[llm] def centroidTable(centroids: DataFrame): Array[(Long, Array[Double], Double)] = {
+    import centroids.sparkSession.implicits._
+    centroids.select(col("cid").cast("long"), col("centroid"))
       .as[(Long, Array[Double])].collect().sortBy(_._1)
       .map { case (cid, cv) => (cid, cv, normDd(cv)) }
-    ivfServe(queries, corpus, cents, k, nprobe, queryId, corpusId, vecCol)
   }
+
+  /** The stride-sampled centroid table: every `stride`-th id of the
+    * corpus ([[centroidStride]] budget) is a centroid, its id the cid —
+    * [[ivfTopK]]'s lists and [[kmeansTrain]]'s initial centroids.
+    */
+  private[llm] def strideSample(corpus: DataFrame, idCol: String, vecCol: String,
+                                target: Int): Array[(Long, Array[Double], Double)] = {
+    val stride = centroidStride(corpus.count(), target)
+    // float→double widening is exact: the table holds the sampled
+    // vectors bit for bit
+    centroidTable(corpus.filter(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).as("cid"), transform(col(vecCol), _.cast("double")).as("centroid")))
+  }
+
+  /** Top `k` rows per `partition` value by `order`, numbered from 1 in
+    * `rank` — the tail of every top-k ranking in this family.
+    */
+  private[llm] def rankTail(df: DataFrame, partition: String, k: Int,
+                            order: Column*): DataFrame =
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(col(partition)).orderBy(order: _*)))
+      .filter(col("rank") <= k)
 
   /** Top-`keep` centroids per row by (cosine desc, centroid id asc):
     * the shared dense assignment kernel ([[ivfTopK]] lists + probes,
     * [[ivfTopKTrained]], [[kmeansTrain]] with keep = 1). Emits one row
-    * per (vector, kept centroid). `cents` must be cid-ascending.
+    * per (vector, kept centroid). Equal cosines go to the min cid in
+    * any table order.
     */
   private[llm] def assignTopK(df: DataFrame, id: String, vecCol: String,
                               cents: Array[(Long, Array[Double], Double)],
@@ -296,10 +365,7 @@ object Ann {
         round(cosinePre(col("__qv"), col("__cvv"), col("__qn"), col("__cn")), 6)
           .as("cosine"))
       .dropDuplicates(queryId, corpusId)
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("cosine").desc, col(corpusId).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTail(scored, queryId, k, col("cosine").desc, col(corpusId).asc)
   }
 
   /** Deterministic Lloyd (k-means) refinement of the IVF centroids —
@@ -312,17 +378,10 @@ object Ann {
     *   - assignment = nearest centroid by cosine (zero-norm clamped to
     *     −∞, min-cid tiebreak), as a broadcast mapPartitions kernel —
     *     the sanctioned dense-numeric case, same as [[ivfTopK]];
-    *   - update = per-dimension mean through an EXACT `decimal(20,10)`
-    *     sum (one float→decimal cast per element, bitwise-identical
-    *     across engines — verified against DuckDB), one decimal→double
-    *     cast, one IEEE division, then 6-decimal rounding expressed as
-    *     `floor(x·10⁶ + 0.5)/10⁶` — pure IEEE ops, so the result is
-    *     bitwise-identical in any engine. (A library `round(x, 6)` is
-    *     NOT portable here: decimal sums over small counts land means
-    *     exactly on `…5` boundaries, where Spark's BigDecimal HALF_UP
-    *     on the binary expansion and DuckDB's scaled-multiply round
-    *     disagree — measured on this fixture.) Every iteration's
-    *     centroids are therefore engine-reproducible doubles;
+    *   - update = per-dimension [[exactMean]] of the members
+    *     ([[dimMeans]] + [[gather]]): an exact decimal sum, one
+    *     division and the portable [[round6]], so every iteration's
+    *     centroids are engine-reproducible doubles;
     *   - a cluster that loses all members simply drops out (its group
     *     produces no rows) — deterministic, no re-seeding RNG.
     *
@@ -338,38 +397,17 @@ object Ann {
                   vecCol: String = "embedding", iters: Int = 2,
                   centroidTarget: Int = 0): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val stride = centroidStride(corpus.count(), centroidTarget)
-    var cents: Array[(Long, Array[Double])] = corpus
-      .filter(pmod(col(idCol), lit(stride)) === 0)
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (cid, v) => (cid, v.map(_.toDouble)) }
+    var cents = strideSample(corpus, idCol, vecCol, centroidTarget)
     var result: DataFrame = null
     for (_ <- 0 until iters) {
       // keep = 1 in the shared kernel = nearest centroid with the
       // min-cid tie rule (cents are cid-ascending), matching the SQL
       // ROW_NUMBER(ORDER BY cos DESC, cid ASC) mirror
       val assigned = assignTopK(corpus.select(col(idCol), col(vecCol)),
-          idCol, vecCol, cents.map { case (cid, cv) => (cid, cv, normDd(cv)) }, 1)
-        .withColumnRenamed("__cent", "__cid")
-      val means = assigned
-        .select(col("__cid"), posexplode(col(vecCol)).as(Seq("__dim", "__v")))
-        .groupBy(col("__cid"), col("__dim"))
-        .agg(count(lit(1)).as("__c"),
-          sum(col("__v").cast("decimal(20,10)")).as("__s"))
-        .select(col("__cid"), col("__dim"), col("__c"),
-          // floor-based half-toward-+∞ rounding: engine-portable (see scaladoc)
-          (floor(col("__s").cast("double") / col("__c") * lit(1e6) + lit(0.5)) / lit(1e6))
-            .as("__m"))
-      result = means.groupBy(col("__cid").as("cid"))
-        .agg(max(col("__c")).as("n_members"), // __c is identical across dims
-          sort_array(collect_list(struct(col("__dim"), col("__m")))).as("__dm"))
-        .select(col("cid"), col("n_members"),
-          transform(col("__dm"), s => s.getField("__m")).as("centroid"))
-      cents = result.select(col("cid"), col("centroid"))
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
+          idCol, vecCol, cents, 1)
+        .select(col("__cent").as("cid"), col(vecCol))
+      result = gather(dimMeans(assigned, Seq("cid"), col(vecCol)), Seq("cid"))
+      cents = centroidTable(result)
     }
     result
   }
@@ -397,11 +435,7 @@ object Ann {
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     maxCluster: Int = 1000,
                     capStats: Option[CapStats] = None): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col("cid").cast("long"), col("centroid"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-      .map { case (cid, cv) => (cid, cv, normDd(cv)) }
+    val cents = centroidTable(centroids)
     // materialized once: the cluster self-join reads both sides plus the
     // final output, and the dense assignment kernel would otherwise run
     // three times (same reason nearDupCosine checkpoints its buckets)

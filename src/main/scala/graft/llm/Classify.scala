@@ -1,7 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Nearest-centroid (Rocchio) classification — the trainable classifier
@@ -16,10 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Two feature regimes:
   *   - [[centroidTrain]]/[[centroidPredict]]: dense `array<float>`
-  *     embeddings (the `embeddings` table shape) — per-dimension exact
-  *     `decimal(20,10)` means with the portable 6-dp rounding
-  *     ([[Ann.kmeansTrain]]'s convention), cosine via the ascending
-  *     [[Ann.dot]]/[[Ann.norm]] folds.
+  *     embeddings (the `embeddings` table shape) — the shared exact
+  *     per-dimension means ([[Ann.dimMeans]], [[Ann.kmeansTrain]]'s
+  *     convention), cosine via the ascending [[Ann.dot]]/[[Ann.norm]]
+  *     folds.
   *   - [[textCentroidTrain]]/[[textCentroidPredict]]: sparse hashed
   *     bag-of-words over raw text ([[TextStats.hashedFeatures]]'s
   *     portable md5-bucket trick) — the dot product is an
@@ -41,24 +40,13 @@ import org.apache.spark.sql.functions._
 object Classify {
 
   /** Per-class mean vector over a labeled corpus:
-    * `(label, n_members, centroid: array<double>)`. Means are exact
-    * decimal sums divided once, rounded via the portable
-    * `floor(x·10⁶ + 0.5)/10⁶` — any engine trains the identical model.
+    * `(label, n_members, centroid: array<double>)`. Means are the shared
+    * exact means ([[Ann.exactMean]]) — any engine trains the identical
+    * model.
     */
   def centroidTrain(df: DataFrame, labelCol: String, vecCol: String): DataFrame =
-    df.select(col(labelCol).as("label"),
-        posexplode(col(vecCol)).as(Seq("__j", "__v")))
-      .groupBy(col("label"), col("__j"))
-      .agg(count(lit(1)).as("__c"),
-        sum(col("__v").cast("decimal(20,10)")).as("__s"))
-      .select(col("label"), col("__j"), col("__c"),
-        (floor(col("__s").cast("double") / col("__c") * lit(1e6) + lit(0.5)) /
-          lit(1e6)).as("__m"))
-      .groupBy(col("label"))
-      .agg(max(col("__c")).as("n_members"),
-        sort_array(collect_list(struct(col("__j"), col("__m")))).as("__jm"))
-      .select(col("label"), col("n_members"),
-        transform(col("__jm"), s => s.getField("__m")).as("centroid"))
+    Ann.gather(Ann.dimMeans(df.select(col(labelCol).as("label"), col(vecCol).as("__vec")),
+      Seq("label"), col("__vec")), Seq("label"))
 
   /** Raw per-class scores: `(idCol, label, cosine)` — every corpus row
     * against EVERY class centroid, cosine rounded to 6 dp. The surface
@@ -74,10 +62,8 @@ object Classify {
       col("centroid").as("__ce")))
     df.select(col(idCol), col(vecCol).as("__e")).crossJoin(m)
       .select(col(idCol), col("__label").as("label"),
-        round(when(Ann.norm(col("__e")) * Ann.norm(col("__ce")) === 0.0,
-            lit(Double.NegativeInfinity))
-          .otherwise(Ann.dot(col("__e"), col("__ce")) /
-            (Ann.norm(col("__e")) * Ann.norm(col("__ce")))), 6).as("cosine"))
+        round(Ann.cosinePre(col("__e"), col("__ce"),
+          Ann.norm(col("__e")), Ann.norm(col("__ce"))), 6).as("cosine"))
   }
 
   /** Nearest centroid by cosine: `(idCol, pred_label, cosine)` — the
@@ -86,13 +72,10 @@ object Classify {
     * still get the min label.
     */
   def centroidPredict(df: DataFrame, idCol: String, vecCol: String,
-                      model: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("cosine").desc, col("label").asc)
-    centroidScores(df, idCol, vecCol, model)
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+                      model: DataFrame): DataFrame =
+    Ann.rankTail(centroidScores(df, idCol, vecCol, model), idCol, 1,
+        col("cosine").desc, col("label").asc)
       .select(col(idCol), col("label").as("pred_label"), col("cosine"))
-  }
 
   /** Sparse hashed token counts: `(idCol, __i, __tf)` — the exploded
     * form both text paths share ([[TextStats.hashedFeatures]] renders
@@ -167,9 +150,7 @@ object Classify {
             lit(Double.NegativeInfinity))
           .otherwise(coalesce(col("__dot").cast("double"), lit(0.0)) /
             (col("__dn") * col("__cn"))), 6).as("cosine"))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("cosine").desc, col("label").asc)
-    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
+    Ann.rankTail(scored, idCol, 1, col("cosine").desc, col("label").asc)
       .select(col(idCol), col("label").as("pred_label"), col("cosine"))
   }
 }

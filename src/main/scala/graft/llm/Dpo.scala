@@ -94,22 +94,17 @@ object Dpo {
     val x = col(scoreCol).cast("double")
     val stats = candidates.groupBy(g: _*)
       .agg(count(lit(1)).as("n_group"),
-        sum(x.cast("decimal(20,10)")).as("__s"),
+        Ann.exactMean(x).as("__m"),
         sum((x * x).cast("decimal(28,15)")).as("__s2"))
-      .select(g ++ Seq(col("n_group"),
-        (floor(col("__s").cast("double") / col("n_group") * lit(1e6)
-          + lit(0.5)) / lit(1e6)).as("__m"),
+      .select(g ++ Seq(col("n_group"), col("__m"),
         (col("__s2").cast("double") / col("n_group").cast("double"))
           .as("__m2")): _*)
       .select(g ++ Seq(col("n_group"), col("__m"),
         sqrt(greatest(col("__m2") - col("__m") * col("__m"), lit(0.0)))
           .as("__sd")): _*)
-    // floor-based round-6 publish (NOT library round(x, 6)): Spark's
-    // round is HALF_UP on the decimal form while DuckDB multiplies and
-    // rounds the scaled double, so a z-score landing on a decimal
-    // midpoint would diverge between engines. floor(x*1e6 + 0.5)/1e6 is
-    // the same exactly-rounded IEEE op on both — the EmbedStats recipe.
-    val zRaw = floor((x - col("__m")) / col("__sd") * lit(1e6) + lit(0.5)) / lit(1e6)
+    // floor-based round-6 publish (NOT library round(x, 6)): a z-score
+    // landing on a decimal midpoint would diverge between engines
+    val zRaw = Ann.round6((x - col("__m")) / col("__sd"))
     candidates.join(stats, groupCols)
       .select(g ++ Seq(col(idCol), x.as("score"), col("n_group"),
         when(col("__sd") === 0.0 || zRaw === 0.0, lit(0.0))

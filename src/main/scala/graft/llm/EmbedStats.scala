@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Embedding-space statistics: per-dimension means, the exact
@@ -31,17 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object EmbedStats {
 
-  /** Exact per-dimension means: `(j, mean)` with `j` 0-based and the
-    * portable 6-dp rounding ([[Ann.kmeansTrain]]'s convention).
+  /** Exact per-dimension means: `(j, mean)` with `j` 0-based — the
+    * shared [[Ann.dimMeans]] over the whole frame.
     */
   def meanVector(df: DataFrame, vecCol: String): DataFrame =
-    df.select(posexplode(col(vecCol)).as(Seq("j", "__v")))
-      .groupBy(col("j"))
-      .agg(count(lit(1)).as("__n"),
-        sum(col("__v").cast("decimal(20,10)")).as("__s"))
-      .select(col("j"),
-        (floor(col("__s").cast("double") / col("__n") * lit(1e6) + lit(0.5)) /
-          lit(1e6)).as("mean"))
+    Ann.dimMeans(df, Nil, col(vecCol))
+      .select(col("__dim").as("j"), col("__m").as("mean"))
 
   /** Exact second moments and covariance, upper triangle:
     * `(j, k, n, m2, cov)` with `m2 = Σ xj·xk / n` (decimal-exact sum,
@@ -136,12 +131,10 @@ object EmbedStats {
     val ex = df.select(col(idCol), posexplode(col(vecCol)).as(Seq("__j", "__v")))
     val stats = ex.groupBy(col("__j"))
       .agg(count(lit(1)).as("__n"),
-        sum(col("__v").cast("decimal(20,10)")).as("__s"),
+        Ann.exactMean(col("__v")).as("__m"),
         sum((col("__v").cast("double") * col("__v").cast("double"))
           .cast("decimal(28,15)")).as("__s2"))
-      .select(col("__j"),
-        (floor(col("__s").cast("double") / col("__n") * lit(1e6) + lit(0.5)) /
-          lit(1e6)).as("__m"),
+      .select(col("__j"), col("__m"),
         (col("__s2").cast("double") / col("__n").cast("double")).as("__m2"))
       .select(col("__j"), col("__m"),
         sqrt(greatest(col("__m2") - col("__m") * col("__m"), lit(0.0)))
@@ -187,9 +180,7 @@ object EmbedStats {
         round(sqrt(aggregate(
           zip_with(col("__va"), col("__vb"), (x, y) => (x - y) * (x - y)),
           lit(0.0), (s, v) => s + v)), 6).as("l2"),
-        round(when(Ann.norm(col("__va")) * Ann.norm(col("__vb")) === 0.0,
-            lit(Double.NegativeInfinity))
-          .otherwise(Ann.dot(col("__va"), col("__vb")) /
-            (Ann.norm(col("__va")) * Ann.norm(col("__vb")))), 6).as("cosine"))
+        round(Ann.cosinePre(col("__va"), col("__vb"),
+          Ann.norm(col("__va")), Ann.norm(col("__vb"))), 6).as("cosine"))
   }
 }

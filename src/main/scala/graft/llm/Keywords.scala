@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one token-sized shuffle for tf (doc, term), one
   * vocabulary-sized agg for df, a BROADCAST df join (vocabulary ≪
-  * corpus — the default; `broadcastDf = false` falls back to a shuffle
-  * join for pathological vocabularies that outgrow executor memory),
-  * and a doc-partitioned window — no global ordering anywhere.
+  * corpus), and a doc-partitioned window — no global ordering anywhere.
   * Broadcasting the df side is also the structural fix for Zipf skew:
   * the tf⋈df join keys on term, and without the broadcast the head
   * terms ("the", "of") make a handful of shuffle partitions hot; with
@@ -46,7 +44,6 @@ object Keywords {
   def tfidfTopK(docs: DataFrame, idCol: String, textCol: String,
                 k: Int = 3, minTermLen: Int = 3,
                 totalDocs: Option[Long] = None,
-                broadcastDf: Boolean = true,
                 stopwords: Seq[String] = Nil): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val n = totalDocs.getOrElse(docs.count())
@@ -56,10 +53,9 @@ object Keywords {
     val terms = if (stopwords.isEmpty) raw
                 else raw.filter(!col("term").isInCollection(stopwords))
     val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq0 = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .filter(col("df") < n) // df = N carries zero information (log idf = 0)
-    val dfreq = if (broadcastDf) broadcast(dfreq0) else dfreq0
-    val scored = tf.join(dfreq, "term")
+    val scored = tf.join(broadcast(dfreq), "term")
       .withColumn("score", col("tf") * (lit(n).cast("double") / col("df")))
     val rank = row_number().over(Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("df").asc, col("term").asc))

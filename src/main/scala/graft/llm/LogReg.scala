@@ -38,9 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object LogReg {
 
-  private def round6(c: Column): Column =
-    floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-
   /** Augmented feature array: [1.0, x_1…x_dim] as exact doubles. */
   private def augmented(vecCol: String): Column =
     concat(array(lit(1.0d)),
@@ -107,7 +104,7 @@ object LogReg {
       // (graft.expressions.Dec15Dot, the same exact decimal fold as the
       // old zip_with tree), pinned by LogRegSpec + the logreg_* gates.
       val withR = iterBase.select(
-        (round6(sigmoidAlg(
+        (Ann.round6(sigmoidAlg(
           graft.expressions.Dec15Dot.dec15_dot(col("__x"), w)))
           - col("__y")).as("__r"),
         col("__x"))
@@ -148,7 +145,7 @@ object LogReg {
     val w = model.select(col("j").cast("int"), col("w").cast("double"))
       .as[(Int, Double)].collect().sortBy(_._1).map(_._2)
     df.select(col(idCol),
-        round6(sigmoidAlg(marginExpr(vecCol, w))).as("score"))
+        Ann.round6(sigmoidAlg(marginExpr(vecCol, w))).as("score"))
       .withColumn("pred", (col("score") >= lit(0.5)).cast("int"))
   }
 }

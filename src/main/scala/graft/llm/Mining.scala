@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Split into two surfaces on purpose:
   *   - [[marginScores]] scores any CANDIDATE pair relation — at 100 TB
-  *     the candidates come from the ANN tier ([[Ann.topKLsh]] /
+  *     the candidates come from the ANN tier ([[Ann.lshTopK]] /
   *     [[Pq.ivfPqTopK]] nominations), so margin re-ranking costs
   *     O(candidates), never all-pairs;
   *   - [[marginMine]] is the brute-force composition over two small-to-
@@ -73,10 +73,7 @@ object Mining {
       .select(col(aId), col(bId), col("cosine"),
         round(col("cosine") / ((col("__aavg") + col("__bavg")) / 2.0), 6)
           .as("margin"))
-    val wm = Window.partitionBy(col(aId))
-      .orderBy(col("margin").desc, col(bId).asc)
-    mg.withColumn("rank", row_number().over(wm))
-      .filter(col("rank") <= topM)
+    Ann.rankTail(mg, aId, topM, col("margin").desc, col(bId).asc)
   }
 
   /** Mutual top-k filter: keep a candidate pair iff each side ranks
@@ -127,9 +124,7 @@ object Mining {
     val pb = b.select(col(bId), col(vecCol).as("__vb"))
     pa.crossJoin(broadcast(pb))
       .select(col(aId), col(bId),
-        round(when(Ann.norm(col("__va")) * Ann.norm(col("__vb")) === 0.0,
-            lit(Double.NegativeInfinity))
-          .otherwise(Ann.dot(col("__va"), col("__vb")) /
-            (Ann.norm(col("__va")) * Ann.norm(col("__vb")))), 6).as("cosine"))
+        round(Ann.cosinePre(col("__va"), col("__vb"),
+          Ann.norm(col("__va")), Ann.norm(col("__vb"))), 6).as("cosine"))
   }
 }

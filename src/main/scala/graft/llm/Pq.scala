@@ -1,7 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
@@ -18,21 +17,26 @@ import org.apache.spark.sql.functions._
   * lookups summed — no float vector is touched at scan time.
   *
   * Engine-reproducible by the [[Ann.kmeansTrain]] conventions: stride
-  * init (no RNG), L2 assignment with the min-code tie rule, exact
-  * `decimal(20,10)` mean sums with the portable `floor(x·10⁶ + 0.5)/10⁶`
-  * rounding, distances folded in ascending-dimension order (one
-  * exactly-rounded op per step, so any engine computes the identical
-  * double). The `pq_train`/`ann_pq` gates hash-compare the whole
-  * train → encode → ADC chain against a DuckDB restatement.
+  * init (no RNG), L2 assignment with the min-code tie rule, the shared
+  * exact per-dimension means ([[Ann.dimMeans]] + [[Ann.gather]], the
+  * portable [[Ann.round6]]), distances folded in ascending-dimension
+  * order (one exactly-rounded op per step, so any engine computes the
+  * identical double). The `pq_train`/`ann_pq` gates hash-compare the
+  * whole train → encode → ADC chain against a DuckDB restatement.
+  *
+  * One nearest-code kernel ([[encodeKernel]]) serves training and
+  * encoding, one builder ([[adcTables]]) makes every query's table,
+  * and one scan ([[adcTopK]]) serves [[pqTopK]] (every code) and
+  * [[ivfPqTopK]] (the codes of the probed lists).
   *
   * Scale shape: training is the k-means shape per subspace (corpus
   * passes + (sub, code, dim)-keyed partial aggs, model ≤ m·k·subDim
   * doubles broadcast); encoding is a broadcast mapPartitions kernel
   * (the sanctioned dense-numeric case); the ADC scan is a broadcast
-  * join of per-query tables against the codes table with the sum as a
-  * codegen'd `zip_with` + `aggregate` — per-row cost m lookups. Pair
-  * with IVF lists ([[Ann.ivfTopKTrained]]) when even the code scan
-  * must be pruned.
+  * join of per-query tables against the codes table with the sum as
+  * one compiled m-lookup loop ([[graft.expressions.AdcSum]]) — per-row
+  * cost m lookups. Pair with IVF lists ([[ivfPqTopK]]) when even the
+  * code scan must be pruned.
   */
 object Pq {
 
@@ -60,11 +64,16 @@ object Pq {
       bySub.getOrElse(s, Array.empty).map(r => (r._2, r._3)).sortBy(_._1))
   }
 
-  /** Nearest code per (vector, subspace): strict `<` over ascending
-    * codes = the min-code tie rule, mirroring the oracle's
-    * `ROW_NUMBER(ORDER BY d2 ASC, code ASC)`. */
-  private def encodeKernel(df: DataFrame, idCol: String, vecCol: String,
-                           cents: Model, subDim: Int): Dataset[(Long, Array[Int])] = {
+  /** The nearest-code kernel: per (vector, subspace) the code of the
+    * nearest centroid, strict `<` over ascending codes = the min-code
+    * tie rule, mirroring the oracle's `ROW_NUMBER(ORDER BY d2 ASC, code
+    * ASC)`. `emit` shapes each output row from `(id, vector, codes)` —
+    * training keeps the vector (no join re-attaches it by id, which
+    * shuffled every vector once per Lloyd round), encoding drops it.
+    */
+  private def encodeKernel[T: Encoder](df: DataFrame, idCol: String, vecCol: String,
+                                       cents: Model, subDim: Int)
+                                      (emit: (Long, Array[Float], Array[Int]) => T): Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
@@ -89,15 +98,24 @@ object Pq {
             codes(s) = best
             s += 1
           }
-          (rid, codes)
+          emit(rid, vec, codes)
         }
       }
+  }
+
+  /** `(idCol, __codes)`: [[encodeKernel]] without the vector. */
+  private def codesOf(df: DataFrame, idCol: String, vecCol: String,
+                      cents: Model, subDim: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    encodeKernel(df, idCol, vecCol, cents, subDim)((rid, _, codes) => (rid, codes))
+      .toDF(idCol, "__codes")
   }
 
   /** Train the `m` codebooks: per subspace, `iters` Lloyd rounds over
     * the corpus with `k` stride-initialized centroids (init code
     * `vec_id div stride`, stride `ceil(n/k)` — no RNG). A code that
-    * loses every member drops out, deterministically.
+    * loses every member drops out, deterministically. An empty corpus
+    * trains an empty model.
     *
     * Output: `(sub, code, n_members, centroid: array<double>)` — the
     * persistable model [[pqEncode]] / [[pqTopK]] consume.
@@ -109,7 +127,9 @@ object Pq {
       s"need m >= 1, k >= 2, iters >= 1; got m=$m k=$k iters=$iters")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
+    // an empty corpus has no vector to size: dim 0 runs the rounds over
+    // no rows, so the empty model keeps the trained model's schema
+    val dim = corpus.select(size(col(vecCol))).head(1).headOption.fold(0)(_.getInt(0))
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
     val n = corpus.count()
@@ -127,69 +147,16 @@ object Pq {
     }
     var result: DataFrame = null
     for (_ <- 0 until iters) {
-      // the encoder already holds each row's vector — emit it alongside
-      // the codes instead of joining it back by id (guide §2.4: that
-      // join was one full shuffle of the vectors per Lloyd round)
-      val assigned = encodeKernelVec(corpus, idCol, vecCol, cents, subDim)
-        .select(col(idCol), col(vecCol),
-          posexplode(col("__codes")).as(Seq("__sub", "__code")))
-      val means = assigned
-        .select(col("__sub"), col("__code"),
-          posexplode(slice(col(vecCol),
-            (col("__sub") * subDim + 1).cast("int"), lit(subDim)))
-            .as(Seq("__dim", "__v")))
-        .groupBy(col("__sub"), col("__code"), col("__dim"))
-        .agg(count(lit(1)).as("__c"),
-          sum(col("__v").cast("decimal(20,10)")).as("__s"))
-        .select(col("__sub"), col("__code"), col("__dim"), col("__c"),
-          // portable 6-decimal mean rounding — see Ann.kmeansTrain
-          (floor(col("__s").cast("double") / col("__c") * lit(1e6) + lit(0.5)) /
-            lit(1e6)).as("__m"))
-      result = means.groupBy(col("__sub").as("sub"), col("__code").as("code"))
-        .agg(max(col("__c")).as("n_members"),
-          sort_array(collect_list(struct(col("__dim"), col("__m")))).as("__dm"))
-        .select(col("sub"), col("code"), col("n_members"),
-          transform(col("__dm"), s => s.getField("__m")).as("centroid"))
+      val assigned = encodeKernel(corpus, idCol, vecCol, cents, subDim)(
+          (rid, vec, codes) => (rid, vec, codes))
+        .toDF(idCol, vecCol, "__codes")
+        .select(col(vecCol), posexplode(col("__codes")).as(Seq("sub", "code")))
+      val keys = Seq("sub", "code")
+      result = Ann.gather(Ann.dimMeans(assigned, keys,
+        slice(col(vecCol), (col("sub") * subDim + 1).cast("int"), lit(subDim))), keys)
       cents = collectModel(result, m)
     }
     result
-  }
-
-  /** [[encodeKernel]] carrying the input vector through:
-    * `(idCol, vecCol, __codes)` — one row per input row, no join needed
-    * to re-attach the vector (the id-keyed join it replaces shuffled
-    * every vector once per training round).
-    */
-  private def encodeKernelVec(df: DataFrame, idCol: String, vecCol: String,
-                              cents: Model, subDim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    df.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val cs = bc.value
-        val m = cs.length
-        rows.map { case (rid, vec) =>
-          val codes = new Array[Int](m)
-          var s = 0
-          while (s < m) {
-            var best = -1
-            var bestD = Double.PositiveInfinity
-            val subCents = cs(s)
-            var i = 0
-            while (i < subCents.length) {
-              val d = d2(vec, s * subDim, subCents(i)._2)
-              if (d < bestD) { bestD = d; best = subCents(i)._1 }
-              i += 1
-            }
-            codes(s) = best
-            s += 1
-          }
-          (rid, vec, codes)
-        }
-      }
-      .toDF(idCol, vecCol, "__codes")
   }
 
   /** Encode vectors against a trained model: `(idCol, codes:
@@ -197,31 +164,22 @@ object Pq {
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                model: DataFrame, m: Int, dim: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    encodeKernel(df, idCol, vecCol, collectModel(model, m), dim / m)
+    codesOf(df, idCol, vecCol, collectModel(model, m), dim / m)
       .toDF(idCol, "codes")
   }
 
-  /** ADC top-k: per query one exact `m × k` subspace-distance table,
-    * per corpus row `m` lookups summed (`zip_with` + `aggregate`,
-    * codegen'd), rank by (distance asc, id asc). Output:
-    * `(queryId, corpusId, dist2, rank)` with `dist2` rounded to 6 dp
-    * (the cross-engine render). Codes that died in training hold NaN
-    * table slots — unreachable, since the encoder never emits them.
+  /** `(queryId, __tbl)`: per query the exact `m × kMax` table of squared
+    * subspace distances to every codebook centroid. Codes that died in
+    * training hold NaN slots — unreachable, since the encoder never
+    * emits them.
     */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, model: DataFrame,
-             k: Int, m: Int, dim: Int,
-             queryId: String = "query_id", corpusId: String = "neighbor_id",
-             vecCol: String = "embedding"): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+  private def adcTables(queries: DataFrame, queryId: String, vecCol: String,
+                        cents: Model, subDim: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val subDim = dim / m
-    val cents = collectModel(model, m)
     val kMax = cents.map(sc => sc.lastOption.map(_._1 + 1).getOrElse(0)).max
-    val codes = encodeKernel(corpus, corpusId, vecCol, cents, subDim)
-      .toDF(corpusId, "__codes")
     val bc = spark.sparkContext.broadcast(cents)
-    val tables = queries.select(col(queryId).cast("long"), col(vecCol))
+    queries.select(col(queryId).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { rows =>
         val cs = bc.value
@@ -235,19 +193,57 @@ object Pq {
         }
       }
       .toDF(queryId, "__tbl")
-    val scored = broadcast(tables).crossJoin(codes)
+  }
+
+  /** The one ADC scan behind [[pqTopK]] and [[ivfPqTopK]]: the per-query
+    * tables broadcast against the corpus codes, `m` lookups summed per
+    * pair, top `k` by (distance asc, id asc). `lists` = the IVF
+    * centroid table and `nprobe`: each query then meets only the
+    * members of its `nprobe` nearest lists (cosine, min-cid tie —
+    * [[Ann.ivfTopKTrained]] semantics); `None` scans every code.
+    */
+  private def adcTopK(queries: DataFrame, corpus: DataFrame, model: DataFrame,
+                      lists: Option[(Array[(Long, Array[Double], Double)], Int)],
+                      k: Int, m: Int, dim: Int,
+                      queryId: String, corpusId: String, vecCol: String): DataFrame = {
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val subDim = dim / m
+    val cents = collectModel(model, m)
+    val codes = codesOf(corpus, corpusId, vecCol, cents, subDim)
+    val tables = adcTables(queries, queryId, vecCol, cents, subDim)
+    // with lists: the corpus side carries its one list, the query side
+    // one row per probed list, and pairs meet on the list id
+    val (qSide, cSide, on) = lists.fold((tables, codes, Seq.empty[String])) {
+      case (icents, nprobe) =>
+        (Ann.assignTopK(queries.select(col(queryId), col(vecCol)),
+            queryId, vecCol, icents, nprobe)
+          .select(col(queryId), col("__cent")).join(tables, Seq(queryId)),
+         codes.join(Ann.assignTopK(corpus.select(col(corpusId), col(vecCol)),
+            corpusId, vecCol, icents, 1).select(col(corpusId), col("__cent")),
+           Seq(corpusId)),
+         Seq("__cent"))
+    }
+    val scored = broadcast(qSide).join(cSide, on)
       .filter(col(queryId) =!= col(corpusId))
       .select(col(queryId), col(corpusId),
-        // one compiled m-lookup loop (graft.expressions.AdcSum) instead
-        // of the interpreted aggregate(zip_with(element_at)) fold —
-        // identical ascending-subspace FP order (OptKernelsSpec)
+        // one compiled m-lookup loop (graft.expressions.AdcSum), folded
+        // in ascending-subspace order (OptKernelsSpec)
         round(graft.expressions.VecKernels.adc_sum(
           col("__tbl"), col("__codes")), 6).as("dist2"))
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("dist2").asc, col(corpusId).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Ann.rankTail(scored, queryId, k, col("dist2").asc, col(corpusId).asc)
   }
+
+  /** ADC top-k: per query one exact `m × k` subspace-distance table
+    * ([[adcTables]]), per corpus row `m` lookups summed by one compiled
+    * loop, rank by (distance asc, id asc). Output:
+    * `(queryId, corpusId, dist2, rank)` with `dist2` rounded to 6 dp
+    * (the cross-engine render).
+    */
+  def pqTopK(queries: DataFrame, corpus: DataFrame, model: DataFrame,
+             k: Int, m: Int, dim: Int,
+             queryId: String = "query_id", corpusId: String = "neighbor_id",
+             vecCol: String = "embedding"): DataFrame =
+    adcTopK(queries, corpus, model, None, k, m, dim, queryId, corpusId, vecCol)
 
   /** ADC + refine (the "IVFADC+R" re-ranking step of Jégou et al.
     * 2011 §V): PQ codes nominate `kCand` candidates per query at
@@ -288,10 +284,7 @@ object Pq {
         // the zip_with form it replaces (OptKernelsSpec)
         round(graft.expressions.VecKernels.vec_l2sq(
           col("__qv"), col("__cv")), 6).as("dist2"))
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("dist2").asc, col(corpusId).asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Ann.rankTail(exact, queryId, k, col("dist2").asc, col(corpusId).asc)
   }
 
   /** The at-scale ANN composition SCALE.md promises: IVF lists prune
@@ -299,8 +292,8 @@ object Pq {
     * touched row costs. Corpus rows are assigned to their nearest
     * trained IVF centroid (cosine, min-cid tie — [[Ann.ivfTopKTrained]]
     * semantics) and PQ-encoded once; a query probes its `nprobe`
-    * nearest lists and ADC-scores only those lists' members via the
-    * same `m`-lookup `zip_with` + `aggregate` as [[pqTopK]]. Per-query
+    * nearest lists and ADC-scores only those lists' members through
+    * the same scan as [[pqTopK]] ([[adcTopK]]). Per-query
     * cost: nprobe × mean-list-occupancy rows × m lookups — at 2^16
     * lists over 10^10 vectors that is ~10^5·m adds per query instead
     * of 10^10·dim multiplies.
@@ -312,53 +305,7 @@ object Pq {
                 ivfCentroids: DataFrame, pqModel: DataFrame,
                 k: Int, nprobe: Int, m: Int, dim: Int,
                 queryId: String = "query_id", corpusId: String = "neighbor_id",
-                vecCol: String = "embedding"): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val subDim = dim / m
-    val icents: Array[(Long, Array[Double], Double)] = ivfCentroids
-      .select(col("cid").cast("long"), col("centroid"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-      .map { case (cid, cv) => (cid, cv, Ann.normDd(cv)) }
-    val cents = collectModel(pqModel, m)
-    val kMax = cents.map(sc => sc.lastOption.map(_._1 + 1).getOrElse(0)).max
-    // corpus: one IVF list + m codes per row, both from one-pass kernels
-    val cAssigned = Ann.assignTopK(corpus.select(col(corpusId), col(vecCol)),
-        corpusId, vecCol, icents, 1)
-      .select(col(corpusId), col("__cent"))
-    val codes = encodeKernel(corpus, corpusId, vecCol, cents, subDim)
-      .toDF(corpusId, "__codes")
-      .join(cAssigned, Seq(corpusId))
-    // queries: nprobe lists + the ADC table
-    val qAssigned = Ann.assignTopK(queries.select(col(queryId), col(vecCol)),
-        queryId, vecCol, icents, nprobe)
-      .select(col(queryId), col("__cent"))
-    val bc = spark.sparkContext.broadcast(cents)
-    val tables = queries.select(col(queryId).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val cs = bc.value
-        rows.map { case (qid, vec) =>
-          val tbl = Array.tabulate(cs.length) { s =>
-            val row = Array.fill(kMax)(Double.NaN)
-            cs(s).foreach { case (code, c) => row(code) = d2(vec, s * subDim, c) }
-            row
-          }
-          (qid, tbl)
-        }
-      }
-      .toDF(queryId, "__tbl")
-    val scored = broadcast(qAssigned.join(tables, Seq(queryId)))
-      .join(codes, Seq("__cent"))
-      .filter(col(queryId) =!= col(corpusId))
-      .select(col(queryId), col(corpusId),
-        // same compiled ADC loop as pqTopK
-        round(graft.expressions.VecKernels.adc_sum(
-          col("__tbl"), col("__codes")), 6).as("dist2"))
-    val w = Window.partitionBy(col(queryId))
-      .orderBy(col("dist2").asc, col(corpusId).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                vecCol: String = "embedding"): DataFrame =
+    adcTopK(queries, corpus, pqModel, Some((Ann.centroidTable(ivfCentroids), nprobe)),
+      k, m, dim, queryId, corpusId, vecCol)
 }

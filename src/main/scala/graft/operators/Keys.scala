@@ -38,4 +38,15 @@ object Keys {
     }
     sorted.sparkSession.createDataFrame(rows, schema)
   }
+
+  /** The largest non-negative `c` in `df`, or 0: the `offset` the next
+    * [[assignSorted]] batch continues from. Negative keys are sentinels
+    * (the seeded unknown location, -1) and never count. A top-1 — one
+    * pass, no exchange — which the optimizer prunes to nothing over an
+    * empty table, where a global aggregate would still shuffle its one
+    * empty partial.
+    */
+  def maxKey(df: DataFrame, c: String): Long =
+    df.select(col(c)).where(col(c) >= 0).orderBy(col(c).desc).head(1)
+      .headOption.fold(0L)(_.getLong(0))
 }

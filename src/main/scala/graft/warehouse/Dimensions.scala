@@ -34,7 +34,7 @@ object Dimensions {
       .dropDuplicates("job_id")
     val merged = Scd2.merge(dim, incoming,
       key = Seq("job_id"), compare = Seq("title", "job_url", "skills"), runDate)
-    assignMissingSks(merged, "job_sk", orderBy = Seq("job_id", "effective_date"))
+    assignMissingSks(merged, dim, "job_sk", orderBy = Seq("job_id", "effective_date"))
   }
 
   /** DimCompany SCD2 merge (M2, `dimensions/company.py:23-103`).
@@ -59,7 +59,8 @@ object Dimensions {
     val merged = Scd2.merge(dim, incoming,
       key = Seq("company_bk_hash"),
       compare = Seq("company_url", "logo_url", "verified_employer"), runDate)
-    assignMissingSks(merged, "company_sk", orderBy = Seq("company_bk_hash", "effective_date"))
+    assignMissingSks(merged, dim, "company_sk",
+      orderBy = Seq("company_bk_hash", "effective_date"))
   }
 
   /** DimLocation type-1 insert-if-absent (M3, `dimensions/location.py:90-133`):
@@ -75,7 +76,7 @@ object Dimensions {
       .distinct()
       .join(dim, Seq("city", "country"), "left_anti")
     val withSk = Keys.assignSorted(pairs, Seq("city", "country"), "location_sk",
-      offset = maxSkOf(dim, "location_sk"))
+      offset = Keys.maxKey(dim, "location_sk"))
       .select(col("location_sk"), col("city"), col("country"))
     dim.unionByName(withSk)
   }
@@ -86,16 +87,18 @@ object Dimensions {
     * mints at most one version per key). Uses the distributed sorted
     * assignment — same ids as a global window, no single-task funnel, and
     * no scale cliff if a backfill ever pushes a "delta" to fact volume.
+    *
+    * The offset comes from `previous`, the dimension before the merge:
+    * every one of its keys survives [[Scd2.merge]] and the merge adds
+    * only null ones, so the maximum is the same, and the lookup does not
+    * re-run the merge's full outer join.
     */
-  private def assignMissingSks(df: DataFrame, skCol: String, orderBy: Seq[String]): DataFrame = {
+  private def assignMissingSks(df: DataFrame, previous: DataFrame, skCol: String,
+                               orderBy: Seq[String]): DataFrame = {
     val existing = df.filter(col(skCol).isNotNull)
     val missing  = df.filter(col(skCol).isNull).drop(skCol)
-    Keys.assignSorted(missing, orderBy, skCol, offset = maxSkOf(existing, skCol))
+    Keys.assignSorted(missing, orderBy, skCol, offset = Keys.maxKey(previous, skCol))
       .select(df.columns.toIndexedSeq.map(col): _*)
       .unionByName(existing)
   }
-
-  private def maxSkOf(df: DataFrame, skCol: String): Long =
-    df.agg(coalesce(max(when(col(skCol) >= 0, col(skCol))), lit(0L)))
-      .head().getLong(0)
 }

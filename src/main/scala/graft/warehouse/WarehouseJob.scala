@@ -3,6 +3,7 @@ package graft.warehouse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Concurrent
+import graft.operators.Keys
 import graft.views.Star
 
 /** One warehouse day-run (the `jobinsight_dwh` DAG body, SURVEY.md §3.2):
@@ -84,7 +85,7 @@ object WarehouseJob {
     val factYesterday = state.star.fact.filter(col("date_id") === lit(yesterday))
     val factOther = state.star.fact.filter(col("date_id") =!= lit(runDate).cast("date"))
     val factTodayExisting = state.star.fact.filter(col("date_id") === lit(runDate).cast("date"))
-    val maxFactId = maxOf(state.star.fact, "fact_id")
+    val maxFactId = Keys.maxKey(state.star.fact, "fact_id")
 
     val factToday = FactDaily.buildDay(
       factYesterday, factTodayExisting, staging, dimJob, dimCompany,
@@ -94,15 +95,8 @@ object WarehouseJob {
     val bridge = staged("bridge")(Bridge.buildDay(
       state.star.bridge, fact.filter(col("date_id") === lit(runDate).cast("date")),
       factTodayExisting, factYesterday, staging, dimJob, dimLocation,
-      maxBridgeId = maxOf(state.star.bridge, "bridge_id")))
+      maxBridgeId = Keys.maxKey(state.star.bridge, "bridge_id")))
 
     State(Star(dimJob, dimCompany, dimLocation, dimDate, fact, bridge))
   }
-
-  /** The largest `c`, or 0: a top-1 (one pass, no exchange), which the
-    * optimizer prunes to nothing over an empty table — a global aggregate
-    * would still shuffle its one empty partial. */
-  private def maxOf(df: DataFrame, c: String): Long =
-    df.select(col(c)).where(col(c).isNotNull).orderBy(col(c).desc).head(1)
-      .headOption.fold(0L)(_.getLong(0))
 }

@@ -159,9 +159,6 @@ class PlanAuditSpec extends SparkSpec {
     val kw = plan(graft.llm.Keywords.tfidfTopK(docs, "doc_id", "text"))
     assert(kw.contains("BroadcastHashJoin"), kw.take(800))
     assert(!kw.contains("SortMergeJoin"), kw.take(800))
-    // (broadcastDf = false is the escape hatch for dictionary-busting
-    // vocabularies; not plan-asserted here because at fixture scale the
-    // optimizer's size estimate auto-broadcasts the df agg anyway)
   }
 
   test("block packing has NO window at all: offsets are the two-pass cumsum") {

@@ -136,4 +136,27 @@ class PqSpec extends SparkSpec {
     assert(q0.sliding(2).forall(p => p(0)._3 <= p(1)._3))
     assert(out.forall(t => t._1 != t._2))
   }
+
+  test("an empty corpus trains, encodes and ranks to empty frames with their schemas") {
+    val empty = vecs.limit(0)
+    val ivf = Ann.kmeansTrain(empty, "vec_id", "embedding", iters = 2)
+    val pq = Pq.pqTrain(empty, m = 2, k = 4, iters = 2)
+    val codes = Pq.pqEncode(empty, "vec_id", "embedding", pq, m = 2, dim = 8)
+    val queries = empty.select($"vec_id".as("query_id"), $"embedding")
+    val corpus = empty.select($"vec_id".as("neighbor_id"), $"embedding")
+    val top = Pq.pqTopK(queries, corpus, pq, k = 5, m = 2, dim = 8)
+    val ivfTop = Pq.ivfPqTopK(queries, corpus, ivf, pq, k = 5, nprobe = 2, m = 2, dim = 8)
+    for (df <- Seq(ivf, pq, codes, top, ivfTop)) assert(df.isEmpty)
+    // the schemas a non-empty corpus produces
+    val full = Pq.pqTrain(vecs, m = 2, k = 4, iters = 2)
+    val fullQ = vecs.select($"vec_id".as("query_id"), $"embedding")
+    val fullC = vecs.select($"vec_id".as("neighbor_id"), $"embedding")
+    assert(ivf.schema == Ann.kmeansTrain(vecs, "vec_id", "embedding", iters = 2).schema)
+    assert(pq.schema == full.schema)
+    assert(codes.schema ==
+      Pq.pqEncode(vecs, "vec_id", "embedding", full, m = 2, dim = 8).schema)
+    assert(top.schema == Pq.pqTopK(fullQ, fullC, full, k = 5, m = 2, dim = 8).schema)
+    assert(ivfTop.schema == Pq.ivfPqTopK(fullQ, fullC, ivf, full, k = 5, nprobe = 2,
+      m = 2, dim = 8).schema)
+  }
 }

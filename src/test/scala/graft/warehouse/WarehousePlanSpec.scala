@@ -65,21 +65,11 @@ class WarehousePlanSpec extends SparkSpec {
     }
   }
 
-  test("a day run from the empty state plans no exchange over its empty inputs") {
-    // Schemas.empty is a LocalRelation, so the optimizer prunes the joins,
-    // unions and aggregates over the empty dims and fact instead of
-    // shuffling or broadcasting nothing.
+  /** Every plan the Dataset actions inside `body` executed, by action name. */
+  private def capturePlans(body: => Unit): Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution, RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.util.QueryExecutionListener
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    def row(id: String): Row =
-      Row(id, "T", "u", Seq("S"), "C", null, null, true, "Hà Nội", null, null,
-        "negotiable", null, ts("2026-01-01 06:00:00"), null, ts("2026-01-01 06:00:00"))
-    val staging = spark.createDataFrame(
-      new java.util.ArrayList[Row]((1 to 5).map(i => row(s"j$i")).asJava), Schemas.staging)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(f -> qe.executedPlan)
@@ -87,22 +77,62 @@ class WarehousePlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      WarehouseJob.runDay(spark, WarehouseJob.emptyState(spark), staging, "2026-01-01")
+      body
       spark.range(1).toDF("marker").collect() // seen last: every earlier plan is in
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
         Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private def staging(day: String, ids: Seq[String], title: String = "T"): org.apache.spark.sql.DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val t = java.sql.Timestamp.valueOf(s"$day 06:00:00")
+    spark.createDataFrame(new java.util.ArrayList[Row](ids.map(id =>
+      Row(id, title, "u", Seq("S"), s"C$id", null, null, true, "Hà Nội", null, null,
+        "negotiable", null, t, null, t)).asJava), Schemas.staging)
+  }
+
+  test("a day run from the empty state plans no exchange over its empty inputs") {
+    // Schemas.empty is a LocalRelation, so the optimizer prunes the joins,
+    // unions and aggregates over the empty dims and fact instead of
+    // shuffling or broadcasting nothing.
+    import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plans = capturePlans(WarehouseJob.runDay(spark, WarehouseJob.emptyState(spark),
+      staging("2026-01-01", (1 to 5).map(i => s"j$i")), "2026-01-01"))
     val helper = new AdaptiveSparkPlanHelper {}
     def emptyLeaf(p: SparkPlan): Boolean = p match {
       case l: LocalTableScanExec => l.rows.isEmpty
       case r: RDDScanExec => r.rdd.getNumPartitions == 0
       case _ => false
     }
-    assert(plans.asScala.count(_._1 == "localCheckpoint") >= 6)
-    val wasted = plans.asScala.toSeq.flatMap { case (_, plan) =>
+    assert(plans.count(_._1 == "localCheckpoint") >= 6)
+    val wasted = plans.flatMap { case (_, plan) =>
       helper.collect(plan) { case e: Exchange if helper.find(e)(emptyLeaf).isDefined => e }
     }
     assert(wasted.isEmpty, s"exchanges over empty inputs:\n${wasted.mkString("\n")}")
+  }
+
+  test("a day run's key-offset lookups plan no exchange") {
+    // the five offsets (job, company and location keys, fact and bridge
+    // ids) are top-1 reads of the previous day's tables: no aggregate
+    // exchange, and no re-run of the SCD2 merge's full outer join
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val s1 = WarehouseJob.runDay(spark, WarehouseJob.emptyState(spark),
+      staging("2026-01-01", (1 to 5).map(i => s"j$i")), "2026-01-01")
+    // day 2 changes j1..j3 and adds j6, j7: every dimension mints keys
+    val day2 = staging("2026-01-02", (1 to 3).map(i => s"j$i"), title = "T2")
+      .unionByName(staging("2026-01-02", Seq("j6", "j7")))
+    val plans = capturePlans(WarehouseJob.runDay(spark, s1, day2, "2026-01-02"))
+    val lookups = plans.filter(_._1 == "head")
+    assert(lookups.size == 5, plans.map(_._1))
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((_, plan) <- lookups)
+      assert(helper.collect(plan) { case e: Exchange => e }.isEmpty,
+        s"key-offset lookup plans an exchange:\n$plan")
   }
 }
