@@ -268,6 +268,15 @@ object Ann {
       .select(keys.map(col) ++ Seq(col("n_members"),
         transform(col("__dm"), s => s.getField("__m")).as("centroid")): _*)
 
+  /** A bounded model (a trained round's centroids or codebooks)
+    * collected once and handed back as a local relation with the same
+    * schema: the next round's table and every later reader of the
+    * returned model read these rows and run no Spark job.
+    */
+  private[llm] def collectLocal(model: DataFrame): DataFrame =
+    model.sparkSession.createDataFrame(
+      java.util.Arrays.asList(model.collect(): _*), model.schema)
+
   /** A `(cid, centroid: array<double>)` model as the table
     * [[assignTopK]] reads: cid-ascending, with each centroid's norm.
     */
@@ -391,7 +400,8 @@ object Ann {
     * standard distributed-k-means shape at any corpus size.
     *
     * Output: `(cid, n_members, centroid: array<double>)` — the LAST
-    * round's membership counts and refined centroids.
+    * round's membership counts and refined centroids, as the local
+    * relation that round collected ([[collectLocal]]).
     */
   def kmeansTrain(corpus: DataFrame, idCol: String = "vec_id",
                   vecCol: String = "embedding", iters: Int = 2,
@@ -406,7 +416,8 @@ object Ann {
       val assigned = assignTopK(corpus.select(col(idCol), col(vecCol)),
           idCol, vecCol, cents, 1)
         .select(col("__cent").as("cid"), col(vecCol))
-      result = gather(dimMeans(assigned, Seq("cid"), col(vecCol)), Seq("cid"))
+      result = collectLocal(
+        gather(dimMeans(assigned, Seq("cid"), col(vecCol)), Seq("cid")))
       cents = centroidTable(result)
     }
     result

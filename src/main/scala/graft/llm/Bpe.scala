@@ -304,7 +304,7 @@ object Bpe {
 
   object Regime {
     private def collapsed(text: Column): Column =
-      regexp_replace(trim(lower(coalesce(text, lit("")))), "\\s+", " ")
+      Dedup.normalize(coalesce(text, lit("")))
 
     private def splitCount(t: Column): Column =
       when(t === "", lit(0L)).otherwise(size(split(t, " ")).cast("long"))
@@ -431,10 +431,18 @@ object Bpe {
     * split is a narrow per-row kernel inside it.
     */
   private def unitCounts(docs: DataFrame, textCol: String,
-                         regime: Regime): DataFrame = {
+                         regime: Regime): DataFrame =
+    countUnits(docs, regime.normalize(col(textCol)),
+      t => regime.words(t).map(regime.symbols))
+
+  /** The typed unit counter: `(word, cnt)` over the units `units` splits
+    * each row of the normalized `text` into — [[unitCounts]] and
+    * [[Unigram.wordCountsSp]].
+    */
+  private[llm] def countUnits(docs: DataFrame, text: Column,
+                              units: String => Iterator[String]): DataFrame = {
     import docs.sparkSession.implicits._
-    docs.select(regime.normalize(col(textCol))).as[String]
-      .flatMap(t => regime.words(t).map(regime.symbols))
+    docs.select(text).as[String].flatMap(units)
       .toDF("word")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
   }

@@ -113,8 +113,7 @@ object C4 {
   def blocklistProbe(docs: DataFrame, idCol: String, textCol: String,
                      blocklist: DataFrame, termCol: String = "term"): DataFrame = {
     val toks = docs.select(col(idCol),
-        explode(split(regexp_replace(trim(lower(col(textCol))),
-          "\\s+", " "), " ")).as("__tok"))
+        explode(split(Dedup.normalize(col(textCol)), " ")).as("__tok"))
       .filter(col("__tok") =!= "")
     val bl = broadcast(blocklist.select(lower(col(termCol)).as("__tok")).distinct())
     val hits = toks.join(bl, Seq("__tok"))

@@ -77,18 +77,20 @@ object Classify {
         col("cosine").desc, col("label").asc)
       .select(col(idCol), col("label").as("pred_label"), col("cosine"))
 
-  /** Sparse hashed token counts: `(idCol, __i, __tf)` — the exploded
-    * form both text paths share ([[TextStats.hashedFeatures]] renders
-    * the same triples as strings).
+  /** Sparse hashed token counts: `(idCol, __i, __tf)` — the one table
+    * every hashed text feature reads ([[TextStats.hashedFeatures]]
+    * renders the triples as strings, [[TextStats.hashedTfVector]]
+    * densifies them). `__i` is the md5 bucket in `[0, dim)`, cast to
+    * `idxType` inside the grouping key.
     */
-  private def hashedTf(docs: DataFrame, idCol: String, textCol: String,
-                       dim: Int): DataFrame =
+  private[llm] def hashedTf(docs: DataFrame, idCol: String, textCol: String,
+                            dim: Int, idxType: String = "long"): DataFrame =
     docs.select(col(idCol),
-        explode(split(regexp_replace(trim(lower(col(textCol))), "\\s+", " "), " "))
-          .as("__t"))
+        explode(split(Dedup.normalize(col(textCol)), " ")).as("__t"))
       .filter(col("__t") =!= "")
       .groupBy(col(idCol),
-        pmod(graft.functions.Hashes.u32OfMd5(col("__t")), lit(dim.toLong)).as("__i"))
+        pmod(graft.functions.Hashes.u32OfMd5(col("__t")), lit(dim.toLong))
+          .cast(idxType).as("__i"))
       .agg(count(lit(1)).as("__tf"))
 
   /** Sparse per-class centroid over hashed text features:

@@ -279,10 +279,8 @@ object CorpusStats {
     * monitor ([[graft.streaming.StreamingJobs.driftEachBatch]])
     * maintains incrementally (counts are algebraic: fold a batch in via
     * union + one re-aggregation). */
-  def tokenCounts(df: DataFrame, textCol: String): DataFrame = df
-    .select(explode(split(Dedup.normalize(col(textCol)), " ")).as("term"))
-    .filter(col("term") =!= "")
-    .groupBy(col("term")).agg(count(lit(1)).as("c"))
+  def tokenCounts(df: DataFrame, textCol: String): DataFrame =
+    LmScore.unigramCounts(df, textCol, pruneHapax = false)
 
   /** [[distributionDrift]] over PRE-AGGREGATED `(term, c)` counts —
     * what a maintained count state or a persisted reference model

@@ -46,8 +46,9 @@ final class CapStats extends Serializable {
   */
 object Dedup {
 
-  /** Whitespace-collapsed lowercase text — the normalization applied
-    * before exact hashing and shingling. */
+  /** Whitespace-collapsed lowercase text — the one word normalization
+    * of the text family: exact hashing, shingling, and every operator
+    * that splits `trim(lower(text))` into words. */
   def normalize(text: Column): Column =
     regexp_replace(trim(lower(text)), "\\s+", " ")
 

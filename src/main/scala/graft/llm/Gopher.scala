@@ -35,7 +35,7 @@ object Gopher {
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   private def normWords(text: Column): Column =
-    split(regexp_replace(trim(lower(text)), "\\s+", " "), " ")
+    split(Dedup.normalize(text), " ")
 
   /** Trimmed non-empty lines of the RAW text (the line-shape rules see
     * layout, so they must run before whitespace normalization folds
@@ -73,7 +73,7 @@ object Gopher {
     val t0 = col(textCol)
     val staged = docs.select(col(idCol), t0.as("__t"),
       (t0.isNull || trim(t0) === "").as("__empty"),
-      regexp_replace(trim(lower(t0)), "\\s+", " ").as("__norm"),
+      Dedup.normalize(t0).as("__norm"),
       lines(t0).as("__l"))
     val t = col("__t")
     val empty = col("__empty")

@@ -118,7 +118,8 @@ object Pq {
     * trains an empty model.
     *
     * Output: `(sub, code, n_members, centroid: array<double>)` — the
-    * persistable model [[pqEncode]] / [[pqTopK]] consume.
+    * persistable model [[pqEncode]] / [[pqTopK]] consume, as the local
+    * relation the last round collected ([[Ann.collectLocal]]).
     */
   def pqTrain(corpus: DataFrame, idCol: String = "vec_id",
               vecCol: String = "embedding", m: Int = 8, k: Int = 16,
@@ -152,8 +153,8 @@ object Pq {
         .toDF(idCol, vecCol, "__codes")
         .select(col(vecCol), posexplode(col("__codes")).as(Seq("sub", "code")))
       val keys = Seq("sub", "code")
-      result = Ann.gather(Ann.dimMeans(assigned, keys,
-        slice(col(vecCol), (col("sub") * subDim + 1).cast("int"), lit(subDim))), keys)
+      result = Ann.collectLocal(Ann.gather(Ann.dimMeans(assigned, keys,
+        slice(col(vecCol), (col("sub") * subDim + 1).cast("int"), lit(subDim))), keys))
       cents = collectModel(result, m)
     }
     result

@@ -33,7 +33,7 @@ object SpanCorrupt {
     require(corruptEvery >= 2, s"corruptEvery must be >= 2, got $corruptEvery")
     val t = col(textCol)
     val empty = t.isNull || trim(t) === ""
-    val toks = split(regexp_replace(trim(lower(t)), "\\s+", " "), " ")
+    val toks = split(Dedup.normalize(t), " ")
     val nt = when(empty, 0).otherwise(size(toks)).cast("int")
     val nb = ((nt + spanLen - 1) / spanLen).cast("int")
     val blockIds = when(nb >= 1, sequence(lit(0), nb - 1))

@@ -69,16 +69,13 @@ object TextStats {
     * (`size(split(norm, " "))` = spaces + 1, empties included by both).
     */
   def stopwordRatio(text: Column, lang: String = "en"): Column = {
-    val norm = normalizeWords(text)
+    val norm = Dedup.normalize(text)
     val nw = length(norm) - length(translate(norm, " ", "")) + 1
     val hits = graft.expressions.WordSetHits.word_set_hits(
       norm, Array(stopwords(lang).toArray)).getItem(0)
     when(nw === 0, 0.0)
       .otherwise(hits.cast("double") / nw)
   }
-
-  private def normalizeWords(text: Column): Column =
-    regexp_replace(trim(lower(text)), "\\s+", " ")
 
   /** N-gram-profile language ID: score each language by its stopword hit
     * count, take the argmax ('und' when nothing hits). Native expression:
@@ -89,7 +86,7 @@ object TextStats {
     // ALL five languages' hit counts in ONE word pass (word → language
     // bitmask map) instead of five interpreted filter(isin) walks
     val counts = graft.expressions.WordSetHits.word_set_hits(
-      normalizeWords(text), langs.map(_._2.toArray).toArray)
+      Dedup.normalize(text), langs.map(_._2.toArray).toArray)
     val scored = langs.zipWithIndex.map { case ((lang, _), k) =>
       struct(counts.getItem(k).as("score"), lit(lang).as("lang"))
     }
@@ -212,7 +209,7 @@ object TextStats {
       s"maxDfPct must be in 1..100, got $maxDfPct")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val perDoc = docs.select(col(idCol),
-        explode(array_distinct(split(normalizeWords(col(textCol)), " ")))
+        explode(array_distinct(split(Dedup.normalize(col(textCol)), " ")))
           .as("token"))
       .filter(col("token") =!= "")
     val dfq = perDoc.groupBy(col("token"))
@@ -244,7 +241,7 @@ object TextStats {
   def oovRate(docs: DataFrame, idCol: String, textCol: String,
               vocab: DataFrame): DataFrame = {
     val toks = docs.select(col(idCol),
-        explode(split(normalizeWords(col(textCol)), " ")).as("token"))
+        explode(split(Dedup.normalize(col(textCol)), " ")).as("token"))
       .filter(col("token") =!= "")
     val v = broadcast(vocab.select(col("token")).distinct()
       .withColumn("__in", lit(1)))
@@ -265,18 +262,12 @@ object TextStats {
   def hashedFeatures(docs: DataFrame, idCol: String, textCol: String,
                      dim: Int = 1024): DataFrame = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
-    val tok = docs.select(col(idCol),
-        explode(split(normalizeWords(col(textCol)), " ")).as("__t"))
-      .filter(col("__t") =!= "")
-    val idx = pmod(graft.functions.Hashes.u32OfMd5(col("__t")),
-      lit(dim.toLong))
-    tok.groupBy(col(idCol), idx.as("__i"))
-      .agg(count(lit(1)).as("__c"))
+    Classify.hashedTf(docs, idCol, textCol, dim)
       .groupBy(col(idCol))
       .agg(array_join(
-        transform(array_sort(collect_list(struct(col("__i"), col("__c")))),
+        transform(array_sort(collect_list(struct(col("__i"), col("__tf")))),
           x => concat(x.getField("__i").cast("string"), lit(":"),
-            x.getField("__c").cast("string"))),
+            x.getField("__tf").cast("string"))),
         " ").as("features"))
   }
 
@@ -292,15 +283,9 @@ object TextStats {
   def hashedTfVector(docs: DataFrame, idCol: String, textCol: String,
                      dim: Int = 64): DataFrame = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
-    val tok = docs.select(col(idCol),
-        explode(split(normalizeWords(col(textCol)), " ")).as("__t"))
-      .filter(col("__t") =!= "")
-    val idx = pmod(graft.functions.Hashes.u32OfMd5(col("__t")),
-      lit(dim.toLong)).cast("int")
-    val maps = tok.groupBy(col(idCol), idx.as("__i"))
-      .agg(count(lit(1)).as("__c"))
+    val maps = Classify.hashedTf(docs, idCol, textCol, dim, "int")
       .groupBy(col(idCol))
-      .agg(map_from_entries(collect_list(struct(col("__i"), col("__c"))))
+      .agg(map_from_entries(collect_list(struct(col("__i"), col("__tf"))))
         .as("__m"))
     docs.select(col(idCol)).join(maps, Seq(idCol), "left")
       .select(col(idCol),

@@ -12,28 +12,14 @@ import org.apache.spark.sql.functions._
   * `sample()`-style approximate fractions.
   *
   * Scale: one window shuffle partitioned BY GROUP — fine while every
-  * group fits a task. For a pathologically hot group (one language is
-  * 90% of a corpus), `salts > 1` routes through a two-phase top-n:
-  * per-(group, salt) top-n, then top-n of the ≤ salts·n winners — top-n
-  * under a total order composes across phases, so the rows are IDENTICAL
-  * to the unsalted draw (the two-phase top-1 trick, generalized to
-  * top-n).
+  * group fits a task.
   */
 object Sampling {
 
   def stratified(df: DataFrame, groupCols: Seq[String], idCol: String,
-                 n: Int, salts: Int = 0): DataFrame = {
-    val ord = Seq(md5(col(idCol).cast("string")).asc, col(idCol).asc)
-    if (salts > 1) {
-      val salted = df.withColumn("__salt", pmod(xxhash64(col(idCol)), lit(salts)))
-      val phase1 = topN(salted, groupCols :+ "__salt", ord, n)
-      topN(phase1.drop("__salt"), groupCols, ord, n)
-    } else topN(df, groupCols, ord, n)
-  }
-
-  private def topN(df: DataFrame, key: Seq[String], ord: Seq[Column],
-                   n: Int): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(ord: _*)
+                 n: Int): DataFrame = {
+    val w = Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(md5(col(idCol).cast("string")).asc, col(idCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= n).drop("__rn")
   }

@@ -169,6 +169,47 @@ class VectorLayerSpec extends SparkSpec {
     assertSame(Dpo.groupAdvantage(scored, Seq("g"), "vec_id", "score"),
       Reference.groupAdvantage(scored, Seq("g"), "vec_id", "score"))
   }
+
+  /** Spark jobs `body` starts, seen by a listener; a marker job flushes
+    * the listener bus before the count is read. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "vector-layer-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "model reads")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("trained k-means and PQ models are collected once: reading them runs no job") {
+    val cents = Ann.kmeansTrain(corpus, iters = 2, centroidTarget = 4)
+    val model = Pq.pqTrain(corpus, m = 2, k = 4, iters = 2)
+    assert(jobsOf {
+      cents.collect()
+      model.collect()
+      Ann.centroidTable(cents)
+      Pq.pqEncode(corpus, "vec_id", "embedding", model, 2, 8)
+    } == 0)
+    assertSame(cents, Reference.kmeansTrain(corpus, iters = 2, centroidTarget = 4))
+    assertSame(model, Reference.pqTrain(corpus, m = 2, k = 4, iters = 2))
+  }
 }
 
 object VectorLayerSpec {
